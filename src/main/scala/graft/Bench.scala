@@ -2,13 +2,18 @@ package graft
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
+import scala.collection.mutable
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
+import graft.Harness.jsonString
 
 /** Benchmark main: times every SparkEntry query at SPARK_GRAFT_SF_DIR.
   *
-  * Output goes BOTH to stdout (one JSON line, the driver contract) and to a
-  * file (`BENCH.json`, or `SPARK_GRAFT_BENCH_OUT`) so a truncated stdout tail
-  * can never lose per-query entries.
+  * The full record goes to a file (`BENCH.json`, or `SPARK_GRAFT_BENCH_OUT`);
+  * stdout ends with one compact JSON line ([[summary]]) that stays under
+  * 2,000 characters at any suite size, so a reader keeping only the tail
+  * of stdout can still parse it.
   *
   * Measures STEADY-STATE: one warm-up pass first (JIT + whole-stage-codegen
   * compilation dominate cold numbers — cold-vs-warm varies 2× run to run),
@@ -24,13 +29,17 @@ import org.apache.spark.sql.SparkSession
   * Catalyst eliminates final sorts and prunes the project (EliminateSorts
   * below an aggregate), flattering ordered queries — the noop sink executes
   * the full result plan while discarding rows. A query that throws is
-  * reported as time -1 and listed in "errors" instead of masquerading as a
-  * fast success.
+  * reported as time -1 in that pass, and as its median when a timed pass
+  * failed; "errors" maps exactly those queries to their first timed-pass
+  * failure, `ExceptionClass: first message line`, and "stage_errors" does
+  * the same for the stage prefixes. A failure in the warm-up pass only
+  * shows as -1 in "warmup_queries".
   */
 object Bench {
+  private type Query = (SparkSession, String) => DataFrame
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val warmup = sys.env.getOrElse("SPARK_GRAFT_WARMUP", "1") != "0"
     val repeats = sys.env.getOrElse("SPARK_GRAFT_REPEATS", "3").toInt.max(1)
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH.json")
@@ -40,33 +49,31 @@ object Bench {
       case Some(names) => SparkEntry.queries.filter { case (k, _) => names(k) }
       case None => SparkEntry.queries
     }).toSeq.sortBy(_._1)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // Tables.events relies on NTZ→timestamp being an exact micros
-      // identity; pin UTC here so the invariant holds under bare
-      // java/spark-submit launches, not only sbt-forked ones.
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    def runFull(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Unit =
-      fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-    def timedPass(): Seq[(String, Double)] = selected.map { case (name, fn) =>
+    val spark = Harness.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
+    type Failures = mutable.LinkedHashMap[String, String]
+    val errors, stageErrors: Failures = mutable.LinkedHashMap.empty
+    // seconds, or -1 when the query throws (its first failure goes to `failed`)
+    def timed(name: String, fn: Query, failed: Failures): Double = {
       // settle GC debt from the previous query before the clock starts
       System.gc()
       val t0 = System.nanoTime()
-      val ok = try { runFull(fn); true } catch { case _: Throwable => false }
-      name -> (if (ok) (System.nanoTime() - t0) / 1e9 else -1.0)
+      try {
+        fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+        (System.nanoTime() - t0) / 1e9
+      } catch { case e: Throwable =>
+        failed.getOrElseUpdate(name, Harness.describe(e)); -1.0
+      }
     }
+    def timedPass(failed: Failures): Seq[(String, Double)] =
+      selected.map { case (name, fn) => name -> timed(name, fn, failed) }
     // caches populated inside queries alias by logical plan — clear between
     // passes so every pass measures the real plans, not a cache read
     def clearState(): Unit = spark.sharedState.cacheManager.clearCache()
     val warmupTimes: Seq[(String, Double)] = if (warmup) {
-      val w = timedPass(); clearState(); w
+      val w = timedPass(mutable.LinkedHashMap.empty); clearState(); w
     } else Seq.empty
     val passes: Seq[Map[String, Double]] = (1 to repeats).map { _ =>
-      val p = timedPass(); clearState(); p.toMap
+      val p = timedPass(errors); clearState(); p.toMap
     }
     val names = selected.map(_._1)
     def stats(name: String): (Double, Double, Double) = {
@@ -79,8 +86,6 @@ object Bench {
     val mx = names.map(n => n -> stats(n)._3)
     def js(m: Seq[(String, Double)]) =
       m.map { case (k, v) => s"\"" + k + "\":" + v }.mkString("{", ",", "}")
-    val errors = med.collect { case (k, v) if v < 0 => s"\"" + k + "\"" }
-      .mkString("[", ",", "]")
     val total = med.collect { case (_, v) if v >= 0 => v }.sum
     // Flagship stage-level timings: the two composites (q98/q116) hide
     // stage regressions inside their whole-query medians, so time each
@@ -88,7 +93,7 @@ object Bench {
     // shows as a jump between consecutive entries, no bisect needed.
     // Skipped under SPARK_GRAFT_ONLY (focused A/B runs) or
     // SPARK_GRAFT_STAGES=0.
-    val stageFams: Seq[(String, Seq[(String, (SparkSession, String) => org.apache.spark.sql.DataFrame)])] = Seq(
+    val stageFams: Seq[(String, Seq[(String, Query)])] = Seq(
       "q98_erkg_flagship" -> graft.queries.SenzingQueries.flagshipStages,
       "q116_corpus_flagship" -> graft.queries.TextQueries.flagshipStages,
       "q79_hybrid_linking" -> graft.queries.NlpQueries.hybridStages,
@@ -97,18 +102,28 @@ object Bench {
     val stageJson =
       if (!doStages) "{}"
       else stageFams.map { case (q, sts) =>
-        val ts = sts.map { case (sn, fn) =>
-          System.gc()
-          val t0 = System.nanoTime()
-          val ok = try { runFull(fn); true } catch { case _: Throwable => false }
-          sn -> (if (ok) (System.nanoTime() - t0) / 1e9 else -1.0)
-        }
-        s"\"" + q + "\":" + js(ts)
+        s"\"" + q + "\":" + js(sts.map { case (sn, fn) => sn -> timed(s"$q/$sn", fn, stageErrors) })
       }.mkString("{", ",", "}")
+    def errorJson(m: Failures) =
+      m.map { case (k, v) => jsonString(k) + ":" + jsonString(v) }.mkString("{", ",", "}")
     val json =
-      s"""{"metric":"total","value":$total,"unit":"sec","repeats":$repeats,"queries":${js(med)},"queries_min":${js(mn)},"queries_max":${js(mx)},"warmup_queries":${js(warmupTimes)},"stages":$stageJson,"errors":$errors,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","repeats":$repeats,"queries":${js(med)},"queries_min":${js(mn)},"queries_max":${js(mx)},"warmup_queries":${js(warmupTimes)},"stages":$stageJson,"errors":${errorJson(errors)},"stage_errors":${errorJson(stageErrors)},"sf":"$sfDir"}"""
     Files.write(Paths.get(outPath), json.getBytes(StandardCharsets.UTF_8))
-    println(json)
+    println(summary(med, repeats, errors.keys.toSeq, outPath))
     spark.stop()
+  }
+
+  /** The stdout contract, one JSON line: sum and geometric mean of the
+    * successful medians, query count, repeats, error count, the first five
+    * failed names and the path of the full record. Its length does not grow
+    * with the suite. */
+  def summary(med: Seq[(String, Double)], repeats: Int, failed: Seq[String],
+              outPath: String): String = {
+    val ok = med.collect { case (_, v) if v >= 0 => v }
+    val geomean = if (ok.isEmpty) 0.0 else math.exp(ok.map(math.log).sum / ok.size)
+    s"""{"metric":"total","value":${ok.sum},"unit":"sec","n":${med.size},"repeats":$repeats,""" +
+      s""""geomean":$geomean,"errors":${failed.size},""" +
+      s""""first_errors":${failed.take(5).map(jsonString).mkString("[", ",", "]")},""" +
+      s""""out":${jsonString(outPath)}}"""
   }
 }

@@ -324,20 +324,13 @@ object ScaleBench {
         graft.queries.TextQueries.AddedDocIdOffset,
       s"replica ids (max mult ${mults.max} × stride $IdStride) would " +
         "collide with the AddedDocIdOffset namespace")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // The streaming queries replay through a MEMORY sink (the
-      // correctness-harness shape): at ×100 the collected sink exceeds
-      // the 1 GiB default driver-result cap — a harness artifact, not an
-      // operator property (production streams write to real sinks), so
-      // the replay tool raises the cap rather than skipping the decade.
-      .config("spark.driver.maxResultSize", "8g")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    // The streaming queries replay through a MEMORY sink (the
+    // correctness-harness shape): at ×100 the collected sink exceeds the
+    // 1 GiB default driver-result cap — a harness artifact, not an operator
+    // property (production streams write to real sinks), so the replay tool
+    // raises the cap rather than skipping the decade.
+    val spark = Harness.session(cpus, "spark.driver.maxResultSize" -> "8g")
 
     // by-name: plan CONSTRUCTION must run inside the timer — most of these
     // queries end in an eager localCheckpoint, so the work happens at
@@ -360,7 +353,7 @@ object ScaleBench {
 
     val perMult = mults.map { m =>
       spark.conf.set("spark.sql.shuffle.partitions",
-        math.max(cpus.toInt, m * partsPerMult).toString)
+        math.max(cpus, m * partsPerMult).toString)
       val dir =
         if (m == 1) base
         else {

@@ -3,6 +3,7 @@ package graft.dedup
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.functions.GraftFunctions
 import graft.text.TextOps
 
 /** Deduplication operators for the 100 TB training-data surface (north star):
@@ -320,12 +321,11 @@ object DedupOps {
     * the fanned-out scan ([[graft.sources.Layout.fanOutScan]]). */
   def minhashSignatureRows(docs: DataFrame, idCol: String, textCol: String,
                            n: Int, k: Int): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     graft.sources.Layout.fanOutScan(
         docs.filter(org.apache.spark.sql.functions.size(
           TextOps.tokens(col(textCol))) >= n), col(idCol))
       .select(col(idCol).as("doc_id"),
-        minhashSignatureNative(col(textCol), n, k).as("sig"))
+        GraftFunctions.minhashSignature(col(textCol), n, k).as("sig"))
   }
 
   /** Full MinHash+LSH near-dup pipeline: candidates from band buckets,
@@ -367,18 +367,12 @@ object DedupOps {
       lit(0))
   }
 
-  /** NATIVE codegen'd twin of [[minhashSignatureExpr]]
-    * ([[graft.functions.MinhashSignature]], law-equated in DedupSpec) —
-    * the signature path for plans that DERIVE columns from the signature
-    * in the same projection (q201's 8 band buckets): the HOF form is
-    * CodegenFallback and opaque to subexpression elimination, so
-    * CollapseProject re-evaluates its ~2 ms/row interpreted tree once per
-    * derived column (measured 5.2× on q201's band projection — 39.8 s
-    * where one pass costs 7.7 s at sf0.1); the native expression is one
-    * fused ~µs/row loop, so inlining it is free. Callers must register
-    * [[graft.functions.GraftFunctions]] on the session first. */
+  /** [[GraftFunctions.minhashSignature]] under its older name — the
+    * native codegen'd twin of [[minhashSignatureExpr]], law-equated in
+    * DedupSpec. Main code calls the builder directly; this name stays
+    * because the `perfbench/` probes compile against it. */
   def minhashSignatureNative(text: Column, n: Int, k: Int): Column =
-    call_function("minhash_signature", text, lit(n), lit(k))
+    GraftFunctions.minhashSignature(text, n, k)
 
   /** WINNOWING document fingerprints (Schleimer, Wilkerson, Aiken,
     * "Winnowing: Local Algorithms for Document Fingerprinting", SIGMOD'03 —

@@ -2,13 +2,11 @@ package graft.functions
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, TernaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, TernaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -172,16 +170,4 @@ case class AhoCorasickSpans(first: Expression, second: Expression,
       newFirst: Expression, newSecond: Expression,
       newThird: Expression): AhoCorasickSpans =
     copy(first = newFirst, second = newSecond, third = newThird)
-}
-
-object AcFunctions {
-  val acSpans: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) =
-    (FunctionIdentifier("ac_spans"),
-      new ExpressionInfo(classOf[AhoCorasickSpans].getName, "ac_spans"),
-      (children: Seq[Expression]) =>
-        AhoCorasickSpans(children(0), children(1), children(2)))
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry
-      .registerFunction(acSpans._1, acSpans._2, acSpans._3)
 }

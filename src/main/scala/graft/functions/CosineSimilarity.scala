@@ -1,11 +1,9 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.types._
 
 /** Native Catalyst expression for cosine similarity over float/double array
@@ -95,62 +93,4 @@ case class CosineSimilarity(left: Expression, right: Expression)
   override protected def withNewChildrenInternal(newLeft: Expression,
       newRight: Expression): CosineSimilarity =
     copy(left = newLeft, right = newRight)
-}
-
-/** Function registration: via `spark.sql.extensions=graft.functions.
-  * GraftExtensions` at session build, or [[GraftFunctions.register]] on a
-  * live session. Either way `cosine_sim(a, b)` becomes available to SQL and
-  * to `functions.call_function`. */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction(GraftFunctions.cosineSim)
-    ext.injectFunction(GraftFunctions.lshSignatureSalted)
-    ext.injectFunction(GraftFunctions.minhashSignature)
-    ext.injectFunction(GraftFunctions.simhash32)
-    ext.injectFunction(AcFunctions.acSpans)
-    ext.injectFunction(CounterMapFunctions.counterMap)
-  }
-}
-
-object GraftFunctions {
-  val cosineSim: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) =
-    (FunctionIdentifier("cosine_sim"),
-      new ExpressionInfo(classOf[CosineSimilarity].getName, "cosine_sim"),
-      (children: Seq[Expression]) => CosineSimilarity(children(0), children(1)))
-
-  val lshSignature: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) =
-    (FunctionIdentifier("lsh_signature"),
-      new ExpressionInfo(classOf[LshSignature].getName, "lsh_signature"),
-      (children: Seq[Expression]) => LshSignature(children(0), children(1)))
-
-  val lshSignatureSalted: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) =
-    (FunctionIdentifier("lsh_signature_salted"),
-      new ExpressionInfo(classOf[LshSignatureSalted].getName,
-        "lsh_signature_salted"),
-      (children: Seq[Expression]) => LshSignatureSalted(children(0), children(1)))
-
-  val minhashSignature: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) =
-    (FunctionIdentifier("minhash_signature"),
-      new ExpressionInfo(classOf[MinhashSignature].getName,
-        "minhash_signature"),
-      (children: Seq[Expression]) =>
-        MinhashSignature(children(0), children(1), children(2)))
-
-  val simhash32: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) =
-    (FunctionIdentifier("simhash32"),
-      new ExpressionInfo(classOf[SimhashText].getName, "simhash32"),
-      (children: Seq[Expression]) => SimhashText(children(0)))
-
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry
-      .registerFunction(cosineSim._1, cosineSim._2, cosineSim._3)
-    spark.sessionState.functionRegistry
-      .registerFunction(lshSignature._1, lshSignature._2, lshSignature._3)
-    spark.sessionState.functionRegistry.registerFunction(
-      lshSignatureSalted._1, lshSignatureSalted._2, lshSignatureSalted._3)
-    spark.sessionState.functionRegistry.registerFunction(
-      minhashSignature._1, minhashSignature._2, minhashSignature._3)
-    spark.sessionState.functionRegistry.registerFunction(
-      simhash32._1, simhash32._2, simhash32._3)
-  }
 }

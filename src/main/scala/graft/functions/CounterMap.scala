@@ -4,12 +4,10 @@ import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, Da
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.util.ArrayBasedMapData
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -106,15 +104,4 @@ case class CounterMap(
   override protected def withNewChildrenInternal(
       newChildren: IndexedSeq[Expression]): CounterMap =
     copy(child = newChildren.head)
-}
-
-object CounterMapFunctions {
-  val counterMap: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) =
-    (FunctionIdentifier("counter_map"),
-      new ExpressionInfo(classOf[CounterMap].getName, "counter_map"),
-      (children: Seq[Expression]) => CounterMap(children.head))
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry
-      .registerFunction(counterMap._1, counterMap._2, counterMap._3)
 }

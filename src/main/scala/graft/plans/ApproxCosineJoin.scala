@@ -1,8 +1,6 @@
 package graft.plans
 
-import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Alias, And, EqualTo, Expression, ExpressionInfo, GreaterThanOrEqual}
+import org.apache.spark.sql.catalyst.expressions.{Alias, And, EqualTo, Expression, GreaterThanOrEqual}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.plans.Inner
 import org.apache.spark.sql.catalyst.plans.logical.{Join, LogicalPlan, Project}
@@ -18,10 +16,11 @@ import graft.functions.{CosineSimilarity, LshSignature}
   * never from a scan of all pairs).
   *
   * Users write the JOIN declaratively with the boolean marker
-  * `approx_cosine_join(a.vec, b.vec, threshold, nPlanes)` as (part of) the
+  * `approx_cosine_join(a.vec, b.vec, threshold, nPlanes)`
+  * ([[graft.functions.GraftFunctions.approxCosineJoin]]) as (part of) the
   * join condition; [[RewriteApproxCosineJoin]] — an optimizer
-  * `Rule[LogicalPlan]` installed via [[GraftExtensions]]
-  * (`spark.sql.extensions`) or [[GraftRules.install]]
+  * `Rule[LogicalPlan]` installed via [[graft.functions.GraftExtensions]]
+  * (session build) or [[graft.functions.GraftFunctions.register]]
   * (`spark.experimental.extraOptimizations`) — rewrites the quadratic
   * marker join into the sign-LSH bucket plan:
   *
@@ -52,8 +51,8 @@ case class ApproxCosineJoinMarker(vecA: Expression, vecB: Expression,
     "approx_cosine_join is a join-rewrite marker that was not rewritten. " +
       "It must appear as a TOP-LEVEL conjunct of an INNER join condition " +
       "with one vector argument per join side, and the rewrite rule must " +
-      "be installed (spark.sql.extensions=graft.plans.GraftExtensions or " +
-      "GraftRules.install(spark))")
+      "be installed: build the session with graft.functions.GraftExtensions " +
+      "(graft.Harness does) or call GraftFunctions.register on it")
 
   override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any =
     throw unrewritten
@@ -118,38 +117,5 @@ case class RewriteApproxCosineJoin() extends Rule[LogicalPlan] {
         case _ => None // >1 marker in one join: ambiguous, leave untouched
       }
       rewritten.getOrElse(j)
-  }
-}
-
-/** `spark.sql.extensions` entry point: functions + the similarity-join
-  * rewrite in one injection. */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(e: SparkSessionExtensions): Unit = {
-    e.injectFunction(graft.functions.GraftFunctions.cosineSim)
-    e.injectFunction(graft.functions.AcFunctions.acSpans)
-    e.injectFunction(graft.functions.CounterMapFunctions.counterMap)
-    e.injectFunction(GraftRules.approxCosineJoin)
-    e.injectOptimizerRule(_ => RewriteApproxCosineJoin())
-  }
-}
-
-/** Post-hoc installation on an already-built session (the extensions API is
-  * builder-time only; `experimental.extraOptimizations` is the sanctioned
-  * runtime hook for extra optimizer rules). */
-object GraftRules {
-  val approxCosineJoin: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) =
-    (FunctionIdentifier("approx_cosine_join"),
-      new ExpressionInfo(classOf[ApproxCosineJoinMarker].getName, "approx_cosine_join"),
-      (children: Seq[Expression]) => ApproxCosineJoinMarker(
-        children(0), children(1), children(2), children(3)))
-
-  def install(spark: SparkSession): Unit = {
-    graft.functions.GraftFunctions.register(spark)
-    spark.sessionState.functionRegistry.registerFunction(
-      approxCosineJoin._1, approxCosineJoin._2, approxCosineJoin._3)
-    if (!spark.experimental.extraOptimizations.exists(
-        _.isInstanceOf[RewriteApproxCosineJoin]))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ RewriteApproxCosineJoin()
   }
 }

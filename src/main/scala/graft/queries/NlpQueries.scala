@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.functions.GraftFunctions
 import graft.text.{EntityLinking, FuzzyMatch, TextOps, TextRank}
 
 /** Entity-linking + keyphrase queries (SURVEY.md §2 V2-V6, W3) — the
@@ -58,10 +59,9 @@ object NlpQueries {
   }
 
   private def linkedFrom(s: SparkSession, d: String, cand: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val (docVecs, entVecs) = contextVecs(s, d)
     EntityLinking.disambiguate(cand, docVecs, entVecs,
-      (a, b) => call_function("cosine_sim", a, b))
+      GraftFunctions.cosineSim)
   }
 
   private def linked(s: SparkSession, d: String): DataFrame =
@@ -89,7 +89,6 @@ object NlpQueries {
     * a regression inside one engine shows as a jump between consecutive
     * stage entries instead of hiding in the whole-query median. */
   def hybridLinking(s: SparkSession, d: String, nSignals: Int): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     // EAGERLY materialized (localCheckpoint, not a lazy cache): the mention
     // set is referenced by all three signal builders plus both token-level
     // expansions, and two of those references sit INSIDE broadcast()
@@ -116,7 +115,7 @@ object NlpQueries {
     val (docVecs, entVecs) = contextVecs(s, d)
     val sigA = EntityLinking.rankedCandidates(candA, docVecs, entVecs,
         Seq("doc_id", "token"), topK = 5,
-        (a, b) => call_function("cosine_sim", a, b))
+        GraftFunctions.cosineSim)
       .select(col("doc_id"), col("token"), col("entity"), col("rn"))
     // signal B: fuzzy candidates (alias-level top-5 per q46), alias →
     // entity, entity ranked per token by (min dist asc, entity asc)

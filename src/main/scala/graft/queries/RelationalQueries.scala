@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
 import graft.Tables
+import graft.functions.GraftFunctions
 import graft.ops.Relational
 
 /** Relational-core queries (SURVEY.md §2: S, F, J, A, W, SET, STR rows) over
@@ -116,10 +117,9 @@ object RelationalQueries {
     // (map-side combinable), exploded back to (entity, cnt) rows, with
     // probability computed by the same IEEE double/long division as q07.
     "q68_counter_probabilities" -> ((s, d) => {
-      graft.functions.CounterMapFunctions.register(s)
       Tables.part(s, d)
         .groupBy(col("p_name").as("alias"))
-        .agg(call_function("counter_map", col("p_brand")).as("cm"))
+        .agg(GraftFunctions.counterMap(col("p_brand")).as("cm"))
         .select(col("alias"),
           aggregate(map_values(col("cm")), lit(0L), (a, b) => a + b).as("n_obs"),
           explode(col("cm")).as(Seq("entity", "cnt")))

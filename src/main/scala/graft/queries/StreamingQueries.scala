@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
 import graft.Tables
+import graft.functions.GraftFunctions
 import graft.streaming.StreamOps
 
 /** ORACLE-GATED streaming queries (SURVEY.md §2 X3): each runs a real
@@ -305,7 +306,7 @@ object StreamingQueries {
     // STREAMING DEDUP PROBE — q125's corpus probe in deployment shape:
     // the reference corpus's MinHash signatures and banded buckets are a
     // write-once STATIC table; each arriving document computes its own
-    // signature AS A ROW EXPRESSION (DedupOps.minhashSignatureNative — no
+    // signature AS A ROW EXPRESSION (GraftFunctions.minhashSignature — no
     // shuffle, no state), explodes its 8 band buckets, and a stream–static
     // join on (band, bucket) + the house first-collision-band prefix
     // filter emits each (arrival, corpus) candidate EXACTLY ONCE with no
@@ -324,7 +325,6 @@ object StreamingQueries {
     // 41.7 s vs batch-equivalent 42.9 s on the pre-fix plan).
     "q201_stream_dedup_probe" -> ((s, d) => {
       import graft.dedup.DedupOps
-      graft.functions.GraftFunctions.register(s)
       val corpus = Tables.documents(s, d).filter(col("source") === "src0")
       val sigC = DedupOps.minhashSignatureRows(corpus, "doc_id", "text", 3, 32)
         .localCheckpoint()
@@ -336,7 +336,7 @@ object StreamingQueries {
       val streamBands = docsStream(s, d)
         .filter(col("source") =!= "src0")
         .withColumn("sig",
-          DedupOps.minhashSignatureNative(col("text"), 3, 32))
+          GraftFunctions.minhashSignature(col("text"), 3, 32))
         // no-shingle docs have all-NULL signatures (the batch form has no
         // signature row at all) — the sig[0] null test replaces the old
         // interpreted size(shingles) > 0 HOF pass, same row set
@@ -621,7 +621,6 @@ object StreamingQueries {
     // streaming path to the batch semantics row for row.
     "q230_stream_entity_linking" -> ((s, d) => {
       import org.apache.spark.sql.expressions.Window
-      graft.functions.GraftFunctions.register(s)
       // static sides, each materialized once (the deployment's model)
       val gazT = NlpQueries.gaz(s, d).localCheckpoint()
       val ev = NlpQueries.contextVecs(s, d)._2.localCheckpoint()
@@ -643,7 +642,7 @@ object StreamingQueries {
         .join(ctx, Seq("vid"), "left")
         .join(ev, Seq("entity"), "left")
         .withColumn("ctx_cos",
-          call_function("cosine_sim", col("ctx_emb"), col("ent_emb")))
+          GraftFunctions.cosineSim(col("ctx_emb"), col("ent_emb")))
         .withColumn("score", col("prior") * coalesce(col("ctx_cos"), lit(1.0)))
         .select(col("doc_id"), col("pos"), col("token"), col("entity"),
           col("prior"), col("score"), col("ctx_cos").isNotNull.as("has_cos"))
@@ -886,11 +885,10 @@ object StreamingQueries {
       // eviction boundary on FIRST-ARRIVAL ts: expiry (ts+delay) below
       // wm (maxTs − delay) ⇔ ts below maxTs − 2·delay
       val boundaryUs = (86400L + maxId) * 1000000L - 2L * delayMs * 1000L
-      graft.functions.GraftFunctions.register(s)
       // native simhash32 (law-pinned == simhashExpr == relational simhash)
       // — the interpreted HOF fold cost ~2 s per prep pass at scan width
       val sig = docs.withColumn("simhash",
-        call_function("simhash32", col("text")))
+        GraftFunctions.simhash32(col("text")))
       val grp = sig.groupBy(col("simhash"))
         .agg(min(col("doc_id")).as("gmin"), max(col("doc_id")).as("gmax"))
       val rearrivals = sig.join(grp, Seq("simhash"))
@@ -902,7 +900,7 @@ object StreamingQueries {
       val lateProbes = docs.filter(col("doc_id") % 5 === 3)
         .select(col("doc_id"),
           concat(lit("late-probe-"), col("doc_id")).as("text"))
-        .withColumn("psim", call_function("simhash32", col("text")))
+        .withColumn("psim", GraftFunctions.simhash32(col("text")))
         .join(sig.select(col("simhash").as("psim")).distinct(),
           Seq("psim"), "left_anti")
         .select(col("doc_id"), col("text"),

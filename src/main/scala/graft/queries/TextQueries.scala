@@ -19,6 +19,36 @@ object TextQueries {
 
   private def docs(s: SparkSession, d: String) = Tables.documents(s, d)
 
+  /** SimHash pairs at Hamming ≤ 3 by pigeonhole band blocking (q202/q222):
+    * the (doc_id, simhash) signature is cut into 4 bands of `bandBits`
+    * bits; pairs meet on a shared band and are emitted once, at their
+    * first colliding band (prefix filter), then verified exactly. Output:
+    * (da, db, hamming), da < db, ordered. */
+  private def simhashBandPairs(signatures: DataFrame, bandBits: Int): DataFrame = {
+    val sig = signatures.localCheckpoint() // feeds both join sides
+    val banded = sig.select(col("doc_id"), col("simhash"),
+        array((0 until 4).map(b =>
+          expr(s"shiftright(simhash, ${b * bandBits})")
+            .bitwiseAND(lit((1L << bandBits) - 1))): _*).as("bands"))
+      .select(col("doc_id"), col("simhash"), col("bands"),
+        posexplode(col("bands")).as(Seq("band", "bval")))
+      .select(col("doc_id"), col("simhash"), col("band"), col("bval"),
+        slice(col("bands"), lit(1), col("band")).as("prefix"))
+    banded.select(col("doc_id").as("da"), col("simhash").as("sa"),
+        col("band"), col("bval"), col("prefix").as("pa"))
+      .join(banded.select(col("doc_id").as("db"),
+        col("simhash").as("sb"), col("band"), col("bval"),
+        col("prefix").as("pb")), Seq("band", "bval"))
+      .filter(col("da") < col("db"))
+      .filter(!exists(zip_with(col("pa"), col("pb"), (x, y) => x === y),
+        identity[org.apache.spark.sql.Column]))
+      .withColumn("hamming",
+        bit_count(col("sa").bitwiseXOR(col("sb"))).cast("int"))
+      .filter(col("hamming") <= 3)
+      .select(col("da"), col("db"), col("hamming"))
+      .orderBy(col("da"), col("db"))
+  }
+
   /** id namespace for synthetic "v2 added" docs (q224/q225 snapshot-refresh
     * fixtures): 10¹², far above ScaleBench's replica namespace
     * (IdStride = 10⁷ × multiplier ≤ 100 → max real id < 10⁹ + base), so a
@@ -75,31 +105,8 @@ object TextQueries {
     // est-Jaccard semantics) this is the cheaper/coarser near-dup tier —
     // one 8-byte signature per doc, integer-only verify
     // (bit_count(xor) ≤ 3). All-integer ⇒ oracle bit-exact.
-    "q202_simhash_pairs" -> ((s, d) => {
-      val sig = DedupOps.simhash(docs(s, d), "doc_id", "text")
-        .localCheckpoint() // feeds both join sides
-      val banded = sig.select(col("doc_id"), col("simhash"),
-          array((0 until 4).map(b =>
-            expr(s"shiftright(simhash, ${b * 8})").bitwiseAND(lit(255L)))
-            : _*).as("bands"))
-        .select(col("doc_id"), col("simhash"), col("bands"),
-          posexplode(col("bands")).as(Seq("band", "bval")))
-        .select(col("doc_id"), col("simhash"), col("band"), col("bval"),
-          slice(col("bands"), lit(1), col("band")).as("prefix"))
-      banded.select(col("doc_id").as("da"), col("simhash").as("sa"),
-          col("band"), col("bval"), col("prefix").as("pa"))
-        .join(banded.select(col("doc_id").as("db"),
-          col("simhash").as("sb"), col("band"), col("bval"),
-          col("prefix").as("pb")), Seq("band", "bval"))
-        .filter(col("da") < col("db"))
-        .filter(!exists(zip_with(col("pa"), col("pb"), (x, y) => x === y),
-          identity[org.apache.spark.sql.Column]))
-        .withColumn("hamming",
-          bit_count(col("sa").bitwiseXOR(col("sb"))).cast("int"))
-        .filter(col("hamming") <= 3)
-        .select(col("da"), col("db"), col("hamming"))
-        .orderBy(col("da"), col("db"))
-    }),
+    "q202_simhash_pairs" -> ((s, d) =>
+      simhashBandPairs(DedupOps.simhash(docs(s, d), "doc_id", "text"), 8)),
 
     // WIDE-SIGNATURE SIMHASH PAIRS — q202's 100 TB scale path, built from
     // its ×100 ScaleBench measurement (SCALE_r14): the 32-bit signature's
@@ -110,31 +117,8 @@ object TextQueries {
     // Hamming ≤ 3 unchanged, accidental-candidate rate down ~127×
     // (DedupOps.simhash60 scaladoc). A stricter tier than ≤ 3/32 by
     // design — the 32-bit tier's extra "pairs" were partly band noise.
-    "q222_simhash_wide" -> ((s, d) => {
-      val sig = DedupOps.simhash60(docs(s, d), "doc_id", "text")
-        .localCheckpoint() // feeds both join sides
-      val banded = sig.select(col("doc_id"), col("simhash"),
-          array((0 until 4).map(b =>
-            expr(s"shiftright(simhash, ${b * 15})").bitwiseAND(lit(32767L)))
-            : _*).as("bands"))
-        .select(col("doc_id"), col("simhash"), col("bands"),
-          posexplode(col("bands")).as(Seq("band", "bval")))
-        .select(col("doc_id"), col("simhash"), col("band"), col("bval"),
-          slice(col("bands"), lit(1), col("band")).as("prefix"))
-      banded.select(col("doc_id").as("da"), col("simhash").as("sa"),
-          col("band"), col("bval"), col("prefix").as("pa"))
-        .join(banded.select(col("doc_id").as("db"),
-          col("simhash").as("sb"), col("band"), col("bval"),
-          col("prefix").as("pb")), Seq("band", "bval"))
-        .filter(col("da") < col("db"))
-        .filter(!exists(zip_with(col("pa"), col("pb"), (x, y) => x === y),
-          identity[org.apache.spark.sql.Column]))
-        .withColumn("hamming",
-          bit_count(col("sa").bitwiseXOR(col("sb"))).cast("int"))
-        .filter(col("hamming") <= 3)
-        .select(col("da"), col("db"), col("hamming"))
-        .orderBy(col("da"), col("db"))
-    }),
+    "q222_simhash_wide" -> ((s, d) =>
+      simhashBandPairs(DedupOps.simhash60(docs(s, d), "doc_id", "text"), 15)),
 
     // EVAL-SET N-GRAM COVERAGE — q105's decontamination in the REVERSE
     // direction and as a METRIC, not a filter: for every held-out (src0)

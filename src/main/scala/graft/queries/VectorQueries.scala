@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.functions.GraftFunctions
 import graft.vector.VectorOps
 
 /** Similarity-search queries over `embeddings` (SURVEY.md §2 V1-V3 + the
@@ -27,12 +28,9 @@ object VectorQueries {
 
     // Embedding-cosine near-dup pairs — exact O(N²) baseline, computed with
     // the native codegen'd cosine (30× the HOF fold at sf0.1: 2.7s vs 83s).
-    "q26_cosine_pairs" -> ((s, d) => {
-      graft.functions.GraftFunctions.register(s)
-      VectorOps.cosinePairs(emb(s, d), 0.35,
-          (a, b) => call_function("cosine_sim", a, b))
-        .orderBy(col("ia"), col("ib"))
-    }),
+    "q26_cosine_pairs" -> ((s, d) =>
+      VectorOps.cosinePairs(emb(s, d), 0.35, GraftFunctions.cosineSim)
+        .orderBy(col("ia"), col("ib"))),
 
     // Sign-LSH ANN: 8 hyperplanes → 256 buckets → candidates → exact cosine.
     "q27_lsh_pairs" -> ((s, d) =>
@@ -41,20 +39,21 @@ object VectorQueries {
 
     // SAME semantics and SAME oracle as q27, but DECLARATIVE: the user
     // writes a join on the approx_cosine_join marker predicate and the
-    // RewriteApproxCosineJoin optimizer rule (SparkSessionExtensions /
-    // GraftRules.install) turns the quadratic marker join into the LSH
-    // bucket equi-join + exact cosine verify — SURVEY §4's "custom
-    // similarity-join strategy" tier, proven under the hash gate.
+    // RewriteApproxCosineJoin optimizer rule turns the quadratic marker
+    // join into the LSH bucket equi-join + exact cosine verify — SURVEY
+    // §4's "custom similarity-join strategy" tier, proven under the hash
+    // gate. The rule is session state: the one query that installs it on
+    // the caller's session (a no-op on a graft.Harness session).
     "q74_approx_join_rule" -> ((s, d) => {
-      graft.plans.GraftRules.install(s)
+      GraftFunctions.register(s)
       val e = emb(s, d)
       val a = e.select(col("vec_id").as("ia"), col("embedding").as("ea"))
       val b = e.select(col("vec_id").as("ib"), col("embedding").as("eb"))
       a.join(b,
-          call_function("approx_cosine_join",
-            col("ea"), col("eb"), lit(0.2), lit(8)) && col("ia") < col("ib"))
+          GraftFunctions.approxCosineJoin(col("ea"), col("eb"), 0.2, 8) &&
+            col("ia") < col("ib"))
         .select(col("ia"), col("ib"),
-          call_function("cosine_sim", col("ea"), col("eb")).as("cosine"))
+          GraftFunctions.cosineSim(col("ea"), col("eb")).as("cosine"))
         .orderBy(col("ia"), col("ib"))
     }),
 
@@ -104,19 +103,17 @@ object VectorQueries {
     //                approximate against exact; counts aggregate through
     //                1-row broadcast aggregates (no collect).
     "q99_ann_recall" -> ((s, d) => {
-      graft.functions.GraftFunctions.register(s)
       val e = emb(s, d)
-      val cos = (a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =>
-        call_function("cosine_sim", a, b)
       // the exact O(N²) baseline is referenced EIGHT times (per-tier
       // semi-joins + totals) — materialize the tiny surviving pair set once
       // instead of re-running the quadratic join per reference
-      val exactPairs = VectorOps.cosinePairs(e, 0.2, cos).localCheckpoint()
+      val exactPairs = VectorOps.cosinePairs(e, 0.2, GraftFunctions.cosineSim)
+        .localCheckpoint()
       val lshPairs = VectorOps.lshNeighborPairs(e, 8, 0.2)
         .select(col("ia"), col("ib")).localCheckpoint()
       val bandedPairs = VectorOps.lshNeighborPairsBanded(e, 32, 4, 0.2,
-          sigFn = (c, n) => call_function("lsh_signature", c, lit(n)),
-          cosineFn = cos)
+          sigFn = GraftFunctions.lshSignature,
+          cosineFn = GraftFunctions.cosineSim)
         .select(col("ia"), col("ib")).localCheckpoint()
       def pairRecallRow(metric: String, approx: DataFrame, tier: Double) = {
         val base = exactPairs.filter(col("cosine") >= tier)
@@ -204,7 +201,6 @@ object VectorQueries {
     // path: the same SemDeDup through the two-level ivf2Assign (×30 →
     // 3.8×). This flat form stays as the exact-rule member of the pair.
     "q112_semdedup" -> ((s, d) => {
-      graft.functions.GraftFunctions.register(s)
       val e = emb(s, d)
       val k = math.max(8L, math.ceil(e.count() / 64.0).toLong).toInt
       val cells = VectorOps.kmeansAssign(e, k, 2).localCheckpoint()
@@ -215,7 +211,7 @@ object VectorQueries {
         .join(member.select(col("cluster"), col("vec_id").as("ib"),
           col("embedding").as("eb")), Seq("cluster"))
         .filter(col("ia") < col("ib"))
-        .filter(call_function("cosine_sim", col("ea"), col("eb")) >= 0.4)
+        .filter(GraftFunctions.cosineSim(col("ea"), col("eb")) >= 0.4)
         .select(col("ia").as("src"), col("ib").as("dst"))
       val comps = graft.graph.GraphOps
         .connectedComponents(s, graft.graph.GraphOps.symmetrize(pairs))
@@ -237,7 +233,6 @@ object VectorQueries {
     // for approximate operators (q27/q100): exact gate on the approximate
     // algorithm, recall observed separately.
     "q138_semdedup_ivf2" -> ((s, d) => {
-      graft.functions.GraftFunctions.register(s)
       val e = emb(s, d)
       // Clamp the requested k to the corpus size so c is derived from the
       // REALIZED fine-seed count (= min(n, k)) exactly as the oracle's
@@ -254,7 +249,7 @@ object VectorQueries {
         .join(member.select(col("cluster"), col("vec_id").as("ib"),
           col("embedding").as("eb")), Seq("cluster"))
         .filter(col("ia") < col("ib"))
-        .filter(call_function("cosine_sim", col("ea"), col("eb")) >= 0.4)
+        .filter(GraftFunctions.cosineSim(col("ea"), col("eb")) >= 0.4)
         .select(col("ia").as("src"), col("ib").as("dst"))
       val comps = graft.graph.GraphOps
         .connectedComponents(s, graft.graph.GraphOps.symmetrize(pairs))
@@ -386,10 +381,9 @@ object VectorQueries {
       // native codegen'd twins of the HOF signature + cosine (law-equal,
       // ExtensionsSpec/CosineSimilaritySpec) — the 32-plane × 64-dim
       // signature fold is the query's dominant expression cost
-      graft.functions.GraftFunctions.register(s)
       VectorOps.lshNeighborPairsBanded(emb(s, d), 32, 4, 0.2,
-          sigFn = (c, n) => call_function("lsh_signature", c, lit(n)),
-          cosineFn = (a, b) => call_function("cosine_sim", a, b))
+          sigFn = GraftFunctions.lshSignature,
+          cosineFn = GraftFunctions.cosineSim)
         .orderBy(col("ia"), col("ib"))
     }),
 
@@ -416,14 +410,13 @@ object VectorQueries {
     // banded LSH over the same vectors.
     "q149_hash_embed_knn" -> ((s, d) => {
       import org.apache.spark.sql.expressions.Window
-      graft.functions.GraftFunctions.register(s)
       val e = VectorOps.hashEmbed(Tables.documents(s, d), "doc_id", "text", 64)
         .localCheckpoint() // both join sides reference the embed plan
       val a = e.filter(col("doc_id") % 16 === 0)
         .select(col("doc_id"), col("embedding").as("ea"))
       val b = e.select(col("doc_id").as("nbr"), col("embedding").as("eb"))
       a.join(b, col("doc_id") =!= col("nbr"))
-        .withColumn("cosine", call_function("cosine_sim", col("ea"), col("eb")))
+        .withColumn("cosine", GraftFunctions.cosineSim(col("ea"), col("eb")))
         .withColumn("rn", row_number().over(
           Window.partitionBy(col("doc_id"))
             .orderBy(col("cosine").desc, col("nbr").asc)))
@@ -454,7 +447,6 @@ object VectorQueries {
     // the oracle mirrors the exact banding + md5 weights, so the whole
     // dial is hash-gated, not asserted.
     "q150_hash_embed_lsh" -> ((s, d) => {
-      graft.functions.GraftFunctions.register(s)
       val e = VectorOps.hashEmbed(Tables.documents(s, d), "doc_id", "text", 64)
         .select(col("doc_id").as("vec_id"), col("embedding"))
         .localCheckpoint() // referenced 3× (signature + both verify sides)
@@ -463,8 +455,8 @@ object VectorQueries {
       // into the plan; the native expression memoizes the matrix
       // per-executor and fuses the 64-plane fold into one loop per row
       VectorOps.lshNeighborPairsBanded(e, 64, 4, 0.9,
-          sigFn = (c, n) => call_function("lsh_signature_salted", c, lit(n)),
-          cosineFn = (a, b) => call_function("cosine_sim", a, b))
+          sigFn = GraftFunctions.lshSignatureSalted,
+          cosineFn = GraftFunctions.cosineSim)
         .orderBy(col("ia"), col("ib"))
     }),
 
@@ -492,11 +484,10 @@ object VectorQueries {
     // and the oracle is q150's verbatim (same pairs, same cosines — the
     // artifact is value-identical to the in-plan embed).
     "q179_artifact_lsh" -> ((s, d) => {
-      graft.functions.GraftFunctions.register(s)
       val e = graft.sources.EmbedArtifact.read(s, Tables.documents(s, d), d)
       VectorOps.lshNeighborPairsBanded(e, 64, 4, 0.9,
-          sigFn = (c, n) => call_function("lsh_signature_salted", c, lit(n)),
-          cosineFn = (a, b) => call_function("cosine_sim", a, b))
+          sigFn = GraftFunctions.lshSignatureSalted,
+          cosineFn = GraftFunctions.cosineSim)
         .orderBy(col("ia"), col("ib"))
     }),
 
@@ -540,7 +531,6 @@ object VectorQueries {
     // that path's recall oracle.
     "q159_hard_negatives" -> ((s, d) => {
       import org.apache.spark.sql.expressions.Window
-      graft.functions.GraftFunctions.register(s)
       val e = emb(s, d)
       val q = broadcast(e.filter(col("vec_id") % 50 === 0)
         .select(col("vec_id").as("query_id"), col("label").as("q_label"),
@@ -549,7 +539,7 @@ object VectorQueries {
           col("embedding").as("c_emb"))
         .join(q, col("n_label") =!= col("q_label"))
         .withColumn("cosine",
-          call_function("cosine_sim", col("q_emb"), col("c_emb")))
+          GraftFunctions.cosineSim(col("q_emb"), col("c_emb")))
         .withColumn("rn", row_number().over(
           Window.partitionBy(col("query_id"))
             .orderBy(col("cosine").desc, col("neg_id").asc)))
@@ -744,7 +734,6 @@ object VectorQueries {
       // re-scored, each descent round pays the embedding joins only for
       // pairs it has not seen.
       import graft.sources.KnnGraphArtifact
-      graft.functions.GraftFunctions.register(s)
       // r17: fanned out BEFORE the checkpoint — every scoring join and the
       // exact-audit broadcast-NL stage inherits this table's width, and the
       // single-file scan pinned them all to one task (guide §2.5)
@@ -766,7 +755,7 @@ object VectorQueries {
         // (CosineSpec); the audit's N_audited×N pass was the query's
         // single largest stage as an interpreted fold
         .withColumn("cos",
-          call_function("cosine_sim", col("eu"), col("ev"))))
+          GraftFunctions.cosineSim(col("eu"), col("ev"))))
       exact.select(col("u"), col("v"))
         .join(init.select(col("u"), col("v"), lit(true).as("i")),
           Seq("u", "v"), "left")

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.functions.GraftFunctions
 import graft.vector.VectorOps
 
 /** MATERIALIZED kNN-graph artifact — the write-once/read-many production
@@ -45,13 +46,12 @@ object KnnGraphArtifact {
     * fold by CosineSpec, ~30× less per-row work — guide §4.1): every
     * build/maintenance scoring pass runs it once per candidate edge. */
   def score(e: DataFrame, cand: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(e.sparkSession)
     cand
       .join(e.select(col("vec_id").as("u"), col("embedding").as("eu")),
         Seq("u"))
       .join(e.select(col("vec_id").as("v"), col("embedding").as("ev")),
         Seq("v"))
-      .withColumn("cos", call_function("cosine_sim", col("eu"), col("ev")))
+      .withColumn("cos", GraftFunctions.cosineSim(col("eu"), col("ev")))
   }
 
   /** Per-u top-K by (cos desc, v asc) — the shared total order that makes

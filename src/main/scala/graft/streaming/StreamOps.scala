@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
+import graft.functions.GraftFunctions
+
 /** Structured Streaming twins of [[graft.events.EventOps]] (SURVEY.md §2 X3).
   * The batch-only reference has no streaming surface; the north star requires
   * tumbling/sliding windows, watermarks, streaming dedup, and custom state.
@@ -358,10 +360,9 @@ object StreamOps {
     * Documents whose token multisets hash to the same 32-bit SimHash
     * (near-identical content) keep only the first arrival. */
   def nearDupDedup(docs: DataFrame, textCol: String, watermark: String): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     docs.withWatermark("ts", watermark)
       .withColumn("simhash",
-        org.apache.spark.sql.functions.call_function("simhash32", col(textCol)))
+        GraftFunctions.simhash32(col(textCol)))
       .dropDuplicates("simhash")
   }
 
@@ -378,10 +379,9 @@ object StreamOps {
     * three-batch replay by q96. */
   def nearDupDedupBounded(docs: DataFrame, textCol: String,
                           watermark: String): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     docs.withWatermark("ts", watermark)
       .withColumn("simhash",
-        org.apache.spark.sql.functions.call_function("simhash32", col(textCol)))
+        GraftFunctions.simhash32(col(textCol)))
       .dropDuplicatesWithinWatermark("simhash")
   }
 

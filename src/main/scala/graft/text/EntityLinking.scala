@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.functions.GraftFunctions
 import graft.vector.VectorOps
 
 /** Entity-linking operators (SURVEY.md §2 V2/V3/V5 + W3): the reference's
@@ -137,11 +138,9 @@ object EntityLinking {
     * `spans ⋈ gazetteer` (law-tested in NlpSpec, hash-gated in q53). */
   def acMentionSpans(docs: DataFrame, surfaces: Seq[String],
                      entities: Seq[Int]): DataFrame = {
-    graft.functions.AcFunctions.register(docs.sparkSession)
     docs.select(col("doc_id"), TextOps.tokens(col("text")).as("w"))
       .select(col("doc_id"), col("w"),
-        explode(call_function("ac_spans", col("w"),
-          lit(surfaces.toArray), lit(entities.toArray))).as("m"))
+        explode(GraftFunctions.acSpans(col("w"), surfaces, entities)).as("m"))
       .select(col("doc_id"), col("m.pos").as("pos"),
         concat_ws(" ", slice(col("w"), col("m.pos") + 1, col("m.len"))).as("surface"),
         col("m.len").as("len"), col("m.entity").as("entity"))

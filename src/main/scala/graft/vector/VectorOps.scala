@@ -3,6 +3,8 @@ package graft.vector
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.functions.GraftFunctions
+
 /** Vector / similarity-search operators for the embedding surface
   * (SURVEY.md §2 V1-V3; north-star ANN requirement). The reference consumes
   * sentence-transformer vectors through LanceDB ANN search
@@ -116,7 +118,6 @@ object VectorOps {
     * Output: (query_id, neighbor_id, cosine, rn). */
   def knnBruteForce(queries: DataFrame, corpus: DataFrame, k: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    graft.functions.GraftFunctions.register(corpus.sparkSession)
     val q = broadcast(queries.select(col("vec_id").as("query_id"),
       col("embedding").as("q_emb")))
     // cosine is the native codegen twin (bit-identical by CosineSpec) — no
@@ -129,7 +130,7 @@ object VectorOps {
         col("embedding").as("c_emb"))
       .join(q, col("query_id") =!= col("neighbor_id"))
       .withColumn("cosine",
-        call_function("cosine_sim", col("q_emb"), col("c_emb")))
+        GraftFunctions.cosineSim(col("q_emb"), col("c_emb")))
     scored
       .withColumn("rn", row_number().over(
         Window.partitionBy(col("query_id"))
@@ -364,13 +365,12 @@ object VectorOps {
           .orderBy(col("dist").asc, col("cell").asc)))
       .filter(col("crn") <= nprobe)
       .select(col("query_id"), col("q_emb"), col("cell"))
-    graft.functions.GraftFunctions.register(corpus.sparkSession)
     val list = corpus.select(col(cellCol).as("cell"),
       col("vec_id").as("neighbor_id"), col("embedding").as("c_emb"))
     broadcast(assigned).join(list, Seq("cell"))
       .filter(col("query_id") =!= col("neighbor_id"))
       .withColumn("cosine",
-        call_function("cosine_sim", col("q_emb"), col("c_emb")))
+        GraftFunctions.cosineSim(col("q_emb"), col("c_emb")))
       .withColumn("rn", row_number().over(
         Window.partitionBy(col("query_id"))
           .orderBy(col("cosine").desc, col("neighbor_id").asc)))

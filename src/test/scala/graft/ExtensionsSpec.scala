@@ -3,7 +3,8 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-import graft.plans.{GraftRules, RewriteApproxCosineJoin}
+import graft.functions.GraftFunctions
+import graft.plans.RewriteApproxCosineJoin
 import graft.vector.VectorOps
 
 /** The declarative approximate similarity join (SURVEY §4's "custom
@@ -27,7 +28,7 @@ class ExtensionsSpec extends SparkSuite {
 
   test("marker join rewrites to the LSH bucket plan and matches lshNeighborPairs") {
     val s = spark
-    GraftRules.install(s)
+    GraftFunctions.register(s)
     val e = vecs(40)
     val a = e.select(col("vec_id").as("ia"), col("embedding").as("ea"))
     val b = e.select(col("vec_id").as("ib"), col("embedding").as("eb"))
@@ -52,7 +53,7 @@ class ExtensionsSpec extends SparkSuite {
 
   test("marker under OR is NOT rewritten (would silently drop other branches)") {
     val s = spark
-    GraftRules.install(s)
+    GraftFunctions.register(s)
     val e = vecs(8)
     val a = e.select(col("vec_id").as("ia"), col("embedding").as("ea"))
     val b = e.select(col("vec_id").as("ib"), col("embedding").as("eb"))
@@ -71,7 +72,7 @@ class ExtensionsSpec extends SparkSuite {
 
   test("unrewritten marker fails with a pointer to the extension, never cross-joins") {
     val s = spark
-    GraftRules.install(s)
+    GraftFunctions.register(s)
     // a marker OUTSIDE a join condition is not rewritten — evaluating it
     // must fail loudly rather than silently doing anything
     val e = vecs(4)
@@ -94,7 +95,7 @@ class ExtensionsSpec extends SparkSuite {
     SparkSession.clearDefaultSession()
     val s2 = SparkSession.builder().master("local[4]")
       .config("spark.sql.shuffle.partitions", "8")
-      .withExtensions(new graft.plans.GraftExtensions())
+      .withExtensions(new graft.functions.GraftExtensions())
       .getOrCreate()
     try {
       assert(s2 ne s)

@@ -42,7 +42,7 @@ class RelationalSpec extends SparkSuite {
 
   test("counter_map aggregate equals the two-level A1 aggregation") {
     import spark.implicits._
-    graft.functions.CounterMapFunctions.register(spark)
+    graft.functions.GraftFunctions.register(spark)
     val raw = Seq(
       ("a", "e2"), ("a", "e1"), ("a", "e1"), ("b", "e9"), ("b", "e9"))
       .toDF("alias", "entity")

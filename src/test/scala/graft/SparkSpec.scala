@@ -3,18 +3,14 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared session for all suites: one local JVM SparkSession, UTC, 8 shuffle
-  * partitions (tiny fixture data — fewer tasks, faster suite).
+/** Shared session for all suites: one local JVM [[Harness.session]] (UTC,
+  * every graft function and rule) with 8 shuffle partitions (tiny fixture
+  * data — fewer tasks, faster suite).
   */
 object SparkSpec {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = Harness.session(4, "spark.sql.shuffle.partitions" -> "8",
+      "spark.app.name" -> "graft-test")
     s.sparkContext.setLogLevel("ERROR")
     s
   }

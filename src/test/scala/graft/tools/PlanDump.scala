@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Builder-side plan auditor (test scope, never shipped): prints the
   * join/exchange/scan/codegen skeleton of each named query's physical plan
   * so shuffle count and broadcast placement can be eyeballed per round.
@@ -14,12 +12,8 @@ object PlanDump {
     val (full, names) =
       if (args.headOption.contains("full")) (true, args.drop(1))
       else (false, args)
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.sql.session.timeZone", "UTC")
-      .appName("plandump")
-      .getOrCreate()
+    val spark = graft.Harness.session(4, "spark.sql.shuffle.partitions" -> "8",
+      "spark.app.name" -> "plandump")
     spark.sparkContext.setLogLevel("ERROR")
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
     try names.foreach { q =>
