@@ -12,15 +12,15 @@ import graft.text.TextOps
   * Scale design:
   *  - Exact dedup is one hash aggregation on a 16-byte fingerprint — the
   *    shuffle moves fingerprints, never document text.
-  *  - Exact Jaccard joins docs on shared shingles — quadratic in bucket size,
-  *    kept as the CORRECTNESS baseline/oracle path.
+  *  - Exact Jaccard joins docs on their rarest (prefix) shingles only;
+  *    the all-pairs shingle join is a test-scope oracle.
   *  - MinHash+LSH is the scale path: k portable hash functions → per-band
   *    bucket join → candidate pairs ≪ all pairs → exact-Jaccard verify on
   *    candidates only. All hashes are md5-derived (see
   *    [[TextOps.tokenHash60]]) so every stage has a DuckDB oracle twin.
   *  - SimHash reduces each doc to one integer; near-dup = small Hamming
-  *    distance; implemented as pure relational explode/agg (shuffle-friendly,
-  *    no wide lambdas).
+  *    distance; computed per row by the native [[graft.functions.SimhashText]]
+  *    (no shuffle).
   */
 object DedupOps {
 
@@ -33,43 +33,6 @@ object DedupOps {
     docs.withColumn("fp_md5", TextOps.fingerprintMd5(col(textCol)))
       .withColumn("is_canonical",
         col(idCol) === min(col(idCol)).over(Window.partitionBy(col("fp_md5"))))
-  }
-
-  /** Exploded (doc_id, shingle) long table — the shuffle-friendly form.
-    * r17: the scan is fanned out ([[graft.sources.Layout.fanOutScan]]) so
-    * the explode + per-shingle hashing above it runs cluster-wide instead
-    * of at the (possibly single-task) scan width; a no-op on wide scans. */
-  def shingleTable(docs: DataFrame, idCol: String, textCol: String, n: Int): DataFrame =
-    graft.sources.Layout.fanOutScan(docs, col(idCol))
-      .select(col(idCol).as("doc_id"),
-        explode(TextOps.shingles(col(textCol), n)).as("shingle"))
-
-  /** Exact n-gram Jaccard near-dup pairs (da < db, jaccard >= threshold).
-    * Join on shared shingle → count common → |A|+|B|-common denominator.
-    * Map-side combine on both aggregations; the shingle join is the hot spot
-    * and is what LSH replaces at scale. */
-  def jaccardPairs(docs: DataFrame, idCol: String, textCol: String,
-                   n: Int, threshold: Double): DataFrame = {
-    // cached for the loop (sizes + both self-join sides), released before
-    // return via the materialize-then-unpersist tail
-    val sh = shingleTable(docs, idCol, textCol, n).cache()
-    val sizes = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n_sh"))
-    val common = sh.as("a").join(sh.as("b"),
-        col("a.shingle") === col("b.shingle") && col("a.doc_id") < col("b.doc_id"))
-      .groupBy(col("a.doc_id").as("da"), col("b.doc_id").as("db"))
-      .agg(count(lit(1)).as("common"))
-    val pairs = common
-      .join(sizes.select(col("doc_id").as("da"), col("n_sh").as("na")), Seq("da"))
-      .join(sizes.select(col("doc_id").as("db"), col("n_sh").as("nb")), Seq("db"))
-      .withColumn("jaccard",
-        col("common").cast("double") / (col("na") + col("nb") - col("common")))
-      .filter(col("jaccard") >= threshold)
-      .select(col("da"), col("db"), col("jaccard"))
-    // materialize the (small) near-dup pair set, then release the shingle
-    // cache — no cache-registry residue survives the call
-    val out = pairs.localCheckpoint()
-    sh.unpersist()
-    out
   }
 
   /** CORPUS-LEVEL SEGMENT DEDUP — the C4/RefinedWeb "duplicated line
@@ -114,8 +77,8 @@ object DedupOps {
           " ").as("retained_text"))
   }
 
-  /** Prefix-filtered exact Jaccard (same result set as [[jaccardPairs]],
-    * locked by the shared oracle): shingles get a global rare-first total
+  /** Prefix-filtered exact Jaccard (same result set as the all-pairs
+    * shingle join, law-pinned in DedupSpec): shingles get a global rare-first total
     * order (frequency, then lexicographic); a doc's PREFIX is its first
     * `n - ceil(t·n) + 1` shingles in that order. Pigeonhole: any pair with
     * J ≥ t shares a prefix shingle, so the candidate join runs on prefixes
@@ -178,23 +141,6 @@ object DedupOps {
 
   def minhashHash(i: Column, hs: Column): Column =
     ((i.cast("long") * 2L + 1L) * hs + i.cast("long") * 7919L) % minhashMod
-
-  /** MinHash signature as ONE array row per doc: (doc_id, sig array<long>).
-    * Same values position-for-position as the historical long form
-    * (doc_id, i, minhash), but computed as k map-side-combined `min`
-    * aggregates in a SINGLE groupBy(doc_id) — no k× row explosion before
-    * the shuffle, no (doc_id, i) key space, and a doc's signature costs one
-    * row of cache instead of k. At replication ×100 the long form's k×
-    * inflation (shuffle rows, cache entries, verify-join traffic) was
-    * q125's measured pressure point; this shape keeps every downstream
-    * stage per-doc-grain. */
-  def minhashSignatureArray(sh: DataFrame, k: Int): DataFrame = {
-    val base = sh.select(col("doc_id"), minhashBase(col("shingle")).as("hs"))
-    val mins = (0 until k).map(i => min(minhashHash(lit(i), col("hs"))).as(s"m$i"))
-    base.groupBy(col("doc_id"))
-      .agg(mins.head, mins.tail: _*)
-      .select(col("doc_id"), array((0 until k).map(i => col(s"m$i")): _*).as("sig"))
-  }
 
   /** Per-band bucket strings from an array signature — a pure expression
     * (no shuffle): bucket b = md5 of the "|"-joined decimal slice
@@ -306,8 +252,8 @@ object DedupOps {
 
   /** Per-doc array signatures straight off the text column via the NATIVE
     * fused expression ([[graft.functions.MinhashSignature]]) — value- and
-    * row-set-identical to `minhashSignatureArray(shingleTable(...), k)`
-    * (law-pinned in DedupSpec): the explode+groupBy form emits one row per
+    * row-set-identical to the relational explode+groupBy form (the
+    * test-scope oracle, law-pinned in DedupSpec), which emits one row per
     * doc with ≥ 1 shingle, so the native form filters on the same
     * `size(tokens) ≥ n` condition (≥ n tokens ⇔ ≥ 1 shingle) BEFORE the
     * fan-out, where it is a cheap split in the pushed-down scan.
@@ -346,33 +292,23 @@ object DedupOps {
     minhashPairsFromSignatures(sig, k, rowsPerBand, threshold).localCheckpoint()
   }
 
-  /** MinHash signature as a single per-row EXPRESSION over the text column
-    * — value-identical to [[minhashSignatureArray]] (which min-aggregates
-    * the exploded shingle table): min over the same distinct-shingle set is
-    * order-free. Pure expression work, NO shuffle — the signature path for
-    * STREAMING dedup probes (q201), where an arriving document's banded
-    * buckets must come off the row itself. The shingle-hash array is
-    * materialized ONCE by binding it as a lambda VALUE through an outer
-    * single-element `transform` (the [[simhashExpr]] CSE discipline —
-    * referencing the hash expression from the k array_min lambdas directly
-    * would re-run one md5 per shingle PER HASH). Texts with no shingle
-    * (< n tokens) yield all-NULL elements — callers filter on shingle
-    * count, mirroring the batch form where such docs have no signature
-    * row. */
-  def minhashSignatureExpr(text: Column, n: Int, k: Int): Column = {
-    val hsArr = transform(TextOps.shingles(text, n), s => minhashBase(s))
-    get(transform(array(hsArr), hsV =>
-      array((0 until k).map(i =>
-        array_min(transform(hsV, h => minhashHash(lit(i), h)))): _*)),
-      lit(0))
-  }
-
-  /** [[GraftFunctions.minhashSignature]] under its older name — the
-    * native codegen'd twin of [[minhashSignatureExpr]], law-equated in
-    * DedupSpec. Main code calls the builder directly; this name stays
-    * because the `perfbench/` probes compile against it. */
+  /** [[GraftFunctions.minhashSignature]] under its older name. Main code
+    * calls the builder directly; this name stays because the `perfbench/`
+    * probes compile against it. */
   def minhashSignatureNative(text: Column, n: Int, k: Int): Column =
     GraftFunctions.minhashSignature(text, n, k)
+
+  /** Per-doc SimHash signatures (doc_id, simhash) for every doc with at
+    * least one token, `sig` being [[GraftFunctions.simhash32]] or
+    * [[GraftFunctions.simhash60]]: one native per-row expression over the
+    * fanned-out scan, no shuffle. The row set is the relational form's
+    * (a doc without tokens has no signature row), so the SimHash oracles
+    * in DedupSpec and the q24/q202/q222 DuckDB mirrors hold unchanged. */
+  def simhashRows(docs: DataFrame, idCol: String, textCol: String,
+                  sig: Column => Column): DataFrame =
+    graft.sources.Layout.fanOutScan(
+        docs.filter(size(TextOps.tokens(col(textCol))) >= 1), col(idCol))
+      .select(col(idCol).as("doc_id"), sig(col(textCol)).as("simhash"))
 
   /** WINNOWING document fingerprints (Schleimer, Wilkerson, Aiken,
     * "Winnowing: Local Algorithms for Document Fingerprinting", SIGMOD'03 —
@@ -389,8 +325,9 @@ object DedupOps {
     * since the fingerprint is the distinct value set, any tie rule selects
     * the same VALUES — position bookkeeping is dropped, which is what
     * makes the operator expressible as pure per-row expressions (the gram
-    * hash array is bound ONCE as a lambda value — the [[simhashExpr]] CSE
-    * discipline — then every window min slices the bound array; O(m·w)
+    * hash array is bound ONCE as a lambda value through an outer
+    * single-element `transform`, so the md5s are not re-run per window —
+    * then every window min slices the bound array; O(m·w)
     * arithmetic per doc, no shuffle).
     *
     * Docs with fewer than w gram hashes (< w + k − 1 tokens) yield NO
@@ -410,64 +347,6 @@ object DedupOps {
           i => array_min(slice(hsV, i, lit(w))))))
         .otherwise(array().cast("array<long>"))), lit(0))
     docs.select(col(idCol).as("doc_id"), explode(fps).as("fp"))
-  }
-
-  /** SimHash as a single per-row EXPRESSION over a token array — identical
-    * bits to the relational [[simhash]] (law-tested in DedupSpec): token
-    * hashes are materialized ONCE via an outer `transform` (binding the hash
-    * as a lambda VALUE — referencing the hash expression inside the fold
-    * would re-evaluate the md5 per bit, the nested-lambda CSE trap), then a
-    * fold accumulates the 32 signed bit counts and a second fold packs the
-    * sign vector into one long.
-    *
-    * Being pure expression work it needs NO shuffle — which makes it the
-    * near-dup key for STREAMING dedup, where the only stateful operator
-    * allowed is the dropDuplicates itself
-    * ([[graft.streaming.StreamOps.nearDupDedup]]). */
-  def simhashExpr(toks: Column): Column = {
-    val hs = transform(toks, t =>
-      conv(substring(md5(t), 1, 8), 16, 10).cast("long"))
-    val bitIdx = sequence(lit(0), lit(31))
-    val counts = aggregate(hs, array_repeat(lit(0L), 32), (acc, h) =>
-      zip_with(acc, bitIdx, (cnt, b) =>
-        cnt + when(call_function("shiftright", h, b)
-          .bitwiseAND(lit(1L)) === 1L, 1L).otherwise(-1L)))
-    aggregate(
-      zip_with(counts, bitIdx, (s, b) =>
-        when(s > 0, call_function("shiftleft", lit(1L), b)).otherwise(lit(0L))),
-      lit(0L), (acc, x) => acc + x)
-  }
-
-  /** WIDE SimHash (60-bit) — q202's ×100 ScaleBench row measured WHY a
-    * 32-bit signature stops scaling: its 4 byte-bands admit a random
-    * (wholly dissimilar) pair as a candidate with probability
-    * 1−(1−2⁻⁸)⁴ ≈ 1.55 %, an N² term with a small constant that overtakes
-    * the true-pair mass at corpus scale (×100: 22.5M output rows ≈ 2.7×
-    * the honest ~M growth, 200 s steady). The wide signature keeps the
-    * SAME relational plan and hash family (the full 60 bits of the
-    * one-md5-per-token hash [[graft.text.TextOps.tokenHash60]] instead of
-    * its 32-bit prefix) and slices into 4 × 15-bit bands: pigeonhole
-    * completeness at Hamming ≤ 3 is unchanged, while the accidental-
-    * candidate rate drops to 1−(1−2⁻¹⁵)⁴ ≈ 0.012 % — ~127× less wasted
-    * verify work. Hamming ≤ 3 over 60 bits is a STRICTER near-dup tier
-    * than over 32 (that is the point: the 32-bit tier's selectivity was
-    * partly band-collision noise). */
-  def simhash60(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
-    val tok = graft.sources.Layout.fanOutScan(docs, col(idCol))
-      .select(col(idCol).as("doc_id"),
-        explode(TextOps.tokens(col(textCol))).as("token"))
-      .groupBy(col("doc_id"), col("token")).agg(count(lit(1)).as("cnt"))
-      .withColumn("h", TextOps.tokenHash60(col("token")))
-    val bits = tok.select(col("doc_id"),
-        explode(sequence(lit(0), lit(59))).as("bit"),
-        col("cnt"), col("h"))
-      .withColumn("contrib",
-        when(expr("shiftright(h, bit)").bitwiseAND(1L) === 1L,
-          col("cnt")).otherwise(-col("cnt")))
-    bits.groupBy(col("doc_id"), col("bit")).agg(sum(col("contrib")).as("s"))
-      .groupBy(col("doc_id"))
-      .agg(sum(when(col("s") > 0, expr("shiftleft(cast(1 as bigint), bit)"))
-        .otherwise(0L)).as("simhash"))
   }
 
   /** REPEATED-SPAN detection — the exact-substring dedup flavor of
@@ -519,27 +398,5 @@ object DedupOps {
         (max(col("pos")) + w).as("span_end"),
         count(lit(1)).as("n_wins"))
       .select(col("doc_id"), col("span_start"), col("span_end"), col("n_wins"))
-  }
-
-  /** SimHash (32-bit, md5-derived bit hashes) as a pure relational plan:
-    * explode tokens → per-(doc, token) count → explode 32 bit positions →
-    * signed contributions → per-(doc, bit) sum → pack bits into one long.
-    * Every stage is a hash aggregation with map-side combine. */
-  def simhash(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
-    val tok = graft.sources.Layout.fanOutScan(docs, col(idCol))
-      .select(col(idCol).as("doc_id"),
-        explode(TextOps.tokens(col(textCol))).as("token"))
-      .groupBy(col("doc_id"), col("token")).agg(count(lit(1)).as("cnt"))
-      .withColumn("h", conv(substring(md5(col("token")), 1, 8), 16, 10).cast("long"))
-    val bits = tok.select(col("doc_id"),
-        explode(sequence(lit(0), lit(31))).as("bit"),
-        col("cnt"), col("h"))
-      .withColumn("contrib",
-        when(expr("shiftright(h, bit)").bitwiseAND(1L) === 1L,
-          col("cnt")).otherwise(-col("cnt")))
-    bits.groupBy(col("doc_id"), col("bit")).agg(sum(col("contrib")).as("s"))
-      .groupBy(col("doc_id"))
-      .agg(sum(when(col("s") > 0, expr("shiftleft(cast(1 as bigint), bit)"))
-        .otherwise(0L)).as("simhash"))
   }
 }

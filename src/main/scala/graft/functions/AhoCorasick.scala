@@ -29,7 +29,6 @@ object TokenAhoCorasick {
       while (s != 0 && !goTo(s).contains(tok)) s = fail(s)
       goTo(s).getOrElse(tok, 0)
     }
-    def outputs(state: Int): List[(Int, Int)] = out(state)
 
     /** Full matching pass over one token array — the single entry point both
       * interpreted eval and generated code call, so the two paths cannot

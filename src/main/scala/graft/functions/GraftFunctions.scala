@@ -27,7 +27,11 @@ object GraftFunctions {
   def minhashSignature(text: Column, n: Int, k: Int): Column =
     col(MinhashSignature(ex(text), ex(lit(n)), ex(lit(k))))
 
-  def simhash32(text: Column): Column = col(SimhashText(ex(text)))
+  def simhash32(text: Column): Column = col(SimhashText(ex(text), 32))
+
+  /** The 60-bit SimHash ([[SimhashText]] over [[graft.text.TextOps.tokenHash60]]);
+    * typed only — SQL knows just `simhash32`. */
+  def simhash60(text: Column): Column = col(SimhashText(ex(text), 60))
 
   def lshSignature(vec: Column, nPlanes: Int): Column =
     col(LshSignature(ex(vec), ex(lit(nPlanes))))
@@ -52,7 +56,7 @@ object GraftFunctions {
     sql("cosine_sim", classOf[CosineSimilarity])(c => CosineSimilarity(c(0), c(1))),
     sql("minhash_signature", classOf[MinhashSignature])(c =>
       MinhashSignature(c(0), c(1), c(2))),
-    sql("simhash32", classOf[SimhashText])(c => SimhashText(c(0))),
+    sql("simhash32", classOf[SimhashText])(c => SimhashText(c(0), 32)),
     sql("lsh_signature", classOf[LshSignature])(c => LshSignature(c(0), c(1))),
     sql("lsh_signature_salted", classOf[LshSignatureSalted])(c =>
       LshSignatureSalted(c(0), c(1))),

@@ -7,14 +7,15 @@ import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Sign-LSH signature as a native Catalyst expression — the resolved-tree
-  * twin of [[graft.vector.VectorOps.lshSignature]]'s HOF form, for use in
-  * post-analysis optimizer rewrites ([[graft.plans.RewriteApproxCosineJoin]])
-  * where Column-API trees would arrive unresolved. BIT-IDENTICAL to the HOF
-  * path: same plane-weight integer arithmetic, same sequential
-  * double-accumulation order, same `proj >= 0` bit rule — locked by
-  * ExtensionsSpec equating the rewritten join with `lshNeighborPairs` and by
-  * q74 sharing q27's oracle.
+/** Sign-LSH signature as a native Catalyst expression — the one sign-LSH
+  * implementation in main: [[graft.vector.VectorOps.lshNeighborPairs]] and
+  * the banded pairs call it, and post-analysis optimizer rewrites
+  * ([[graft.plans.RewriteApproxCosineJoin]]) plant it where Column-API
+  * trees would arrive unresolved. BIT-IDENTICAL to the HOF fold kept as the
+  * test-scope oracle `graft.Oracles.lshSignature` (law-pinned in
+  * VectorSpec): same plane-weight integer arithmetic, same sequential
+  * double-accumulation order, same `proj >= 0` bit rule; q74 shares q27's
+  * DuckDB oracle.
   */
 case class LshSignature(left: Expression, right: Expression)
   extends BinaryExpression {
@@ -59,8 +60,8 @@ case class LshSignature(left: Expression, right: Expression)
 /** Salted-md5 plane-family twin of [[LshSignature]] — for WIDE signatures
   * (≥ 16 planes), where the congruential family is lattice-correlated (see
   * [[graft.vector.VectorOps.saltedPlaneWeights]]: at 64 planes it collapses
-  * to ~9 effective hyperplanes). BIT-IDENTICAL to the HOF form
-  * [[graft.vector.VectorOps.lshSignatureSalted]] (same weights, same
+  * to ~9 effective hyperplanes). BIT-IDENTICAL to the HOF form kept as the
+  * test-scope oracle `graft.Oracles.lshSignatureSalted` (same weights, same
   * sequential fold, same `>= 0` bit rule, same null parity — '0' bits for
   * null ELEMENTS, NULL output for a NULL array, law-pinned in
   * R12QueriesSpec), but the weight matrix lives in
@@ -119,7 +120,7 @@ object LshSignatureSalted {
     weightCache.computeIfAbsent((nPlanes, dim),
       _ => graft.vector.VectorOps.saltedPlaneWeights(nPlanes, dim))
 
-  /** Mirrors VectorOps.lshSignatureSalted exactly: per plane p, fold
+  /** Mirrors the salted HOF oracle exactly: per plane p, fold
     * acc = Σ_d vec(d).toDouble · w(p)(d) left-to-right, bit = proj >= 0;
     * any null element ⇒ all-zeros (the HOF `when(null >= 0, ...)` rule). */
   def compute(vec: ArrayData, nPlanes: Int, elemIsFloat: Boolean): String = {
@@ -149,7 +150,7 @@ object LshSignatureSalted {
 }
 
 object LshSignature {
-  /** Mirrors VectorOps.planeWeight/lshSignature exactly: per plane p, fold
+  /** Mirrors the HOF oracle's plane weight and fold exactly: per plane p, fold
     * acc = Σ_d vec(d).toDouble · w(p,d) left-to-right, bit = proj >= 0.
     * NULL-element parity with the HOF twin: a null element nulls every
     * plane's fold there, and `when(null >= 0, '1').otherwise('0')` emits

@@ -10,9 +10,10 @@ import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 /** MinHash signature over a text column as a NATIVE codegen'd expression —
-  * the fused twin of [[graft.dedup.DedupOps.minhashSignatureExpr]] (HOF form)
-  * and value-identical position-for-position to the aggregate
-  * [[graft.dedup.DedupOps.minhashSignatureArray]] (law-pinned in DedupSpec).
+  * the one MinHash signature implementation in main. Its HOF form and the
+  * relational min-aggregate form are test-scope oracles
+  * (`graft.Oracles.minhashSignatureExpr`/`minhashSignatureArray`),
+  * value-identical position for position (law-pinned in DedupSpec).
   *
   * Why it exists (round-14 q201 root cause): higher-order functions are
   * CodegenFallback — each lambda element evaluation is interpreted — AND

@@ -1,6 +1,6 @@
 package graft.graph
 
-import org.apache.spark.graphx.{Edge, Graph, VertexId}
+import org.apache.spark.graphx.{Edge, Graph}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
@@ -10,12 +10,14 @@ import org.apache.spark.storage.StorageLevel
   * The reference keeps the graph as one in-memory dict per entity
   * (/root/reference/src/senzing_pipeline.py:315-370). Spark-first shape:
   * an `edges(src, dst)` DataFrame for join-based traversal (k is small and
-  * fixed → k shuffle joins beat Pregel's per-superstep overhead), plus GraphX
-  * twins for the genuinely iterative algorithms (connected components,
-  * PageRank) where the fixpoint iteration count is data-dependent.
+  * fixed → k shuffle joins beat Pregel's per-superstep overhead), and
+  * DataFrame fixed-point loops for the iterative algorithms, each run in a
+  * child session sized to its working set ([[inLoopSession]]). GraphX
+  * remains only for [[connectedComponents]]; the GraphX BFS, SSSP and
+  * PageRank twins are test-scope oracles.
   *
   * No GraphFrames on the classpath (BASELINE.md) — motif-style queries are
-  * DataFrame self-joins, analytics are GraphX.
+  * DataFrame self-joins.
   */
 object GraphOps {
 
@@ -41,51 +43,17 @@ object GraphOps {
     *
     * @param seeds single-column DataFrame `id`
     * @param edges two-column DataFrame `src, dst` (already symmetric)
-    * @param broadcastFrontier default true (investigation-scale frontiers);
-    *        pass false for graph-scale seed sets — the hint-free join lets
-    *        AQE choose, and the driver never materializes the frontier
     */
-  def kHop(edges: DataFrame, seeds: DataFrame, k: Int,
-           broadcastFrontier: Boolean = true): DataFrame = {
+  def kHop(edges: DataFrame, seeds: DataFrame, k: Int): DataFrame = {
     var reached = seeds.select(col("id")).distinct()
     for (_ <- 1 to k) {
-      // broadcast stays the DEFAULT (the investigation contract: tens of
-      // seeds, ~tens-of-ids closure), but is opt-OUT for graph-scale seed
-      // sets where a collected broadcast set would OOM the driver — the
-      // hint-free join lets AQE pick broadcast-vs-shuffle at runtime,
-      // mirroring [[bfsDistances]]' distributed-frontier pattern.
-      val probe = if (broadcastFrontier) broadcast(reached) else reached
-      val neighbors = edges.join(probe, col("src") === col("id"))
+      // broadcast: the investigation contract is tens of seeds and a
+      // ~tens-of-ids closure
+      val neighbors = edges.join(broadcast(reached), col("src") === col("id"))
         .select(col("dst").as("id"))
       reached = reached.union(neighbors).distinct()
     }
     reached
-  }
-
-  /** GraphX twin of [[kHop]]: Pregel BFS, vertices within distance k.
-    * Used as a cross-check (same result set) and as the scale path when k is
-    * large enough that join-per-hop materialization hurts.
-    */
-  def kHopGraphX(spark: SparkSession, edges: DataFrame, seeds: DataFrame, k: Int): DataFrame = {
-    import spark.implicits._
-    // seeds stay DISTRIBUTED: outerJoinVertices ships them through a
-    // shuffle keyed like the vertex RDD — no driver collect, so a
-    // graph-scale seed set (e.g. "all flagged entities") cannot OOM the
-    // driver the way a collected broadcast set would
-    val seedRdd = seeds.select(col("id").cast("long")).as[Long]
-      .rdd.map(id => (id, ()))
-    val edgeRdd = edges.select(col("src").cast("long"), col("dst").cast("long"))
-      .as[(Long, Long)].rdd.map { case (s, d) => Edge(s, d, ()) }
-    val graph = Graph.fromEdges[Int, Unit](edgeRdd, Int.MaxValue,
-      StorageLevel.MEMORY_AND_DISK, StorageLevel.MEMORY_AND_DISK)
-      .outerJoinVertices(seedRdd)((_, _, s) =>
-        if (s.isDefined) 0 else Int.MaxValue)
-    val bfs = graph.pregel(Int.MaxValue, maxIterations = k)(
-      (_, dist, msg) => math.min(dist, msg),
-      t => if (t.srcAttr != Int.MaxValue && t.srcAttr + 1 < t.dstAttr)
-             Iterator((t.dstId, t.srcAttr + 1)) else Iterator.empty,
-      (a, b) => math.min(a, b))
-    bfs.vertices.filter { case (_, d) => d <= k }.map(_._1).toDF("id")
   }
 
   /** G7 — connected components (GraphX label = lowest vertex id in the
@@ -132,9 +100,10 @@ object GraphOps {
     * inherited partition count — 46.2 s at 400 / 72.4 s at 800 / 100.8 s
     * at 1600 — pure scheduling overhead, not spill (more partitions made
     * it worse) and not the algorithm (output identical). The override
-    * lives in a CHILD session (`newSession`: shared SparkContext, private
-    * SQLConf), so concurrent queries and streaming micro-batches on the
-    * caller's session never see the shrunken setting — every shuffle
+    * lives in a CHILD session ([[inLoopSession]] — `newSession`: shared
+    * SparkContext, private SQLConf), so concurrent queries and streaming
+    * micro-batches on the caller's session never see the shrunken
+    * setting — every shuffle
     * inside the loop is forced by the per-round localCheckpoint, so
     * nothing lazy escapes the child session either.
     *
@@ -142,45 +111,8 @@ object GraphOps {
     *              vertices don't appear (no edges ⇒ no rows), matching the
     *              GraphX twin on an edge-derived graph
     * @return (id, component) */
-  def connectedComponentsDF(edges: DataFrame, maxRounds: Int = 50): DataFrame = {
-    val spark = edges.sparkSession
-    // thread-safety: the partition override goes into a throwaway child
-    // session's private SQLConf, never the caller's. The symmetrize plan's
-    // shuffles execute under the CALLER's (corpus-scale) conf via .rdd —
-    // correct, since the edge derivation is corpus-sized work — and the
-    // child-side wrap is localCheckpointed, so the edges are materialized
-    // ONCE (one Row conversion, single storage) before the loop scans
-    // them 2× per round.
-    val symPlan = symmetrize(edges)
-    val loopSession = spark.newSession()
-    // newSession() starts from BUILD-time defaults: any conf the caller set
-    // at runtime (AQE toggles, autoBroadcastJoinThreshold, ANSI mode,
-    // session timezone …) would silently not apply inside the loop. Forward
-    // the caller's runtime SQLConf entries first — the partition override
-    // below then shadows only spark.sql.shuffle.partitions. Static/
-    // non-modifiable entries throw on a live session; skip them.
-    spark.conf.getAll.foreach { case (k, v) =>
-      if (!loopSession.conf.getOption(k).contains(v))
-        try loopSession.conf.set(k, v)
-        catch { case _: org.apache.spark.sql.AnalysisException => () }
-    }
-    val sym = loopSession.createDataFrame(symPlan.rdd, symPlan.schema)
-      .localCheckpoint()
-    // ~100k edges per partition, never above the session setting (a conf
-    // tuned BELOW the default is respected — the operator only ever
-    // shrinks its own stages). r17: the old core-count FLOOR is gone — it
-    // contradicted the size rule exactly where the rule matters (a
-    // few-thousand-edge label table ran every round's 3 shuffles as 32
-    // near-empty tasks; AQE cannot coalesce here because the loop executes
-    // through the RDD path). At corpus scale edges/100k ≫ cores and the
-    // floor never bound anyway; guide §2.2.
-    val parts = math.min(
-      spark.sessionState.conf.numShufflePartitions,
-      (sym.count() / 100000L).toInt + 1)
-    loopSession.conf.set("spark.sql.shuffle.partitions", parts.toString)
-    val res = connectedComponentsLoop(sym, maxRounds)
-    spark.createDataFrame(res.rdd, res.schema)
-  }
+  def connectedComponentsDF(edges: DataFrame, maxRounds: Int = 50): DataFrame =
+    inLoopSession(Seq(symmetrize(edges)))(s => connectedComponentsLoop(s.head, maxRounds))
 
   /** The label-propagation fixpoint loop of [[connectedComponentsDF]] —
     * every round ends in an eager localCheckpoint, so all its shuffles
@@ -242,10 +174,9 @@ object GraphOps {
     * per-task scheduling overhead × stages × rounds) extended to every
     * iterative operator. `inputs` are the loop-invariant tables, already
     * projected to the columns the loop reads: each is materialized ONCE
-    * into the child session (one Row conversion — the same cost
-    * connectedComponentsDF accepts for its edge table, and it doubles as
-    * the eager materialization the loops previously did with a lazy
-    * cache); partitions = rows/100k of the largest input, capped by the
+    * into the child session (one Row conversion, which doubles as the
+    * eager materialization the loops previously did with a lazy cache);
+    * partitions = rows/100k of the largest input, capped by the
     * caller's conf (at corpus scale rows/100k ≫ cores and nothing
     * changes). The result is re-wrapped into the caller's session so
     * downstream plans never reference child-session frames. Partitioning
@@ -255,6 +186,10 @@ object GraphOps {
       body: Seq[DataFrame] => DataFrame): DataFrame = {
     val spark = inputs.head.sparkSession
     val ls = spark.newSession()
+    // newSession() starts from BUILD-time defaults: forward the caller's
+    // runtime SQLConf entries (AQE toggles, broadcast threshold, ANSI mode,
+    // time zone …) so only the partition override below differs; static
+    // entries throw on a live session and are skipped
     spark.conf.getAll.foreach { case (k, v) =>
       if (!ls.conf.getOption(k).contains(v))
         try ls.conf.set(k, v)
@@ -263,6 +198,8 @@ object GraphOps {
     val wrapped = inputs.map(f =>
       ls.createDataFrame(f.rdd, f.schema).localCheckpoint())
     val rows = wrapped.map(_.count()).max
+    // no core-count floor: AQE cannot coalesce a loop that executes through
+    // the RDD path, and a floor ran small label tables as near-empty tasks
     val parts = math.min(spark.sessionState.conf.numShufflePartitions,
       (rows / 100000L).toInt + 1)
     ls.conf.set("spark.sql.shuffle.partitions", parts.toString)
@@ -278,18 +215,16 @@ object GraphOps {
     * minimum distance and each round's frontier shrinks to the BFS ring).
     * Output: (id, dist) for vertices within maxHops of a seed.
     */
-  def bfsDistances(edges: DataFrame, seeds: DataFrame, maxHops: Int,
-                   broadcastFrontier: Boolean = false): DataFrame =
+  def bfsDistances(edges: DataFrame, seeds: DataFrame, maxHops: Int): DataFrame =
     inLoopSession(Seq(edges.select(col("src"), col("dst")),
         seeds.select(col("id")).distinct())) { case Seq(e, sd) =>
       var labeled = sd.withColumn("dist", lit(0))
       var frontier = labeled.select(col("id"))
       for (h <- 1 to maxHops) {
-        // broadcast is OPT-IN: on hub-heavy graphs a frontier ring can reach
-        // graph scale and an unconditional hint is a driver OOM hazard — by
-        // default AQE broadcasts small rings at runtime and shuffles big ones
-        val probe = if (broadcastFrontier) broadcast(frontier) else frontier
-        val ring = e.join(probe, col("src") === col("id"))
+        // no broadcast hint: on hub-heavy graphs a frontier ring can reach
+        // graph scale and a hint is a driver OOM hazard — AQE broadcasts
+        // small rings at runtime and shuffles big ones
+        val ring = e.join(frontier, col("src") === col("id"))
           .select(col("dst").as("id")).distinct()
           .join(labeled.select(col("id")), Seq("id"), "left_anti")
           .localCheckpoint() // consumed twice (union + next frontier) and
@@ -316,14 +251,12 @@ object GraphOps {
     * @param seeds single-column DataFrame `id`
     * @return (id, cost) for vertices reachable within maxRounds edges
     */
-  def ssspWeighted(edges: DataFrame, seeds: DataFrame, maxRounds: Int,
-                   broadcastFrontier: Boolean = false): DataFrame =
+  def ssspWeighted(edges: DataFrame, seeds: DataFrame, maxRounds: Int): DataFrame =
     inLoopSession(Seq(edges.select(col("src"), col("dst"), col("cost").as("w")),
         seeds.select(col("id")).distinct())) { case Seq(e, sd) =>
       var dist = sd.withColumn("cost", lit(0L))
       for (_ <- 1 to maxRounds) {
-        val probe = if (broadcastFrontier) broadcast(dist) else dist
-        val relaxed = e.join(probe, col("src") === col("id"))
+        val relaxed = e.join(dist, col("src") === col("id"))
           .select(col("dst").as("id"), (col("cost") + col("w")).as("cost"))
         dist = dist.unionByName(relaxed)
           .groupBy(col("id")).agg(min(col("cost")).as("cost"))
@@ -333,33 +266,6 @@ object GraphOps {
       dist
     }
 
-
-  /** GraphX Pregel twin of [[ssspWeighted]]: same bounded-round relaxation
-    * semantics (maxIterations = maxRounds), used as a cross-check and as
-    * the scale path when rounds are many enough that per-round DataFrame
-    * materialization hurts. */
-  def ssspWeightedGraphX(spark: SparkSession, edges: DataFrame,
-                         seeds: DataFrame, maxRounds: Int): DataFrame = {
-    import spark.implicits._
-    // distributed seed labeling — same no-driver-collect rationale as
-    // kHopGraphX
-    val seedRdd = seeds.select(col("id").cast("long")).as[Long]
-      .rdd.map(id => (id, ()))
-    val edgeRdd = edges
-      .select(col("src").cast("long"), col("dst").cast("long"), col("cost").cast("long"))
-      .as[(Long, Long, Long)].rdd.map { case (s, d, c) => Edge(s, d, c) }
-    val graph = Graph.fromEdges[Long, Long](edgeRdd, Long.MaxValue,
-      StorageLevel.MEMORY_AND_DISK, StorageLevel.MEMORY_AND_DISK)
-      .outerJoinVertices(seedRdd)((_, _, s) =>
-        if (s.isDefined) 0L else Long.MaxValue)
-    val sssp = graph.pregel(Long.MaxValue, maxIterations = maxRounds)(
-      (_, d, msg) => math.min(d, msg),
-      t => if (t.srcAttr != Long.MaxValue && t.srcAttr + t.attr < t.dstAttr)
-             Iterator((t.dstId, t.srcAttr + t.attr)) else Iterator.empty,
-      (a, b) => math.min(a, b))
-    sssp.vertices.filter { case (_, c) => c != Long.MaxValue }
-      .toDF("id", "cost")
-  }
 
   /** Per-vertex TRIANGLE counts over a canonically-oriented (src < dst)
     * undirected edge list: `e1(a,b) ⋈ e2(b,c) ⋈ e3(a,c)` enumerates each
@@ -382,20 +288,9 @@ object GraphOps {
       .groupBy(col("id")).agg(count(lit(1)).as("n_triangles"))
   }
 
-  /** V4 support / W2 — PageRank, fixed iteration count for determinism
-    * (GraphX staticPageRank; resetProb 0.15 like the pytextrank default).
-    */
-  def pageRank(spark: SparkSession, edges: DataFrame, numIter: Int): DataFrame = {
-    import spark.implicits._
-    val edgeRdd = edges.select(col("src").cast("long"), col("dst").cast("long"))
-      .as[(Long, Long)].rdd.map { case (s, d) => Edge(s, d, 1.0) }
-    val graph = Graph.fromEdges[Double, Double](edgeRdd, 1.0,
-      StorageLevel.MEMORY_AND_DISK, StorageLevel.MEMORY_AND_DISK)
-    graph.staticPageRank(numIter).vertices.toDF("id", "rank")
-  }
-
-  /** Deterministic DataFrame PageRank over one symmetric graph — the
-    * oracle-parity twin of [[pageRank]]: normalized ranks
+  /** V4 support / W2 — deterministic DataFrame PageRank over one symmetric
+    * graph (the GraphX `staticPageRank` twin is a test-scope oracle):
+    * normalized ranks
     * (r = 0.15/n + 0.85·Σ inflow), fixed-point (1e-15 BIGINT) contribution
     * sums so the result is partition-order-independent and exactly
     * reproducible in DuckDB (same discipline as [[graft.text.TextRank]]).
@@ -578,33 +473,23 @@ object GraphOps {
     * @param edges symmetric edge list (src, dst)
     * @return (id, core_degree) for vertices surviving the peel
     */
-  def kCore(edges: DataFrame, k: Int, maxRounds: Int,
-            checkpointEvery: Int = 1): DataFrame = {
-    // `checkpointEvery` is the eager-materialization dial (same knob as the
-    // PageRank loops' every-3-rounds truncation): materializing + counting
-    // every round gives the earliest possible convergence exit — right for
-    // shallow peels, where most rounds ARE the last round — while a deep
-    // high-k peel on a big graph can raise it to batch several peel rounds
-    // into one job, trading later convergence detection for fewer actions.
-    // Convergence is only CHECKED on materialization rounds (the count is
-    // free there — the checkpoint already ran the job), so between checks
-    // the loop just stacks semi-join layers lazily.
-    require(checkpointEvery >= 1, "kCore: checkpointEvery must be >= 1")
+  def kCore(edges: DataFrame, k: Int, maxRounds: Int): DataFrame = {
+    // every round is materialized and counted: the earliest possible
+    // convergence exit (shallow peels, where most rounds ARE the last
+    // round), and the count is free — the checkpoint already ran the job
     var live = edges.select(col("src"), col("dst")).localCheckpoint()
     var n = live.count()
     var converged = false
-    for (round <- 1 to maxRounds if !converged) {
+    for (_ <- 1 to maxRounds if !converged) {
       val keep = live.groupBy(col("src")).agg(count(lit(1)).as("deg"))
         .filter(col("deg") >= k).select(col("src").as("id"))
       val next = live
         .join(keep, live("src") === keep("id"), "left_semi")
         .join(keep, live("dst") === keep("id"), "left_semi")
-      if (round % checkpointEvery == 0 || round == maxRounds) {
-        val mat = next.localCheckpoint() // flatten the per-round lineage
-        val m = mat.count()
-        converged = m == n
-        live = mat; n = m
-      } else live = next
+      val mat = next.localCheckpoint() // flatten the per-round lineage
+      val m = mat.count()
+      converged = m == n
+      live = mat; n = m
     }
     live.groupBy(col("src").as("id")).agg(count(lit(1)).as("core_degree"))
   }

@@ -109,12 +109,6 @@ object Relational {
         row_number().over(Window.partitionBy(partitionCols: _*).orderBy(orderCols: _*)))
       .filter(col("rn") <= k)
 
-  /** W3 — argmax per group (disambiguation winner,
-    * /root/reference/dev.ipynb cells 73-74). */
-  def argmaxPerGroup(df: DataFrame, partitionCols: Seq[Column],
-                     orderCols: Seq[Column]): DataFrame =
-    topKPerGroup(df, partitionCols, orderCols, 1).drop("rn")
-
   /** STR5 — default/coalesce semantics: empty string → default
     * (/root/reference/src/senzing_pipeline.py:345-353). */
   def emptyToDefault(c: Column, default: Column): Column =

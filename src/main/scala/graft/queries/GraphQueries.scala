@@ -48,8 +48,8 @@ object GraphQueries {
         .orderBy(col("id"))),
 
     // W2/V4 — PageRank over the entity graph, 10 fixed iterations,
-    // fixed-point deterministic (exact DuckDB oracle; the GraphX twin
-    // GraphOps.pageRank is cross-checked in GraphSpec instead).
+    // fixed-point deterministic (exact DuckDB oracle; the GraphX
+    // staticPageRank twin is a test-scope oracle in GraphSpec).
     "q15_pagerank" -> ((s, d) =>
       GraphOps.pageRankDeterministic(Erkg.entityEdges(s, d), 10)
         .orderBy(col("rank").desc, col("id")).limit(20)),

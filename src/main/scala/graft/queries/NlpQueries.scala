@@ -60,8 +60,7 @@ object NlpQueries {
 
   private def linkedFrom(s: SparkSession, d: String, cand: DataFrame): DataFrame = {
     val (docVecs, entVecs) = contextVecs(s, d)
-    EntityLinking.disambiguate(cand, docVecs, entVecs,
-      GraftFunctions.cosineSim)
+    EntityLinking.disambiguate(cand, docVecs, entVecs)
   }
 
   private def linked(s: SparkSession, d: String): DataFrame =

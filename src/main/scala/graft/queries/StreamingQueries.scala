@@ -240,7 +240,7 @@ object StreamingQueries {
         .select(col("vec_id").as("query_id"),
           col("embedding").as("q_emb"), col("cell"))
       val matched = qStream.join(corpus, Seq("cell"))
-        .withColumn("cosine", VectorOps.cosine(col("q_emb"), col("c_emb")))
+        .withColumn("cosine", GraftFunctions.cosineSim(col("q_emb"), col("c_emb")))
         .filter(col("cosine") >= 0.2)
         .select(col("query_id"), col("cell"), col("neighbor_id"),
           col("cosine"))
@@ -295,7 +295,7 @@ object StreamingQueries {
         .select(col("vec_id").as("query_id"),
           col("embedding").as("q_emb"), col("cell"))
       val matched = qStream.join(inv, Seq("cell"))
-        .withColumn("cosine", VectorOps.cosine(col("q_emb"), col("c_emb")))
+        .withColumn("cosine", GraftFunctions.cosineSim(col("q_emb"), col("c_emb")))
         .filter(col("cosine") >= 0.2)
         .select(col("query_id"), col("cell"), col("neighbor_id"),
           col("cosine"))
@@ -885,7 +885,7 @@ object StreamingQueries {
       // eviction boundary on FIRST-ARRIVAL ts: expiry (ts+delay) below
       // wm (maxTs − delay) ⇔ ts below maxTs − 2·delay
       val boundaryUs = (86400L + maxId) * 1000000L - 2L * delayMs * 1000L
-      // native simhash32 (law-pinned == simhashExpr == relational simhash)
+      // native simhash32 (law-pinned equal to the SimHash oracles)
       // — the interpreted HOF fold cost ~2 s per prep pass at scan width
       val sig = docs.withColumn("simhash",
         GraftFunctions.simhash32(col("text")))

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.dedup.DedupOps
+import graft.functions.GraftFunctions
 import graft.text.TextOps
 
 /** Text-analysis + dedup queries over `documents` (north-star LLM-pipeline
@@ -106,7 +107,8 @@ object TextQueries {
     // one 8-byte signature per doc, integer-only verify
     // (bit_count(xor) ≤ 3). All-integer ⇒ oracle bit-exact.
     "q202_simhash_pairs" -> ((s, d) =>
-      simhashBandPairs(DedupOps.simhash(docs(s, d), "doc_id", "text"), 8)),
+      simhashBandPairs(DedupOps.simhashRows(docs(s, d), "doc_id", "text",
+        GraftFunctions.simhash32), 8)),
 
     // WIDE-SIGNATURE SIMHASH PAIRS — q202's 100 TB scale path, built from
     // its ×100 ScaleBench measurement (SCALE_r14): the 32-bit signature's
@@ -114,11 +116,12 @@ object TextQueries {
     // that reached 2.7× the honest output growth and 200 s steady at the
     // decade. Same plan, same one-md5-per-token hash family, 60-bit
     // signature in 4 × 15-bit bands: pigeonhole completeness at
-    // Hamming ≤ 3 unchanged, accidental-candidate rate down ~127×
-    // (DedupOps.simhash60 scaladoc). A stricter tier than ≤ 3/32 by
+    // Hamming ≤ 3 unchanged, accidental-candidate rate
+    // 1−(1−2⁻¹⁵)⁴ ≈ 0.012 %, ~127× less. A stricter tier than ≤ 3/32 by
     // design — the 32-bit tier's extra "pairs" were partly band noise.
     "q222_simhash_wide" -> ((s, d) =>
-      simhashBandPairs(DedupOps.simhash60(docs(s, d), "doc_id", "text"), 15)),
+      simhashBandPairs(DedupOps.simhashRows(docs(s, d), "doc_id", "text",
+        GraftFunctions.simhash60), 15)),
 
     // EVAL-SET N-GRAM COVERAGE — q105's decontamination in the REVERSE
     // direction and as a METRIC, not a filter: for every held-out (src0)
@@ -716,7 +719,7 @@ object TextQueries {
 
     // Exact 3-gram Jaccard near-dup pairs via prefix filtering (identical
     // result to the all-pairs shingle join, which remains as
-    // DedupOps.jaccardPairs and is equality-tested in DedupSpec).
+    // a test-scope oracle equality-tested in DedupSpec).
     "q22_jaccard_pairs" -> ((s, d) =>
       DedupOps.jaccardPairsPrefix(docs(s, d), "doc_id", "text", 3, 0.5)
         .orderBy(col("da"), col("db"))),
@@ -728,9 +731,9 @@ object TextQueries {
       DedupOps.minhashPairs(docs(s, d), "doc_id", "text", 3, 32, 4, 0.5)
         .orderBy(col("da"), col("db"))),
 
-    // SimHash document signatures (32-bit, relational plan).
+    // SimHash document signatures (32-bit, native per-row expression).
     "q24_simhash" -> ((s, d) =>
-      DedupOps.simhash(docs(s, d), "doc_id", "text")
+      DedupOps.simhashRows(docs(s, d), "doc_id", "text", GraftFunctions.simhash32)
         .orderBy(col("doc_id"))),
 
     // MINHASH ACCURACY SELF-CHECK — the sketch-calibration report the
@@ -747,7 +750,7 @@ object TextQueries {
       val sh = docs(s, d).filter(col("doc_id") < 32)
         .select(col("doc_id"),
           explode(TextOps.shingles(col("text"), 3)).as("shingle"))
-        .localCheckpoint() // feeds sizes, the pair join AND the signatures
+        .localCheckpoint() // feeds sizes and the pair join
       val sizes = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n_sh"))
       val common = sh.select(col("doc_id").as("da"), col("shingle"))
         .join(sh.select(col("doc_id").as("db"), col("shingle")),
@@ -761,7 +764,8 @@ object TextQueries {
           Seq("db"))
         .select(col("da"), col("db"), (col("c").cast("double")
           / (col("na") + col("nb") - col("c"))).as("jaccard"))
-      val sig = DedupOps.minhashSignatureArray(sh, 32)
+      val sig = DedupOps.minhashSignatureRows(
+        docs(s, d).filter(col("doc_id") < 32), "doc_id", "text", 3, 32)
       jac
         .join(sig.select(col("doc_id").as("da"), col("sig").as("sa")),
           Seq("da"))
@@ -1297,7 +1301,7 @@ object TextQueries {
       val batch = dd.filter(col("source") =!= "src0")
         .select(col("doc_id"), col("text"))
       // signatures are the increment's dominant cost — computed ONCE per
-      // side (ONE array row per doc, see DedupOps.minhashSignatureArray)
+      // side (ONE array row per doc, see DedupOps.minhashSignatureRows)
       // and reused (cached) across the corpus probe, the survivor
       // bucketing, and the survivor verification; the naive form
       // (minhashPairs on the survivor TEXT) re-shingles ~all of the batch
@@ -2710,7 +2714,7 @@ object TextQueries {
   private def langScoreSql(words: Seq[String]) =
     s"len(list_filter(toks, t -> list_contains([${words.map(w => s"'$w'").mkString(",")}], t)))"
 
-  /** DuckDB mirror of TextOps.shingles (n=3) + DedupOps.shingleTable. */
+  /** DuckDB mirror of TextOps.shingles (n=3), exploded to (doc_id, shingle). */
   private val shingleCte =
     """sh AS (
       |  SELECT DISTINCT doc_id, shingle FROM (

@@ -62,7 +62,8 @@ object VectorQueries {
     // keeps the portable reference implementation in the correctness gate
     // without paying its 30× cost on the full corpus.
     "q38_cosine_hof" -> ((s, d) =>
-      VectorOps.cosinePairs(emb(s, d).filter(col("vec_id") < 300), 0.35)
+      VectorOps.cosinePairs(emb(s, d).filter(col("vec_id") < 300), 0.35,
+        VectorOps.cosine)
         .orderBy(col("ia"), col("ib"))),
 
     // IVF: label-cell centroids (decimal-exact means) → nearest-cell probe.
@@ -112,8 +113,7 @@ object VectorQueries {
       val lshPairs = VectorOps.lshNeighborPairs(e, 8, 0.2)
         .select(col("ia"), col("ib")).localCheckpoint()
       val bandedPairs = VectorOps.lshNeighborPairsBanded(e, 32, 4, 0.2,
-          sigFn = GraftFunctions.lshSignature,
-          cosineFn = GraftFunctions.cosineSim)
+          GraftFunctions.lshSignature)
         .select(col("ia"), col("ib")).localCheckpoint()
       def pairRecallRow(metric: String, approx: DataFrame, tier: Double) = {
         val base = exactPairs.filter(col("cosine") >= tier)
@@ -285,7 +285,7 @@ object VectorQueries {
       val cents = fixedPointLabelCentroids(e)
       e.join(broadcast(cents), col("label") === col("cell"))
         .select(col("vec_id"), col("label"),
-          VectorOps.cosine(col("embedding"), col("centroid")).as("cos_centroid"))
+          GraftFunctions.cosineSim(col("embedding"), col("centroid")).as("cos_centroid"))
         .withColumn("rn", row_number().over(
           Window.partitionBy(col("label"))
             .orderBy(col("cos_centroid").asc, col("vec_id").asc)))
@@ -378,12 +378,10 @@ object VectorQueries {
     }),
 
     "q100_lsh_banded_pairs" -> ((s, d) => {
-      // native codegen'd twins of the HOF signature + cosine (law-equal,
-      // ExtensionsSpec/CosineSimilaritySpec) — the 32-plane × 64-dim
-      // signature fold is the query's dominant expression cost
+      // the 32-plane × 64-dim signature fold is the query's dominant
+      // expression cost — native, like the verify cosine
       VectorOps.lshNeighborPairsBanded(emb(s, d), 32, 4, 0.2,
-          sigFn = GraftFunctions.lshSignature,
-          cosineFn = GraftFunctions.cosineSim)
+          GraftFunctions.lshSignature)
         .orderBy(col("ia"), col("ib"))
     }),
 
@@ -433,8 +431,8 @@ object VectorQueries {
     // per band) — the quadratic dial of banded LSH, since the candidate
     // join carries an N²·P(band collision) term even between unrelated
     // vectors. The 64 planes come from the SALTED-md5 family
-    // ([[VectorOps.lshSignatureSalted]]), NOT the congruential
-    // `planeWeight`: at 64 planes the linear family's lattice collapses
+    // ([[VectorOps.saltedPlaneWeights]]), NOT the congruential
+    // plane weight: at 64 planes the linear family's lattice collapses
     // the signature to ~9 effective hyperplanes, so the 16-bit keys
     // behaved like ~4-bit keys — measured on the ×10 ScaleBench corpus as
     // 35.1M candidate pairs (top bucket 2,460 of 50k docs, visibly
@@ -450,13 +448,10 @@ object VectorQueries {
       val e = VectorOps.hashEmbed(Tables.documents(s, d), "doc_id", "text", 64)
         .select(col("doc_id").as("vec_id"), col("embedding"))
         .localCheckpoint() // referenced 3× (signature + both verify sides)
-      // native codegen twin of VectorOps.lshSignatureSalted (law-equal,
-      // R12QueriesSpec): the HOF form folds 64×64 = 4096 literal weights
-      // into the plan; the native expression memoizes the matrix
-      // per-executor and fuses the 64-plane fold into one loop per row
+      // the native salted signature memoizes the 64×64 weight matrix
+      // per executor and fuses the 64-plane fold into one loop per row
       VectorOps.lshNeighborPairsBanded(e, 64, 4, 0.9,
-          sigFn = GraftFunctions.lshSignatureSalted,
-          cosineFn = GraftFunctions.cosineSim)
+          GraftFunctions.lshSignatureSalted)
         .orderBy(col("ia"), col("ib"))
     }),
 
@@ -486,8 +481,7 @@ object VectorQueries {
     "q179_artifact_lsh" -> ((s, d) => {
       val e = graft.sources.EmbedArtifact.read(s, Tables.documents(s, d), d)
       VectorOps.lshNeighborPairsBanded(e, 64, 4, 0.9,
-          sigFn = GraftFunctions.lshSignatureSalted,
-          cosineFn = GraftFunctions.cosineSim)
+          GraftFunctions.lshSignatureSalted)
         .orderBy(col("ia"), col("ib"))
     }),
 
@@ -598,7 +592,7 @@ object VectorQueries {
           x => x.getField("mean")).as("g_centroid"))
       sc.join(ns, Seq("source")).crossJoin(broadcast(gc))
         .select(col("source"), col("n").as("n_docs"),
-          VectorOps.cosine(col("centroid"), col("g_centroid"))
+          GraftFunctions.cosineSim(col("centroid"), col("g_centroid"))
             .as("cos_to_global"))
         .orderBy(col("source"))
     }),
@@ -612,7 +606,7 @@ object VectorQueries {
       c.as("a").join(c.as("b"), col("a.label") < col("b.label"))
         .select(col("a.label").as("la"), col("b.label").as("lb"),
           col("a.n").as("n_a"), col("b.n").as("n_b"),
-          VectorOps.cosine(col("a.centroid"), col("b.centroid"))
+          GraftFunctions.cosineSim(col("a.centroid"), col("b.centroid"))
             .as("cos_centroid"))
         .orderBy(col("la"), col("lb"))
     }),
@@ -631,7 +625,7 @@ object VectorQueries {
       val cents = fixedPointLabelCentroids(e)
       e.join(broadcast(cents), col("label") === col("cell"))
         .select(col("label"),
-          VectorOps.cosine(col("embedding"), col("centroid")).as("cos"))
+          GraftFunctions.cosineSim(col("embedding"), col("centroid")).as("cos"))
         .groupBy(col("label"))
         .agg(count(lit(1)).as("n"),
           (sum(floor(col("cos") * lit(1e9)).cast("long")).cast("double")
@@ -671,7 +665,7 @@ object VectorQueries {
       val scored = member
         .join(broadcast(cents), Seq("cluster"))
         .select(col("vec_id"), col("cluster"),
-          VectorOps.cosine(col("embedding"), col("centroid"))
+          GraftFunctions.cosineSim(col("embedding"), col("centroid"))
             .as("proto_cos"))
       scored
         .withColumn("rn", row_number().over(
@@ -938,7 +932,7 @@ object VectorQueries {
     // dimensionality-reduction dial for every downstream distance op:
     // project 64-dim embeddings to 16 dims through a deterministic ±1
     // sign matrix (sign(j,i) = md5("jl|j|i") parity — the
-    // lshSignatureSalted hash-family discipline, recomputable in ANSI
+    // salted-plane hash-family discipline, recomputable in ANSI
     // SQL), then report per-pair distance preservation on the fixed
     // 32-vector slice (q25's bounded-query discipline):
     // ratio = ||Rx−Ry|| / (√16·||x−y||) ≈ 1 is the JL guarantee. The
@@ -970,7 +964,7 @@ object VectorQueries {
       val cents = fixedPointCentroids(member, "cluster")
       val binned = member.join(broadcast(cents), Seq("cluster"))
         .select(col("vec_id"), col("cluster"),
-          VectorOps.cosine(col("embedding"), col("centroid"))
+          GraftFunctions.cosineSim(col("embedding"), col("centroid"))
             .as("proto_cos"))
         .withColumn("bin", greatest(
           least(floor((col("proto_cos") + lit(1.0)) * lit(32.0))
@@ -1019,7 +1013,7 @@ object VectorQueries {
         .filter(col("vec_id") =!= col("nb_id"))
         .withColumn("rn", row_number().over(
           Window.partitionBy(col("vec_id"))
-            .orderBy(VectorOps.cosine(col("embedding"), col("nb_emb")).desc,
+            .orderBy(GraftFunctions.cosineSim(col("embedding"), col("nb_emb")).desc,
               col("nb_id").asc)))
         .filter(col("rn") <= 5)
       val maj = nb.groupBy(col("vec_id"), col("nb_label"))
@@ -1087,7 +1081,7 @@ object VectorQueries {
 
   /** JL ±1 sign for (plane j, dim i): parity of the top-60-bit integer of
     * md5("jl|j|i") — same portable hash family as
-    * [[graft.vector.VectorOps.lshSignatureSalted]]; the engine folds the
+    * [[graft.vector.VectorOps.saltedPlaneWeights]]; the engine folds the
     * signs in as literals, the oracle recomputes them from md5 in SQL. */
   private def jlSign(j: Int, i: Int): Double = {
     val hex = java.security.MessageDigest.getInstance("MD5")
@@ -1122,7 +1116,7 @@ object VectorQueries {
       s"i -> (CAST($a[i] AS DOUBLE) - CAST($b[i] AS DOUBLE)) * " +
       s"(CAST($a[i] AS DOUBLE) - CAST($b[i] AS DOUBLE)))), (acc, x) -> acc + x))"
 
-  /** DuckDB mirror of VectorOps.lshSignature (0-indexed dims),
+  /** DuckDB mirror of the native lsh_signature (0-indexed dims),
     * plane-count-parameterized (q27/q74 use 8, q99/q100's banded form 32). */
   private def sigSqlN(nPlanes: Int) =
     s"array_to_string(list_transform(range(0, $nPlanes), p -> CASE WHEN " +
@@ -1133,8 +1127,9 @@ object VectorQueries {
 
   private val sigSql = sigSqlN(8)
 
-  /** DuckDB mirror of VectorOps.lshSignatureSalted: weights recomputed
-    * from md5("pl|p|d") — the engine folds the same values in as literals. */
+  /** DuckDB mirror of the native lsh_signature_salted: weights recomputed
+    * from md5("pl|p|d") — the engine memoizes the same values
+    * ([[graft.vector.VectorOps.saltedPlaneWeights]]). */
   private def saltedSigSqlN(nPlanes: Int) =
     s"array_to_string(list_transform(range(0, $nPlanes), p -> CASE WHEN " +
       "list_reduce(list_prepend(0.0, list_transform(range(1, len(embedding)+1), " +

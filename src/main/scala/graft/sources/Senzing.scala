@@ -39,11 +39,6 @@ object Senzing {
   def readExport(spark: SparkSession, path: String): DataFrame =
     spark.read.schema(exportSchema).json(path)
 
-  /** S7 — country TSV (code → name), header row skipped. */
-  def readCountries(spark: SparkSession, path: String): DataFrame =
-    spark.read.option("sep", "\t").option("header", "true").csv(path)
-      .toDF("code", "country")
-
   /** S8 — suspicion names, one per line, right-trimmed
     * (senzing_pipeline.py:406-408). */
   def readSuspicions(spark: SparkSession, path: String): DataFrame =

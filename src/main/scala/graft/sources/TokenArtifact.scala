@@ -42,9 +42,9 @@ object TokenArtifact {
   def tokenTableName(docs: DataFrame, dir: String): String =
     s"graft_tokens_${Artifacts.sourceFingerprint(docs, dir, "doc_id")}"
 
-  /** Write-once (doc_id, source, shingle) materialization — 3-shingles
-    * with repeats (the exact [[graft.dedup.DedupOps.shingleTable]] stream,
-    * plus the source column the source-grain diagnostics group on). */
+  /** Write-once (doc_id, source, shingle) materialization — each doc's
+    * distinct 3-shingles exploded, plus the source column the source-grain
+    * diagnostics group on. */
   def materializeShingles(spark: SparkSession, docs: DataFrame, dir: String,
                           buckets: Int = 8): String =
     Artifacts.materializeBucketed(spark, shingleTableName(docs, dir),

@@ -352,7 +352,7 @@ object StreamOps {
   }
 
   /** Streaming NEAR-duplicate dedup: the dedup key is the per-row SimHash
-    * expression ([[graft.dedup.DedupOps.simhashExpr]] — pure expression work,
+    * expression ([[graft.functions.SimhashText]] — pure expression work,
     * no shuffle, no aggregation), so `dropDuplicates` stays the query's ONLY
     * stateful operator. EXACT but unbounded: the key omits the event-time
     * column, so this state is never watermark-evicted (object scaladoc

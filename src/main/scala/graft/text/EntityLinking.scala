@@ -5,7 +5,6 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.GraftFunctions
-import graft.vector.VectorOps
 
 /** Entity-linking operators (SURVEY.md §2 V2/V3/V5 + W3): the reference's
   * gazetteer NER (`EntityRuler`, dev.ipynb cells 112-116), alias-prior
@@ -223,26 +222,15 @@ object EntityLinking {
       .select(col("doc_id"), col("pos"), col("surface"), col("len"), col("entity"))
   }
 
-  /** V3/W3 — disambiguation: score = prior × cosine(context embedding,
-    * entity embedding), argmax per mention (ties → lower entity id).
-    * `docVecs`: (doc_id, ctx_emb); `entVecs`: (entity, ent_emb).
-    *
-    * The cosine depends only on (doc_id, entity), not on the mention
-    * position, so it is computed once per DISTINCT pair and joined back to
-    * the mention fan-out — a popular alias appearing 50× in a doc costs one
-    * cosine, not 50. `cosineFn` swaps the portable HOF fold for the native
-    * codegen expression ([[graft.functions.CosineSimilarity]]), bit-identical
-    * by spec, ~30× faster.
-    *
-    * Output: (doc_id, pos, token, entity, prior, score). */
   /** Scored candidate LISTS (no argmax): [[disambiguate]]'s prior × cosine
     * scoring, but keeping the top `topK` candidates per mention key — the
     * vector-signal input to hybrid fusion ([[HybridRetrieval.rrfFuse]]).
     * `candidates` must carry `keyCols`, `entity`, `prior`, and `doc_id` (the
-    * context-vector key). Output: keyCols ++ (entity, prior, score, rn). */
+    * context-vector key). `cosineFn` is [[GraftFunctions.cosineSim]] in main
+    * code. Output: keyCols ++ (entity, prior, score, rn). */
   def rankedCandidates(candidates: DataFrame, docVecs: DataFrame,
                        entVecs: DataFrame, keyCols: Seq[String], topK: Int,
-                       cosineFn: (Column, Column) => Column = VectorOps.cosine): DataFrame = {
+                       cosineFn: (Column, Column) => Column): DataFrame = {
     val pairCos = candidates.select(col("doc_id"), col("entity")).distinct()
       .join(docVecs, Seq("doc_id"))
       .join(entVecs, Seq("entity"))
@@ -259,8 +247,16 @@ object EntityLinking {
         col("score"), col("rn")): _*)
   }
 
-  /** V3 — prior × context-cosine argmax per mention. TWO-TIER PRIOR
-    * BACKOFF: a candidate whose doc or entity has no vector keeps its
+  /** V3/W3 — disambiguation: score = prior × cosine(context embedding,
+    * entity embedding), argmax per mention (ties → lower entity id).
+    * `docVecs`: (doc_id, ctx_emb); `entVecs`: (entity, ent_emb).
+    *
+    * The cosine depends only on (doc_id, entity), not on the mention
+    * position, so it is computed once per DISTINCT pair and joined back to
+    * the mention fan-out — a popular alias appearing 50× in a doc costs one
+    * cosine, not 50 — by the native [[GraftFunctions.cosineSim]].
+    *
+    * TWO-TIER PRIOR BACKOFF: a candidate whose doc or entity has no vector keeps its
     * prior as the score instead of being dropped — the standard graceful
     * degradation when the embedding store lags the entity store — but it
     * ranks STRICTLY BELOW every fully-scored candidate of the same
@@ -274,15 +270,16 @@ object EntityLinking {
     * ids dense modulo nvec) neither tier fires differently and results
     * equal the inner-join form; under an id-strided replica namespace
     * (ScaleBench) the pre-backoff inner joins silently emptied the whole
-    * linking output (measured r16: q34 = 0 rows at ×10). */
+    * linking output (measured r16: q34 = 0 rows at ×10).
+    *
+    * Output: (doc_id, pos, token, entity, prior, score). */
   def disambiguate(candidates: DataFrame, docVecs: DataFrame,
-                   entVecs: DataFrame,
-                   cosineFn: (Column, Column) => Column = VectorOps.cosine): DataFrame = {
+                   entVecs: DataFrame): DataFrame = {
     val pairCos = candidates.select(col("doc_id"), col("entity")).distinct()
       .join(docVecs, Seq("doc_id"))
       .join(entVecs, Seq("entity"))
       .select(col("doc_id"), col("entity"),
-        cosineFn(col("ctx_emb"), col("ent_emb")).as("ctx_cos"))
+        GraftFunctions.cosineSim(col("ctx_emb"), col("ent_emb")).as("ctx_cos"))
     val scored = candidates
       .join(pairCos, Seq("doc_id", "entity"), "left")
       .withColumn("score",

@@ -12,9 +12,12 @@ import graft.functions.GraftFunctions
   * precomputed `embedding: array<float>` column.
   *
   * Determinism discipline: every similarity is computed as a SEQUENTIAL
-  * left-fold over the array (`aggregate` HOF) with each element cast to
-  * double BEFORE multiplying — bit-identical to a DuckDB `list_reduce` over
-  * the same expression, so even float-heavy queries keep exact oracle parity.
+  * left-to-right double accumulation with each element cast to double
+  * BEFORE multiplying — bit-identical to a DuckDB `list_reduce` over the
+  * same expression, so even float-heavy queries keep exact oracle parity.
+  * Cosine and the sign-LSH signatures run as native codegen'd expressions
+  * ([[GraftFunctions.cosineSim]], [[GraftFunctions.lshSignature]]);
+  * [[cosine]] keeps the portable HOF fold they are bit-identical to.
   *
   * Scale design (100 TB):
   *  - similarity math is per-row expression work — stays inside
@@ -42,8 +45,11 @@ object VectorOps {
   def l2Norm(a: Column): Column =
     sqrt(aggregate(a, lit(0.0), (acc, x) => acc + x.cast("double") * x.cast("double")))
 
-  /** Cosine similarity = dot / (|a|·|b|); 0-norm inputs yield NaN (0/0 in
-    * double division), matching [[graft.functions.CosineSimilarity]]. */
+  /** Cosine similarity = dot / (|a|·|b|) as HOF folds; 0-norm inputs yield
+    * NaN (0/0 in double division), matching [[graft.functions.CosineSimilarity]].
+    * The portable reference form: main code runs the native
+    * [[GraftFunctions.cosineSim]], and only q38 (which gates this fold
+    * against the oracle) and the perfbench probes call this. */
   def cosine(a: Column, b: Column): Column =
     dot(a, b) / (l2Norm(a) * l2Norm(b))
 
@@ -52,26 +58,20 @@ object VectorOps {
     sqrt(aggregate(zip_with(a, b, (x, y) => x.cast("double") - y.cast("double")),
       lit(0.0), (acc, dd) => acc + dd * dd))
 
-  /** Deterministic pseudo-random hyperplane weight in [-1, 1] for (plane p,
-    * dim d): pure 64-bit integer arithmetic, portable to any SQL engine. */
-  def planeWeight(p: Column, d: Column): Column =
-    (((p.cast("long") * 73856093L + d.cast("long") * 19349663L) % 10007L)
-      .cast("double") / 10007.0) * 2.0 - 1.0
-
   /** Salted-md5 hyperplane weights for WIDE signatures — the q163 lesson
-    * applied to sign-LSH. [[planeWeight]]'s linear congruence has lattice
-    * structure: the weight rows of planes p and p′ are the SAME sawtooth
-    * orbit offset by 4433·(p−p′) mod 10007, so planes 9 apart differ by
+    * applied to sign-LSH. The congruential plane weight of
+    * [[graft.functions.LshSignature]] has lattice structure: the weight
+    * rows of planes p and p′ are the SAME sawtooth orbit offset by
+    * 4433·(p−p′) mod 10007, so planes 9 apart differ by
     * only 131/10007 ≈ 1.3 % — at 64 planes the family collapses to ~9
     * effective hyperplanes and 16-bit band keys behave like ~4-bit keys
     * (measured on the ×10 ScaleBench corpus: 35.1M candidate pairs vs
     * 6.4M with this family — 5.5×, and the periodic band keys like
     * `1010101101010101` disappear). Harmless at the ≤ 8 planes q27/q100
     * use (offsets stay ≥ 2151/10007); fatal at 64. Weights are derived
-    * from md5("pl|p|d") exactly as the DuckDB mirror recomputes them, then
-    * folded into the plan as literals (4096 doubles — the q53 gazetteer
-    * literal discipline), so the signature stays one codegen'd per-row
-    * projection with no join. */
+    * from md5("pl|p|d") exactly as the DuckDB mirror recomputes them;
+    * [[graft.functions.LshSignatureSalted]] memoizes the matrix per
+    * executor. */
   def saltedPlaneWeights(nPlanes: Int, dim: Int): Array[Array[Double]] =
     Array.tabulate(nPlanes, dim) { (p, d) =>
       val md = java.security.MessageDigest.getInstance("MD5")
@@ -80,38 +80,6 @@ object VectorOps {
       val h = java.lang.Long.parseLong(hex, 16)
       (h % 10007L).toDouble / 10007.0 * 2.0 - 1.0
     }
-
-  /** Sign-LSH signature over the salted-md5 plane family — use for wide
-    * (≥ 16-plane) signatures where [[lshSignature]]'s congruential family
-    * is lattice-correlated. Same fold discipline, same output shape.
-    * A NULL input array yields NULL (not all-zeros): without the guard the
-    * per-bit `when(null >= 0, '1').otherwise('0')` would emit '0' for every
-    * plane, silently bucketing all null-embedding rows together — and it
-    * would diverge from the native [[graft.functions.LshSignatureSalted]]
-    * twin (nullSafeEval), whose bit-identity this guard completes. */
-  def lshSignatureSalted(vec: Column, nPlanes: Int, dim: Int): Column = {
-    val w = saltedPlaneWeights(nPlanes, dim)
-    val bits = (0 until nPlanes).map { p =>
-      val wRow = array(w(p).map(x => lit(x)): _*)
-      when(aggregate(zip_with(vec, wRow, (x, ww) => x.cast("double") * ww),
-        lit(0.0), (acc, v) => acc + v) >= 0, lit("1")).otherwise(lit("0"))
-    }
-    when(vec.isNotNull, concat(bits: _*))
-  }
-
-  /** Sign-LSH signature: an `nPlanes`-char '0'/'1' string, bit p = sign of
-    * the projection of `vec` onto pseudo-random hyperplane p. Computed
-    * entirely per-row (sequential folds) — no shuffle, codegen-friendly. */
-  def lshSignature(vec: Column, nPlanes: Int): Column = {
-    val bits = transform(sequence(lit(0), lit(nPlanes - 1)), p => {
-      val proj = aggregate(
-        zip_with(vec, sequence(lit(0), size(vec) - 1),
-          (x, d) => x.cast("double") * planeWeight(p, d)),
-        lit(0.0), (acc, v) => acc + v)
-      when(proj >= 0, lit("1")).otherwise(lit("0"))
-    })
-    array_join(bits, "")
-  }
 
   /** Brute-force cosine top-k: for each row of `queries` (small — broadcast),
     * the k nearest rows of `corpus` by cosine, self-pairs excluded.
@@ -220,10 +188,10 @@ object VectorOps {
 
   /** Exact cosine near-dup pairs (ia < ib, cosine >= threshold). O(N²) —
     * the correctness baseline that [[lshNeighborPairs]] approximates.
-    * `cosineFn` swaps the HOF fold for the native codegen expression
-    * ([[graft.functions.CosineSimilarity]]) — bit-identical results. */
+    * `cosineFn` is [[GraftFunctions.cosineSim]], or [[cosine]] where the
+    * HOF fold itself is under test (q38) — bit-identical results. */
   def cosinePairs(vecs: DataFrame, threshold: Double,
-                  cosineFn: (Column, Column) => Column = cosine): DataFrame = {
+                  cosineFn: (Column, Column) => Column): DataFrame = {
     // fanned out: the O(N²) scoring stage streams side `a` at scan width
     val a = graft.sources.Layout.fanOutScan(
       vecs.select(col("vec_id").as("ia"), col("embedding").as("ea")), col("ia"))
@@ -239,13 +207,13 @@ object VectorOps {
     * count ≈ N²/2^nPlanes instead of N². */
   def lshNeighborPairs(vecs: DataFrame, nPlanes: Int, threshold: Double): DataFrame = {
     val sig = vecs.select(col("vec_id"), col("embedding"),
-      lshSignature(col("embedding"), nPlanes).as("bucket"))
+      GraftFunctions.lshSignature(col("embedding"), nPlanes).as("bucket"))
     val a = sig.select(col("vec_id").as("ia"), col("embedding").as("ea"),
       col("bucket"))
     val b = sig.select(col("vec_id").as("ib"), col("embedding").as("eb"),
       col("bucket"))
     a.join(b, Seq("bucket")).filter(col("ia") < col("ib"))
-      .withColumn("cosine", cosine(col("ea"), col("eb")))
+      .withColumn("cosine", GraftFunctions.cosineSim(col("ea"), col("eb")))
       .filter(col("cosine") >= threshold)
       .select(col("ia"), col("ib"), col("cosine"))
   }
@@ -270,11 +238,14 @@ object VectorOps {
     * candidate pairs are dedup'd on the two ids FIRST and the embeddings
     * attach afterwards via two hash joins for the exact-cosine verify — at
     * no point does a candidate row carry a vector through a shuffle.
-    * Recall of both variants is hash-gated by q99. */
+    * Recall of both variants is hash-gated by q99.
+    *
+    * `sigFn` picks the plane family: [[GraftFunctions.lshSignature]]
+    * (congruential, ≤ 32 planes) or [[GraftFunctions.lshSignatureSalted]]
+    * (wide signatures, see [[saltedPlaneWeights]]). */
   def lshNeighborPairsBanded(vecs: DataFrame, nPlanes: Int, bands: Int,
                              threshold: Double,
-                             sigFn: (Column, Int) => Column = lshSignature,
-                             cosineFn: (Column, Column) => Column = cosine): DataFrame = {
+                             sigFn: (Column, Int) => Column): DataFrame = {
     require(nPlanes % bands == 0, "lshNeighborPairsBanded: bands must divide nPlanes")
     val rowsPerBand = nPlanes / bands
     val sig = vecs.select(col("vec_id"),
@@ -303,7 +274,7 @@ object VectorOps {
     cand
       .join(vecs.select(col("vec_id").as("ia"), col("embedding").as("ea")), Seq("ia"))
       .join(vecs.select(col("vec_id").as("ib"), col("embedding").as("eb")), Seq("ib"))
-      .withColumn("cosine", cosineFn(col("ea"), col("eb")))
+      .withColumn("cosine", GraftFunctions.cosineSim(col("ea"), col("eb")))
       .filter(col("cosine") >= threshold)
       .select(col("ia"), col("ib"), col("cosine"))
   }

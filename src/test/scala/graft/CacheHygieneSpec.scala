@@ -17,7 +17,7 @@ class CacheHygieneSpec extends SparkSuite {
     val docs = Seq(
       (1L, "a b c a b d e"), (2L, "a b c a b d f"), (3L, "x y z w q r s"))
       .toDF("doc_id", "text")
-    DedupOps.jaccardPairs(docs, "doc_id", "text", 3, 0.3).collect()
+    Oracles.jaccardPairs(docs, "doc_id", "text", 3, 0.3).collect()
     DedupOps.jaccardPairsPrefix(docs, "doc_id", "text", 3, 0.3).collect()
     DedupOps.minhashPairs(docs, "doc_id", "text", 3, 8, 2, 0.3).collect()
     val toks = EntityLinking.tokenStream(docs, "doc_id", "text")

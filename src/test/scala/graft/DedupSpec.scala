@@ -20,7 +20,7 @@ class DedupSpec extends SparkSuite {
 
   test("prefix-filtered Jaccard equals the all-pairs join at every threshold") {
     for (t <- Seq(0.3, 0.5, 0.8)) {
-      val full = DedupOps.jaccardPairs(docs, "doc_id", "text", 3, t)
+      val full = Oracles.jaccardPairs(docs, "doc_id", "text", 3, t)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
       val pref = DedupOps.jaccardPairsPrefix(docs, "doc_id", "text", 3, t)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
@@ -42,7 +42,7 @@ class DedupSpec extends SparkSuite {
   }
 
   test("simhash of identical docs is identical, of disjoint docs differs") {
-    val h = DedupOps.simhash(docs, "doc_id", "text")
+    val h = Oracles.simhash(docs, "doc_id", "text")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(h(0L) == h(2L))
     assert(h(0L) != h(3L))
@@ -50,10 +50,10 @@ class DedupSpec extends SparkSuite {
 
   test("equality law: per-row simhashExpr == relational simhash") {
     import org.apache.spark.sql.functions.col
-    val rel = DedupOps.simhash(docs, "doc_id", "text")
+    val rel = Oracles.simhash(docs, "doc_id", "text")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val ex = docs.select(col("doc_id"),
-        DedupOps.simhashExpr(graft.text.TextOps.tokens(col("text"))).as("simhash"))
+        Oracles.simhashExpr(graft.text.TextOps.tokens(col("text"))).as("simhash"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(ex == rel)
   }
@@ -68,12 +68,35 @@ class DedupSpec extends SparkSuite {
       .toDF("doc_id", "text")
     val d = docs.select(col("doc_id"), col("text")).unionByName(edge)
     val ex = d.select(col("doc_id"),
-        DedupOps.simhashExpr(graft.text.TextOps.tokens(col("text"))).as("h"))
+        Oracles.simhashExpr(graft.text.TextOps.tokens(col("text"))).as("h"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val nat = d.select(col("doc_id"),
         call_function("simhash32", col("text")).as("h"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(nat == ex)
+  }
+
+  test("equality law: native 60-bit simhash == relational simhash60 (incl. edge rows)") {
+    import org.apache.spark.sql.DataFrame
+    import graft.functions.GraftFunctions
+    val s = spark
+    import s.implicits._
+    val edge = Seq((100L, Some("")), (101L, Some("   ")), (102L, Some("one")),
+      (103L, Some("rep rep rep uniq")), (104L, None: Option[String]))
+      .toDF("doc_id", "text")
+    val d = docs.select(col("doc_id"), col("text")).unionByName(edge)
+    def byId(df: DataFrame) = df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val rel = byId(Oracles.simhash60(d, "doc_id", "text"))
+    val nat = byId(DedupOps.simhashRows(d, "doc_id", "text", GraftFunctions.simhash60))
+    assert(nat == rel)
+    // docs without tokens have no row in either form
+    assert(rel.keySet == Set(0L, 1L, 2L, 3L, 4L, 5L, 102L, 103L))
+    // the signatures are wider than 32 bits
+    assert(rel.values.exists(_ >>> 32 != 0))
+    // the expression itself: no tokens → 0, null text → null
+    val raw = d.select(col("doc_id"), GraftFunctions.simhash60(col("text")))
+      .collect().map(r => r.getLong(0) -> Option(r.get(1))).toMap
+    assert(raw(100L) == Some(0L) && raw(101L) == Some(0L) && raw(104L).isEmpty)
   }
 
   test("segmentDedup: first occurrence keeps, later copies are stripped") {
@@ -137,10 +160,10 @@ class DedupSpec extends SparkSuite {
     val d = graft.Tables.documents(spark, SparkSpec.sf0001)
       .filter(size(graft.text.TextOps.shingles(col("text"), 3)) > 0)
     val viaExpr = d.select(col("doc_id"),
-        DedupOps.minhashSignatureExpr(col("text"), 3, 32).as("sig"))
+        Oracles.minhashSignatureExpr(col("text"), 3, 32).as("sig"))
       .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
-    val viaAgg = DedupOps.minhashSignatureArray(
-        DedupOps.shingleTable(d, "doc_id", "text", 3), 32)
+    val viaAgg = Oracles.minhashSignatureArray(
+        Oracles.shingleTable(d, "doc_id", "text", 3), 32)
       .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
     assert(viaExpr.keySet === viaAgg.keySet)
     viaExpr.foreach { case (id, sig) =>
@@ -161,7 +184,7 @@ class DedupSpec extends SparkSuite {
     val d = graft.Tables.documents(spark, SparkSpec.sf0001)
       .select(col("doc_id"), col("text")).unionByName(edges)
     val both = d.select(col("doc_id"),
-        DedupOps.minhashSignatureExpr(col("text"), 3, 32).as("hof"),
+        Oracles.minhashSignatureExpr(col("text"), 3, 32).as("hof"),
         DedupOps.minhashSignatureNative(col("text"), 3, 32).as("nat"))
       .collect()
     assert(both.nonEmpty)

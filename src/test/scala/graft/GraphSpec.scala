@@ -32,20 +32,9 @@ class GraphSpec extends SparkSuite {
     val edges = Erkg.entityEdges(spark, sf0001).cache()
     val seeds = Erkg.seeds(spark, sf0001)
     val df = GraphOps.kHop(edges, seeds, 2).as[Long].collect().toSet
-    val gx = GraphOps.kHopGraphX(spark, edges, seeds, 2).as[Long].collect().toSet
+    val gx = Oracles.kHopGraphX(spark, edges, seeds, 2).as[Long].collect().toSet
     assert(df === gx)
     assert(df.nonEmpty)
-  }
-
-  test("kHop law: broadcast and hint-free frontier modes agree") {
-    import spark.implicits._
-    val edges = Erkg.entityEdges(spark, sf0001).cache()
-    val seeds = Erkg.seeds(spark, sf0001)
-    val hinted = GraphOps.kHop(edges, seeds, 2).as[Long].collect().toSet
-    val free = GraphOps.kHop(edges, seeds, 2, broadcastFrontier = false)
-      .as[Long].collect().toSet
-    assert(hinted === free)
-    assert(hinted.nonEmpty)
   }
 
   test("kHop monotonicity: ball(k) ⊆ ball(k+1)") {
@@ -67,7 +56,7 @@ class GraphSpec extends SparkSuite {
 
   test("W2 PageRank: symmetric path graph ranks center highest") {
     import spark.implicits._
-    val pr = GraphOps.pageRank(spark, pathEdges, 20)
+    val pr = Oracles.pageRank(spark, pathEdges, 20)
       .as[(Long, Double)].collect().toMap
     assert(pr(3L) > pr(1L))   // center of the path beats an endpoint
     assert(pr(2L) > pr(1L))
@@ -125,7 +114,7 @@ class GraphSpec extends SparkSuite {
     val seeds = proj.agg(min(col("src")).as("id"))
     val df = GraphOps.ssspWeighted(sym, seeds, 4)
       .as[(Long, Long)].collect().toSet
-    val gx = GraphOps.ssspWeightedGraphX(s, sym, seeds, 4)
+    val gx = Oracles.ssspWeightedGraphX(s, sym, seeds, 4)
       .as[(Long, Long)].collect().toSet
     sym.unpersist()
     assert(df == gx)
@@ -190,13 +179,8 @@ class GraphSpec extends SparkSuite {
     val sym = GraphOps.symmetrize(proj).cache()
     val r8 = GraphOps.kCore(sym, 3, 8).as[(Long, Long)].collect().toSet
     val r20 = GraphOps.kCore(sym, 3, 20).as[(Long, Long)].collect().toSet
-    // the eager-materialization dial must not change the fixpoint: batching
-    // three peel rounds per checkpoint lands on the same core
-    val r8b = GraphOps.kCore(sym, 3, 8, checkpointEvery = 3)
-      .as[(Long, Long)].collect().toSet
     sym.unpersist()
     assert(r8 == r20)
-    assert(r8 == r8b)
     assert(r8.nonEmpty)
     // every survivor keeps >= k in-core neighbors — the k-core invariant
     assert(r8.forall(_._2 >= 3L))

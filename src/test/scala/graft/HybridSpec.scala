@@ -62,7 +62,7 @@ class HybridSpec extends SparkSuite {
     val entVecs = Seq((3L, Seq(0.6f, 0.8f)), (4L, Seq(0.5f, 0.866f)))
       .toDF("entity", "ent_emb")
     val sigA = EntityLinking.rankedCandidates(candA, docVecs, entVecs,
-        Seq("mention"), topK = 5)
+        Seq("mention"), topK = 5, graft.vector.VectorOps.cosine)
       .select(col("mention"), col("entity"), col("rn"))
 
     def first(df: DataFrame): Long =

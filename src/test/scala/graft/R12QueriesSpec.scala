@@ -255,7 +255,7 @@ class R12QueriesSpec extends SparkSuite {
     graft.functions.GraftFunctions.register(spark)
     val e = Tables.embeddings(spark, sf0001)
     val both = e.select(
-      graft.vector.VectorOps.lshSignatureSalted(col("embedding"), 64, 64)
+      Oracles.lshSignatureSalted(col("embedding"), 64, 64)
         .as("hof"),
       call_function("lsh_signature_salted", col("embedding"), lit(64))
         .as("native"))

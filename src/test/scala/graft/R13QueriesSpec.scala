@@ -455,7 +455,7 @@ class R13QueriesSpec extends SparkSuite {
     val emitted = SparkEntry.queries("q202_simhash_pairs")(spark, sf0001)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     // brute-force ground truth off the same signatures
-    val sigs = graft.dedup.DedupOps
+    val sigs = Oracles
       .simhash(Tables.documents(spark, sf0001), "doc_id", "text")
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     val truth = (for {

@@ -146,10 +146,9 @@ class R14QueriesSpec extends SparkSuite {
   // ---- q222 ----------------------------------------------------------------
 
   test("q222: 4x15-bit banding is a complete blocking scheme — pair set equals brute-force Hamming<=3") {
-    import graft.dedup.DedupOps
     val out = SparkEntry.queries("q222_simhash_wide")(spark, sf0001)
       .collect().map(r => (r.getAs[Long]("da"), r.getAs[Long]("db"))).toSet
-    val sig = DedupOps
+    val sig = Oracles
       .simhash60(Tables.documents(spark, sf0001), "doc_id", "text")
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     val brute = (for {

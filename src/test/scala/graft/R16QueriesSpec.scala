@@ -86,8 +86,8 @@ class R16QueriesSpec extends SparkSuite {
       .select(col("doc_id"), col("sig"))
       .collect()
       .map(r => (r.getLong(0), r.getSeq[Long](1).toVector)).toSet
-    val sigFull = graft.dedup.DedupOps.minhashSignatureArray(
-      graft.dedup.DedupOps.shingleTable(v2, "doc_id", "text", 3), 32)
+    val sigFull = Oracles.minhashSignatureArray(
+      Oracles.shingleTable(v2, "doc_id", "text", 3), 32)
       .collect()
       .map(r => (r.getLong(0), r.getSeq[Long](1).toVector)).toSet
     assert(sigMaint === sigFull)
@@ -116,8 +116,8 @@ class R16QueriesSpec extends SparkSuite {
     val sigC = graft.sources.DedupClosure
       .readDeltaSignatures(spark, v1, sf0001, "cdcd")
       .collect().map(r => (r.getLong(0), r.getSeq[Long](1).toVector)).toSet
-    val sigF = graft.dedup.DedupOps.minhashSignatureArray(
-      graft.dedup.DedupOps.shingleTable(v2, "doc_id", "text", 3), 32)
+    val sigF = Oracles.minhashSignatureArray(
+      Oracles.shingleTable(v2, "doc_id", "text", 3), 32)
       .collect().map(r => (r.getLong(0), r.getSeq[Long](1).toVector)).toSet
     assert(sigC === sigF)
     // delta-sized writes: the changed-closure table is a small fraction of

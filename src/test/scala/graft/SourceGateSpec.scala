@@ -14,11 +14,13 @@ import graft.functions.GraftFunctions
   * expressions only through the typed [[GraftFunctions]] builders, and
   * mutates a session's function registry or optimizer only inside
   * `graft.functions` — plus q74, which exists to demonstrate the
-  * session-installed rewrite rule.
+  * session-installed rewrite rule. It also keeps one implementation per
+  * similarity operator in main: the reference twins live in [[Oracles]].
   */
 class SourceGateSpec extends AnyFunSuite {
 
   private val root = Paths.get("src/main/scala")
+  private val vectorQueries = "graft/queries/VectorQueries.scala"
 
   private lazy val sources: Seq[(Path, Seq[String])] = {
     val stream = Files.walk(root)
@@ -33,6 +35,43 @@ class SourceGateSpec extends AnyFunSuite {
       (p, lines) <- sources
       (l, i) <- lines.zipWithIndex if r.findFirstIn(l).nonEmpty
     } yield (p, i, l)
+  }
+
+  /** [[hits]] over code only: scaladoc lines and `//` tails are blanked, so
+    * prose naming an oracle does not count as a call. */
+  private def codeHits(pattern: String): Seq[(Path, Int, String)] = {
+    val r = pattern.r
+    for {
+      (p, lines) <- sources
+      (l, i) <- lines.zipWithIndex
+      t = l.trim
+      if !t.startsWith("*") && !t.startsWith("/*")
+      if r.findFirstIn(l.replaceAll("//.*", "")).nonEmpty
+    } yield (p, i, l)
+  }
+
+  private def linesOf(file: String): Seq[String] =
+    sources.find(_._1 == root.resolve(file)).get._2
+
+  /** True when 0-based `line` of `file` lies within the first lines of the
+    * query map entry `name`. */
+  private def inEntry(file: String, name: String, line: Int): Boolean = {
+    val start = linesOf(file).indexWhere(_.contains(s""""$name" -> """))
+    start >= 0 && line > start && line <= start + 2
+  }
+
+  /** Every parameter list of `def fn` in `file`, as one string. */
+  private def signature(file: String, fn: String): String = {
+    val text = linesOf(file).mkString("\n")
+    val start = text.indexOf(s"def $fn(")
+    assert(start >= 0, s"no def $fn in $file")
+    var i = start + s"def $fn".length
+    var depth = 0
+    while (depth > 0 || text(i) == '(') {
+      if (text(i) == '(') depth += 1 else if (text(i) == ')') depth -= 1
+      i += 1
+    }
+    text.substring(start, i)
   }
 
   test("src/main has exactly one SparkSession.builder, in graft.Harness") {
@@ -55,10 +94,50 @@ class SourceGateSpec extends AnyFunSuite {
       .filterNot(_._1.startsWith(root.resolve("graft/functions")))
     assert(outside.size == 1, outside.mkString("\n"))
     val (p, line, _) = outside.head
-    assert(p.getFileName.toString == "VectorQueries.scala")
-    val lines = sources.find(_._1 == p).get._2
-    val q74 = lines.indexWhere(_.contains("\"q74_approx_join_rule\" -> "))
-    assert(q74 >= 0 && line > q74 && line <= q74 + 2,
+    assert(p == root.resolve(vectorQueries))
+    assert(inEntry(vectorQueries, "q74_approx_join_rule", line),
       s"the register call at line ${line + 1} is not q74's")
+  }
+
+  /** Reference twins that moved to `graft.Oracles` in test scope, by the
+    * main file they left. */
+  private val movedTwins = Map(
+    "graft/vector/VectorOps.scala" -> Seq("planeWeight", "lshSignature", "lshSignatureSalted"),
+    "graft/dedup/DedupOps.scala" -> Seq("simhash", "simhash60", "simhashExpr",
+      "minhashSignatureArray", "minhashSignatureExpr", "shingleTable", "jaccardPairs"),
+    "graft/graph/GraphOps.scala" -> Seq("kHopGraphX", "ssspWeightedGraphX", "pageRank"))
+
+  test("no reference twin is defined again in the main object it left") {
+    movedTwins.foreach { case (file, names) =>
+      val r = s"""\\bdef (${names.mkString("|")})\\b""".r
+      val found = linesOf(file).filter(l => r.findFirstIn(l).nonEmpty)
+      assert(found.isEmpty, s"$file: ${found.mkString("\n")}")
+    }
+  }
+
+  test("main computes sign-LSH signatures only through the native expressions") {
+    val found = codeHits("""VectorOps\.lshSignature""")
+    assert(found.isEmpty, found.mkString("\n"))
+  }
+
+  test("the HOF VectorOps.cosine runs in main only at q38's call site") {
+    val found = codeHits("""VectorOps\.cosine\b""")
+      .filterNot(_._1 == root.resolve("graft/vector/VectorOps.scala"))
+    assert(found.size == 1, found.mkString("\n"))
+    val (p, line, _) = found.head
+    assert(p == root.resolve(vectorQueries) && inEntry(vectorQueries, "q38_cosine_hof", line),
+      s"VectorOps.cosine at ${p.getFileName}:${line + 1} is not q38's")
+  }
+
+  test("one-value parameters stay deleted; twin-choosing parameters have no default") {
+    val deleted = codeHits("""\b(broadcastFrontier|checkpointEvery)\b""")
+    assert(deleted.isEmpty, deleted.mkString("\n"))
+    val defaulted = codeHits("""\b(cosineFn|sigFn):\s*\([^)]*\)\s*=>\s*Column\s*=""")
+    assert(defaulted.isEmpty, defaulted.mkString("\n"))
+    Seq("graft/vector/VectorOps.scala" -> "lshNeighborPairsBanded",
+        "graft/text/EntityLinking.scala" -> "disambiguate").foreach { case (file, fn) =>
+      val sig = signature(file, fn)
+      assert(!sig.contains("cosineFn"), sig)
+    }
   }
 }

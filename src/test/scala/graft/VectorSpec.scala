@@ -61,7 +61,7 @@ class VectorSpec extends SparkSuite {
     graft.functions.GraftFunctions.register(s)
     val df = s.createDataFrame(s.sparkContext.parallelize(rows), withNull)
     val both = df.select(
-        VectorOps.lshSignature(col("embedding"), 8).as("hof"),
+        Oracles.lshSignature(col("embedding"), 8).as("hof"),
         call_function("lsh_signature", col("embedding"), lit(8)).as("expr"))
       .collect().map(r => (r.getString(0), r.getString(1)))
     both.foreach { case (h, e) => assert(h == e, s"HOF $h != expr $e") }
@@ -69,7 +69,7 @@ class VectorSpec extends SparkSuite {
   }
 
   test("lshNeighborPairs is a subset of exact cosinePairs at same threshold") {
-    val exact = VectorOps.cosinePairs(vecs, 0.5)
+    val exact = VectorOps.cosinePairs(vecs, 0.5, VectorOps.cosine)
       .select("ia", "ib").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val lsh = VectorOps.lshNeighborPairs(vecs, 4, 0.5)
       .select("ia", "ib").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -106,11 +106,11 @@ class VectorSpec extends SparkSuite {
   test("banded LSH: single-band ⊆ banded ⊆ exact, with no duplicate pairs") {
     // agreement on ALL nPlanes bits implies agreement on every band, so the
     // banded candidate set can only grow recall — never lose a pair
-    val exact = VectorOps.cosinePairs(vecs, 0.5)
+    val exact = VectorOps.cosinePairs(vecs, 0.5, VectorOps.cosine)
       .select("ia", "ib").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val single = VectorOps.lshNeighborPairs(vecs, 4, 0.5)
       .select("ia", "ib").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val bandedRows = VectorOps.lshNeighborPairsBanded(vecs, 4, 2, 0.5)
+    val bandedRows = VectorOps.lshNeighborPairsBanded(vecs, 4, 2, 0.5, Oracles.lshSignature)
       .select("ia", "ib").collect().map(r => (r.getLong(0), r.getLong(1)))
     val banded = bandedRows.toSet
     assert(bandedRows.length == banded.size) // multi-band agreement dedup'd
