@@ -230,7 +230,7 @@ object ScaleBench {
 
   private def replicate(spark: SparkSession, base: String, m: Int, out: String): Unit = {
     val reps = spark.range(m).select(col("id").cast("int").as("k"))
-    val docs = spark.read.parquet(s"$base/documents.parquet")
+    val docs = Tables.load(spark, base, "documents")
     val suffixed = array_join(
       transform(split(col("text"), "\\s+"), t => concat(t, lit("_"), col("k"))),
       " ")
@@ -245,7 +245,7 @@ object ScaleBench {
             " ")).cast("long")).as("n_chars"))
       .repartition(32)
       .write.mode("overwrite").parquet(s"$out/documents.parquet")
-    val emb = spark.read.parquet(s"$base/embeddings.parquet")
+    val emb = Tables.load(spark, base, "embeddings")
     // Per-replica SIGN-FLIP mask, not an additive shift: flipping a fixed
     // per-replica subset of dimensions leaves every within-replica cosine
     // bit-identical (both sides flip the same dims) while cross-replica
@@ -276,7 +276,7 @@ object ScaleBench {
     // (only replica-0 suppliers reach the alias aggregation anyway).
     def strided(table: String, keys: Seq[String],
                 rename: Map[String, Column => Column] = Map.empty): Unit = {
-      val t = spark.read.parquet(s"$base/$table.parquet")
+      val t = Tables.load(spark, base, table)
       val cols = t.columns.toSeq.map { c =>
         if (keys.contains(c)) (col(c) + col("k") * IdStride).as(c)
         else rename.get(c).map(f => f(col(c)).as(c)).getOrElse(col(c))
@@ -293,7 +293,7 @@ object ScaleBench {
     strided("events", Seq("event_id", "user_id"))
     // shared dimensions: copied verbatim
     Seq("part", "nation", "region").foreach { t =>
-      spark.read.parquet(s"$base/$t.parquet")
+      Tables.load(spark, base, t)
         .write.mode("overwrite").parquet(s"$out/$t.parquet")
     }
   }

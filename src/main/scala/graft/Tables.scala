@@ -1,6 +1,10 @@
 package graft
 
+import scala.collection.concurrent.TrieMap
+
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Loaders for the driver test tables (`TESTDATA.md`): one parquet file per
   * table under a scale-factor directory. Columnar parquet scans give Catalyst
@@ -13,8 +17,48 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  /** What a schema inference depends on: the files under the path (name,
+    * length, modification time) and the session's explicitly set parquet
+    * confs (`spark.sql.parquet.*`, `spark.sql.legacy.parquet.*` — e.g. the
+    * `nanosAsLong` switch [[events]] sets — and case sensitivity). */
+  private final case class SchemaKey(path: String, files: Seq[(String, Long, Long)],
+                                     confs: Map[String, String])
+
+  /** Inferred schemas per session. Weak keys: an entry never keeps a
+    * stopped or dropped session alive, and the values hold no session. */
+  private val schemas =
+    new java.util.WeakHashMap[SparkSession, TrieMap[SchemaKey, StructType]]()
+
+  /** The table `name` under `dir`. The parquet footers are read once per
+    * session, file set and parquet conf: the first load infers the schema
+    * (one Spark job), every later one reads with that schema
+    * (`spark.read.schema(s).parquet`) and runs no job. A file rewritten in
+    * place (new length or modification time) or a changed parquet conf
+    * infers again. A missing path fails as `spark.read.parquet` does. */
+  def load(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    val hPath = new Path(path)
+    val fs = hPath.getFileSystem(spark.sessionState.newHadoopConf())
+    if (!fs.exists(hPath)) spark.read.parquet(path)
+    else {
+      val files = fs.listStatus(hPath).toSeq
+        .map(f => (f.getPath.getName, f.getLen, f.getModificationTime)).sortBy(_._1)
+      val confs = spark.conf.getAll.filter { case (k, _) =>
+        k.startsWith("spark.sql.parquet.") || k.startsWith("spark.sql.legacy.parquet.") ||
+          k == "spark.sql.caseSensitive"
+      }
+      val perSession = schemas.synchronized {
+        Option(schemas.get(spark)).getOrElse {
+          val m = TrieMap.empty[SchemaKey, StructType]
+          schemas.put(spark, m)
+          m
+        }
+      }
+      val schema = perSession.getOrElseUpdate(SchemaKey(path, files, confs),
+        spark.read.parquet(path).schema)
+      spark.read.schema(schema).parquet(path)
+    }
+  }
 
   def region(s: SparkSession, d: String): DataFrame    = load(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame    = load(s, d, "nation")

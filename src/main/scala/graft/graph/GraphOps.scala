@@ -21,39 +21,52 @@ import org.apache.spark.storage.StorageLevel
   */
 object GraphOps {
 
-  /** Make an edge list undirected: union both directions, distinct.
+  /** Make an edge list undirected: both directions of every edge, distinct.
     * Senzing's RELATED_ENTITIES adjacency is stored symmetrically; for
     * derived edge sets we enforce symmetry once up front so every traversal
-    * is a plain src-equi-join.
+    * is a plain src-equi-join. One pass over the input: each row explodes
+    * into its `(src, dst)` and `(dst, src)` structs, so the input's plan is
+    * read once, not once per direction as a self-union would.
     */
-  def symmetrize(edges: DataFrame): DataFrame = {
-    val e = edges.select(col("src"), col("dst"))
-    e.union(e.select(col("dst").as("src"), col("src").as("dst"))).distinct()
-  }
+  def symmetrize(edges: DataFrame): DataFrame =
+    edges.select(explode(array(
+        struct(col("src"), col("dst")),
+        struct(col("dst").as("src"), col("src").as("dst")))).as("e"))
+      .select(col("e.src"), col("e.dst"))
+      .distinct()
 
   /** G3-G6 — k-hop closure with the reference's frontier semantics: each hop
     * expands from the UNION of all previously reached ids, not just the last
     * frontier (/root/reference/src/senzing_pipeline.py:392-397 expands hop 2
-    * from hops 0 ∪ 1). For symmetric edges this is the BFS ball of radius k.
+    * from hops 0 ∪ 1). For symmetric edges this is the BFS ball of radius k;
+    * for directed edges, the ids reachable from a seed along ≤ k out-edges.
+    *
+    * Each hop is one join over the previous state, never a re-derivation of
+    * it: `reached_k = distinct(seeds ∪ dst(edges ⋈ reached_{k-1}))`. This
+    * equals `reached_{k-1} ∪ N(reached_{k-1})` because, by induction,
+    * `reached_{k-1} ⊆ seeds ∪ N(reached_{k-2}) ⊆ seeds ∪ N(reached_{k-1})`.
+    * The plan therefore holds `edges` k times and `seeds` k + 1 times —
+    * linear in k — where a `reached ∪ N(reached)` step would copy the whole
+    * previous plan into both sides of every hop and double it.
     *
     * Scale shape: the reached set stays small (seed neighborhoods), so it is
     * broadcast to the big edge table each round — k broadcast hash joins, no
     * shuffle of `edges`. At 100 TB the edge scan is the only big input and it
     * is touched k times; caching `edges` between rounds amortizes the IO.
     *
-    * @param seeds single-column DataFrame `id`
-    * @param edges two-column DataFrame `src, dst` (already symmetric)
+    * @param seeds single-column DataFrame `id`; seeds are hop 0 whether or
+    *              not they have edges
+    * @param edges two-column DataFrame `src, dst` (traversed src → dst)
     */
   def kHop(edges: DataFrame, seeds: DataFrame, k: Int): DataFrame = {
-    var reached = seeds.select(col("id")).distinct()
-    for (_ <- 1 to k) {
+    val seedIds = seeds.select(col("id"))
+    (1 to k).foldLeft(seedIds.distinct()) { (reached, _) =>
       // broadcast: the investigation contract is tens of seeds and a
       // ~tens-of-ids closure
       val neighbors = edges.join(broadcast(reached), col("src") === col("id"))
         .select(col("dst").as("id"))
-      reached = reached.union(neighbors).distinct()
+      seedIds.union(neighbors).distinct()
     }
-    reached
   }
 
   /** G7 — connected components (GraphX label = lowest vertex id in the

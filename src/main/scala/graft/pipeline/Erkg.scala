@@ -41,7 +41,6 @@ object Erkg {
         col("o_orderkey") === col("l_orderkey"))
       .select(col("o_custkey").as("src"),
         (lit(supplierOffset) + col("l_suppkey")).as("dst"))
-      .distinct()
     GraphOps.symmetrize(e)
   }
 

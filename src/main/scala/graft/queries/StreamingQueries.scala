@@ -111,7 +111,7 @@ object StreamingQueries {
     * stream schema must match the footer, so probe it with a batch read. */
   private def eventsStream(s: SparkSession, d: String): DataFrame = {
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val probed = s.read.parquet(s"$d/events.parquet").schema("ts").dataType
+    val probed = Tables.load(s, d, "events").schema("ts").dataType
     val tsIsLong = probed == org.apache.spark.sql.types.LongType
     // Declare exactly what the batch probe inferred — hardcoding NTZ for
     // the non-long case would diverge if a driver generation ships

@@ -222,39 +222,39 @@ object EntityLinking {
       .select(col("doc_id"), col("pos"), col("surface"), col("len"), col("entity"))
   }
 
-  /** Scored candidate LISTS (no argmax): [[disambiguate]]'s prior × cosine
-    * scoring, but keeping the top `topK` candidates per mention key — the
-    * vector-signal input to hybrid fusion ([[HybridRetrieval.rrfFuse]]).
+  /** Scored candidate LISTS (no argmax): [[disambiguate]]'s single-pass
+    * prior × cosine scoring, but keeping the top `topK` candidates per
+    * mention key — the vector-signal input to hybrid fusion
+    * ([[HybridRetrieval.rrfFuse]]). Candidates without both vectors drop.
     * `candidates` must carry `keyCols`, `entity`, `prior`, and `doc_id` (the
     * context-vector key). `cosineFn` is [[GraftFunctions.cosineSim]] in main
     * code. Output: keyCols ++ (entity, prior, score, rn). */
   def rankedCandidates(candidates: DataFrame, docVecs: DataFrame,
                        entVecs: DataFrame, keyCols: Seq[String], topK: Int,
-                       cosineFn: (Column, Column) => Column): DataFrame = {
-    val pairCos = candidates.select(col("doc_id"), col("entity")).distinct()
+                       cosineFn: (Column, Column) => Column): DataFrame =
+    candidates
       .join(docVecs, Seq("doc_id"))
       .join(entVecs, Seq("entity"))
-      .select(col("doc_id"), col("entity"),
-        cosineFn(col("ctx_emb"), col("ent_emb")).as("ctx_cos"))
-    candidates
-      .join(pairCos, Seq("doc_id", "entity"))
-      .withColumn("score", col("prior") * col("ctx_cos"))
+      .withColumn("score", col("prior") * cosineFn(col("ctx_emb"), col("ent_emb")))
       .withColumn("rn", row_number().over(
         Window.partitionBy(keyCols.map(col): _*)
           .orderBy(col("score").desc, col("entity").asc)))
       .filter(col("rn") <= topK)
       .select(keyCols.map(col) ++ Seq(col("entity"), col("prior"),
         col("score"), col("rn")): _*)
-  }
 
   /** V3/W3 — disambiguation: score = prior × cosine(context embedding,
     * entity embedding), argmax per mention (ties → lower entity id).
     * `docVecs`: (doc_id, ctx_emb); `entVecs`: (entity, ent_emb).
     *
-    * The cosine depends only on (doc_id, entity), not on the mention
-    * position, so it is computed once per DISTINCT pair and joined back to
-    * the mention fan-out — a popular alias appearing 50× in a doc costs one
-    * cosine, not 50 — by the native [[GraftFunctions.cosineSim]].
+    * SINGLE PASS: each candidate row is left-joined to its context and
+    * entity vectors and scored where it stands by the native
+    * [[GraftFunctions.cosineSim]] (the shape of q230's stream linker). The
+    * candidate plan is read once; a distinct-(doc_id, entity) cosine table
+    * joined back to the candidates would read it twice, and the two copies
+    * are pruned differently, so AQE cannot reuse the exchange between them.
+    * A repeated (doc_id, entity) pair costs one extra cosine — codegen
+    * arithmetic over two arrays, far cheaper than a second candidate pass.
     *
     * TWO-TIER PRIOR BACKOFF: a candidate whose doc or entity has no vector keeps its
     * prior as the score instead of being dropped — the standard graceful
@@ -274,17 +274,14 @@ object EntityLinking {
     *
     * Output: (doc_id, pos, token, entity, prior, score). */
   def disambiguate(candidates: DataFrame, docVecs: DataFrame,
-                   entVecs: DataFrame): DataFrame = {
-    val pairCos = candidates.select(col("doc_id"), col("entity")).distinct()
-      .join(docVecs, Seq("doc_id"))
-      .join(entVecs, Seq("entity"))
-      .select(col("doc_id"), col("entity"),
-        GraftFunctions.cosineSim(col("ctx_emb"), col("ent_emb")).as("ctx_cos"))
-    val scored = candidates
-      .join(pairCos, Seq("doc_id", "entity"), "left")
+                   entVecs: DataFrame): DataFrame =
+    candidates
+      .join(docVecs, Seq("doc_id"), "left")
+      .join(entVecs, Seq("entity"), "left")
+      .withColumn("ctx_cos",
+        GraftFunctions.cosineSim(col("ctx_emb"), col("ent_emb")))
       .withColumn("score",
         col("prior") * coalesce(col("ctx_cos"), lit(1.0)))
-    scored
       .withColumn("rn", row_number().over(
         Window.partitionBy(col("doc_id"), col("pos"))
           .orderBy(col("ctx_cos").isNotNull.desc, col("score").desc,
@@ -292,5 +289,4 @@ object EntityLinking {
       .filter(col("rn") === 1)
       .select(col("doc_id"), col("pos"), col("token"), col("entity"),
         col("prior"), col("score"))
-  }
 }

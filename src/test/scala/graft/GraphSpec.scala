@@ -1,6 +1,8 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.scalacheck.{Gen, Prop, Test => SCTest}
 
 import graft.graph.GraphOps
 import graft.pipeline.Erkg
@@ -44,6 +46,64 @@ class GraphSpec extends SparkSuite {
     val b1 = GraphOps.kHop(edges, seeds, 1).as[Long].collect().toSet
     val b2 = GraphOps.kHop(edges, seeds, 2).as[Long].collect().toSet
     assert(b1.subsetOf(b2))
+  }
+
+  private def check(p: Prop): Unit = {
+    val r = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(6).withWorkers(1), p)
+    assert(r.passed, r.status.toString)
+  }
+
+  test("kHop law: == Oracles.kHopGraphX on random directed edges, k in 0..3") {
+    val s = spark
+    import s.implicits._
+    // ids 0..7 carry edges; 8..9 may be seeds with no edge at all, and 99
+    // is always one; seeds repeat
+    val edgeGen = Gen.listOf(Gen.zip(Gen.choose(0L, 7L), Gen.choose(0L, 7L))).map(_.take(14))
+    val seedGen = Gen.nonEmptyListOf(Gen.choose(0L, 9L)).map(ss => (99L +: (ss ++ ss.take(2))).take(6))
+    check(Prop.forAll(edgeGen, seedGen) { (es, ss) =>
+      val edges = es.toDF("src", "dst")
+      val seeds = ss.toDF("id")
+      (0 to 3).forall { k =>
+        val got = GraphOps.kHop(edges, seeds, k).as[Long].collect()
+        val want = Oracles.kHopGraphX(spark, edges, seeds, k).as[Long].collect().toSet
+        got.length == got.toSet.size && got.toSet == want && ss.toSet.subsetOf(want)
+      }
+    })
+  }
+
+  test("symmetrize law: == the self-union form, with self-loops and duplicate edges") {
+    val s = spark
+    import s.implicits._
+    val fixed = Seq((1L, 1L), (2L, 3L), (2L, 3L), (3L, 2L), (4L, 4L), (4L, 4L))
+    val edgeGen = Gen.listOf(Gen.zip(Gen.choose(0L, 5L), Gen.choose(0L, 5L))).map(_.take(12))
+    check(Prop.forAll(edgeGen) { es =>
+      val e = (fixed ++ es).toDF("src", "dst")
+      val got = GraphOps.symmetrize(e).as[(Long, Long)].collect().sorted.toSeq
+      got == Oracles.symmetrizeUnion(e).as[(Long, Long)].collect().sorted.toSeq &&
+        got.toSet.size == got.size
+    })
+    // mixed column types widen as the union did
+    val mixed = Seq((1, 2L), (3, 3L)).toDF("src", "dst")
+    assert(GraphOps.symmetrize(mixed).dtypes.toSeq == Oracles.symmetrizeUnion(mixed).dtypes.toSeq)
+    assert(GraphOps.symmetrize(mixed).as[(Long, Long)].collect().toSet ==
+      Set((1L, 2L), (2L, 1L), (3L, 3L)))
+  }
+
+  test("kHop's optimized plan grows linearly in k: edges k times, seeds k + 1 times") {
+    val edges = Erkg.entityEdges(spark, sf0001)
+    val seeds = Erkg.seeds(spark, sf0001)
+    // optimized from the analyzed plan: cached data (other tests cache the
+    // entity graph) would otherwise stand in for the scans
+    def leaves(df: DataFrame) =
+      spark.sessionState.optimizer.execute(df.queryExecution.analyzed).collectLeaves()
+    val sizes = (0 to 4).map(k => leaves(GraphOps.kHop(edges, seeds, k)).size)
+    val step = sizes(1) - sizes(0)
+    assert((1 to 4).forall(k => sizes(k) - sizes(k - 1) == step), s"leaf scans by k: $sizes")
+    // the edge list (orders ⋈ lineitem) is read once per hop, and so in q17
+    def ordersScans(df: DataFrame) =
+      leaves(df).count(_.output.exists(_.name == "o_orderkey"))
+    assert((0 to 3).map(k => ordersScans(GraphOps.kHop(edges, seeds, k))) == (0 to 3))
+    assert(ordersScans(SparkEntry.queries("q17_suspicious_aliases")(spark, sf0001)) == 2)
   }
 
   test("G7 connected components: path and pair get separate min-id labels") {

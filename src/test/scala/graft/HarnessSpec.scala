@@ -37,4 +37,8 @@ class HarnessSpec extends AnyFunSuite {
     val raw = "a\"b\\c\nd\te\u0001"
     assert(new ObjectMapper().readTree(Harness.jsonString(raw)).asText == raw)
   }
+
+  test("Harness sessions size the generated-code cache to 2,000 classes") {
+    assert(SparkSpec.spark.conf.get("spark.sql.codegen.cache.maxEntries") == "2000")
+  }
 }

@@ -1,6 +1,8 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.scalacheck.{Gen, Prop, Test => SCTest}
 
 import graft.text.{EntityLinking, TextRank}
 
@@ -215,5 +217,43 @@ class NlpSpec extends SparkSuite {
     assert(math.abs(rank - expected) < 1e-12)
     // single-token span count matches token frequency
     assert(phrases("red")._2 == 2L)
+  }
+
+  /** Candidates (doc_id, pos, token, entity, prior) and vector tables where
+    * doc 3 has no context vector, entity 4 no entity vector, and entity 2's
+    * one-element vector gives a null cosine (length mismatch). */
+  private def linkingInput(cands: Seq[(Long, Int, Long, Double)]): (DataFrame, DataFrame, DataFrame) = {
+    val s = spark
+    import s.implicits._
+    val v = Seq(Seq(1.0f, 0.0f), Seq(0.6f, 0.8f), Seq(1.0f), Seq(0.6f, 0.8f))
+    (cands.map { case (d, p, e, pr) => (d, p, s"t$p", e, pr) }
+       .toDF("doc_id", "pos", "token", "entity", "prior"),
+     (0L to 2L).map(d => (d, v(d.toInt))).toDF("doc_id", "ctx_emb"),
+     (0L to 3L).map(e => (e, v(e.toInt))).toDF("entity", "ent_emb"))
+  }
+
+  test("disambiguate law: single pass == distinct-pair form, with missing vectors and ties") {
+    val gen = Gen.listOf(Gen.zip(Gen.choose(0L, 3L), Gen.choose(0, 2), Gen.choose(0L, 4L),
+      Gen.oneOf(0.25, 0.5, 1.0))).map(_.take(20))
+    val r = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(8).withWorkers(1),
+      Prop.forAll(gen) { cands =>
+        val (c, d, e) = linkingInput(cands :+ ((3L, 0, 4L, 0.5)))
+        def rows(df: DataFrame) = df.collect().map(_.toSeq.mkString("|")).sorted.toSeq
+        rows(EntityLinking.disambiguate(c, d, e)) == rows(Oracles.disambiguatePairwise(c, d, e))
+      })
+    assert(r.passed, r.status.toString)
+  }
+
+  test("disambiguate and rankedCandidates read the candidate plan once") {
+    val (c, d, e) = linkingInput(Seq((0L, 0, 1L, 0.5), (0L, 0, 2L, 0.5), (3L, 1, 4L, 1.0)))
+    def leaves(df: DataFrame) = df.queryExecution.optimizedPlan.collectLeaves().size
+    val inputs = leaves(c) + leaves(d) + leaves(e)
+    assert(leaves(EntityLinking.disambiguate(c, d, e)) == inputs)
+    assert(leaves(EntityLinking.rankedCandidates(c, d, e, Seq("doc_id", "pos"), 2,
+      graft.functions.GraftFunctions.cosineSim)) == inputs)
+    // and the backoff tier: doc 3 has no vector, so its mention keeps the prior
+    val linked = EntityLinking.disambiguate(c, d, e).orderBy("doc_id", "pos").collect()
+    assert(linked.map(r => (r.getLong(0), r.getLong(3))).toSeq == Seq((0L, 1L), (3L, 4L)))
+    assert(math.abs(linked(0).getDouble(5) - 0.3) < 1e-6 && linked(1).getDouble(5) == 1.0)
   }
 }

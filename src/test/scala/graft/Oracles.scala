@@ -8,9 +8,11 @@ import org.apache.spark.storage.StorageLevel
 import graft.dedup.DedupOps.{minhashBase, minhashHash}
 import graft.text.TextOps
 
-/** Reference twins of the similarity and graph operators. Main code keeps
-  * one implementation per operator — the native Catalyst expressions in
-  * `graft.functions` and the DataFrame loops in `graft.graph.GraphOps`.
+/** Reference twins of the similarity, graph and linking operators. Main
+  * code keeps one implementation per operator — the native Catalyst
+  * expressions in `graft.functions`, the DataFrame loops in
+  * `graft.graph.GraphOps` and the single-pass linker in
+  * `graft.text.EntityLinking`.
   * These are the slower relational, interpreted-HOF and GraphX forms they
   * replaced, kept only as oracles: each is law-equated with its main
   * counterpart in the specs.
@@ -152,23 +154,31 @@ object Oracles {
 
   // ---- GraphX twins (main: GraphOps.kHop / ssspWeighted / pageRankDeterministic)
 
-  /** Pregel BFS: vertices within distance k of a seed. */
+  /** Pregel BFS: vertices within distance k of a seed along src → dst
+    * edges. Every seed is a vertex at distance 0, with or without edges. */
   def kHopGraphX(spark: SparkSession, edges: DataFrame, seeds: DataFrame, k: Int): DataFrame = {
     import spark.implicits._
-    val seedRdd = seeds.select(col("id").cast("long")).as[Long]
-      .rdd.map(id => (id, ()))
+    // pregel needs at least one superstep
+    if (k == 0) return seeds.select(col("id").cast("long")).distinct()
+    val seedRdd = seeds.select(col("id").cast("long")).distinct().as[Long]
+      .rdd.map(id => (id, 0))
     val edgeRdd = edges.select(col("src").cast("long"), col("dst").cast("long"))
       .as[(Long, Long)].rdd.map { case (s, d) => Edge(s, d, ()) }
-    val graph = Graph.fromEdges[Int, Unit](edgeRdd, Int.MaxValue,
+    val graph = Graph[Int, Unit](seedRdd, edgeRdd, Int.MaxValue,
       StorageLevel.MEMORY_AND_DISK, StorageLevel.MEMORY_AND_DISK)
-      .outerJoinVertices(seedRdd)((_, _, s) =>
-        if (s.isDefined) 0 else Int.MaxValue)
     val bfs = graph.pregel(Int.MaxValue, maxIterations = k)(
       (_, dist, msg) => math.min(dist, msg),
       t => if (t.srcAttr != Int.MaxValue && t.srcAttr + 1 < t.dstAttr)
              Iterator((t.dstId, t.srcAttr + 1)) else Iterator.empty,
       (a, b) => math.min(a, b))
     bfs.vertices.filter { case (_, d) => d <= k }.map(_._1).toDF("id")
+  }
+
+  /** The self-union form of `GraphOps.symmetrize`: the edge list unioned
+    * with its reverse, distinct. */
+  def symmetrizeUnion(edges: DataFrame): DataFrame = {
+    val e = edges.select(col("src"), col("dst"))
+    e.union(e.select(col("dst").as("src"), col("src").as("dst"))).distinct()
   }
 
   /** Pregel bounded-round relaxation: min total cost over walks of
@@ -202,5 +212,28 @@ object Oracles {
     val graph = Graph.fromEdges[Double, Double](edgeRdd, 1.0,
       StorageLevel.MEMORY_AND_DISK, StorageLevel.MEMORY_AND_DISK)
     graph.staticPageRank(numIter).vertices.toDF("id", "rank")
+  }
+
+  // ---- entity linking (main: graft.text.EntityLinking.disambiguate)
+
+  /** Disambiguation with the cosine computed once per distinct
+    * (doc_id, entity) pair and joined back to the candidates — the same
+    * two-tier prior backoff and tie order as the single-pass main form. */
+  def disambiguatePairwise(candidates: DataFrame, docVecs: DataFrame,
+                           entVecs: DataFrame): DataFrame = {
+    val pairCos = candidates.select(col("doc_id"), col("entity")).distinct()
+      .join(docVecs, Seq("doc_id"))
+      .join(entVecs, Seq("entity"))
+      .select(col("doc_id"), col("entity"),
+        graft.functions.GraftFunctions.cosineSim(col("ctx_emb"), col("ent_emb")).as("ctx_cos"))
+    candidates
+      .join(pairCos, Seq("doc_id", "entity"), "left")
+      .withColumn("score", col("prior") * coalesce(col("ctx_cos"), lit(1.0)))
+      .withColumn("rn", row_number().over(
+        org.apache.spark.sql.expressions.Window.partitionBy(col("doc_id"), col("pos"))
+          .orderBy(col("ctx_cos").isNotNull.desc, col("score").desc, col("entity").asc)))
+      .filter(col("rn") === 1)
+      .select(col("doc_id"), col("pos"), col("token"), col("entity"),
+        col("prior"), col("score"))
   }
 }

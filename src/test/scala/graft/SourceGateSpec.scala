@@ -10,7 +10,8 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.functions.GraftFunctions
 
 /** Source gate for the one-session, one-function-surface design: main code
-  * builds sessions only through [[Harness.session]], builds graft
+  * builds sessions only through [[Harness.session]], reads parquet tables
+  * only through [[Tables.load]] (its schema memo), builds graft
   * expressions only through the typed [[GraftFunctions]] builders, and
   * mutates a session's function registry or optimizer only inside
   * `graft.functions` — plus q74, which exists to demonstrate the
@@ -77,6 +78,12 @@ class SourceGateSpec extends AnyFunSuite {
   test("src/main has exactly one SparkSession.builder, in graft.Harness") {
     val found = hits("""SparkSession\.builder""")
     assert(found.map(_._1.getFileName.toString) == Seq("Harness.scala"), found)
+  }
+
+  test("parquet tables are read only through Tables.load") {
+    val found = codeHits("""\.read\.parquet\(""")
+      .filterNot(_._1 == root.resolve("graft/Tables.scala"))
+    assert(found.isEmpty, found.mkString("\n"))
   }
 
   test("src/main has exactly one GraftExtensions class") {
