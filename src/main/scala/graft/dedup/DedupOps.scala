@@ -274,9 +274,17 @@ object DedupOps {
         GraftFunctions.minhashSignature(col(textCol), n, k).as("sig"))
   }
 
-  /** Full MinHash+LSH near-dup pipeline: candidates from band buckets,
-    * verified with the exact per-position signature agreement estimate.
-    * Output: (da, db, est_jaccard) with est >= threshold.
+  /** The near-dup rule every [[minhashPairs]] caller shares: 3-token
+    * shingles, 32 hashes, 4 rows per band, estimated Jaccard ≥ 0.5. */
+  private val PairShingle = 3
+  private val PairHashes = 32
+  private val PairRowsPerBand = 4
+  private val PairThreshold = 0.5
+
+  /** Full MinHash+LSH near-dup pipeline over `docs (doc_id, text)` under
+    * the shared rule above: candidates from band buckets, verified with
+    * the exact per-position signature agreement estimate.
+    * Output: (da, db, est_jaccard) with est >= [[PairThreshold]].
     *
     * r17: signatures come from [[minhashSignatureRows]] (fused native
     * expression over the fanned-out scan — one corpus exchange REMOVED vs
@@ -286,10 +294,11 @@ object DedupOps {
     * verify joins — under AQE those sides broadcast, and concurrent
     * broadcast-build jobs racing a lazy cache each recompute the signature
     * pass (the q22/hybridLinking lesson). */
-  def minhashPairs(docs: DataFrame, idCol: String, textCol: String,
-                   n: Int, k: Int, rowsPerBand: Int, threshold: Double): DataFrame = {
-    val sig = minhashSignatureRows(docs, idCol, textCol, n, k).localCheckpoint()
-    minhashPairsFromSignatures(sig, k, rowsPerBand, threshold).localCheckpoint()
+  def minhashPairs(docs: DataFrame): DataFrame = {
+    val sig = minhashSignatureRows(docs, "doc_id", "text", PairShingle, PairHashes)
+      .localCheckpoint()
+    minhashPairsFromSignatures(sig, PairHashes, PairRowsPerBand, PairThreshold)
+      .localCheckpoint()
   }
 
   /** [[GraftFunctions.minhashSignature]] under its older name. Main code

@@ -1,9 +1,7 @@
 package graft.graph
 
-import org.apache.spark.graphx.{Edge, Graph}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Graph operators (SURVEY.md §2 G1-G7, plus PageRank for V4).
   *
@@ -12,9 +10,9 @@ import org.apache.spark.storage.StorageLevel
   * an `edges(src, dst)` DataFrame for join-based traversal (k is small and
   * fixed → k shuffle joins beat Pregel's per-superstep overhead), and
   * DataFrame fixed-point loops for the iterative algorithms, each run in a
-  * child session sized to its working set ([[inLoopSession]]). GraphX
-  * remains only for [[connectedComponents]]; the GraphX BFS, SSSP and
-  * PageRank twins are test-scope oracles.
+  * child session sized to its working set ([[inLoopSession]]). Main code
+  * has no GraphX: the GraphX BFS, SSSP, PageRank and connected-components
+  * twins are test-scope oracles.
   *
   * No GraphFrames on the classpath (BASELINE.md) — motif-style queries are
   * DataFrame self-joins.
@@ -69,21 +67,7 @@ object GraphOps {
     }
   }
 
-  /** G7 — connected components (GraphX label = lowest vertex id in the
-    * component). The reference consumes Senzing's ER clusters prebuilt; this
-    * re-derives the grouping when only pairwise edges exist.
-    */
-  def connectedComponents(spark: SparkSession, edges: DataFrame): DataFrame = {
-    import spark.implicits._
-    val edgeRdd = edges.select(col("src").cast("long"), col("dst").cast("long"))
-      .as[(Long, Long)].rdd.map { case (s, d) => Edge(s, d, ()) }
-    val graph = Graph.fromEdges[Unit, Unit](edgeRdd, (),
-      StorageLevel.MEMORY_AND_DISK, StorageLevel.MEMORY_AND_DISK)
-    graph.connectedComponents().vertices.toDF("id", "component")
-  }
-
-  /** CONNECTED COMPONENTS as a pure DataFrame fixed-point — the twin of
-    * [[connectedComponents]] for engines/sessions without GraphX: min-label
+  /** G7 — CONNECTED COMPONENTS as a pure DataFrame fixed-point: min-label
     * propagation PLUS per-round pointer jumping (comp ← comp(comp)), the
     * accelerated-convergence trick behind the large-star/small-star
     * MapReduce CC family (Kiveris et al., "Connected Components in
@@ -101,7 +85,7 @@ object GraphOps {
     * At the fixpoint every edge has equal labels on both ends, and the
     * component minimum keeps its own id, so the label equals the lowest
     * vertex id in the component — the same contract as GraphX's
-    * `connectedComponents` (law-pinned in GraphSpec).
+    * `connectedComponents` (law-pinned against `Oracles` in GraphSpec).
     *
     * The loop's shuffles run at a partition count sized to ITS working set
     * (the edge table), not the session's corpus-scaled
@@ -122,22 +106,43 @@ object GraphOps {
     *
     * @param edges any edge list (symmetrized internally); isolated
     *              vertices don't appear (no edges ⇒ no rows), matching the
-    *              GraphX twin on an edge-derived graph
+    *              GraphX oracle on an edge-derived graph
     * @return (id, component) */
-  def connectedComponentsDF(edges: DataFrame, maxRounds: Int = 50): DataFrame =
-    inLoopSession(Seq(symmetrize(edges)))(s => connectedComponentsLoop(s.head, maxRounds))
+  def connectedComponentsDF(edges: DataFrame): DataFrame =
+    inLoopSession(Seq(symmetrize(edges)))(s => connectedComponentsLoop(s.head))
+
+  /** ENTITY-RESOLUTION CANONICAL LABEL — the "pairs → clusters → one id
+    * per cluster" step every dedup and resolution query shares: `rows`
+    * with a `canonical` column appended, the lowest id of the row's
+    * connected component in `edges`, or the row's own id when that id has
+    * no edge. One left join of `rows` against [[connectedComponentsDF]]'s
+    * labels; every row and carried column of `rows` passes through
+    * unchanged (duplicates included), in `rows`' column order.
+    *
+    * @param rows  any frame with an id column; must not already carry
+    *              `component` or `canonical`
+    * @param idCol the id column, same id space as `edges`' `src`/`dst`
+    * @param edges pair list `src, dst` (direction and duplicates ignored) */
+  def withCanonical(rows: DataFrame, idCol: String, edges: DataFrame): DataFrame =
+    rows.join(connectedComponentsDF(edges).withColumnRenamed("id", idCol),
+        Seq(idCol), "left")
+      .select(rows.columns.map(col) :+
+        coalesce(col("component"), col(idCol)).as("canonical"): _*)
+
+  /** Round cap of [[connectedComponentsDF]]: pointer jumping converges in
+    * O(log n) rounds, so the cap is a guard, never the stopping rule. */
+  private val CcMaxRounds = 50
 
   /** The label-propagation fixpoint loop of [[connectedComponentsDF]] —
     * every round ends in an eager localCheckpoint, so all its shuffles
     * execute under the caller's (working-set-sized) partition setting. */
-  private def connectedComponentsLoop(sym: DataFrame,
-                                      maxRounds: Int): DataFrame = {
+  private def connectedComponentsLoop(sym: DataFrame): DataFrame = {
     var lab = sym.select(col("src").as("id")).distinct()
       .withColumn("comp", col("id")).localCheckpoint()
     var last = Option.empty[Long]
     var round = 0
     var done = false
-    while (!done && round < maxRounds) {
+    while (!done && round < CcMaxRounds) {
       val nbrMin = sym
         .join(lab.select(col("id").as("dst"), col("comp").as("dcomp")),
           Seq("dst"))

@@ -502,7 +502,7 @@ object MultimodalOps {
     Array[Byte](v.toByte, (v >> 8).toByte, (v >> 16).toByte, (v >> 24).toByte)
   private def le16(v: Int): Array[Byte] = Array[Byte](v.toByte, (v >> 8).toByte)
   private def fourcc(s: String): Array[Byte] = s.getBytes("US-ASCII")
-  private def chunk(id: String, body: Array[Byte]): Array[Byte] = {
+  private[graft] def chunk(id: String, body: Array[Byte]): Array[Byte] = {
     val pad = if (body.length % 2 == 1) Array[Byte](0) else Array.empty[Byte]
     fourcc(id) ++ le32(body.length) ++ body ++ pad
   }
@@ -541,32 +541,10 @@ object MultimodalOps {
     assembleAvi(w, h, frameLumas.length, fps, "DIB ", 0, stride * h, frames)
   }
 
-  /** Deterministic AVI fixture encoder, MJPEG frames: each frame is a real
-    * JPEG (ImageIO writer) of a solid gray — a true lossy codec inside the
-    * same container, for the MultimodalSpec tolerance law. */
-  def encodeAviMjpeg(w: Int, h: Int, frameGrays: Array[Int],
-                     fps: Int = 10): Array[Byte] = {
-    val frames = frameGrays.map { g =>
-      val img = new java.awt.image.BufferedImage(
-        w, h, java.awt.image.BufferedImage.TYPE_INT_RGB)
-      val rgb = ((g & 0xff) << 16) | ((g & 0xff) << 8) | (g & 0xff)
-      var y = 0
-      while (y < h) {
-        var x = 0
-        while (x < w) { img.setRGB(x, y, rgb); x += 1 }
-        y += 1
-      }
-      val bos = new java.io.ByteArrayOutputStream()
-      javax.imageio.ImageIO.write(img, "jpg", bos)
-      chunk("00dc", bos.toByteArray)
-    }
-    val maxF = frames.map(_.length).max
-    assembleAvi(w, h, frameGrays.length, fps, "MJPG", 0x47504a4d, maxF, frames)
-  }
-
-  private def assembleAvi(w: Int, h: Int, nf: Int, fps: Int, handler: String,
-                          biCompression: Int, bufSize: Int,
-                          frames: Array[Array[Byte]]): Array[Byte] = {
+  private[graft] def assembleAvi(w: Int, h: Int, nf: Int, fps: Int,
+                                 handler: String, biCompression: Int,
+                                 bufSize: Int,
+                                 frames: Array[Array[Byte]]): Array[Byte] = {
     val avih = chunk("avih",
       le32(1000000 / fps) ++ le32(bufSize * fps) ++ le32(0) ++
         le32(0x10) /* HASINDEX */ ++ le32(nf) ++ le32(0) ++ le32(1) ++

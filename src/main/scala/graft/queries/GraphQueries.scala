@@ -41,10 +41,12 @@ object GraphQueries {
     "q13_two_hop_network" -> ((s, d) =>
       Erkg.suspiciousNetwork(s, d).orderBy(col("id"))),
 
-    // G7 — connected components of the entity graph (GraphX; label = min
-    // vertex id in component, matching the oracle's MIN over reachability).
+    // G7 — connected components of the entity graph (DataFrame label
+    // propagation with pointer jumping; label = min vertex id in component,
+    // matching the oracle's MIN over reachability; GraphSpec pins it to the
+    // GraphX oracle).
     "q14_connected_components" -> ((s, d) =>
-      GraphOps.connectedComponents(s, Erkg.entityEdges(s, d))
+      GraphOps.connectedComponentsDF(Erkg.entityEdges(s, d))
         .orderBy(col("id"))),
 
     // W2/V4 — PageRank over the entity graph, 10 fixed iterations,

@@ -6,6 +6,8 @@ import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.dedup.DedupOps
 import graft.functions.GraftFunctions
+import graft.graph.GraphOps
+import graft.sources.DedupClosure
 import graft.text.TextOps
 
 /** Text-analysis + dedup queries over `documents` (north-star LLM-pipeline
@@ -19,6 +21,13 @@ import graft.text.TextOps
 object TextQueries {
 
   private def docs(s: SparkSession, d: String) = Tables.documents(s, d)
+
+  /** q52/q115: [[DedupClosure.closure]] with its keeper flag, by doc_id. */
+  private def dedupCanonical(s: SparkSession, d: String): DataFrame =
+    DedupClosure.closure(docs(s, d))
+      .select(col("doc_id"), col("canonical"),
+        (col("canonical") === col("doc_id")).as("is_canonical"))
+      .orderBy(col("doc_id"))
 
   /** SimHash pairs at Hamming ≤ 3 by pigeonhole band blocking (q202/q222):
     * the (doc_id, simhash) signature is cut into 4 bands of `bandBits`
@@ -162,20 +171,13 @@ object TextQueries {
     "q208_quality_dup_profile" -> ((s, d) => {
       import org.apache.spark.sql.expressions.Window
       val dd = docs(s, d)
-      val pairs = DedupOps.minhashPairs(dd, "doc_id", "text", 3, 32, 4, 0.5)
-        .select(col("da").as("src"), col("db").as("dst"))
-      val comps = graft.graph.GraphOps
-        .connectedComponents(s, graft.graph.GraphOps.symmetrize(pairs))
-        .withColumnRenamed("id", "doc_id")
-      dd.select(col("doc_id"),
-          floor(TextOps.qualityScore(col("text")) * 1e9).cast("long")
-            .as("qfp"))
-        .join(comps, Seq("doc_id"), "left")
+      val scored = dd.select(col("doc_id"),
+        floor(TextOps.qualityScore(col("text")) * 1e9).cast("long").as("qfp"))
+      GraphOps.withCanonical(scored, "doc_id", DedupClosure.pairEdges(dd))
         .select(
           least(floor(col("qfp").cast("double") / 1e8), lit(9.0))
             .cast("int").as("q_bucket"),
-          (coalesce(col("component"), col("doc_id")) =!= col("doc_id"))
-            .as("is_dup"))
+          (col("canonical") =!= col("doc_id")).as("is_dup"))
         .groupBy(col("q_bucket"), col("is_dup"))
         .agg(count(lit(1)).as("n_docs"))
         .withColumn("frac_of_bucket", col("n_docs").cast("double")
@@ -278,7 +280,7 @@ object TextQueries {
       val dd = docs(s, d)
       val exact = DedupOps.jaccardPairsPrefix(dd, "doc_id", "text", 3, 0.5)
         .select(col("da"), col("db"), lit(true).as("in_exact"))
-      val lsh = DedupOps.minhashPairs(dd, "doc_id", "text", 3, 32, 4, 0.5)
+      val lsh = DedupOps.minhashPairs(dd)
         .select(col("da"), col("db"), lit(true).as("in_lsh"))
       exact.join(lsh, Seq("da", "db"), "full_outer")
         .agg(
@@ -324,7 +326,7 @@ object TextQueries {
       val keep = sampled.select(col("doc_id"))
       val exact = DedupOps.jaccardPairsPrefix(sampled, "doc_id", "text", 3, 0.5)
         .select(col("da"), col("db"), lit(true).as("in_exact"))
-      val lsh = DedupOps.minhashPairs(dd, "doc_id", "text", 3, 32, 4, 0.5)
+      val lsh = DedupOps.minhashPairs(dd)
         .join(keep.withColumnRenamed("doc_id", "da"), Seq("da"))
         .join(keep.withColumnRenamed("doc_id", "db"), Seq("db"))
         .select(col("da"), col("db"), lit(true).as("in_lsh"))
@@ -559,16 +561,10 @@ object TextQueries {
     // documents), a |sources|-row rollup.
     "q204_effective_tokens" -> ((s, d) => {
       val dd = docs(s, d)
-      val pairs = DedupOps.minhashPairs(dd, "doc_id", "text", 3, 32, 4, 0.5)
-        .select(col("da").as("src"), col("db").as("dst"))
-      val comps = graft.graph.GraphOps
-        .connectedComponents(s, graft.graph.GraphOps.symmetrize(pairs))
-        .withColumnRenamed("id", "doc_id")
-      dd.select(col("doc_id"), col("source"),
-          size(TextOps.tokens(col("text"))).cast("long").as("n_tok"))
-        .join(comps, Seq("doc_id"), "left")
-        .withColumn("keep",
-          coalesce(col("component"), col("doc_id")) === col("doc_id"))
+      val toks = dd.select(col("doc_id"), col("source"),
+        size(TextOps.tokens(col("text"))).cast("long").as("n_tok"))
+      GraphOps.withCanonical(toks, "doc_id", DedupClosure.pairEdges(dd))
+        .withColumn("keep", col("canonical") === col("doc_id"))
         .groupBy(col("source"))
         .agg(sum(col("n_tok")).as("raw_tokens"),
           sum(when(col("keep"), col("n_tok")).otherwise(0L))
@@ -595,17 +591,9 @@ object TextQueries {
       val exact = DedupOps
         .exactDedup(dd.select(col("doc_id"), col("text")), "doc_id", "text")
         .select(col("doc_id"), (!col("is_canonical")).as("exact_dup"))
-      val pairs = DedupOps
-        .minhashPairs(dd, "doc_id", "text", 3, 32, 4, 0.5)
-        .select(col("da").as("src"), col("db").as("dst"))
-      val comps = graft.graph.GraphOps
-        .connectedComponents(s, graft.graph.GraphOps.symmetrize(pairs))
-        .withColumnRenamed("id", "doc_id")
-      val near = dd.select(col("doc_id"))
-        .join(comps, Seq("doc_id"), "left")
-        .select(col("doc_id"),
-          (coalesce(col("component"), col("doc_id")) =!= col("doc_id"))
-            .as("near_dup"))
+      val near = GraphOps.withCanonical(dd.select(col("doc_id")), "doc_id",
+          DedupClosure.pairEdges(dd))
+        .select(col("doc_id"), (col("canonical") =!= col("doc_id")).as("near_dup"))
       exact.join(near, Seq("doc_id"))
         .select(when(col("exact_dup") && col("near_dup"), "both")
           .when(col("exact_dup"), "exact_only")
@@ -626,7 +614,7 @@ object TextQueries {
     // identical by construction (same oracle SQL gates both forms).
     "q209_artifact_tier_overlap" -> ((s, d) => {
       val dd = docs(s, d)
-      val cl = graft.sources.DedupClosure.read(s, dd, d)
+      val cl = DedupClosure.read(s, dd, d)
       val exact = DedupOps
         .exactDedup(dd.select(col("doc_id"), col("text")), "doc_id", "text")
         .select(col("doc_id"), (!col("is_canonical")).as("exact_dup"))
@@ -643,7 +631,7 @@ object TextQueries {
 
     "q210_artifact_tokens" -> ((s, d) => {
       val dd = docs(s, d)
-      val cl = graft.sources.DedupClosure.read(s, dd, d)
+      val cl = DedupClosure.read(s, dd, d)
       dd.select(col("doc_id"), col("source"),
           size(TextOps.tokens(col("text"))).cast("long").as("n_tok"))
         .join(cl, Seq("doc_id"))
@@ -661,7 +649,7 @@ object TextQueries {
     "q211_artifact_quality_dup" -> ((s, d) => {
       import org.apache.spark.sql.expressions.Window
       val dd = docs(s, d)
-      val cl = graft.sources.DedupClosure.read(s, dd, d)
+      val cl = DedupClosure.read(s, dd, d)
       dd.select(col("doc_id"),
           floor(TextOps.qualityScore(col("text")) * 1e9).cast("long")
             .as("qfp"))
@@ -728,7 +716,7 @@ object TextQueries {
     // shingle, 8 bands × 4 rows, candidates from band buckets,
     // signature-agreement estimate >= 0.5.
     "q23_minhash_pairs" -> ((s, d) =>
-      DedupOps.minhashPairs(docs(s, d), "doc_id", "text", 3, 32, 4, 0.5)
+      DedupOps.minhashPairs(docs(s, d))
         .orderBy(col("da"), col("db"))),
 
     // SimHash document signatures (32-bit, native per-row expression).
@@ -906,36 +894,11 @@ object TextQueries {
       } finally counts.unpersist()
     }),
 
-    "q52_dedup_canonical" -> ((s, d) => {
-      val pairs = DedupOps.minhashPairs(docs(s, d), "doc_id", "text", 3, 32, 4, 0.5)
-        .select(col("da").as("src"), col("db").as("dst"))
-      val comps = graft.graph.GraphOps
-        .connectedComponents(s, graft.graph.GraphOps.symmetrize(pairs))
-        .withColumnRenamed("id", "doc_id")
-      docs(s, d).select(col("doc_id"))
-        .join(comps, Seq("doc_id"), "left")
-        .select(col("doc_id"),
-          coalesce(col("component"), col("doc_id")).as("canonical"),
-          (coalesce(col("component"), col("doc_id")) === col("doc_id")).as("is_canonical"))
-        .orderBy(col("doc_id"))
-    }),
+    "q52_dedup_canonical" -> dedupCanonical,
 
-    // SAME semantics and SAME oracle as q52, but the transitive closure
-    // runs on the pure-DataFrame CC (min-label propagation + pointer
-    // jumping) instead of GraphX — proving the engine's component
-    // grouping needs no RDD path. Gated verbatim against q52's oracle.
-    "q115_dedup_canonical_df" -> ((s, d) => {
-      val pairs = DedupOps.minhashPairs(docs(s, d), "doc_id", "text", 3, 32, 4, 0.5)
-        .select(col("da").as("src"), col("db").as("dst"))
-      val comps = graft.graph.GraphOps.connectedComponentsDF(pairs)
-        .withColumnRenamed("id", "doc_id")
-      docs(s, d).select(col("doc_id"))
-        .join(comps, Seq("doc_id"), "left")
-        .select(col("doc_id"),
-          coalesce(col("component"), col("doc_id")).as("canonical"),
-          (coalesce(col("component"), col("doc_id")) === col("doc_id")).as("is_canonical"))
-        .orderBy(col("doc_id"))
-    }),
+    // SAME plan and SAME oracle as q52, kept under its own name because
+    // the correctness record and the bench history key on it.
+    "q115_dedup_canonical_df" -> dedupCanonical,
 
     // C4-style corpus-level SEGMENT DEDUP: 16-token segments, global
     // first-occurrence wins, documents reassembled from their survivors —
@@ -1325,13 +1288,13 @@ object TextQueries {
         .minhashPairsFromSignatures(survivorSig, 32, 4, 0.5)
         .select(col("da").as("src"), col("db").as("dst"))
         .localCheckpoint()
-      val comp = graft.graph.GraphOps.connectedComponentsDF(pairsS)
-      val batchSide = batch.join(dupOfCorpus, Seq("doc_id"), "left_anti")
-        .join(comp, col("doc_id") === col("id"), "left")
+      val batchSide = GraphOps.withCanonical(
+          batch.select(col("doc_id")).join(dupOfCorpus, Seq("doc_id"), "left_anti"),
+          "doc_id", pairsS)
         .select(col("doc_id"),
-          when(coalesce(col("component"), col("doc_id")) === col("doc_id"),
-            lit("kept")).otherwise(lit("dup_in_batch")).as("status"),
-          coalesce(col("component"), col("doc_id")).as("canonical"))
+          when(col("canonical") === col("doc_id"), lit("kept"))
+            .otherwise(lit("dup_in_batch")).as("status"),
+          col("canonical"))
       dupOfCorpus
         .select(col("doc_id"), lit("dup_of_corpus").as("status"), col("canonical"))
         .unionByName(batchSide)
@@ -1367,12 +1330,12 @@ object TextQueries {
       val added = v1.filter(col("doc_id") % 11 === 0)
         .select((col("doc_id") + AddedDocIdOffset).as("doc_id"),
           concat(lit("v2new "), col("text")).as("text"))
-      val oldClosure = graft.sources.DedupClosure.read(s, v1, d)
+      val oldClosure = DedupClosure.read(s, v1, d)
       // old-side signatures come from the SIGNATURE ARTIFACT, not a
       // recompute — SCALE_r15 measured the recompute making the refresh
       // slower than the full rebuild at ×100 (DedupClosure.sigTableName
       // scaladoc); only the DELTA's signatures are computed per refresh
-      val sigOld = graft.sources.DedupClosure.readSignatures(s, v1, d)
+      val sigOld = DedupClosure.readSignatures(s, v1, d)
       val sigNew = DedupOps.minhashSignatureRows(added, "doc_id", "text", 3, 32)
         .localCheckpoint() // referenced twice (new×old probe + new×new)
       val newOld = DedupOps.crossPairsFromSignatures(sigNew, sigOld, 32, 4, 0.5)
@@ -1383,12 +1346,9 @@ object TextQueries {
         .select(col("doc_id").as("src"), col("canonical").as("dst"))
       val edges = star.unionByName(newOld).unionByName(newNew)
         .localCheckpoint()
-      val comp = graft.graph.GraphOps.connectedComponentsDF(edges)
-        .withColumnRenamed("id", "doc_id")
-      v1.select(col("doc_id")).unionByName(added.select(col("doc_id")))
-        .join(comp, Seq("doc_id"), "left")
-        .select(col("doc_id"),
-          coalesce(col("component"), col("doc_id")).as("canonical"))
+      GraphOps.withCanonical(
+          v1.select(col("doc_id")).unionByName(added.select(col("doc_id"))),
+          "doc_id", edges)
         .orderBy(col("doc_id"))
     }),
 
@@ -1433,8 +1393,7 @@ object TextQueries {
       // plan body lives in DedupClosure.refreshCdc (r16: the same step is
       // the build half of the q229 artifact maintenance — shared code, and
       // this gate keeps pinning it against the full-recompute oracle)
-      graft.sources.DedupClosure
-        .refreshCdc(s, v1, d, survivors, added, removed)
+      DedupClosure.refreshCdc(s, v1, d, survivors, added, removed)
         .orderBy(col("doc_id"))
     }),
 
@@ -1467,8 +1426,8 @@ object TextQueries {
       val added = v1.filter(col("doc_id") % 11 === 0)
         .select((col("doc_id") + AddedDocIdOffset).as("doc_id"),
           concat(lit("v2new "), col("text")).as("text"))
-      val (_, cloV2) = graft.sources.DedupClosure
-        .maintainCdc(s, v1, d, survivors, added, removed, "cdc")
+      val (_, cloV2) =
+        DedupClosure.maintainCdc(s, v1, d, survivors, added, removed, "cdc")
       s.table(cloV2).orderBy(col("doc_id"))
     }),
 
@@ -1494,9 +1453,8 @@ object TextQueries {
       val added = v1.filter(col("doc_id") % 11 === 0)
         .select((col("doc_id") + AddedDocIdOffset).as("doc_id"),
           concat(lit("v2new "), col("text")).as("text"))
-      graft.sources.DedupClosure
-        .maintainCdcDelta(s, v1, d, survivors, added, removed, "cdcd")
-      graft.sources.DedupClosure.readDelta(s, v1, d, "cdcd")
+      DedupClosure.maintainCdcDelta(s, v1, d, survivors, added, removed, "cdcd")
+      DedupClosure.readDelta(s, v1, d, "cdcd")
         .orderBy(col("doc_id"))
     }),
 
@@ -1547,13 +1505,8 @@ object TextQueries {
     // leave the shuffle.
     "q126_corpus_report" -> ((s, d) => {
       val dd = docs(s, d)
-      val pairs = DedupOps.minhashPairs(dd, "doc_id", "text", 3, 32, 4, 0.5)
-        .select(col("da").as("src"), col("db").as("dst"))
-      val comp = graft.graph.GraphOps.connectedComponentsDF(pairs)
-      dd.select(col("doc_id"), col("source"))
-        .join(comp, col("doc_id") === col("id"), "left")
-        .select(col("doc_id"), col("source"),
-          coalesce(col("component"), col("doc_id")).as("canonical"))
+      GraphOps.withCanonical(dd.select(col("doc_id"), col("source")), "doc_id",
+          DedupClosure.pairEdges(dd))
         .groupBy(col("source"))
         .agg(count(lit(1)).as("n_docs"),
           sum(when(col("canonical") =!= col("doc_id"), 1L).otherwise(0L))
@@ -1648,7 +1601,7 @@ object TextQueries {
     "q130_cross_source_leakage" -> ((s, d) => {
       val dd = docs(s, d)
       val src = dd.select(col("doc_id"), col("source"))
-      val lab = DedupOps.minhashPairs(dd, "doc_id", "text", 3, 32, 4, 0.5)
+      val lab = DedupOps.minhashPairs(dd)
         .join(src.select(col("doc_id").as("da"), col("source").as("sa")),
           Seq("da"))
         .join(src.select(col("doc_id").as("db"), col("source").as("sb")),
@@ -1895,13 +1848,8 @@ object TextQueries {
     // pair graph + CC is q52's (blocked, never all-pairs); the bucket is a
     // per-row expression.
     "q136_split_assign" -> ((s, d) => {
-      val pairs = DedupOps.minhashPairs(docs(s, d), "doc_id", "text", 3, 32, 4, 0.5)
-        .select(col("da").as("src"), col("db").as("dst"))
-      val comps = graft.graph.GraphOps.connectedComponentsDF(pairs)
-        .withColumnRenamed("id", "doc_id")
-      docs(s, d).select(col("doc_id"))
-        .join(comps, Seq("doc_id"), "left")
-        .withColumn("canonical", coalesce(col("component"), col("doc_id")))
+      val dd = docs(s, d)
+      GraphOps.withCanonical(dd.select(col("doc_id")), "doc_id", DedupClosure.pairEdges(dd))
         .withColumn("bucket",
           pmod(TextOps.tokenHash60(col("canonical").cast("string")), lit(100L)))
         .select(col("doc_id"), col("canonical"), col("bucket"),
@@ -1968,15 +1916,12 @@ object TextQueries {
     "q137_quality_canonical" -> ((s, d) => {
       import org.apache.spark.sql.expressions.Window
       val dd = docs(s, d)
-      val pairs = DedupOps.minhashPairs(dd, "doc_id", "text", 3, 32, 4, 0.5)
-        .select(col("da").as("src"), col("db").as("dst"))
-      val comps = graft.graph.GraphOps.connectedComponentsDF(pairs)
-        .withColumnRenamed("id", "doc_id")
       val w = Window.partitionBy(col("cluster"))
         .orderBy(col("quality").desc, col("doc_id"))
-      dd.select(col("doc_id"), TextOps.qualityScore(col("text")).as("quality"))
-        .join(comps, Seq("doc_id"), "left")
-        .withColumn("cluster", coalesce(col("component"), col("doc_id")))
+      GraphOps.withCanonical(
+          dd.select(col("doc_id"), TextOps.qualityScore(col("text")).as("quality")),
+          "doc_id", DedupClosure.pairEdges(dd))
+        .withColumnRenamed("canonical", "cluster")
         .withColumn("rn", row_number().over(w))
         .select(col("doc_id"), col("cluster"), col("quality"),
           (col("rn") === 1).as("keep"))
@@ -2026,7 +1971,7 @@ object TextQueries {
     // artifact scan. Same values as q136 by construction (the artifact IS
     // q52's closure), so the oracle recomputes the closure it persisted.
     "q146_artifact_split" -> ((s, d) => {
-      val cl = graft.sources.DedupClosure.read(s, docs(s, d), d)
+      val cl = DedupClosure.read(s, docs(s, d), d)
       cl.withColumn("bucket",
           pmod(TextOps.tokenHash60(col("canonical").cast("string")), lit(100L)))
         .select(col("doc_id"), col("canonical"), col("bucket"),
@@ -2042,7 +1987,7 @@ object TextQueries {
     // no exchange on the artifact side (DedupClosureSpec pins the plan).
     "q147_artifact_canonical" -> ((s, d) => {
       import org.apache.spark.sql.expressions.Window
-      val cl = graft.sources.DedupClosure.read(s, docs(s, d), d)
+      val cl = DedupClosure.read(s, docs(s, d), d)
       val w = Window.partitionBy(col("cluster"))
         .orderBy(col("quality").desc, col("doc_id"))
       docs(s, d)
@@ -2498,7 +2443,7 @@ object TextQueries {
     // final aggregate is |sources|²-bounded.
     "q173_cross_source_dup_matrix" -> ((s, d) => {
       val dd = docs(s, d)
-      val pairs = DedupOps.minhashPairs(dd, "doc_id", "text", 3, 32, 4, 0.5)
+      val pairs = DedupOps.minhashPairs(dd)
       val sa = dd.select(col("doc_id").as("da"), col("source").as("src_a"))
       val sb = dd.select(col("doc_id").as("db"), col("source").as("src_b"))
       pairs.join(sa, Seq("da")).join(sb, Seq("db"))
@@ -2518,9 +2463,7 @@ object TextQueries {
   /** Stage 3: near-dup canonicalization among quality survivors. */
   private def corpusDeduped(s: SparkSession, d: String): DataFrame = {
     val s1 = corpusQualitySlice(s, d)
-    val pairs = DedupOps.minhashPairs(s1, "doc_id", "text", 3, 32, 4, 0.5)
-      .select(col("da").as("src"), col("db").as("dst"))
-    val nonCanonical = graft.graph.GraphOps.connectedComponentsDF(pairs)
+    val nonCanonical = GraphOps.connectedComponentsDF(DedupClosure.pairEdges(s1))
       .filter(col("id") =!= col("component"))
       .select(col("id").as("doc_id"))
     s1.join(nonCanonical, Seq("doc_id"), "left_anti")
@@ -2585,7 +2528,7 @@ object TextQueries {
         Window.partitionBy(md5(col("text"))).orderBy(col("doc_id"))))
       .filter(col("rn") === 1).drop("rn")
     if (upTo == 4) return s4
-    val closure = graft.sources.DedupClosure.read(s,
+    val closure = DedupClosure.read(s,
       dd.select(col("doc_id"), col("text")), d)
     // LEFT join + coalesce-to-self mirrors the oracle's shape: closure()
     // is total over docs today, but an artifact that omitted singleton
@@ -2724,9 +2667,6 @@ object TextQueries {
       |            list_filter(string_split_regex(trim(text), '\s+'), x -> len(x) > 0) AS w
       |          FROM documents) t0) t1)""".stripMargin
 
-  /** MinHash-LSH pairs → transitive closure → min-id canonical — shared by
-    * q52 (GraphX components) and q115 (pure-DataFrame components): the two
-    * engines must agree on the SAME closure. */
   /** The MinHash→LSH→closure CTE chain (ends at `comp(doc_id, component)`)
     * — shared by the canonical gates (q52/q115) and the q126 health
     * report, which aggregates the same closure instead of listing it. */

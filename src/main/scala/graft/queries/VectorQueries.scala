@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.functions.GraftFunctions
+import graft.graph.GraphOps
 import graft.vector.VectorOps
 
 /** Similarity-search queries over `embeddings` (SURVEY.md §2 V1-V3 + the
@@ -16,6 +17,27 @@ import graft.vector.VectorOps
 object VectorQueries {
 
   private def emb(s: SparkSession, d: String) = Tables.embeddings(s, d)
+
+  /** SemDeDup's body once the corpus `e` is assigned to `cells (vec_id,
+    * cluster)`: exact cosine ≥ 0.4 between members of the same cell, then
+    * the canonical step over that pair graph (q112 and q138 differ only in
+    * the assignment). The cells frame is read by both pair sides and the
+    * output, so callers pass it checkpointed. */
+  private def semDedupWithinCells(e: DataFrame, cells: DataFrame): DataFrame = {
+    val member = e.join(cells, Seq("vec_id"))
+      .select(col("cluster"), col("vec_id"), col("embedding"))
+    val pairs = member.select(col("cluster"), col("vec_id").as("ia"),
+        col("embedding").as("ea"))
+      .join(member.select(col("cluster"), col("vec_id").as("ib"),
+        col("embedding").as("eb")), Seq("cluster"))
+      .filter(col("ia") < col("ib"))
+      .filter(GraftFunctions.cosineSim(col("ea"), col("eb")) >= 0.4)
+      .select(col("ia").as("src"), col("ib").as("dst"))
+    GraphOps.withCanonical(cells, "vec_id", pairs)
+      .select(col("vec_id"), col("cluster"), col("canonical"),
+        (col("canonical") === col("vec_id")).as("is_canonical"))
+      .orderBy(col("vec_id"))
+  }
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
@@ -203,25 +225,7 @@ object VectorQueries {
     "q112_semdedup" -> ((s, d) => {
       val e = emb(s, d)
       val k = math.max(8L, math.ceil(e.count() / 64.0).toLong).toInt
-      val cells = VectorOps.kmeansAssign(e, k, 2).localCheckpoint()
-      val member = e.join(cells, Seq("vec_id"))
-        .select(col("cluster"), col("vec_id"), col("embedding"))
-      val pairs = member.select(col("cluster"), col("vec_id").as("ia"),
-          col("embedding").as("ea"))
-        .join(member.select(col("cluster"), col("vec_id").as("ib"),
-          col("embedding").as("eb")), Seq("cluster"))
-        .filter(col("ia") < col("ib"))
-        .filter(GraftFunctions.cosineSim(col("ea"), col("eb")) >= 0.4)
-        .select(col("ia").as("src"), col("ib").as("dst"))
-      val comps = graft.graph.GraphOps
-        .connectedComponents(s, graft.graph.GraphOps.symmetrize(pairs))
-        .withColumnRenamed("id", "vec_id")
-      cells.join(comps, Seq("vec_id"), "left")
-        .select(col("vec_id"), col("cluster"),
-          coalesce(col("component"), col("vec_id")).as("canonical"),
-          (coalesce(col("component"), col("vec_id")) === col("vec_id"))
-            .as("is_canonical"))
-        .orderBy(col("vec_id"))
+      semDedupWithinCells(e, VectorOps.kmeansAssign(e, k, 2).localCheckpoint())
     }),
 
     // SemDeDup through the TWO-LEVEL (IVF-flat) assign — the ×100 scale
@@ -241,25 +245,7 @@ object VectorQueries {
       val n = e.count()
       val k = math.min(n, math.max(8L, math.ceil(n / 64.0).toLong)).toInt
       val c = math.max(2L, math.ceil(math.sqrt(k.toDouble)).toLong).toInt
-      val cells = VectorOps.ivf2Assign(e, k, c).localCheckpoint()
-      val member = e.join(cells, Seq("vec_id"))
-        .select(col("cluster"), col("vec_id"), col("embedding"))
-      val pairs = member.select(col("cluster"), col("vec_id").as("ia"),
-          col("embedding").as("ea"))
-        .join(member.select(col("cluster"), col("vec_id").as("ib"),
-          col("embedding").as("eb")), Seq("cluster"))
-        .filter(col("ia") < col("ib"))
-        .filter(GraftFunctions.cosineSim(col("ea"), col("eb")) >= 0.4)
-        .select(col("ia").as("src"), col("ib").as("dst"))
-      val comps = graft.graph.GraphOps
-        .connectedComponents(s, graft.graph.GraphOps.symmetrize(pairs))
-        .withColumnRenamed("id", "vec_id")
-      cells.join(comps, Seq("vec_id"), "left")
-        .select(col("vec_id"), col("cluster"),
-          coalesce(col("component"), col("vec_id")).as("canonical"),
-          (coalesce(col("component"), col("vec_id")) === col("vec_id"))
-            .as("is_canonical"))
-        .orderBy(col("vec_id"))
+      semDedupWithinCells(e, VectorOps.ivf2Assign(e, k, c).localCheckpoint())
     }),
 
     // EMBEDDING OUTLIER SCAN: cosine of every vector to its OWN label's
@@ -794,11 +780,7 @@ object VectorQueries {
       val g = graft.sources.KnnGraphArtifact.read(s, e, d)
       val sem = g.filter(col("cos") >= 0.4)
         .select(col("u").as("src"), col("v").as("dst"))
-      val comp = graft.graph.GraphOps.connectedComponentsDF(sem)
-        .withColumnRenamed("id", "vec_id")
-      e.select(col("vec_id")).join(comp, Seq("vec_id"), "left")
-        .select(col("vec_id"),
-          coalesce(col("component"), col("vec_id")).as("canonical"))
+      GraphOps.withCanonical(e.select(col("vec_id")), "vec_id", sem)
         .withColumn("pruned", col("canonical") =!= col("vec_id"))
         .orderBy(col("vec_id"))
     }),

@@ -43,18 +43,16 @@ import graft.graph.GraphOps
   */
 object DedupClosure {
 
-  /** q52's closure plan over `docs` (doc_id, text): (doc_id, canonical),
-    * canonical = min doc_id of the near-dup component (self if unpaired). */
-  def closure(docs: DataFrame): DataFrame = {
-    val pairs = DedupOps.minhashPairs(docs, "doc_id", "text", 3, 32, 4, 0.5)
-      .select(col("da").as("src"), col("db").as("dst"))
-    val comps = GraphOps.connectedComponentsDF(pairs)
-      .withColumnRenamed("id", "doc_id")
-    docs.select(col("doc_id"))
-      .join(comps, Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        coalesce(col("component"), col("doc_id")).as("canonical"))
-  }
+  /** Near-dup pair graph of `docs (doc_id, text)` as CC edges
+    * `(src, dst)`: [[DedupOps.minhashPairs]]' shared MinHash rule. */
+  def pairEdges(docs: DataFrame): DataFrame =
+    DedupOps.minhashPairs(docs).select(col("da").as("src"), col("db").as("dst"))
+
+  /** q52's closure plan over `docs (doc_id, text)`: (doc_id, canonical),
+    * the [[GraphOps.withCanonical]] step over [[pairEdges]] — canonical =
+    * min doc_id of the near-dup component, self if unpaired. */
+  def closure(docs: DataFrame): DataFrame =
+    GraphOps.withCanonical(docs.select(col("doc_id")), "doc_id", pairEdges(docs))
 
   /** Fingerprinted artifact name: stable across runs over the same corpus
     * snapshot, different for any snapshot whose backing files differ.
@@ -149,13 +147,9 @@ object DedupClosure {
       .select(col("da").as("src"), col("db").as("dst"))
     val edges = starUntouched.unionByName(repaired)
       .unionByName(newOld).unionByName(newNew).localCheckpoint()
-    val comp = GraphOps.connectedComponentsDF(edges)
-      .withColumnRenamed("id", "doc_id")
-    survivors.select(col("doc_id"))
-      .unionByName(added.select(col("doc_id")))
-      .join(comp, Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        coalesce(col("component"), col("doc_id")).as("canonical"))
+    GraphOps.withCanonical(
+      survivors.select(col("doc_id")).unionByName(added.select(col("doc_id"))),
+      "doc_id", edges)
   }
 
   /** CDC MAINTENANCE of BOTH snapshot artifacts (r15 verdict item 2): the

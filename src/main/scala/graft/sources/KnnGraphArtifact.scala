@@ -390,11 +390,7 @@ object KnnGraphArtifact {
       buckets) {
       val sem = read(spark, embs, dir).filter(col("cos") >= 0.4)
         .select(col("u").as("src"), col("v").as("dst"))
-      val comp = graft.graph.GraphOps.connectedComponentsDF(sem)
-        .withColumnRenamed("id", "vec_id")
-      embs.select(col("vec_id")).join(comp, Seq("vec_id"), "left")
-        .select(col("vec_id"),
-          coalesce(col("component"), col("vec_id")).as("canonical"))
+      graft.graph.GraphOps.withCanonical(embs.select(col("vec_id")), "vec_id", sem)
     }
 
   /** The semantic closure as a DataFrame (vec_id, canonical), building it

@@ -279,30 +279,6 @@ object VectorOps {
       .select(col("ia"), col("ib"), col("cosine"))
   }
 
-  /** MLlib twin of [[lshNeighborPairs]] (SURVEY.md §2 V2 cites
-    * `BucketedRandomProjectionLSH` as the on-classpath ANN path): fits the
-    * hash model (fixed seed → deterministic buckets) and returns
-    * approximate-neighbor pairs within `maxL2` Euclidean distance.
-    * No DuckDB oracle (MLlib's hash family is engine-private) — the
-    * hand-rolled sign-LSH carries the oracle; this exists for users who want
-    * the MLlib estimator/transformer API. */
-  def mllibLshPairs(vecs: DataFrame, bucketLength: Double, numTables: Int,
-                    maxL2: Double): DataFrame = {
-    import org.apache.spark.ml.feature.BucketedRandomProjectionLSH
-    import org.apache.spark.ml.linalg.Vectors
-    val toVec = udf((a: Seq[Float]) =>
-      Vectors.dense(a.map(_.toDouble).toArray))
-    val feat = vecs.select(col("vec_id"), toVec(col("embedding")).as("features"))
-    val lsh = new BucketedRandomProjectionLSH()
-      .setBucketLength(bucketLength).setNumHashTables(numTables)
-      .setSeed(42L).setInputCol("features").setOutputCol("hashes")
-    val model = lsh.fit(feat)
-    model.approxSimilarityJoin(feat, feat, maxL2, "l2")
-      .select(col("datasetA.vec_id").as("ia"),
-        col("datasetB.vec_id").as("ib"), col("l2"))
-      .filter(col("ia") < col("ib"))
-  }
-
   /** IVF coarse centroids: per-cell, per-dimension mean. The double sums go
     * through DECIMAL(28,12) so the result is partition-order-independent
     * (exact oracle parity); output (cell, centroid array<double>). */

@@ -19,7 +19,7 @@ class CacheHygieneSpec extends SparkSuite {
       .toDF("doc_id", "text")
     Oracles.jaccardPairs(docs, "doc_id", "text", 3, 0.3).collect()
     DedupOps.jaccardPairsPrefix(docs, "doc_id", "text", 3, 0.3).collect()
-    DedupOps.minhashPairs(docs, "doc_id", "text", 3, 8, 2, 0.3).collect()
+    DedupOps.minhashPairs(docs).collect()
     val toks = EntityLinking.tokenStream(docs, "doc_id", "text")
     TextRank.pageRank(toks, 2, 2).collect()
     val spans = EntityLinking.ngramSpans(docs, 3)

@@ -80,8 +80,7 @@ class CorpusQueriesSpec extends SparkSuite {
     // The law the split exists for: both members of every LSH near-dup
     // pair land in the SAME split (checked against the pair list itself,
     // not the canonical ids the assignment was derived from).
-    val pairs = graft.dedup.DedupOps.minhashPairs(
-      graft.Tables.documents(spark, sf0001), "doc_id", "text", 3, 32, 4, 0.5)
+    val pairs = graft.dedup.DedupOps.minhashPairs(graft.Tables.documents(spark, sf0001))
     val straddlers = pairs
       .join(split.select(col("doc_id").as("da"), col("split").as("sa")), Seq("da"))
       .join(split.select(col("doc_id").as("db"), col("split").as("sb")), Seq("db"))

@@ -35,7 +35,7 @@ class DedupSpec extends SparkSuite {
   }
 
   test("minhash estimate of an exact dup is 1.0 and of disjoint docs absent") {
-    val pairs = DedupOps.minhashPairs(docs, "doc_id", "text", 3, 32, 4, 0.5)
+    val pairs = DedupOps.minhashPairs(docs)
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
     assert(pairs((0L, 2L)) == 1.0)
     assert(!pairs.contains((0L, 3L)))

@@ -108,7 +108,7 @@ class GraphSpec extends SparkSuite {
 
   test("G7 connected components: path and pair get separate min-id labels") {
     import spark.implicits._
-    val cc = GraphOps.connectedComponents(spark, pathEdges)
+    val cc = GraphOps.connectedComponentsDF(pathEdges)
       .as[(Long, Long)].collect().toMap
     assert(Seq(1L, 2L, 3L, 4L, 5L).forall(cc(_) == 1L))
     assert(Seq(10L, 11L).forall(cc(_) == 10L))
@@ -343,7 +343,7 @@ class GraphSpec extends SparkSuite {
     val e = (path ++ tri ++ pair).toDF("src", "dst")
     val df = GraphOps.connectedComponentsDF(e)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val gx = GraphOps.connectedComponents(s, GraphOps.symmetrize(e))
+    val gx = Oracles.connectedComponentsGraphX(s, GraphOps.symmetrize(e))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(df == gx)
     assert(df(12L) == 1L && df(22L) == 20L && df(31L) == 30L)
@@ -358,6 +358,44 @@ class GraphSpec extends SparkSuite {
     val out = GraphOps.connectedComponentsDF(e)
     assert(out.columns.toSeq == Seq("id", "component"))
     assert(out.count() == 0L)
+  }
+
+  test("withCanonical law: == GraphX min-id labels, self when unpaired; rows and carried columns pass through") {
+    val s = spark
+    import s.implicits._
+    // edge ids 0..9; rows name ids 0..12, so 10..12 never have an edge and
+    // 0..9 may lack one; pairs repeat and reverse; a row id may repeat
+    val edgeGen = Gen.listOf(Gen.zip(Gen.choose(0L, 9L), Gen.choose(0L, 9L)))
+      .map(es => (es ++ es.take(2) ++ es.take(2).map(_.swap)).take(16))
+    val rowGen = Gen.nonEmptyListOf(Gen.choose(0L, 12L))
+      .map(ids => (ids ++ ids.take(1)).take(10))
+    def law(es: Seq[(Long, Long)], ids: Seq[Long]): Boolean = {
+      val rows = ids.zipWithIndex.map { case (id, i) => (s"t$i", id, i * 0.5) }
+        .toDF("tag", "id", "w")
+      val edges = es.toDF("src", "dst")
+      val labels = Oracles.connectedComponentsGraphX(s, edges)
+        .as[(Long, Long)].collect().toMap
+      val out = GraphOps.withCanonical(rows, "id", edges)
+      out.columns.toSeq == Seq("tag", "id", "w", "canonical") &&
+        out.as[(String, Long, Double, Long)].collect().sortBy(_._1).toSeq ==
+          rows.as[(String, Long, Double)].collect().sortBy(_._1).toSeq
+            .map { case (t, id, w) => (t, id, w, labels.getOrElse(id, id)) }
+    }
+    check(Prop.forAll(edgeGen, rowGen)((es, ids) => law(es, ids)))
+    // the empty edge set: every row is its own canonical
+    assert(law(Seq.empty, Seq(3L, 1L, 3L)))
+  }
+
+  test("q14 == the GraphX connected-components oracle on the sf0.001 entity graph") {
+    val s = spark
+    import s.implicits._
+    val got = SparkEntry.queries("q14_connected_components")(s, sf0001)
+      .as[(Long, Long)].collect()
+    val want = Oracles.connectedComponentsGraphX(s, Erkg.entityEdges(s, sf0001))
+      .as[(Long, Long)].collect().toMap
+    assert(got.length == got.map(_._1).toSet.size)
+    assert(got.toMap == want)
+    assert(want.nonEmpty)
   }
 
   test("assortativity: stars are perfectly disassortative (r = -1)") {

@@ -7,6 +7,31 @@ import graft.multimodal.MultimodalOps.{MediaRow, MediaFeatures}
 
 class MultimodalSpec extends SparkSuite {
 
+  /** Deterministic AVI fixture encoder, MJPEG frames: each frame is a real
+    * JPEG (ImageIO writer) of a solid gray — a true lossy codec inside the
+    * same container as [[MultimodalOps.encodeAviRawGray]], for the
+    * tolerance law below. */
+  private def encodeAviMjpeg(w: Int, h: Int, frameGrays: Array[Int],
+                             fps: Int = 10): Array[Byte] = {
+    val frames = frameGrays.map { g =>
+      val img = new java.awt.image.BufferedImage(
+        w, h, java.awt.image.BufferedImage.TYPE_INT_RGB)
+      val rgb = ((g & 0xff) << 16) | ((g & 0xff) << 8) | (g & 0xff)
+      var y = 0
+      while (y < h) {
+        var x = 0
+        while (x < w) { img.setRGB(x, y, rgb); x += 1 }
+        y += 1
+      }
+      val bos = new java.io.ByteArrayOutputStream()
+      javax.imageio.ImageIO.write(img, "jpg", bos)
+      MultimodalOps.chunk("00dc", bos.toByteArray)
+    }
+    val maxF = frames.map(_.length).max
+    MultimodalOps.assembleAvi(w, h, frameGrays.length, fps, "MJPG", 0x47504a4d,
+      maxF, frames)
+  }
+
   private def media = {
     val s = spark
     import s.implicits._
@@ -153,7 +178,7 @@ class MultimodalSpec extends SparkSuite {
     // MJPEG through the SAME demuxer: a real lossy codec — frame count
     // and dimensions exact, solid-frame luma within JPEG quantization
     // tolerance (solid blocks quantize to near-DC-exact values)
-    val mj = MultimodalOps.encodeAviMjpeg(8, 8, Array(64, 128, 192))
+    val mj = encodeAviMjpeg(8, 8, Array(64, 128, 192))
     val m = MultimodalOps.decodeAviVideoFeatures(
       MediaRow(1L, "video", mj, "avi", 8, 8, 300L))
     assert(m.decoded && m.n_frames == 3)

@@ -152,7 +152,19 @@ object Oracles {
     out
   }
 
-  // ---- GraphX twins (main: GraphOps.kHop / ssspWeighted / pageRankDeterministic)
+  // ---- GraphX twins (main: GraphOps.kHop / ssspWeighted / pageRankDeterministic
+  // / connectedComponentsDF)
+
+  /** GraphX connected components over the vertices the edges name: (id,
+    * component), component = the lowest vertex id of the component. */
+  def connectedComponentsGraphX(spark: SparkSession, edges: DataFrame): DataFrame = {
+    import spark.implicits._
+    val edgeRdd = edges.select(col("src").cast("long"), col("dst").cast("long"))
+      .as[(Long, Long)].rdd.map { case (s, d) => Edge(s, d, ()) }
+    val graph = Graph.fromEdges[Unit, Unit](edgeRdd, (),
+      StorageLevel.MEMORY_AND_DISK, StorageLevel.MEMORY_AND_DISK)
+    graph.connectedComponents().vertices.toDF("id", "component")
+  }
 
   /** Pregel BFS: vertices within distance k of a seed along src → dst
     * edges. Every seed is a vertex at distance 0, with or without edges. */

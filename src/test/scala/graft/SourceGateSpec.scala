@@ -16,7 +16,10 @@ import graft.functions.GraftFunctions
   * mutates a session's function registry or optimizer only inside
   * `graft.functions` — plus q74, which exists to demonstrate the
   * session-installed rewrite rule. It also keeps one implementation per
-  * similarity operator in main: the reference twins live in [[Oracles]].
+  * similarity and graph operator in main: the reference twins live in
+  * [[Oracles]], main imports neither GraphX nor MLlib, the "pairs →
+  * components → min id" step is written once ([[graft.graph.GraphOps.withCanonical]])
+  * and every MinHash pair call uses the one shared rule.
   */
 class SourceGateSpec extends AnyFunSuite {
 
@@ -112,7 +115,8 @@ class SourceGateSpec extends AnyFunSuite {
     "graft/vector/VectorOps.scala" -> Seq("planeWeight", "lshSignature", "lshSignatureSalted"),
     "graft/dedup/DedupOps.scala" -> Seq("simhash", "simhash60", "simhashExpr",
       "minhashSignatureArray", "minhashSignatureExpr", "shingleTable", "jaccardPairs"),
-    "graft/graph/GraphOps.scala" -> Seq("kHopGraphX", "ssspWeightedGraphX", "pageRank"))
+    "graft/graph/GraphOps.scala" -> Seq("kHopGraphX", "ssspWeightedGraphX", "pageRank",
+      "connectedComponents"))
 
   test("no reference twin is defined again in the main object it left") {
     movedTwins.foreach { case (file, names) =>
@@ -146,5 +150,51 @@ class SourceGateSpec extends AnyFunSuite {
       val sig = signature(file, fn)
       assert(!sig.contains("cosineFn"), sig)
     }
+  }
+
+  test("src/main neither imports nor names GraphX or Spark ML") {
+    val found = codeHits("""\borg\.apache\.spark\.(graphx|ml|mllib)\b""")
+    assert(found.isEmpty, found.mkString("\n"))
+  }
+
+  test("the component-to-canonical coalesce is written only in GraphOps.withCanonical") {
+    val graphOps = "graft/graph/GraphOps.scala"
+    val found = codeHits("""coalesce\(col\("component"\)""")
+    assert(found.size == 1, found.mkString("\n"))
+    val (p, line, _) = found.head
+    val start = linesOf(graphOps).indexWhere(_.contains("def withCanonical("))
+    assert(p == root.resolve(graphOps) && start >= 0 && line > start && line <= start + 4,
+      s"the coalesce at ${p.getFileName}:${line + 1} is not in withCanonical")
+  }
+
+  test("every main minhashPairs call takes the docs alone") {
+    val multi = for {
+      (p, lines) <- sources
+      text = lines.filterNot(_.trim.startsWith("*")).map(_.replaceAll("//.*", "")).mkString("\n")
+      m <- """\bminhashPairs\(""".r.findAllMatchIn(text)
+      args = topLevelArgs(text, m.end - 1) if args.size != 1
+    } yield s"${p.getFileName}: minhashPairs(${args.mkString(",")})"
+    assert(multi.isEmpty, multi.mkString("\n"))
+  }
+
+  /** The top-level comma-separated arguments of the call whose `(` is at
+    * `open` in `text`. */
+  private def topLevelArgs(text: String, open: Int): Seq[String] = {
+    val args = Seq.newBuilder[String]
+    var depth = 0
+    var i = open
+    var from = open + 1
+    var done = false
+    while (!done) {
+      text(i) match {
+        case '(' => depth += 1
+        case ')' => depth -= 1
+          if (depth == 0) { args += text.substring(from, i); done = true }
+        case ',' if depth == 1 => args += text.substring(from, i); from = i + 1
+        case _ =>
+      }
+      i += 1
+    }
+    args.result()
   }
 }

@@ -126,16 +126,6 @@ class VectorSpec extends SparkSuite {
     assert(c(2) == Seq(-1.0, 0.0, 0.0))
   }
 
-  test("mllibLshPairs finds the close pairs a generous radius implies") {
-    // radius large enough that LSH recall is 1.0 on this tiny fixture
-    val pairs = VectorOps.mllibLshPairs(vecs, bucketLength = 4.0,
-        numTables = 4, maxL2 = 0.2)
-      .select("ia", "ib").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(pairs.contains((0L, 1L))) // (1,0,0) vs (.9,.1,0): l2 ≈ 0.141
-    assert(pairs.contains((2L, 3L)))
-    assert(!pairs.contains((0L, 4L))) // opposite vectors are far
-  }
-
   test("ivfKnn probes only the nearest cell") {
     val cents = VectorOps.centroids(vecs, "label")
     val out = VectorOps.ivfKnn(vecs.filter(col("vec_id") === 0), vecs, cents, "label", 3)
