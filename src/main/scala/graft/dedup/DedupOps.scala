@@ -274,17 +274,29 @@ object DedupOps {
         GraftFunctions.minhashSignature(col(textCol), n, k).as("sig"))
   }
 
-  /** The near-dup rule every [[minhashPairs]] caller shares: 3-token
-    * shingles, 32 hashes, 4 rows per band, estimated Jaccard ≥ 0.5. */
-  private val PairShingle = 3
-  private val PairHashes = 32
-  private val PairRowsPerBand = 4
-  private val PairThreshold = 0.5
+  /** THE NEAR-DUP RULE — one MinHash rule for [[minhashPairs]], the dedup
+    * closure and its maintained artifacts ([[graft.sources.DedupClosure]])
+    * and every near-dup query: 3-token shingles, 32 hashes, 4 rows per
+    * band (8 bands), estimated Jaccard ≥ 0.5. `tag` spells the rule out
+    * for artifact table names, so a rule change never reuses an artifact
+    * built under the old one. */
+  object NearDup {
+    val Shingle = 3
+    val Hashes = 32
+    val RowsPerBand = 4
+    val Threshold = 0.5
+    val tag: String =
+      s"s${Shingle}h${Hashes}r${RowsPerBand}t${math.round(Threshold * 100)}"
+  }
+
+  /** [[minhashSignatureRows]] of `docs (doc_id, text)` under [[NearDup]]. */
+  def nearDupSignatures(docs: DataFrame): DataFrame =
+    minhashSignatureRows(docs, "doc_id", "text", NearDup.Shingle, NearDup.Hashes)
 
   /** Full MinHash+LSH near-dup pipeline over `docs (doc_id, text)` under
-    * the shared rule above: candidates from band buckets, verified with
-    * the exact per-position signature agreement estimate.
-    * Output: (da, db, est_jaccard) with est >= [[PairThreshold]].
+    * the shared [[NearDup]] rule: candidates from band buckets, verified
+    * with the exact per-position signature agreement estimate.
+    * Output: (da, db, est_jaccard) with est >= the rule's threshold.
     *
     * r17: signatures come from [[minhashSignatureRows]] (fused native
     * expression over the fanned-out scan — one corpus exchange REMOVED vs
@@ -295,9 +307,9 @@ object DedupOps {
     * broadcast-build jobs racing a lazy cache each recompute the signature
     * pass (the q22/hybridLinking lesson). */
   def minhashPairs(docs: DataFrame): DataFrame = {
-    val sig = minhashSignatureRows(docs, "doc_id", "text", PairShingle, PairHashes)
-      .localCheckpoint()
-    minhashPairsFromSignatures(sig, PairHashes, PairRowsPerBand, PairThreshold)
+    val sig = nearDupSignatures(docs).localCheckpoint()
+    minhashPairsFromSignatures(sig, NearDup.Hashes, NearDup.RowsPerBand,
+      NearDup.Threshold)
       .localCheckpoint()
   }
 

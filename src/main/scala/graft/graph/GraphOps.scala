@@ -1,6 +1,7 @@
 package graft.graph
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Graph operators (SURVEY.md §2 G1-G7, plus PageRank for V4).
@@ -9,10 +10,13 @@ import org.apache.spark.sql.functions._
   * (/root/reference/src/senzing_pipeline.py:315-370). Spark-first shape:
   * an `edges(src, dst)` DataFrame for join-based traversal (k is small and
   * fixed → k shuffle joins beat Pregel's per-superstep overhead), and
-  * DataFrame fixed-point loops for the iterative algorithms, each run in a
-  * child session sized to its working set ([[inLoopSession]]). Main code
-  * has no GraphX: the GraphX BFS, SSSP, PageRank and connected-components
-  * twins are test-scope oracles.
+  * DataFrame fixed-point loops for the iterative algorithms. Every loop
+  * runs in the caller's session, under its conf, through the one round
+  * loop they share, [[superstep]]: each round is one join-plus-aggregate
+  * plan over the previous round's materialized state, the superstep shape
+  * of Pregelix.
+  * Main code has no GraphX: the GraphX BFS, SSSP, PageRank and
+  * connected-components twins are test-scope oracles.
   *
   * No GraphFrames on the classpath (BASELINE.md) — motif-style queries are
   * DataFrame self-joins.
@@ -79,37 +83,42 @@ object GraphOps {
     * aggregation) + two label-table equi-joins (vertex-sized); the
     * convergence probe is a single 1-row SUM action — labels decrease
     * monotonically, so an unchanged sum IS a fixpoint proof, no except()
-    * diff needed. `localCheckpoint` flattens lineage each round (the kCore
-    * discipline).
+    * diff needed ([[superstep]]'s probe).
     *
     * At the fixpoint every edge has equal labels on both ends, and the
     * component minimum keeps its own id, so the label equals the lowest
     * vertex id in the component — the same contract as GraphX's
     * `connectedComponents` (law-pinned against `Oracles` in GraphSpec).
     *
-    * The loop's shuffles run at a partition count sized to ITS working set
-    * (the edge table), not the session's corpus-scaled
-    * `spark.sql.shuffle.partitions`: the label/edge tables are usually
-    * orders of magnitude smaller than the corpus that produced them, and
-    * an iterative operator multiplies any per-task overhead by
-    * stages × rounds. Measured on the ×100 ScaleBench corpus (q125,
-    * 475k docs, conf at 800 partitions): steady wall is MONOTONIC in the
-    * inherited partition count — 46.2 s at 400 / 72.4 s at 800 / 100.8 s
-    * at 1600 — pure scheduling overhead, not spill (more partitions made
-    * it worse) and not the algorithm (output identical). The override
-    * lives in a CHILD session ([[inLoopSession]] — `newSession`: shared
-    * SparkContext, private SQLConf), so concurrent queries and streaming
-    * micro-batches on the caller's session never see the shrunken
-    * setting — every shuffle
-    * inside the loop is forced by the per-round localCheckpoint, so
-    * nothing lazy escapes the child session either.
+    * The loop runs in the caller's session at its shuffle-partition
+    * setting, and AQE coalesces each round's small shuffles. A child
+    * session sized to the loop's working set was tried and removed: its
+    * conf copy and the Row round trip of every input and result cost more
+    * per call than the smaller partition count saved.
     *
     * @param edges any edge list (symmetrized internally); isolated
     *              vertices don't appear (no edges ⇒ no rows), matching the
     *              GraphX oracle on an edge-derived graph
     * @return (id, component) */
-  def connectedComponentsDF(edges: DataFrame): DataFrame =
-    inLoopSession(Seq(symmetrize(edges)))(s => connectedComponentsLoop(s.head))
+  def connectedComponentsDF(edges: DataFrame): DataFrame = {
+    val sym = symmetrize(edges).localCheckpoint()
+    val init = sym.select(col("src").as("id")).distinct()
+      .withColumn("comp", col("id")).localCheckpoint()
+    superstep(init, CcMaxRounds, probe = Some(sum(col("comp")))) { (lab, _) =>
+      val nbrMin = sym
+        .join(lab.select(col("id").as("dst"), col("comp").as("dcomp")),
+          Seq("dst"))
+        .groupBy(col("src")).agg(min(col("dcomp")).as("nmin"))
+        .select(col("src").as("id"), col("nmin"))
+      val stepped = lab.join(nbrMin, Seq("id"), "left")
+        .select(col("id"),
+          least(col("comp"), coalesce(col("nmin"), col("comp"))).as("comp"))
+      stepped
+        .join(stepped.select(col("id").as("pid"), col("comp").as("pcomp")),
+          col("comp") === col("pid"), "left")
+        .select(col("id"), coalesce(col("pcomp"), col("comp")).as("comp"))
+    }.select(col("id"), col("comp").as("component"))
+  }
 
   /** ENTITY-RESOLUTION CANONICAL LABEL — the "pairs → clusters → one id
     * per cluster" step every dedup and resolution query shares: `rows`
@@ -129,130 +138,91 @@ object GraphOps {
       .select(rows.columns.map(col) :+
         coalesce(col("component"), col(idCol)).as("canonical"): _*)
 
-  /** Round cap of [[connectedComponentsDF]]: pointer jumping converges in
-    * O(log n) rounds, so the cap is a guard, never the stopping rule. */
+  /** Round cap of [[connectedComponentsDF]]. Pointer jumping converges in
+    * O(log n) rounds when ids grow along chains, but an adversarial id
+    * order is slower (GraphSpec's 24-vertex deep path takes 18 rounds), and
+    * a loop that reaches the cap returns unconverged labels. */
   private val CcMaxRounds = 50
 
-  /** The label-propagation fixpoint loop of [[connectedComponentsDF]] —
-    * every round ends in an eager localCheckpoint, so all its shuffles
-    * execute under the caller's (working-set-sized) partition setting. */
-  private def connectedComponentsLoop(sym: DataFrame): DataFrame = {
-    var lab = sym.select(col("src").as("id")).distinct()
-      .withColumn("comp", col("id")).localCheckpoint()
-    var last = Option.empty[Long]
+  /** The round loop of every iterative operator here: up to `rounds`
+    * applications of `step` (given the state and the 1-based round),
+    * starting from `init`. The state is materialized with
+    * `localCheckpoint` every `every` rounds and after the last, so each
+    * round plans one layer over a materialized table instead of the whole
+    * history. With a `probe`, every materialized state is reduced to one
+    * value and the loop ends early when that value repeats (the round
+    * changed nothing, so every later round is a no-op) or is null (an
+    * aggregate over zero rows: the state is empty).
+    *
+    * Stats reset: `localCheckpoint` REWRITES the new leaf's stats from the
+    * plan it checkpoints (Spark 4.x rewriteStatsAndConstraints), so a
+    * state self-join's size estimate compounds ~quadratically per
+    * materialization. A graph that needs many rounds (measured: q228's
+    * ×100 semantic graph under [[connectedComponentsDF]], ~25+) overflows
+    * BigInteger inside the stats visitor before the loop converges. From
+    * the ninth materialization on, the state is re-wrapped through
+    * `createDataFrame`, whose leaf carries default stats: identical data,
+    * at the price of one Row round trip of the state table, which shallow
+    * loops never pay. */
+  private def superstep(init: DataFrame, rounds: Int, every: Int = 1,
+                        probe: Option[Column] = None)(
+      step: (DataFrame, Int) => DataFrame): DataFrame = {
+    var state = init
+    var materialized = 0
+    var last = Option.empty[Any]
     var round = 0
     var done = false
-    while (!done && round < CcMaxRounds) {
-      val nbrMin = sym
-        .join(lab.select(col("id").as("dst"), col("comp").as("dcomp")),
-          Seq("dst"))
-        .groupBy(col("src")).agg(min(col("dcomp")).as("nmin"))
-        .select(col("src").as("id"), col("nmin"))
-      val stepped = lab.join(nbrMin, Seq("id"), "left")
-        .select(col("id"),
-          least(col("comp"), coalesce(col("nmin"), col("comp"))).as("comp"))
-      val jumped = stepped
-        .join(stepped.select(col("id").as("pid"), col("comp").as("pcomp")),
-          col("comp") === col("pid"), "left")
-        .select(col("id"), coalesce(col("pcomp"), col("comp")).as("comp"))
-      // localCheckpoint REWRITES the new LogicalRDD's stats from the plan
-      // it checkpoints (Spark 4.x rewriteStatsAndConstraints) — so round
-      // n's carried estimate feeds round n+1's self-join PRODUCT and the
-      // size stat compounds ~quadratically per round. A graph that needs
-      // many pointer-jump rounds (measured: q228's ×100 semantic graph,
-      // ~25+) overflows BigInteger inside the stats visitor before the
-      // loop converges. Re-wrapping the already-materialized RDD resets
-      // the leaf to default stats — identical data, but the wrap pays an
-      // InternalRow→Row→InternalRow conversion of the full label table,
-      // so it is GATED on round count (r16 advice): shallow graphs (the
-      // common case — pointer jumping converges in O(log n) rounds) never
-      // pay the conversion tax, and deep graphs reset the leaf every
-      // round from round 8 on, far below the ~25-round overflow horizon
-      // (rounds ≤ 8 were measured safe for years of shallower corpora).
-      val ck = jumped.localCheckpoint()
-      lab =
-        if (round < 8) ck
-        else ck.sparkSession.createDataFrame(ck.rdd, ck.schema)
-      // SUM over zero rows is NULL — an empty label table (no edges after
-      // upstream filtering) is already a fixpoint, not an error.
-      val s = Option(lab.agg(sum(col("comp"))).first().getAs[java.lang.Long](0))
-        .map(_.longValue())
-      done = s.isEmpty || (last == s)
-      last = s
+    while (!done && round < rounds) {
       round += 1
+      state = step(state, round)
+      if (round % every == 0 || round == rounds) {
+        val ck = state.localCheckpoint()
+        materialized += 1
+        state =
+          if (materialized <= 8) ck
+          else ck.sparkSession.createDataFrame(ck.rdd, ck.schema)
+        probe.foreach { p =>
+          val v = Option(state.agg(p).first().get(0))
+          done = v.isEmpty || v == last
+          last = v
+        }
+      }
     }
-    lab.select(col("id"), col("comp").as("component"))
+    state
   }
 
-
-  /** Run an iterative operator's loop in a throwaway child session whose
-    * shuffle partitions are sized to the LOOP's working set — r17:
-    * [[connectedComponentsDF]]'s measured discipline (its ×100 ScaleBench
-    * row: steady wall MONOTONIC in the inherited partition count — pure
-    * per-task scheduling overhead × stages × rounds) extended to every
-    * iterative operator. `inputs` are the loop-invariant tables, already
-    * projected to the columns the loop reads: each is materialized ONCE
-    * into the child session (one Row conversion, which doubles as the
-    * eager materialization the loops previously did with a lazy cache);
-    * partitions = rows/100k of the largest input, capped by the
-    * caller's conf (at corpus scale rows/100k ≫ cores and nothing
-    * changes). The result is re-wrapped into the caller's session so
-    * downstream plans never reference child-session frames. Partitioning
-    * never changes values: every loop in this file is fixed-point or
-    * integer arithmetic with order-free aggregation. */
-  private def inLoopSession(inputs: Seq[DataFrame])(
-      body: Seq[DataFrame] => DataFrame): DataFrame = {
-    val spark = inputs.head.sparkSession
-    val ls = spark.newSession()
-    // newSession() starts from BUILD-time defaults: forward the caller's
-    // runtime SQLConf entries (AQE toggles, broadcast threshold, ANSI mode,
-    // time zone …) so only the partition override below differs; static
-    // entries throw on a live session and are skipped
-    spark.conf.getAll.foreach { case (k, v) =>
-      if (!ls.conf.getOption(k).contains(v))
-        try ls.conf.set(k, v)
-        catch { case _: org.apache.spark.sql.AnalysisException => () }
+  /** FIRST-REACH BFS, shared by [[bfsDistances]] and [[harmonicCentrality]]:
+    * from `starts (keys…, n)`, every (keys…, node) reachable along
+    * `e (src, dst)` within `maxHops`, with `d` = the hop of its first
+    * reach. Each round expands the previous ring (`d` = round − 1) and
+    * anti-joins away every pair already labeled, so each pair is labeled
+    * once, at its minimum distance, and the ring is the BFS frontier.
+    * `keys` name the search a row belongs to: none for one multi-seed
+    * search, `s` for one search per source. No broadcast hint: on
+    * hub-heavy graphs a ring can reach graph scale, too big to collect
+    * for a broadcast — AQE broadcasts small rings at runtime and shuffles
+    * big ones. */
+  private def firstReach(e: DataFrame, starts: DataFrame, keys: Seq[String],
+                         maxHops: Int): DataFrame = {
+    val pair = keys :+ "n"
+    superstep(starts.withColumn("d", lit(0)), maxHops) { (labeled, h) =>
+      val ring = labeled.filter(col("d") === h - 1)
+        .join(e, col("n") === col("src"))
+        .select(keys.map(col) :+ col("dst").as("n"): _*).distinct()
+        .join(labeled.select(pair.map(col): _*), pair, "left_anti")
+      labeled.unionByName(ring.withColumn("d", lit(h)))
     }
-    val wrapped = inputs.map(f =>
-      ls.createDataFrame(f.rdd, f.schema).localCheckpoint())
-    val rows = wrapped.map(_.count()).max
-    // no core-count floor: AQE cannot coalesce a loop that executes through
-    // the RDD path, and a floor ran small label tables as near-empty tasks
-    val parts = math.min(spark.sessionState.conf.numShufflePartitions,
-      (rows / 100000L).toInt + 1)
-    ls.conf.set("spark.sql.shuffle.partitions", parts.toString)
-    val res = body(wrapped)
-    spark.createDataFrame(res.rdd, res.schema)
   }
 
   /** BFS DISTANCE labeling (unweighted SSSP) within `maxHops`: the
     * first-reach hop of every vertex — [[kHop]]'s reachability SET enriched
-    * to distances. Same scale shape: the labeled set stays seed-neighborhood
-    * sized and is broadcast against the big edge table each round (the
-    * anti-join keeps only first reaches, so every vertex is labeled at its
-    * minimum distance and each round's frontier shrinks to the BFS ring).
+    * to distances, by one [[firstReach]] search from all seeds at once.
     * Output: (id, dist) for vertices within maxHops of a seed.
     */
   def bfsDistances(edges: DataFrame, seeds: DataFrame, maxHops: Int): DataFrame =
-    inLoopSession(Seq(edges.select(col("src"), col("dst")),
-        seeds.select(col("id")).distinct())) { case Seq(e, sd) =>
-      var labeled = sd.withColumn("dist", lit(0))
-      var frontier = labeled.select(col("id"))
-      for (h <- 1 to maxHops) {
-        // no broadcast hint: on hub-heavy graphs a frontier ring can reach
-        // graph scale and a hint is a driver OOM hazard — AQE broadcasts
-        // small rings at runtime and shuffles big ones
-        val ring = e.join(frontier, col("src") === col("id"))
-          .select(col("dst").as("id")).distinct()
-          .join(labeled.select(col("id")), Seq("id"), "left_anti")
-          .localCheckpoint() // consumed twice (union + next frontier) and
-          // feeds the next round's anti-join — keep the lineage flat
-        labeled = labeled.unionByName(ring.withColumn("dist", lit(h)))
-        frontier = ring
-      }
-      labeled.localCheckpoint()
-    }
-
+    firstReach(edges.select(col("src"), col("dst")).localCheckpoint(),
+        seeds.select(col("id").as("n")).distinct(), Nil, maxHops)
+      .select(col("n").as("id"), col("d").as("dist"))
 
   /** WEIGHTED SSSP via bounded relaxation (Bellman–Ford rounds): after
     * `maxRounds` rounds each vertex holds the minimum total edge cost over
@@ -269,21 +239,16 @@ object GraphOps {
     * @param seeds single-column DataFrame `id`
     * @return (id, cost) for vertices reachable within maxRounds edges
     */
-  def ssspWeighted(edges: DataFrame, seeds: DataFrame, maxRounds: Int): DataFrame =
-    inLoopSession(Seq(edges.select(col("src"), col("dst"), col("cost").as("w")),
-        seeds.select(col("id")).distinct())) { case Seq(e, sd) =>
-      var dist = sd.withColumn("cost", lit(0L))
-      for (_ <- 1 to maxRounds) {
-        val relaxed = e.join(dist, col("src") === col("id"))
-          .select(col("dst").as("id"), (col("cost") + col("w")).as("cost"))
-        dist = dist.unionByName(relaxed)
-          .groupBy(col("id")).agg(min(col("cost")).as("cost"))
-          .localCheckpoint() // keep the per-round lineage flat (plan depth
-          // otherwise grows a join+agg layer per round)
-      }
-      dist
+  def ssspWeighted(edges: DataFrame, seeds: DataFrame, maxRounds: Int): DataFrame = {
+    val e = edges.select(col("src"), col("dst"), col("cost").as("w"))
+      .localCheckpoint()
+    superstep(seeds.select(col("id")).distinct().withColumn("cost", lit(0L)),
+        maxRounds) { (dist, _) =>
+      dist.unionByName(e.join(dist, col("src") === col("id"))
+          .select(col("dst").as("id"), (col("cost") + col("w")).as("cost")))
+        .groupBy(col("id")).agg(min(col("cost")).as("cost"))
     }
-
+  }
 
   /** Per-vertex TRIANGLE counts over a canonically-oriented (src < dst)
     * undirected edge list: `e1(a,b) ⋈ e2(b,c) ⋈ e3(a,c)` enumerates each
@@ -315,42 +280,7 @@ object GraphOps {
     * GraphX `staticPageRank` keeps double sums whose order varies run to run
     * — fine for analytics, unusable for a hash-compared gate. */
   def pageRankDeterministic(edges: DataFrame, iterations: Int): DataFrame =
-    // r17: the loop runs in a working-set-sized child session
-    // (inLoopSession) — the caller usually passes a derived edge list
-    // (join+distinct+symmetrize), which the wrap materializes once.
-    inLoopSession(Seq(edges.select(col("src"), col("dst")))) { case Seq(e) =>
-      val nodes = e.select(col("src").as("id")).distinct().localCheckpoint()
-      // Pre-join the out-degree ONTO the edge list once: `edges ⋈ outdeg` is
-      // loop-invariant, so attaching odeg here turns every iteration's
-      // 3-table join into a single ranks⋈eo equi-join — one join per round
-      // instead of two. Same division, same fixed-point floor:
-      // value-identical, oracle untouched.
-      val eo = e.join(
-          e.groupBy(col("src")).agg(count(lit(1)).as("odeg")), Seq("src"))
-        .localCheckpoint()
-      val nAgg = broadcast(nodes.agg(count(lit(1)).as("n")))
-      var ranks = nodes.crossJoin(nAgg)
-        .select(col("id"), (lit(1.0) / col("n")).as("rank"))
-      for (i <- 1 to iterations) {
-        val contribs = ranks.as("r")
-          .join(eo.as("e"), col("r.id") === col("e.src"))
-          .select(col("e.dst").as("id"),
-            floor((col("r.rank") / col("e.odeg")) * lit(1e15)).as("contrib"))
-          .groupBy(col("id"))
-          .agg((sum(col("contrib")).cast("double") / lit(1e15)).as("inflow"))
-        ranks = nodes.crossJoin(nAgg)
-          .join(contribs, Seq("id"), "left")
-          .select(col("id"),
-            (lit(0.15) / col("n") +
-              lit(0.85) * coalesce(col("inflow"), lit(0.0))).as("rank"))
-        // Truncate lineage every few rounds: the rank table is small (one row
-        // per vertex) but its plan grows one join-agg layer per iteration —
-        // analysis/optimization cost alone goes superlinear without this.
-        if (i % 3 == 0) ranks = ranks.localCheckpoint()
-      }
-      ranks.localCheckpoint()
-    }
-
+    rankLoop(edges, None, iterations)
 
   /** PERSONALIZED PageRank, deterministic fixed-point form: teleport mass
     * returns to the SEED set (uniformly) instead of all vertices, so ranks
@@ -369,46 +299,54 @@ object GraphOps {
     */
   def personalizedPageRankDeterministic(edges: DataFrame, seeds: DataFrame,
                                         iterations: Int): DataFrame =
-    inLoopSession(Seq(edges.select(col("src"), col("dst")),
-        seeds.select(col("id")).distinct())) { case Seq(e, sd) =>
-      val seedFlag = e.select(col("src").as("id")).distinct()
-        .join(sd.withColumn("sfl", lit(1)), Seq("id"), "left")
-        .select(col("id"), coalesce(col("sfl"), lit(0)).as("s"))
-        .localCheckpoint()
-      // One 1-row aggregate action up front: the seed count is the teleport
-      // denominator everywhere, and evaluating it eagerly both guards the
-      // 0/0-NaN hole and replaces the broadcast crossJoin with a literal.
-      // sum() over ZERO rows is NULL, not 0 — read through java.lang.Long
-      // so an empty graph hits the require below instead of a null-deref
-      val ns = Option(seedFlag.agg(sum(col("s")).as("ns"))
-          .first().getAs[java.lang.Long](0))
-        .map(_.longValue).getOrElse(0L)
-      require(ns > 0,
-        "personalizedPageRank: no seed id intersects the graph's vertex set")
-      // loop-invariant edges⋈outdeg pre-join, same as pageRankDeterministic
-      val eo = e.join(
-          e.groupBy(col("src")).agg(count(lit(1)).as("odeg")), Seq("src"))
-        .localCheckpoint()
-      var ranks = seedFlag
-        .select(col("id"),
-          (col("s").cast("double") / lit(ns.toDouble)).as("rank"))
-      for (i <- 1 to iterations) {
-        val contribs = ranks.as("r")
-          .join(eo.as("e"), col("r.id") === col("e.src"))
-          .select(col("e.dst").as("id"),
-            floor((col("r.rank") / col("e.odeg")) * lit(1e15)).as("contrib"))
-          .groupBy(col("id"))
-          .agg((sum(col("contrib")).cast("double") / lit(1e15)).as("inflow"))
-        ranks = seedFlag
-          .join(contribs, Seq("id"), "left")
-          .select(col("id"),
-            (lit(0.15) * col("s").cast("double") / lit(ns.toDouble) +
-              lit(0.85) * coalesce(col("inflow"), lit(0.0))).as("rank"))
-        if (i % 3 == 0) ranks = ranks.localCheckpoint()
-      }
-      ranks.localCheckpoint()
-    }
+    rankLoop(edges, Some(seeds), iterations)
 
+  /** The one rank loop of both PageRanks: teleport mass returns uniformly
+    * to the seed vertices, or to every vertex when `seeds` is None — which
+    * makes [[pageRankDeterministic]] exactly the all-seeds personalized
+    * form (r = 0.15·s/ns + 0.85·Σ inflow with s = 1 and ns = n). An empty
+    * graph ranks nothing; only the personalized form requires a seed in
+    * the vertex set. */
+  private def rankLoop(edges: DataFrame, seeds: Option[DataFrame],
+                       iterations: Int): DataFrame = {
+    val e = edges.select(col("src"), col("dst")).localCheckpoint()
+    val nodes = e.select(col("src").as("id")).distinct()
+    val seedFlag = seeds.fold(nodes.withColumn("s", lit(1))) { sd =>
+      nodes.join(sd.select(col("id")).distinct().withColumn("sfl", lit(1)),
+          Seq("id"), "left")
+        .select(col("id"), coalesce(col("sfl"), lit(0)).as("s"))
+    }.localCheckpoint()
+    // One 1-row aggregate action up front: the seed count is the teleport
+    // denominator everywhere, and evaluating it eagerly both guards the
+    // 0/0-NaN hole and turns the denominator into a literal.
+    // sum() over ZERO rows is NULL, not 0 — read through java.lang.Long
+    // so an empty graph hits the require below instead of a null-deref
+    val ns = Option(seedFlag.agg(sum(col("s"))).first().getAs[java.lang.Long](0))
+      .map(_.longValue).getOrElse(0L)
+    require(ns > 0 || seeds.isEmpty,
+      "personalizedPageRank: no seed id intersects the graph's vertex set")
+    // Pre-join the out-degree ONTO the edge list once: `edges ⋈ outdeg` is
+    // loop-invariant, so every round is a single ranks⋈eo equi-join.
+    val eo = e.join(
+        e.groupBy(col("src")).agg(count(lit(1)).as("odeg")), Seq("src"))
+      .localCheckpoint()
+    val init = seedFlag.select(col("id"),
+      (col("s").cast("double") / lit(ns.toDouble)).as("rank"))
+    // the rank table is one row per vertex, but its plan grows one
+    // join-agg layer per round — materialize every third
+    superstep(init, iterations, every = 3) { (ranks, _) =>
+      val contribs = ranks.as("r")
+        .join(eo.as("e"), col("r.id") === col("e.src"))
+        .select(col("e.dst").as("id"),
+          floor((col("r.rank") / col("e.odeg")) * lit(1e15)).as("contrib"))
+        .groupBy(col("id"))
+        .agg((sum(col("contrib")).cast("double") / lit(1e15)).as("inflow"))
+      seedFlag.join(contribs, Seq("id"), "left")
+        .select(col("id"),
+          (lit(0.15) * col("s").cast("double") / lit(ns.toDouble) +
+            lit(0.85) * coalesce(col("inflow"), lit(0.0))).as("rank"))
+    }
+  }
 
   /** HITS hubs & authorities, deterministic fixed-point form over a
     * DIRECTED edge list: hubs score by the authorities they point at,
@@ -425,45 +363,45 @@ object GraphOps {
     * @return (id, hub, auth) for every vertex, 0.0 on the absent side
     */
   def hitsDeterministic(edges: DataFrame, iterations: Int): DataFrame = {
-    def fpSum(c: org.apache.spark.sql.Column) =
+    def fpSum(c: Column) =
       sum(floor(c * lit(1e15)).cast("long")).cast("double") / lit(1e15)
-    inLoopSession(Seq(edges.select(col("src"), col("dst")))) { case Seq(e) =>
-      // init = 1/n (NOT 1.0): L1 scaling makes the fixpoint init-invariant,
-      // but the FIRST round's fixed-point totals are not — an unnormalized
-      // init sums |E|·1e15 and overflows Long once |E| > ~9000. With Σa = 1
-      // every later total is bounded by max_indeg·1e15 (the scale dial: drop
-      // the 1e15 to 1e12 for graphs with ~10⁶-degree hubs).
-      val authNodes = e.select(col("dst").as("id")).distinct()
-      val nAuth = broadcast(authNodes.agg(count(lit(1)).as("n")))
-      var auth = authNodes.crossJoin(nAuth)
-        .select(col("id"), (lit(1.0) / col("n")).as("a"))
-      var hubs = e.select(col("src").as("id")).distinct()
-        .withColumn("h", lit(0.0))
-      for (_ <- 1 to iterations) {
-        // raw score tables are vertex-sized and referenced TWICE each (values
-        // + normalization total) — materialize them or every reference pair
-        // doubles the recomputed plan, 4× per iteration (21 s → 3 s at sf0.1)
-        val hRaw = e.as("e").join(auth.as("av"), col("e.dst") === col("av.id"))
-          .groupBy(col("e.src").as("id")).agg(fpSum(col("av.a")).as("raw"))
-          .localCheckpoint()
-        val hTot = broadcast(hRaw.agg(fpSum(col("raw")).as("s")))
-        hubs = hRaw.crossJoin(hTot)
-          .select(col("id"), (col("raw") / col("s")).as("h"))
-        val aRaw = e.as("e").join(hubs.as("hv"), col("e.src") === col("hv.id"))
-          .groupBy(col("e.dst").as("id")).agg(fpSum(col("hv.h")).as("raw"))
-          .localCheckpoint()
-        val aTot = broadcast(aRaw.agg(fpSum(col("raw")).as("s")))
-        auth = aRaw.crossJoin(aTot)
-          .select(col("id"), (col("raw") / col("s")).as("a"))
-      }
-      hubs.withColumnRenamed("h", "hub")
-        .join(auth.withColumnRenamed("a", "auth"), Seq("id"), "full_outer")
-        .select(col("id"), coalesce(col("hub"), lit(0.0)).as("hub"),
-          coalesce(col("auth"), lit(0.0)).as("auth"))
+    val e = edges.select(col("src"), col("dst")).localCheckpoint()
+    // one half-round: each `to` vertex sums the scores (id, v) of its
+    // `from` neighbors, then the sums are L1-normalized. The raw table is
+    // vertex-sized and read TWICE (values + total) — materialize it or
+    // every reference pair doubles the recomputed plan, 4× per round
+    // (21 s → 3 s at sf0.1)
+    def half(scores: DataFrame, from: String, to: String): DataFrame = {
+      val raw = e.join(scores, col(from) === col("id"))
+        .groupBy(col(to).as("id")).agg(fpSum(col("v")).as("raw"))
         .localCheckpoint()
+      raw.crossJoin(broadcast(raw.agg(fpSum(col("raw")).as("s"))))
+        .select(col("id"), (col("raw") / col("s")).as("v"))
     }
+    // init = 1/n (NOT 1.0): L1 scaling makes the fixpoint init-invariant,
+    // but the FIRST round's fixed-point totals are not — an unnormalized
+    // init sums |E|·1e15 and overflows Long once |E| > ~9000. With Σa = 1
+    // every later total is bounded by max_indeg·1e15 (the scale dial: drop
+    // the 1e15 to 1e12 for graphs with ~10⁶-degree hubs).
+    val authNodes = e.select(col("dst").as("id")).distinct()
+    val auth0 = authNodes
+      .crossJoin(broadcast(authNodes.agg(count(lit(1)).as("n"))))
+      .select(col("id"), (lit(1.0) / col("n")).as("v"))
+    // the state is the hub table; round i's authorities come from round
+    // i - 1's hubs (the init on round 1), and the last round's from the
+    // result. The half-rounds materialize their own raw tables, so the
+    // state itself is materialized only at the end.
+    val hubs = superstep(e.select(col("src").as("id")).distinct()
+        .withColumn("v", lit(0.0)), iterations, every = iterations) { (h, i) =>
+      half(if (i == 1) auth0 else half(h, "src", "dst"), "dst", "src")
+    }
+    val auth = if (iterations == 0) auth0 else half(hubs, "src", "dst")
+    hubs.select(col("id"), col("v").as("hub"))
+      .join(auth.select(col("id"), col("v").as("auth")), Seq("id"), "full_outer")
+      .select(col("id"), coalesce(col("hub"), lit(0.0)).as("hub"),
+        coalesce(col("auth"), lit(0.0)).as("auth"))
+      .localCheckpoint()
   }
-
 
   /** G2 — reverse-reachability flag: does any edge point at this vertex?
     * (`has_ref`, /root/reference/src/senzing_pipeline.py:363-368.)
@@ -491,26 +429,17 @@ object GraphOps {
     * @param edges symmetric edge list (src, dst)
     * @return (id, core_degree) for vertices surviving the peel
     */
-  def kCore(edges: DataFrame, k: Int, maxRounds: Int): DataFrame = {
+  def kCore(edges: DataFrame, k: Int, maxRounds: Int): DataFrame =
     // every round is materialized and counted: the earliest possible
-    // convergence exit (shallow peels, where most rounds ARE the last
-    // round), and the count is free — the checkpoint already ran the job
-    var live = edges.select(col("src"), col("dst")).localCheckpoint()
-    var n = live.count()
-    var converged = false
-    for (_ <- 1 to maxRounds if !converged) {
+    // convergence exit (shallow peels, where most rounds ARE the last round)
+    superstep(edges.select(col("src"), col("dst")).localCheckpoint(), maxRounds,
+        probe = Some(count(lit(1)))) { (live, _) =>
       val keep = live.groupBy(col("src")).agg(count(lit(1)).as("deg"))
         .filter(col("deg") >= k).select(col("src").as("id"))
-      val next = live
+      live
         .join(keep, live("src") === keep("id"), "left_semi")
         .join(keep, live("dst") === keep("id"), "left_semi")
-      val mat = next.localCheckpoint() // flatten the per-round lineage
-      val m = mat.count()
-      converged = m == n
-      live = mat; n = m
-    }
-    live.groupBy(col("src").as("id")).agg(count(lit(1)).as("core_degree"))
-  }
+    }.groupBy(col("src").as("id")).agg(count(lit(1)).as("core_degree"))
 
   /** Synchronous LABEL PROPAGATION community detection, `rounds` fixed
     * rounds: every vertex starts labeled with its own id; each round every
@@ -529,26 +458,22 @@ object GraphOps {
     * @param edges symmetric edge list (src, dst)
     * @return (id, label) — community = min vertex id that won the vote
     */
-  def labelPropagation(edges: DataFrame, rounds: Int): DataFrame =
-    inLoopSession(Seq(edges.select(col("src"), col("dst")))) { case Seq(e) =>
-      val nodes = e.select(col("src").as("id")).distinct().localCheckpoint()
-      var labels = nodes.select(col("id"), col("id").as("label"))
-      for (i <- 1 to rounds) {
-        val votes = e.join(labels, e("src") === labels("id"))
-          .select(col("dst").as("id"), col("label"))
-          .groupBy(col("id"), col("label")).agg(count(lit(1)).as("c"))
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy(col("id")).orderBy(col("c").desc, col("label").asc)
-        val won = votes.withColumn("rn", row_number().over(w))
-          .filter(col("rn") === 1).select(col("id"), col("label"))
-        labels = nodes.join(won, Seq("id"), "left")
-          .select(nodes("id"), coalesce(col("label"), nodes("id")).as("label"))
-        // one join+window layer per round — keep the plan flat
-        if (i % 2 == 0) labels = labels.localCheckpoint()
-      }
-      labels.localCheckpoint()
+  def labelPropagation(edges: DataFrame, rounds: Int): DataFrame = {
+    val e = edges.select(col("src"), col("dst")).localCheckpoint()
+    val nodes = e.select(col("src").as("id")).distinct().localCheckpoint()
+    val w = Window.partitionBy(col("id")).orderBy(col("c").desc, col("label").asc)
+    // one join+window layer per round — materialize every second
+    superstep(nodes.select(col("id"), col("id").as("label")), rounds,
+        every = 2) { (labels, _) =>
+      val won = e.join(labels, e("src") === labels("id"))
+        .select(col("dst").as("id"), col("label"))
+        .groupBy(col("id"), col("label")).agg(count(lit(1)).as("c"))
+        .withColumn("rn", row_number().over(w))
+        .filter(col("rn") === 1).select(col("id"), col("label"))
+      nodes.join(won, Seq("id"), "left")
+        .select(nodes("id"), coalesce(col("label"), nodes("id")).as("label"))
     }
-
+  }
 
   /** HASH-GUIDED GRAPH WALKS — node2vec-style corpus walks with a
     * DERANDOMIZED step rule: from each seed, take `steps` steps; at step k
@@ -575,8 +500,7 @@ object GraphOps {
     var frontier = seeds.select(col("id").as("seed"), col("id").as("node"))
     var out = frontier.select(col("seed"), lit(0).as("step"), col("node"))
     for (k <- 1 to steps) {
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("seed")).orderBy(col("h"), col("dst"))
+      val w = Window.partitionBy(col("seed")).orderBy(col("h"), col("dst"))
       frontier = frontier.join(e, col("node") === col("src"))
         .withColumn("h",
           md5(concat_ws("|", lit(k), col("node"), col("dst"))))
@@ -593,8 +517,8 @@ object GraphOps {
     * `vertices`, Σ 1/d(s, n) over the other subgraph vertices s that reach
     * it within `maxHops` (0 for isolated vertices — harmonic centrality's
     * defining advantage over closeness on disconnected graphs). Distances
-    * come from a MULTI-SOURCE BFS carrying (source, node) pairs with the
-    * same first-reach anti-join discipline as [[bfsDistances]]; the
+    * come from [[firstReach]] with one search per source `s`, carrying
+    * (source, node) pairs; the
     * centrality sum is FIXED-POINT (Σ 1e9 div d — d ≤ maxHops, so each
     * term is an exact integer and the sum is order-independent), which is
     * what makes a float-sum statistic hash-match across engines.
@@ -603,7 +527,7 @@ object GraphOps {
     * state is |V_sub|² pairs at worst (the subgraph is a seed
     * neighborhood, q13's 2-hop ball); the full-graph all-pairs form is
     * deliberately not offered. Each round is one join + distinct + one
-    * anti-join on (s, n); per-round localCheckpoint keeps lineage flat.
+    * anti-join on (s, n).
     *
     * @param edges    full symmetric edge list (src, dst)
     * @param vertices single-column `id` — the subgraph to analyze
@@ -615,17 +539,8 @@ object GraphOps {
       .join(vs.select(col("id").as("src")), Seq("src"))
       .join(vs.select(col("id").as("dst")), Seq("dst"))
       .select(col("src"), col("dst")).localCheckpoint()
-    var labeled = vs.select(col("id").as("s"), col("id").as("n"))
-      .withColumn("d", lit(0))
-    var frontier = labeled.select(col("s"), col("n"))
-    for (h <- 1 to maxHops) {
-      val ring = frontier.join(e, col("n") === col("src"))
-        .select(col("s"), col("dst").as("n")).distinct()
-        .join(labeled.select(col("s"), col("n")), Seq("s", "n"), "left_anti")
-        .localCheckpoint()
-      labeled = labeled.unionByName(ring.withColumn("d", lit(h)))
-      frontier = ring
-    }
+    val labeled = firstReach(e, vs.select(col("id").as("s"), col("id").as("n")),
+      Seq("s"), maxHops)
     val agg = labeled.filter(col("d") > 0)
       .groupBy(col("n").as("id"))
       .agg(count(lit(1)).as("n_reached"),

@@ -59,11 +59,18 @@ object StreamingQueries {
     * holding < 0.5 MB (the per-store open/commit/fsync floor, paid ×32).
     * State-store count is a DEPLOYMENT dial (pinned by the checkpoint at
     * the first batch, invariant under executor count), so the harness
-    * right-sizes it to the replay's state volume and exposes the env knob
-    * production would tune upward with state size. Partitioning is by key
+    * right-sizes it to the replay's state volume. Partitioning is by key
     * hash either way — results are identical. */
-  private val streamParts: String =
-    sys.env.getOrElse("SPARK_GRAFT_STREAM_PARTS", "8")
+  private val StreamParts = 8
+
+  /** Run `body` with the session's shuffle partitions at [[StreamParts]],
+    * restoring the caller's setting afterwards, also when `body` throws. */
+  private def withStreamParts[T](spark: SparkSession)(body: => T): T = {
+    val priorParts = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", StreamParts.toString)
+    try body
+    finally spark.conf.set("spark.sql.shuffle.partitions", priorParts)
+  }
 
   private def runToTable(df: DataFrame, name: String, mode: String): DataFrame = {
     val spark = df.sparkSession
@@ -72,9 +79,7 @@ object StreamingQueries {
     // try/finally: a stream that throws mid-run must still stop its query and
     // release the temp view + checkpoint dir, or repeated failed invocations
     // leak driver memory and /tmp state
-    val priorParts = spark.conf.get("spark.sql.shuffle.partitions")
-    try {
-      spark.conf.set("spark.sql.shuffle.partitions", streamParts)
+    try withStreamParts(spark) {
       val q = df.writeStream
         .format("memory")
         .queryName(sink)
@@ -86,7 +91,6 @@ object StreamingQueries {
       finally if (q.isActive) q.stop()
       spark.table(sink).localCheckpoint()
     } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", priorParts)
       spark.catalog.dropTempView(sink)
       rmTree(ckptPath.toFile)
     }
@@ -325,10 +329,10 @@ object StreamingQueries {
     // 41.7 s vs batch-equivalent 42.9 s on the pre-fix plan).
     "q201_stream_dedup_probe" -> ((s, d) => {
       import graft.dedup.DedupOps
+      import graft.dedup.DedupOps.NearDup
       val corpus = Tables.documents(s, d).filter(col("source") === "src0")
-      val sigC = DedupOps.minhashSignatureRows(corpus, "doc_id", "text", 3, 32)
-        .localCheckpoint()
-      val staticSide = DedupOps.bandedBuckets(sigC, 32, 4)
+      val sigC = DedupOps.nearDupSignatures(corpus).localCheckpoint()
+      val staticSide = DedupOps.bandedBuckets(sigC, NearDup.Hashes, NearDup.RowsPerBand)
         .join(sigC, Seq("doc_id"))
         .select(col("doc_id").as("cid"), col("band"), col("bucket"),
           col("prefix").as("cprefix"), col("sig").as("csig"))
@@ -336,12 +340,14 @@ object StreamingQueries {
       val streamBands = docsStream(s, d)
         .filter(col("source") =!= "src0")
         .withColumn("sig",
-          GraftFunctions.minhashSignature(col("text"), 3, 32))
+          GraftFunctions.minhashSignature(col("text"), NearDup.Shingle,
+            NearDup.Hashes))
         // no-shingle docs have all-NULL signatures (the batch form has no
         // signature row at all) — the sig[0] null test replaces the old
         // interpreted size(shingles) > 0 HOF pass, same row set
         .filter(col("sig").getItem(0).isNotNull)
-        .withColumn("bs", DedupOps.bandBuckets(col("sig"), 32, 4))
+        .withColumn("bs",
+          DedupOps.bandBuckets(col("sig"), NearDup.Hashes, NearDup.RowsPerBand))
         .select(col("doc_id").as("bid"), col("sig").as("bsig"), col("bs"),
           posexplode(col("bs")).as(Seq("pos", "bucket")))
         .select(col("bid"), col("bsig"), col("pos").as("band"),
@@ -349,8 +355,9 @@ object StreamingQueries {
       val matched = streamBands.join(staticSide, Seq("band", "bucket"))
         .filter(!exists(zip_with(col("bprefix"), col("cprefix"),
           (x, y) => x === y), identity[org.apache.spark.sql.Column]))
-        .withColumn("est", DedupOps.sigAgreement(col("bsig"), col("csig"), 32))
-        .filter(col("est") >= 0.5)
+        .withColumn("est",
+          DedupOps.sigAgreement(col("bsig"), col("csig"), NearDup.Hashes))
+        .filter(col("est") >= NearDup.Threshold)
         .select(col("bid"), col("cid"), col("est"))
       runToTable(matched, "q201_stream_dedup_probe", "append")
         .groupBy(col("bid"))
@@ -942,9 +949,7 @@ object StreamingQueries {
       val ckpt = java.nio.file.Files.createTempDirectory("graft_restart_ckpt")
       val sinkA = s"q97a_${runSeq.incrementAndGet()}"
       val sinkB = s"q97b_${runSeq.incrementAndGet()}"
-      val priorParts = s.conf.get("spark.sql.shuffle.partitions")
-      try {
-        s.conf.set("spark.sql.shuffle.partitions", streamParts)
+      try withStreamParts(s) {
         val base = 1600000000000L
         def runOnce(sink: String): Unit = {
           val stream = s.readStream
@@ -970,7 +975,6 @@ object StreamingQueries {
           .orderBy(col("w_start"), col("event_type"))
           .localCheckpoint()
       } finally {
-        s.conf.set("spark.sql.shuffle.partitions", priorParts)
         s.catalog.dropTempView(sinkA); s.catalog.dropTempView(sinkB)
         rmTree(srcDir.toFile); rmTree(ckpt.toFile)
       }

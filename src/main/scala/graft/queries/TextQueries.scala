@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.dedup.DedupOps
+import graft.dedup.DedupOps.NearDup
 import graft.functions.GraftFunctions
 import graft.graph.GraphOps
 import graft.sources.DedupClosure
@@ -477,10 +478,13 @@ object TextQueries {
           .select((col("doc_id") + AddedDocIdOffset).as("doc_id"),
             array_join(slice(w, lit(1), pfx.cast("int")), " ").as("text")))
       val exact = DedupOps.jaccardPairsPrefix(dd2, "doc_id", "text", 3, 0.25)
-      val bands = DedupOps.minhashSignatureRows(dd2, "doc_id", "text", 3, 32)
+      val bands = DedupOps.nearDupSignatures(dd2)
         .select(col("doc_id"),
-          DedupOps.bandBuckets(col("sig"), 32, 4).as("bs"))
+          DedupOps.bandBuckets(col("sig"), NearDup.Hashes, NearDup.RowsPerBand)
+            .as("bs"))
         .localCheckpoint() // joined twice (da and db sides)
+      // 1 − (1 − j^r)^b with the rule's r = 4 rows and b = 8 bands, written
+      // out as the oracle's square chain
       val j = col("jaccard")
       val j4 = (j * j) * (j * j)
       val q2 = (lit(1.0) - j4) * (lit(1.0) - j4)
@@ -752,15 +756,14 @@ object TextQueries {
           Seq("db"))
         .select(col("da"), col("db"), (col("c").cast("double")
           / (col("na") + col("nb") - col("c"))).as("jaccard"))
-      val sig = DedupOps.minhashSignatureRows(
-        docs(s, d).filter(col("doc_id") < 32), "doc_id", "text", 3, 32)
+      val sig = DedupOps.nearDupSignatures(docs(s, d).filter(col("doc_id") < 32))
       jac
         .join(sig.select(col("doc_id").as("da"), col("sig").as("sa")),
           Seq("da"))
         .join(sig.select(col("doc_id").as("db"), col("sig").as("sb")),
           Seq("db"))
         .select(col("da"), col("db"), col("jaccard"),
-          DedupOps.sigAgreement(col("sa"), col("sb"), 32)
+          DedupOps.sigAgreement(col("sa"), col("sb"), NearDup.Hashes)
             .as("est_jaccard"))
         .withColumn("abs_err", abs(col("jaccard") - col("est_jaccard")))
         .orderBy(col("da"), col("db"))
@@ -1273,19 +1276,21 @@ object TextQueries {
       // (batch, corpus) candidate only in its FIRST colliding band, so
       // there is no pair-level distinct, and the verify is one zip_with
       // over the two cached arrays — no k-row-per-side join traffic.
-      val sigC = DedupOps.minhashSignatureRows(corpus, "doc_id", "text", 3, 32)
+      val sigC = DedupOps.nearDupSignatures(corpus)
         .localCheckpoint()
-      val sigB = DedupOps.minhashSignatureRows(batch, "doc_id", "text", 3, 32)
+      val sigB = DedupOps.nearDupSignatures(batch)
         .localCheckpoint()
       val dupOfCorpus = DedupOps
-        .crossPairsFromSignatures(sigB, sigC, 32, 4, 0.5)
+        .crossPairsFromSignatures(sigB, sigC, NearDup.Hashes,
+          NearDup.RowsPerBand, NearDup.Threshold)
         .groupBy(col("ida").as("doc_id"))
         .agg(min(col("idb")).as("canonical"))
         .localCheckpoint()
       val survivorSig = sigB.join(
         dupOfCorpus.select(col("doc_id")), Seq("doc_id"), "left_anti")
       val pairsS = DedupOps
-        .minhashPairsFromSignatures(survivorSig, 32, 4, 0.5)
+        .minhashPairsFromSignatures(survivorSig, NearDup.Hashes,
+          NearDup.RowsPerBand, NearDup.Threshold)
         .select(col("da").as("src"), col("db").as("dst"))
         .localCheckpoint()
       val batchSide = GraphOps.withCanonical(
@@ -1336,11 +1341,13 @@ object TextQueries {
       // slower than the full rebuild at ×100 (DedupClosure.sigTableName
       // scaladoc); only the DELTA's signatures are computed per refresh
       val sigOld = DedupClosure.readSignatures(s, v1, d)
-      val sigNew = DedupOps.minhashSignatureRows(added, "doc_id", "text", 3, 32)
+      val sigNew = DedupOps.nearDupSignatures(added)
         .localCheckpoint() // referenced twice (new×old probe + new×new)
-      val newOld = DedupOps.crossPairsFromSignatures(sigNew, sigOld, 32, 4, 0.5)
+      val newOld = DedupOps.crossPairsFromSignatures(sigNew, sigOld,
+          NearDup.Hashes, NearDup.RowsPerBand, NearDup.Threshold)
         .select(col("ida").as("src"), col("idb").as("dst"))
-      val newNew = DedupOps.minhashPairsFromSignatures(sigNew, 32, 4, 0.5)
+      val newNew = DedupOps.minhashPairsFromSignatures(sigNew,
+          NearDup.Hashes, NearDup.RowsPerBand, NearDup.Threshold)
         .select(col("da").as("src"), col("db").as("dst"))
       val star = oldClosure.filter(col("doc_id") =!= col("canonical"))
         .select(col("doc_id").as("src"), col("canonical").as("dst"))
@@ -1575,14 +1582,15 @@ object TextQueries {
         .select(col("doc_id"), col("text"))
       val train = dd.filter(col("source") =!= "src0")
         .select(col("doc_id"), col("text"))
-      val sigBn = DedupOps.minhashSignatureRows(bench, "doc_id", "text", 3, 32)
+      val sigBn = DedupOps.nearDupSignatures(bench)
         .localCheckpoint()
-      val sigT = DedupOps.minhashSignatureRows(train, "doc_id", "text", 3, 32)
+      val sigT = DedupOps.nearDupSignatures(train)
         .localCheckpoint()
       // first-collision cross probe (DedupOps.crossPairsFromSignatures,
       // shared with q125): one emission per candidate, verify via zip_with
       // over the cached per-doc signature arrays
-      val est = DedupOps.crossPairsFromSignatures(sigT, sigBn, 32, 4, 0.5)
+      val est = DedupOps.crossPairsFromSignatures(sigT, sigBn,
+        NearDup.Hashes, NearDup.RowsPerBand, NearDup.Threshold)
       val out = est.groupBy(col("ida").as("doc_id"))
         .agg(count(lit(1)).as("n_bench_matches"),
           max(col("est_jaccard")).as("max_est"),
@@ -2417,9 +2425,10 @@ object TextQueries {
     // scans. Inherits q23's blocking contract (candidates must share a
     // band — sweeping UP from the floor only ever filters).
     "q175_dedup_threshold_sweep" -> ((s, d) => {
-      val sig = DedupOps.minhashSignatureRows(docs(s, d), "doc_id", "text", 3, 32)
+      val sig = DedupOps.nearDupSignatures(docs(s, d))
         .localCheckpoint() // three plan references (bands ×2, verify ×2)
-      val pairs = DedupOps.minhashPairsFromSignatures(sig, 32, 4, 0.5)
+      val pairs = DedupOps.minhashPairsFromSignatures(sig,
+          NearDup.Hashes, NearDup.RowsPerBand, NearDup.Threshold)
         .localCheckpoint()
       val thr = s.range(5).select(
         (lit(0.5) + col("id").cast("double") * lit(0.1)).as("threshold"))

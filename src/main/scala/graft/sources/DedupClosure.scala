@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.dedup.DedupOps
+import graft.dedup.DedupOps.NearDup
 import graft.graph.GraphOps
 
 /** MATERIALIZED near-dup-closure artifact — the write-once/read-many
@@ -21,15 +22,16 @@ import graft.graph.GraphOps
   * This object is that boundary:
   *
   *  - [[closure]] — the canonical cluster plan (doc_id, canonical), exactly
-  *    q52's semantics: MinHash(3-shingle, 32 hashes, 4 rows/band, θ=0.5)
-  *    pairs → pure-DataFrame connected components → min-id canonical, docs
-  *    with no near-dup mapping to themselves;
+  *    q52's semantics: MinHash pairs under [[DedupOps.NearDup]] →
+  *    pure-DataFrame connected components → min-id canonical, docs with no
+  *    near-dup mapping to themselves;
   *  - [[materialize]] — write-once: persists the closure as a bucketed,
   *    per-bucket-sorted table ([[Bucketing]]'s layout, so consumer joins on
   *    doc_id need no exchange) keyed by a corpus fingerprint;
   *  - [[read]] — returns the artifact, building it only if absent.
   *
-  * Staleness contract: the table name embeds md5 over the SOURCE-FILE
+  * Staleness contract: the table name embeds the near-dup rule
+  * ([[DedupOps.NearDup]]'s tag) and md5 over the SOURCE-FILE
   * METADATA backing `docs` — the sorted (path, length, modificationTime)
   * triples from the scan's file index. That is a driver-side filesystem
   * metadata call, NOT a data scan: at 100 TB a consumer locating the
@@ -64,7 +66,8 @@ object DedupClosure {
     * Frames with no file lineage (in-memory test data) fall back to the
     * content fingerprint (count, Σ doc_id) — one pruned scan. */
   def tableName(docs: DataFrame, dir: String): String =
-    s"graft_dedup_closure_${Artifacts.sourceFingerprint(docs, dir, "doc_id")}"
+    s"graft_dedup_closure_${NearDup.tag}_" +
+      Artifacts.sourceFingerprint(docs, dir, "doc_id")
 
   /** Write-once materialization: build + persist the closure bucketed by
     * doc_id unless the fingerprinted table already exists. Returns the
@@ -81,8 +84,8 @@ object DedupClosure {
   def read(spark: SparkSession, docs: DataFrame, dir: String): DataFrame =
     spark.table(materialize(spark, docs, dir))
 
-  /** SIGNATURE artifact — (doc_id, sig array of 32 minhashes), the second
-    * table a snapshot-maintenance system must persist beside the closure.
+  /** SIGNATURE artifact — (doc_id, sig array of the rule's minhashes), the
+    * second table a snapshot-maintenance system must persist beside the closure.
     * SCALE_r15 measured why: the r14 incremental refresh (q224) kept only
     * the closure, so every refresh recomputed MinHash signatures over the
     * FULL old corpus just to give the new×old probe something to join —
@@ -94,13 +97,14 @@ object DedupClosure {
     * re-hashing every shingle. Keyed by the same source fingerprint as the
     * closure (suffix `_sig`); same staleness contract. */
   def sigTableName(docs: DataFrame, dir: String): String =
-    s"graft_dedup_sig_${Artifacts.sourceFingerprint(docs, dir, "doc_id")}"
+    s"graft_dedup_sig_${NearDup.tag}_" +
+      Artifacts.sourceFingerprint(docs, dir, "doc_id")
 
   /** Write-once signature materialization (see [[sigTableName]]). */
   def materializeSignatures(spark: SparkSession, docs: DataFrame, dir: String,
                             buckets: Int = 8): String =
     Artifacts.materializeBucketed(spark, sigTableName(docs, dir), "doc_id",
-      buckets)(DedupOps.minhashSignatureRows(docs, "doc_id", "text", 3, 32))
+      buckets)(DedupOps.nearDupSignatures(docs))
 
   /** The signature artifact as a DataFrame (doc_id, sig), building on
     * first use. */
@@ -136,14 +140,17 @@ object DedupClosure {
       .join(removed, Seq("doc_id"), "left_anti")
       .select(col("doc_id"))
     val sigT = sigAll.join(touchedSurvivors, Seq("doc_id"), "left_semi")
-    val repaired = DedupOps.minhashPairsFromSignatures(sigT, 32, 4, 0.5)
+    val repaired = DedupOps.minhashPairsFromSignatures(sigT, NearDup.Hashes,
+      NearDup.RowsPerBand, NearDup.Threshold)
       .select(col("da").as("src"), col("db").as("dst"))
     val sigS = sigAll.join(removed, Seq("doc_id"), "left_anti")
-    val sigN = DedupOps.minhashSignatureRows(added, "doc_id", "text", 3, 32)
+    val sigN = DedupOps.nearDupSignatures(added)
       .localCheckpoint() // referenced twice (new×old probe + new×new)
-    val newOld = DedupOps.crossPairsFromSignatures(sigN, sigS, 32, 4, 0.5)
+    val newOld = DedupOps.crossPairsFromSignatures(sigN, sigS, NearDup.Hashes,
+      NearDup.RowsPerBand, NearDup.Threshold)
       .select(col("ida").as("src"), col("idb").as("dst"))
-    val newNew = DedupOps.minhashPairsFromSignatures(sigN, 32, 4, 0.5)
+    val newNew = DedupOps.minhashPairsFromSignatures(sigN, NearDup.Hashes,
+      NearDup.RowsPerBand, NearDup.Threshold)
       .select(col("da").as("src"), col("db").as("dst"))
     val edges = starUntouched.unionByName(repaired)
       .unionByName(newOld).unionByName(newNew).localCheckpoint()
@@ -172,8 +179,7 @@ object DedupClosure {
       s"${sigTableName(v1, dir)}_$tag", "doc_id", buckets)(
       readSignatures(spark, v1, dir)
         .join(removed, Seq("doc_id"), "left_anti")
-        .unionByName(DedupOps.minhashSignatureRows(
-          added, "doc_id", "text", 3, 32)))
+        .unionByName(DedupOps.nearDupSignatures(added)))
     val cloV2 = Artifacts.rematerializeBucketed(spark,
       s"${tableName(v1, dir)}_$tag", "doc_id", buckets)(
       refreshCdc(spark, v1, dir, survivors, added, removed))
@@ -207,7 +213,7 @@ object DedupClosure {
                        buckets: Int = 8): (String, String, String) = {
     val sigD = Artifacts.rematerializeBucketed(spark,
       s"${sigTableName(v1, dir)}_${tag}_dsig", "doc_id", buckets)(
-      DedupOps.minhashSignatureRows(added, "doc_id", "text", 3, 32))
+      DedupOps.nearDupSignatures(added))
     val tomb = Artifacts.rematerializeBucketed(spark,
       s"${tableName(v1, dir)}_${tag}_tomb", "doc_id", 1)(removed)
     val v2 = refreshCdc(spark, v1, dir, survivors, added, removed)

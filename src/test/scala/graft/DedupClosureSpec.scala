@@ -49,6 +49,13 @@ class DedupClosureSpec extends SparkSuite {
       DedupClosure.tableName(Tables.documents(s, d2), d2))
   }
 
+  test("artifact names carry the near-dup rule") {
+    val rule = graft.dedup.DedupOps.NearDup.tag
+    assert(rule == "s3h32r4t50")
+    assert(DedupClosure.tableName(docs, d).startsWith(s"graft_dedup_closure_${rule}_"))
+    assert(DedupClosure.sigTableName(docs, d).startsWith(s"graft_dedup_sig_${rule}_"))
+  }
+
   test("post-materialize read is metadata-only: zero jobs, no source scan") {
     val s = spark
     val t = DedupClosure.materialize(s, docs, d)

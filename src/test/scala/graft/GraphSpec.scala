@@ -360,6 +360,62 @@ class GraphSpec extends SparkSuite {
     assert(out.count() == 0L)
   }
 
+  test("connectedComponentsDF on a deep path == GraphX CC, through the stats reset") {
+    val s = spark
+    import s.implicits._
+    // a 24-vertex path whose id order defeats pointer jumping: the loop
+    // runs 18 rounds, so from the ninth materialization on the state is
+    // re-wrapped — the result's leaf then carries default size stats
+    // instead of ones rewritten from the checkpointed plan
+    val order = Seq(17L, 16L, 5L, 10L, 6L, 2L, 3L, 15L, 20L, 24L, 8L, 4L,
+      9L, 19L, 12L, 14L, 7L, 13L, 21L, 18L, 22L, 23L, 1L, 11L)
+    val e = order.zip(order.tail).toDF("src", "dst")
+    val cc = GraphOps.connectedComponentsDF(e)
+    assert(cc.queryExecution.optimizedPlan.stats.sizeInBytes ==
+      BigInt(s.sessionState.conf.defaultSizeInBytes))
+    val df = cc.as[(Long, Long)].collect().toMap
+    val gx = Oracles.connectedComponentsGraphX(s, GraphOps.symmetrize(e))
+      .as[(Long, Long)].collect().toMap
+    assert(df == gx)
+    assert(df.size == 24 && df.values.toSet == Set(1L))
+  }
+
+  test("CC, PageRank, PPR, BFS and LPA are identical at shuffle partitions {1, 7} x AQE {on, off}") {
+    val s = spark
+    import s.implicits._
+    // the loops run under the caller's conf, so its partitioning and
+    // adaptive planning must not reach the values
+    val e0 = Seq((1L, 2L), (2L, 3L), (1L, 3L), (3L, 4L), (4L, 5L), (5L, 6L),
+      (4L, 6L), (10L, 11L), (11L, 12L))
+    val sym = GraphOps.symmetrize(e0.toDF("src", "dst"))
+    val seeds = Seq(1L, 11L).toDF("id")
+    def results(): Seq[Seq[String]] = Seq(
+        GraphOps.connectedComponentsDF(sym),
+        GraphOps.pageRankDeterministic(sym, 10),
+        GraphOps.personalizedPageRankDeterministic(sym, seeds, 10),
+        GraphOps.bfsDistances(sym, seeds, 3),
+        GraphOps.labelPropagation(sym, 4))
+      .map(_.collect().map(_.toString).sorted.toSeq)
+    val keys = Seq("spark.sql.shuffle.partitions", "spark.sql.adaptive.enabled")
+    val prior = keys.map(k => k -> s.conf.get(k))
+    try {
+      val runs = for (parts <- Seq(1, 7); aqe <- Seq("true", "false")) yield {
+        s.conf.set(keys.head, parts.toString)
+        s.conf.set(keys(1), aqe)
+        (parts, aqe) -> results()
+      }
+      runs.tail.foreach { case (at, r) => assert(r == runs.head._2, s"at $at") }
+      assert(runs.head._2.forall(_.nonEmpty))
+    } finally prior.foreach { case (k, v) => s.conf.set(k, v) }
+  }
+
+  test("pageRankDeterministic on an empty edge list returns no rows") {
+    val s = spark
+    import s.implicits._
+    val e = Seq.empty[(Long, Long)].toDF("src", "dst")
+    assert(GraphOps.pageRankDeterministic(e, 10).count() == 0L)
+  }
+
   test("withCanonical law: == GraphX min-id labels, self when unpaired; rows and carried columns pass through") {
     val s = spark
     import s.implicits._

@@ -18,8 +18,9 @@ import graft.functions.GraftFunctions
   * session-installed rewrite rule. It also keeps one implementation per
   * similarity and graph operator in main: the reference twins live in
   * [[Oracles]], main imports neither GraphX nor MLlib, the "pairs →
-  * components → min id" step is written once ([[graft.graph.GraphOps.withCanonical]])
-  * and every MinHash pair call uses the one shared rule.
+  * components → min id" step is written once ([[graft.graph.GraphOps.withCanonical]]),
+  * every MinHash pair call uses the one shared rule, and the graph loops
+  * run in the caller's session.
   */
 class SourceGateSpec extends AnyFunSuite {
 
@@ -165,6 +166,17 @@ class SourceGateSpec extends AnyFunSuite {
     val start = linesOf(graphOps).indexWhere(_.contains("def withCanonical("))
     assert(p == root.resolve(graphOps) && start >= 0 && line > start && line <= start + 4,
       s"the coalesce at ${p.getFileName}:${line + 1} is not in withCanonical")
+  }
+
+  test("GraphOps runs in the caller's session: no newSession, no conf.set, createDataFrame only in the stats reset") {
+    val graphOps = root.resolve("graft/graph/GraphOps.scala")
+    val session = codeHits("""\bnewSession\b|\bconf\.set\b""").filter(_._1 == graphOps)
+    assert(session.isEmpty, session.mkString("\n"))
+    val wraps = codeHits("""\bcreateDataFrame\b""").filter(_._1 == graphOps)
+    val start = linesOf("graft/graph/GraphOps.scala").indexWhere(_.contains("def superstep("))
+    assert(wraps.size == 1 && start >= 0, wraps.mkString("\n"))
+    assert(wraps.head._2 > start && wraps.head._2 <= start + 20,
+      s"the createDataFrame at GraphOps.scala:${wraps.head._2 + 1} is not superstep's stats reset")
   }
 
   test("every main minhashPairs call takes the docs alone") {
