@@ -77,20 +77,29 @@ object DedupOps {
           " ").as("retained_text"))
   }
 
-  /** Prefix-filtered exact Jaccard (same result set as the all-pairs
-    * shingle join, law-pinned in DedupSpec): shingles get a global rare-first total
-    * order (frequency, then lexicographic); a doc's PREFIX is its first
-    * `n - ceil(t·n) + 1` shingles in that order. Pigeonhole: any pair with
-    * J ≥ t shares a prefix shingle, so the candidate join runs on prefixes
-    * only — and because prefixes are the RAREST shingles, the quadratic
-    * bucket blowup concentrates exactly where buckets are smallest. The
-    * survivors are verified with an exact common-count. The all-pairs
-    * shingle self-join this replaces is the textbook similarity-join
-    * bottleneck at corpus scale. */
+  /** Prefix-filtered exact Jaccard over word n-gram sets (same result set
+    * as the all-pairs string-shingle join, law-pinned in DedupSpec against
+    * `Oracles.jaccardPairs`). Each doc's set is its hashed shingles
+    * ([[GraftFunctions.shingleHashes]]: sorted, distinct 60-bit
+    * [[TextOps.tokenHash60]] of each "|"-joined n-gram — exact up to the
+    * collision bound in [[graft.functions.ShingleHashes]]). The elements get
+    * a global rare-first total order (frequency, then hash); a doc's PREFIX
+    * is its first `n - ceil(t·n) + 1` elements in that order. Pigeonhole:
+    * any pair with J ≥ t shares a prefix element — for ANY fixed global
+    * order, so an order over hashes keeps the bound (the prefix-filter
+    * candidate bound of the worst-case-optimal similarity-join framing,
+    * PAPERS.md) — and the candidate join runs on prefixes only. Because
+    * prefixes are the RAREST elements, the quadratic bucket blowup
+    * concentrates exactly where buckets are smallest. Survivors are
+    * verified with an exact common count, `size(array_intersect)` over the
+    * two long arrays. Every exchange carries 8-byte hashes, never n-gram
+    * strings. The all-pairs shingle self-join this replaces is the
+    * textbook similarity-join bottleneck at corpus scale.
+    * Output: (da, db, jaccard) with da < db and jaccard ≥ threshold. */
   def jaccardPairsPrefix(docs: DataFrame, idCol: String, textCol: String,
                          n: Int, threshold: Double): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    // per-doc shingle SET as an array column (map-side, no shuffle): the
+    // per-doc hash SET as an array column (map-side, no shuffle): the
     // prefix filter works on the exploded form, the exact verify intersects
     // the arrays per candidate pair — two equi-joins + per-row expression
     // work instead of re-exploding both sides and re-aggregating counts.
@@ -104,18 +113,18 @@ object DedupOps {
     // lesson applied here).
     val docSets = graft.sources.Layout.fanOutScan(docs, col(idCol))
       .select(col(idCol).as("doc_id"),
-        graft.text.TextOps.shingles(col(textCol), n).as("sh_arr"))
+        GraftFunctions.shingleHashes(col(textCol), n).as("sh_arr"))
       .localCheckpoint()
     val sh = docSets.select(col("doc_id"), size(col("sh_arr")).as("n_sh"),
-      explode(col("sh_arr")).as("shingle"))
-    val freq = sh.groupBy(col("shingle")).agg(count(lit(1)).as("freq"))
-    val ranked = sh.join(freq, "shingle")
+      explode(col("sh_arr")).as("h"))
+    val freq = sh.groupBy(col("h")).agg(count(lit(1)).as("freq"))
+    val ranked = sh.join(freq, "h")
       .withColumn("rnk", row_number().over(Window.partitionBy(col("doc_id"))
-        .orderBy(col("freq").asc, col("shingle").asc)))
+        .orderBy(col("freq").asc, col("h").asc)))
       .filter(col("rnk") <= col("n_sh") - ceil(col("n_sh") * threshold) + 1)
-      .select(col("doc_id"), col("shingle"))
+      .select(col("doc_id"), col("h"))
     val cands = ranked.as("a").join(ranked.as("b"),
-        col("a.shingle") === col("b.shingle") && col("a.doc_id") < col("b.doc_id"))
+        col("a.h") === col("b.h") && col("a.doc_id") < col("b.doc_id"))
       .select(col("a.doc_id").as("da"), col("b.doc_id").as("db")).distinct()
     val pairs = cands
       .join(docSets.select(col("doc_id").as("da"), col("sh_arr").as("sa")), Seq("da"))

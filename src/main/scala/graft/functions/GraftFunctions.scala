@@ -33,6 +33,10 @@ object GraftFunctions {
     * typed only — SQL knows just `simhash32`. */
   def simhash60(text: Column): Column = col(SimhashText(ex(text), 60))
 
+  /** The sorted, distinct 60-bit hashes of the text's word n-grams
+    * ([[ShingleHashes]]); typed only — SQL has no name for it. */
+  def shingleHashes(text: Column, n: Int): Column = col(ShingleHashes(ex(text), n))
+
   def lshSignature(vec: Column, nPlanes: Int): Column =
     col(LshSignature(ex(vec), ex(lit(nPlanes))))
 

@@ -1,7 +1,5 @@
 package graft.functions
 
-import java.nio.charset.StandardCharsets
-
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, TernaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -23,16 +21,14 @@ import org.apache.spark.unsafe.types.UTF8String
   * expression re-evaluates ~5× per row (measured: the stream-side band
   * projection of q201 cost 39.8 s at sf0.1 where one signature pass costs
   * 7.7 s). This expression computes the identical signature in one tight
-  * fused loop (~µs/row): tokenize, distinct n-gram shingles, ONE md5 per
-  * shingle, k universal-hash mins — so even a plan that inlines it several
-  * times pays noise, not seconds.
+  * fused loop (~µs/row): the shingle-hash set of [[ShingleHashes]] (ONE
+  * md5 per n-gram), then k universal-hash mins — so even a plan that
+  * inlines it several times pays noise, not seconds.
   *
   * Exact semantic parity, op for op (the DedupSpec law + the shared DuckDB
   * oracles depend on it):
-  *   - tokens = `split(trim(text), "\\s+")` minus empties — trim is
-  *     Spark's (0x20 space only, via [[UTF8String.trim]]), NOT Java's
-  *     `String.trim` (which also strips \t/\n and would diverge on texts
-  *     with leading control whitespace);
+  *   - tokens = `split(trim(text), "\\s+")` minus empties
+  *     ([[TextHash.tokens]]);
   *   - shingles = DISTINCT "|"-joined n-gram windows; < n tokens ⇒ no
   *     shingles ⇒ all-NULL k-array (the HOF `array_min(empty) = NULL`
   *     rule — callers filter on it);
@@ -80,57 +76,27 @@ case class MinhashSignature(first: Expression, second: Expression,
 
 object MinhashSignature {
 
-  /** One MessageDigest per thread — getInstance per row would dominate the
-    * loop for short docs. */
-  private val mdPool: ThreadLocal[java.security.MessageDigest] =
-    ThreadLocal.withInitial(() =>
-      java.security.MessageDigest.getInstance("MD5"))
-
   private val Mod = 268435456L // 2^28, DedupOps.minhashMod
 
+  /** A fold over the shingle-hash set ([[TextHash.shingleHashes]]): hs =
+    * h mod 2^28 per distinct 60-bit hash h. Distinct shingles whose 60-bit
+    * hashes collide give the same hs, so folding over distinct hashes
+    * instead of distinct strings yields the same mins. */
   def compute(text: UTF8String, n: Int, k: Int): ArrayData = {
-    // Spark trim (space 0x20 only) + split("\s+") + drop empties —
-    // identical token set to TextOps.tokens
-    val toks0 = text.trim().toString.split("\\s+")
-    var nToks = 0
-    var t = 0
-    while (t < toks0.length) {
-      if (toks0(t).nonEmpty) { toks0(nToks) = toks0(t); nToks += 1 }
-      t += 1
-    }
-    if (nToks < n) {
+    val hs = TextHash.shingleHashes(text, n)
+    if (hs.isEmpty) {
       // no shingle ⇒ the HOF form's array_min over an empty array: k NULLs
       return new GenericArrayData(Array.fill[Any](k)(null))
     }
-    val seen = new java.util.HashSet[String]((nToks - n + 1) * 2)
     val mins = Array.fill(k)(Long.MaxValue)
-    val md = mdPool.get()
-    val sb = new java.lang.StringBuilder(64)
     var i = 0
-    while (i + n <= nToks) {
-      sb.setLength(0)
-      var j = 0
-      while (j < n) {
-        if (j > 0) sb.append('|')
-        sb.append(toks0(i + j))
-        j += 1
-      }
-      val sh = sb.toString
-      if (seen.add(sh)) {
-        md.reset()
-        val dig = md.digest(sh.getBytes(StandardCharsets.UTF_8))
-        // first 15 hex chars of the md5 = 7 whole bytes + the high nibble
-        // of byte 7 — the 60-bit tokenHash60 value, always non-negative
-        var hs = 0L
-        var b = 0
-        while (b < 7) { hs = (hs << 8) | (dig(b) & 0xffL); b += 1 }
-        hs = ((hs << 4) | ((dig(7) & 0xf0L) >> 4)) % Mod
-        var p = 0
-        while (p < k) {
-          val h = ((2L * p + 1L) * hs + 7919L * p) % Mod
-          if (h < mins(p)) mins(p) = h
-          p += 1
-        }
+    while (i < hs.length) {
+      val base = hs(i) % Mod
+      var p = 0
+      while (p < k) {
+        val h = ((2L * p + 1L) * base + 7919L * p) % Mod
+        if (h < mins(p)) mins(p) = h
+        p += 1
       }
       i += 1
     }

@@ -1,7 +1,5 @@
 package graft.functions
 
-import java.nio.charset.StandardCharsets
-
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -16,8 +14,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * in DedupSpec.
   *
   * Semantics:
-  *   - tokens = Spark `split(trim(text), "\\s+")` minus empties —
-  *     [[UTF8String.trim]] (0x20 only), the MinhashSignature discipline;
+  *   - tokens = Spark `split(trim(text), "\\s+")` minus empties
+  *     ([[TextHash.tokens]], shared with MinhashSignature);
   *   - per token h = the first width/4 md5 hex chars as a long (8 chars —
   *     the 32-bit prefix; 15 chars — [[graft.text.TextOps.tokenHash60]]);
   *   - bit b accumulates +cnt when bit b of h is set else −cnt, summed over
@@ -55,41 +53,33 @@ case class SimhashText(child: Expression, width: Int) extends UnaryExpression {
 
 object SimhashText {
 
-  private val mdPool: ThreadLocal[java.security.MessageDigest] =
-    ThreadLocal.withInitial(() =>
-      java.security.MessageDigest.getInstance("MD5"))
-
   def compute(text: UTF8String, width: Int): Long = {
-    val toks = text.trim().toString.split("\\s+")
+    val t = TextHash.tokens(text)
     // per-DISTINCT-token occurrence counts: md5 each distinct token once
-    // (±cnt summed per occurrence ≡ the per-occurrence fold)
-    val counts = new java.util.HashMap[String, Int]()
-    var t = 0
-    while (t < toks.length) {
-      if (toks(t).nonEmpty)
-        counts.merge(toks(t), 1, (a, b) => a + b)
-      t += 1
+    // (±cnt summed per occurrence ≡ the per-occurrence fold); the map
+    // holds each distinct token's first index
+    val first = new java.util.HashMap[UTF8String, Integer]()
+    val counts = new Array[Long](t.n)
+    var i = 0
+    while (i < t.n) {
+      val tok = UTF8String.fromBytes(t.bytes, t.start(i), t.end(i) - t.start(i))
+      val f = first.putIfAbsent(tok, i)
+      counts(if (f == null) i else f.intValue) += 1
+      i += 1
     }
-    // the first width/4 hex chars are the top `width` bits of the first
-    // ceil(width/8) digest bytes
-    val nBytes = (width + 7) / 8
     val acc = new Array[Long](width)
-    val md = mdPool.get()
-    val it = counts.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      md.reset()
-      val dig = md.digest(e.getKey.getBytes(StandardCharsets.UTF_8))
-      var h = 0L
-      var b = 0
-      while (b < nBytes) { h = (h << 8) | (dig(b) & 0xffL); b += 1 }
-      h >>>= nBytes * 8 - width
-      val cnt = e.getValue.toLong
-      var p = 0
-      while (p < width) {
-        acc(p) += (if (((h >> p) & 1L) == 1L) cnt else -cnt)
-        p += 1
+    i = 0
+    while (i < t.n) {
+      val cnt = counts(i)
+      if (cnt > 0) {
+        val h = TextHash.md5Prefix(t, i, 1, width)
+        var p = 0
+        while (p < width) {
+          acc(p) += (if (((h >> p) & 1L) == 1L) cnt else -cnt)
+          p += 1
+        }
       }
+      i += 1
     }
     var sig = 0L
     var p = 0

@@ -99,12 +99,18 @@ object GraphOps {
     * @param edges any edge list (symmetrized internally); isolated
     *              vertices don't appear (no edges ⇒ no rows), matching the
     *              GraphX oracle on an edge-derived graph
-    * @return (id, component) */
+    * @return (id, component)
+    * @throws IllegalStateException when labels still change in round
+    *         [[CcMaxRounds]] (50) */
   def connectedComponentsDF(edges: DataFrame): DataFrame = {
     val sym = symmetrize(edges).localCheckpoint()
     val init = sym.select(col("src").as("id")).distinct()
       .withColumn("comp", col("id")).localCheckpoint()
-    superstep(init, CcMaxRounds, probe = Some(sum(col("comp")))) { (lab, _) =>
+    val atCap = s"connectedComponentsDF: labels still changed in round " +
+      s"$CcMaxRounds, the round cap (GraphOps.CcMaxRounds): the input has a " +
+      "component whose id order defeats pointer jumping"
+    superstep(init, CcMaxRounds, probe = Some(sum(col("comp"))),
+        unconverged = Some(atCap)) { (lab, _) =>
       val nbrMin = sym
         .join(lab.select(col("id").as("dst"), col("comp").as("dcomp")),
           Seq("dst"))
@@ -140,8 +146,10 @@ object GraphOps {
 
   /** Round cap of [[connectedComponentsDF]]. Pointer jumping converges in
     * O(log n) rounds when ids grow along chains, but an adversarial id
-    * order is slower (GraphSpec's 24-vertex deep path takes 18 rounds), and
-    * a loop that reaches the cap returns unconverged labels. */
+    * order is slower (GraphSpec's 24-vertex deep path takes 18 rounds; a
+    * shuffled 200-vertex path needs ~70), and a loop whose labels still
+    * change at the cap throws rather than return several labels for one
+    * component. */
   private val CcMaxRounds = 50
 
   /** The round loop of every iterative operator here: up to `rounds`
@@ -152,7 +160,9 @@ object GraphOps {
     * history. With a `probe`, every materialized state is reduced to one
     * value and the loop ends early when that value repeats (the round
     * changed nothing, so every later round is a no-op) or is null (an
-    * aggregate over zero rows: the state is empty).
+    * aggregate over zero rows: the state is empty). With `unconverged`,
+    * a probe that still changed in the last round throws that message:
+    * the caller's contract needs the fixpoint, not a bounded round count.
     *
     * Stats reset: `localCheckpoint` REWRITES the new leaf's stats from the
     * plan it checkpoints (Spark 4.x rewriteStatsAndConstraints), so a
@@ -165,7 +175,8 @@ object GraphOps {
     * at the price of one Row round trip of the state table, which shallow
     * loops never pay. */
   private def superstep(init: DataFrame, rounds: Int, every: Int = 1,
-                        probe: Option[Column] = None)(
+                        probe: Option[Column] = None,
+                        unconverged: Option[String] = None)(
       step: (DataFrame, Int) => DataFrame): DataFrame = {
     var state = init
     var materialized = 0
@@ -188,6 +199,7 @@ object GraphOps {
         }
       }
     }
+    if (!done) unconverged.foreach(m => throw new IllegalStateException(m))
     state
   }
 

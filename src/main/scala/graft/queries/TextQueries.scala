@@ -145,11 +145,11 @@ object TextQueries {
     "q203_ngram_coverage" -> ((s, d) => {
       val dd = docs(s, d)
       val trainGrams = dd.filter(col("source") =!= "src0")
-        .select(explode(TextOps.shingles(col("text"), 8)).as("gram"))
+        .select(explode(GraftFunctions.shingleHashes(col("text"), 8)).as("gram"))
         .distinct()
       val evalG = dd.filter(col("source") === "src0")
         .select(col("doc_id"),
-          explode(TextOps.shingles(col("text"), 8)).as("gram"))
+          explode(GraftFunctions.shingleHashes(col("text"), 8)).as("gram"))
       val tot = evalG.groupBy(col("doc_id")).agg(count(lit(1)).as("n_grams"))
       val cov = evalG.join(trainGrams, Seq("gram"), "left_semi")
         .groupBy(col("doc_id")).agg(count(lit(1)).as("n_covered"))
@@ -741,7 +741,7 @@ object TextQueries {
     "q197_minhash_accuracy" -> ((s, d) => {
       val sh = docs(s, d).filter(col("doc_id") < 32)
         .select(col("doc_id"),
-          explode(TextOps.shingles(col("text"), 3)).as("shingle"))
+          explode(GraftFunctions.shingleHashes(col("text"), 3)).as("shingle"))
         .localCheckpoint() // feeds sizes and the pair join
       val sizes = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n_sh"))
       val common = sh.select(col("doc_id").as("da"), col("shingle"))
@@ -920,11 +920,12 @@ object TextQueries {
     "q105_decontam" -> ((s, d) => {
       val dd = docs(s, d)
       val bench = dd.filter(col("source") === "src0")
-        .select(explode(TextOps.shingles(col("text"), 8)).as("gram"))
+        .select(explode(GraftFunctions.shingleHashes(col("text"), 8)).as("gram"))
         .distinct()
       val train = dd.filter(col("source") =!= "src0")
       val hits = train
-        .select(col("doc_id"), explode(TextOps.shingles(col("text"), 8)).as("gram"))
+        .select(col("doc_id"),
+          explode(GraftFunctions.shingleHashes(col("text"), 8)).as("gram"))
         .join(broadcast(bench), Seq("gram"))
         .groupBy(col("doc_id")).agg(count(lit(1)).as("n_contam_grams"))
       train.select(col("doc_id"), col("source"))
@@ -1220,7 +1221,7 @@ object TextQueries {
       // the explode subtree re-ran per reference (3 × 4 s measured)
       val sh = graft.sources.Layout.fanOutScan(docs(s, d), col("doc_id"))
         .select(col("doc_id"),
-          explode(TextOps.shingles(col("text"), 3)).as("shingle"))
+          explode(GraftFunctions.shingleHashes(col("text"), 3)).as("shingle"))
         .distinct()
         .localCheckpoint()
       val sizes = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n_sh"))
@@ -2482,10 +2483,11 @@ object TextQueries {
   private def corpusSurvivors(s: SparkSession, d: String): DataFrame = {
     val s2 = corpusDeduped(s, d)
     val bench = docs(s, d).filter(col("source") === "src0")
-      .select(explode(TextOps.shingles(col("text"), 8)).as("gram"))
+      .select(explode(GraftFunctions.shingleHashes(col("text"), 8)).as("gram"))
       .distinct()
     val contaminated = s2
-      .select(col("doc_id"), explode(TextOps.shingles(col("text"), 8)).as("gram"))
+      .select(col("doc_id"),
+        explode(GraftFunctions.shingleHashes(col("text"), 8)).as("gram"))
       .join(broadcast(bench), Seq("gram"))
       .select(col("doc_id")).distinct()
     s2.join(contaminated, Seq("doc_id"), "left_anti")

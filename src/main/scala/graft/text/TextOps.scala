@@ -91,22 +91,35 @@ object TextOps {
     aggregate(tokens(text), lit(0L),
       (acc, t) => (acc * 31L + pmod(tokenHash60(t), lit(1L << 28))) % 1000000007L)
 
-  /** Word n-gram shingles ("|"-joined, distinct) — the dedup unit for
-    * Jaccard/MinHash. Docs shorter than n yield an empty array. */
+  /** Word n-gram shingles ("|"-joined, distinct) — the dedup unit where the
+    * n-gram STRING is needed: it is output, or it feeds a salted hash (the
+    * Bloom decontamination of q153/q226, the shingle artifact of
+    * [[graft.sources.TokenArtifact]]). Set-overlap work (exact Jaccard,
+    * gram-overlap decontamination, MinHash) uses the native hashed form,
+    * [[graft.functions.GraftFunctions.shingleHashes]] = the sorted distinct
+    * [[tokenHash60]] of these strings. Docs shorter than n yield an empty
+    * array. */
   def shingles(text: Column, n: Int): Column =
     array_distinct(ngramsOf(tokens(text), n))
 
   /** Non-distinct "|"-joined word n-grams over an already-computed token
     * array — the frequency-counting twin of [[shingles]] (which dedups):
     * repetition statistics need every occurrence, not the set. Arrays
-    * shorter than n yield an empty array. */
-  def ngramsOf(t: Column, n: Int): Column = {
-    val sz = org.apache.spark.sql.functions.size(t)
-    when(sz >= n,
-      transform(sequence(lit(1), sz - (n - 1)),
-        i => concat_ws("|", slice(t, i, lit(n)))))
-      .otherwise(array().cast("array<string>"))
-  }
+    * shorter than n yield an empty array.
+    *
+    * `t` is bound ONCE as the element of a single-element outer
+    * `transform` (the [[graft.dedup.DedupOps.winnowFingerprints]] idiom):
+    * higher-order functions are interpreted, so a lambda that named `t`
+    * directly would re-evaluate it — for `tokens(text)`, re-split the
+    * text — once per n-gram. */
+  def ngramsOf(t: Column, n: Int): Column =
+    get(transform(array(t), tV => {
+      val sz = org.apache.spark.sql.functions.size(tV)
+      when(sz >= n,
+        transform(sequence(lit(1), sz - (n - 1)),
+          i => concat_ws("|", slice(tV, i, lit(n)))))
+        .otherwise(array().cast("array<string>"))
+    }), lit(0))
 
   /** Fixed-token-window chunking with overlap — the training-pipeline op
     * that splits long documents into model-context-sized pieces. Chunk k
@@ -119,13 +132,15 @@ object TextOps {
   def chunks(text: Column, size: Int, overlap: Int): Column = {
     require(overlap >= 0 && overlap < size, "need 0 <= overlap < size")
     val stride = size - overlap
-    val t = tokens(text)
-    val n = ((org.apache.spark.sql.functions.size(t) + lit(stride - 1)) / lit(stride))
-      .cast("int")
-    when(org.apache.spark.sql.functions.size(t) > 0,
-      transform(sequence(lit(0), n - 1),
-        k => concat_ws(" ", slice(t, k * stride + 1, lit(size)))))
-      .otherwise(array().cast("array<string>"))
+    // the token array bound once, as in [[ngramsOf]]
+    get(transform(array(tokens(text)), t => {
+      val len = org.apache.spark.sql.functions.size(t)
+      val n = ((len + lit(stride - 1)) / lit(stride)).cast("int")
+      when(len > 0,
+        transform(sequence(lit(0), n - 1),
+          k => concat_ws(" ", slice(t, k * stride + 1, lit(size)))))
+        .otherwise(array().cast("array<string>"))
+    }), lit(0))
   }
 
   /** PII-style masking: digit runs → `<NUM>`, email-shaped tokens →

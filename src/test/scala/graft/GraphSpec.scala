@@ -310,6 +310,16 @@ class GraphSpec extends SparkSuite {
     val sym = (e0 ++ e0.map(_.swap)).toDF("src", "dst")
     val r1 = GraphOps.labelPropagation(sym, 1).as[(Long, Long)].collect().toMap
     assert(r1(3L) == 1L)
+    // ten stars: each hub hears one vote from each of its 12 leaves, a
+    // 12-way tie that the smallest leaf id must win. The leaves are listed
+    // largest first and spread over partitions, so a window without the
+    // label order would have to guess the minimum ten times over.
+    val hubs = (0 until 10).map(h => 1000L + h)
+    val leaves = hubs.map(hub => hub -> (12 to 1 by -1).map(i => (hub - 1000L) * 20 + i))
+    val e1 = leaves.flatMap { case (hub, ls) => ls.map(l => (l, hub)) }
+    val star = (e1 ++ e1.map(_.swap)).toDF("src", "dst").repartition(4)
+    val r2 = GraphOps.labelPropagation(star, 1).as[(Long, Long)].collect().toMap
+    leaves.foreach { case (hub, ls) => assert(r2(hub) == ls.min, s"hub $hub") }
   }
 
   test("hashGuidedWalks: every step follows an edge, walks are reproducible") {
@@ -378,6 +388,36 @@ class GraphSpec extends SparkSuite {
       .as[(Long, Long)].collect().toMap
     assert(df == gx)
     assert(df.size == 24 && df.values.toSet == Set(1L))
+  }
+
+  test("connectedComponentsDF fails loudly when labels still change at the round cap") {
+    val s = spark
+    import s.implicits._
+    // the loop's update rule, simulated: nbr-min, then one pointer jump;
+    // returns the number of rounds that changed a label
+    def changingRounds(path: Seq[Long]): Int = {
+      val nbrs = (path.zip(path.tail) ++ path.tail.zip(path))
+        .groupBy(_._1).map { case (v, es) => v -> es.map(_._2) }
+      var comp = path.map(v => v -> v).toMap
+      var rounds = 0
+      var changed = true
+      while (changed) {
+        val stepped = comp.map { case (v, c) => v -> math.min(c, nbrs(v).map(comp).min) }
+        val next = stepped.map { case (v, c) => v -> stepped.getOrElse(c, c) }
+        changed = next != comp
+        if (changed) rounds += 1
+        comp = next
+      }
+      rounds
+    }
+    // the first shuffled 200-vertex path that needs at least 60 rounds
+    val path = Iterator.from(1)
+      .map(seed => new scala.util.Random(seed).shuffle((1L to 200L).toList))
+      .find(changingRounds(_) >= 60).get
+    val e = path.zip(path.tail).toDF("src", "dst")
+    val err = intercept[IllegalStateException](GraphOps.connectedComponentsDF(e))
+    assert(err.getMessage.contains("round 50") &&
+      err.getMessage.contains("CcMaxRounds"), err.getMessage)
   }
 
   test("CC, PageRank, PPR, BFS and LPA are identical at shuffle partitions {1, 7} x AQE {on, off}") {

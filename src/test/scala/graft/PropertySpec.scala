@@ -152,6 +152,39 @@ class PropertySpec extends SparkSuite {
     })
   }
 
+  test("shingleHashes == sorted distinct tokenHash60 of the string shingles; null → null") {
+    import graft.functions.GraftFunctions
+    val s = spark
+    import s.implicits._
+    // tokens with non-ASCII bytes, a pipe and a no-break space (not \s);
+    // separators mix spaces, tabs, \u000B, \f, \r and newlines; a tiny
+    // vocabulary repeats n-grams within a text
+    val token = Gen.oneOf("a", "b", "é", "日本", "x|y", "a\u00a0b", "Ünï")
+    val sep = Gen.oneOf(" ", "  ", "\t", " \t ", "\n", "\u000b", "\f\r ")
+    val text = for {
+      ws <- Gen.choose(0, 9).flatMap(Gen.listOfN(_, token))
+      seps <- Gen.listOfN(ws.size, sep)
+      lead <- Gen.oneOf("", " ", "\t ")
+      trail <- Gen.oneOf(true, false)
+    } yield {
+      val t = lead + ws.zip(seps).map { case (w, p) => w + p }.mkString
+      if (trail) t else t.replaceAll("\\s+$", "")
+    }
+    check(Prop.forAll(Gen.listOfN(24, text), Gen.oneOf(1, 2, 3, 8)) { (texts, n) =>
+      val df = (texts.map(Option(_)) ++ Seq(Some(""), None)).toDF("text")
+      val rows = df.select(
+          GraftFunctions.shingleHashes(col("text"), n).as("nat"),
+          array_sort(array_distinct(transform(TextOps.shingles(col("text"), n),
+            g => TextOps.tokenHash60(g)))).as("str"),
+          col("text"))
+        .collect()
+      rows.forall { r =>
+        if (r.isNullAt(2)) r.isNullAt(0)
+        else r.getSeq[Long](0) == r.getSeq[Long](1)
+      }
+    })
+  }
+
   test("ivf2Assign: clusters are seed ids, and its distance is ≥ the flat argmin's") {
     val s = spark
     import s.implicits._
