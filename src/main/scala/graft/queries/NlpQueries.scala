@@ -39,29 +39,31 @@ object NlpQueries {
   private def candidates(s: SparkSession, d: String): DataFrame =
     EntityLinking.mentionCandidates(Tables.documents(s, d), gaz(s, d))
 
-  /** Context vectors: doc_id → embeddings[doc_id % nvec]; entity vectors:
-    * p_partkey → embeddings[p_partkey % nvec] (nvec computed, not assumed —
-    * documents and embeddings scale differently across SFs). Disambiguation
-    * scores with the NATIVE codegen cosine (bit-identical to the HOF fold by
-    * CosineSpec, ~30× faster) over distinct (doc_id, entity) pairs. */
-  private[queries] def contextVecs(s: SparkSession, d: String): (DataFrame, DataFrame) = {
-    val e = Tables.embeddings(s, d)
-    val nv = broadcast(e.agg(count(lit(1)).as("nvec")))
-    val docVecs = Tables.documents(s, d).select(col("doc_id"))
-      .crossJoin(nv).withColumn("vid", col("doc_id") % col("nvec"))
-      .join(e.select(col("vec_id").as("vid"), col("embedding").as("ctx_emb")), "vid")
-      .select(col("doc_id"), col("ctx_emb"))
-    val entVecs = Tables.part(s, d).select(col("p_partkey").as("entity"))
-      .crossJoin(nv).withColumn("vid", col("entity") % col("nvec"))
-      .join(e.select(col("vec_id").as("vid"), col("embedding").as("ent_emb")), "vid")
-      .select(col("entity"), col("ent_emb"))
-    (docVecs, entVecs)
+  /** Attaches each candidate's vectors by vector id: `ctx_emb` =
+    * embeddings[doc_id % nvec], `ent_emb` = embeddings[entity % nvec] (nvec
+    * counted, not assumed). `joinType` "left" keeps a candidate missing a
+    * vector for [[EntityLinking.bestLinks]]' prior backoff; "inner" drops it.
+    * The embeddings scan is joined twice without a broadcast hint: while it
+    * is small the planner broadcasts it and the second lookup reuses the
+    * first exchange; at scale it may shuffle-join. No doc- or entity-keyed
+    * vector table is built. Precondition: every `doc_id` is a `documents` id
+    * and every `entity` a `part` key (true of each caller: the documents
+    * token stream, the lineitem ⋈ part gazetteer); under it the rows equal
+    * the id-table joins (law-tested in NlpSpec). */
+  private[graft] def withVectors(cand: DataFrame, e: DataFrame,
+                                 joinType: String): DataFrame = {
+    val nvec = e.count() // plan literal
+    def lookup(key: String, emb: String)(df: DataFrame): DataFrame =
+      df.withColumn("vid", col(key) % nvec)
+        .join(e.select(col("vec_id").as("vid"), col("embedding").as(emb)),
+          Seq("vid"), joinType)
+        .drop("vid")
+    cand.transform(lookup("doc_id", "ctx_emb")).transform(lookup("entity", "ent_emb"))
   }
 
-  private def linkedFrom(s: SparkSession, d: String, cand: DataFrame): DataFrame = {
-    val (docVecs, entVecs) = contextVecs(s, d)
-    EntityLinking.disambiguate(cand, docVecs, entVecs)
-  }
+  private def linkedFrom(s: SparkSession, d: String, cand: DataFrame): DataFrame =
+    EntityLinking.bestLinks(EntityLinking.scoreLinks(
+      withVectors(cand, Tables.embeddings(s, d), "left")))
 
   private def linked(s: SparkSession, d: String): DataFrame =
     linkedFrom(s, d, candidates(s, d))
@@ -111,10 +113,9 @@ object NlpQueries {
     // signal A: prior × cosine, top-5 per (doc_id, token)
     val candA = toks.join(broadcast(gaz(s, d)), col("token") === col("alias"))
       .select(col("doc_id"), col("token"), col("entity"), col("prior"))
-    val (docVecs, entVecs) = contextVecs(s, d)
-    val sigA = EntityLinking.rankedCandidates(candA, docVecs, entVecs,
-        Seq("doc_id", "token"), topK = 5,
-        GraftFunctions.cosineSim)
+    val sigA = EntityLinking.rankLinks(
+        withVectors(candA, Tables.embeddings(s, d), "inner"),
+        Seq("doc_id", "token"), topK = 5, GraftFunctions.cosineSim)
       .select(col("doc_id"), col("token"), col("entity"), col("rn"))
     // signal B: fuzzy candidates (alias-level top-5 per q46), alias →
     // entity, entity ranked per token by (min dist asc, entity asc)

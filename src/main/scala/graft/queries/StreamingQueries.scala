@@ -9,6 +9,7 @@ import org.apache.spark.sql.streaming.Trigger
 import graft.Tables
 import graft.functions.GraftFunctions
 import graft.streaming.StreamOps
+import graft.text.EntityLinking
 
 /** ORACLE-GATED streaming queries (SURVEY.md §2 X3): each runs a real
   * Structured Streaming query — file source over the driver parquet,
@@ -612,53 +613,39 @@ object StreamingQueries {
     // /root/reference/dagster_icij/assets.py:107-130 + dev.ipynb cells
     // 84-88) in deployment shape (r15 verdict item 5): documents ARRIVE,
     // the "model" — alias→entity priors calibrated on the reference
-    // corpus (J2's gazetteer) plus the entity/context vector tables — is
-    // STATIC, and every arrival is scored by stateless stream-static
-    // joins: posexplode tokens (map-side), broadcast gazetteer join
-    // (per-token candidate fan-out bounded by the top-8 prior cap),
-    // context vector by doc_id % nvec with nvec riding the plan as a
-    // literal (q223's codebook-literal rule), entity vectors by equi-join,
+    // corpus (J2's gazetteer) plus the embedding store — is STATIC, and
+    // every arrival is scored by stateless stream-static joins: posexplode
+    // tokens (map-side), broadcast gazetteer join (per-token candidate
+    // fan-out bounded by the top-8 prior cap), both vectors by vector id
+    // (doc_id % nvec, entity % nvec — q34's NlpQueries.withVectors, nvec
+    // riding the plan as a literal, q223's codebook-literal rule),
     // score = prior × native cosine. No watermark, no StateStore —
     // per-arrival cost is the candidate fan-out, flat in corpus size. The
-    // per-mention argmax (rn = 1 by score desc, entity asc) is a bounded
+    // per-mention argmax (EntityLinking.bestLinks) is a bounded
     // per-key reduction applied POST-SINK — the q201/q223 house pattern:
     // append mode cannot rank, and in production the top-1 pick is the
     // sink consumer's O(candidates-per-mention) reduction, not stream
     // state. Oracle = q34's batch EL oracle VERBATIM — the gate pins the
     // streaming path to the batch semantics row for row.
     "q230_stream_entity_linking" -> ((s, d) => {
-      import org.apache.spark.sql.expressions.Window
-      // static sides, each materialized once (the deployment's model)
+      // static side: the gazetteer, materialized once (the deployment's
+      // model); the vectors attach by vector id from the embeddings scan
       val gazT = NlpQueries.gaz(s, d).localCheckpoint()
-      val ev = NlpQueries.contextVecs(s, d)._2.localCheckpoint()
-      val e = Tables.embeddings(s, d)
-      val nvec = e.count() // plan literal
-      val ctx = e.select(col("vec_id").as("vid"),
-        col("embedding").as("ctx_emb")).localCheckpoint()
       val toks = docsStream(s, d)
         .select(col("doc_id"),
           posexplode(graft.text.TextOps.tokens(col("text")))
             .as(Seq("pos", "token")))
-      // LEFT joins + coalesce: the TWO-TIER prior-backoff rule (see
-      // EntityLinking.disambiguate — a candidate missing either vector
-      // scores on its prior but ranks below every fully-scored candidate
-      // of the mention; cosine_sim of a null array is null)
-      val scored = toks
-        .join(broadcast(gazT), col("token") === col("alias"))
-        .withColumn("vid", col("doc_id") % nvec)
-        .join(ctx, Seq("vid"), "left")
-        .join(ev, Seq("entity"), "left")
-        .withColumn("ctx_cos",
-          GraftFunctions.cosineSim(col("ctx_emb"), col("ent_emb")))
-        .withColumn("score", col("prior") * coalesce(col("ctx_cos"), lit(1.0)))
+      // LEFT joins: the TWO-TIER prior-backoff rule (see
+      // EntityLinking.bestLinks — a candidate missing either vector scores
+      // on its prior but ranks below every fully-scored candidate of the
+      // mention); ctx_cos rides through the sink for the argmax
+      val scored = EntityLinking.scoreLinks(NlpQueries.withVectors(
+          toks.join(broadcast(gazT), col("token") === col("alias")),
+          Tables.embeddings(s, d), "left"))
         .select(col("doc_id"), col("pos"), col("token"), col("entity"),
-          col("prior"), col("score"), col("ctx_cos").isNotNull.as("has_cos"))
-      runToTable(scored, "q230_stream_entity_linking", "append")
-        .withColumn("rn", row_number().over(
-          Window.partitionBy(col("doc_id"), col("pos"))
-            .orderBy(col("has_cos").desc, col("score").desc,
-              col("entity").asc)))
-        .filter(col("rn") === 1).drop("rn", "has_cos")
+          col("prior"), col("score"), col("ctx_cos"))
+      EntityLinking.bestLinks(
+          runToTable(scored, "q230_stream_entity_linking", "append"))
         .orderBy(col("doc_id"), col("pos"))
     }),
 

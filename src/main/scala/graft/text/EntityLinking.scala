@@ -17,9 +17,10 @@ import graft.functions.GraftFunctions
   *    per alias (candidate generation, not a full index scan) — it stays
   *    small enough to BROADCAST, so mention matching is a broadcast hash join
   *    against the token stream: no shuffle of the 100 TB document side.
-  *  - disambiguation joins candidates to an embedding table on ids (shuffle
-  *    on the small candidate set only) and scores with per-row fold math
-  *    inside codegen; the argmax is one window per mention.
+  *  - disambiguation scores candidate rows that already carry their context
+  *    and entity vectors (attached by vector id on the candidate side, so no
+  *    doc- or entity-keyed vector table is built or shuffled) with the
+  *    native cosine inside codegen; the argmax is one window per mention.
   */
 object EntityLinking {
 
@@ -222,19 +223,23 @@ object EntityLinking {
       .select(col("doc_id"), col("pos"), col("surface"), col("len"), col("entity"))
   }
 
-  /** Scored candidate LISTS (no argmax): [[disambiguate]]'s single-pass
-    * prior × cosine scoring, but keeping the top `topK` candidates per
-    * mention key — the vector-signal input to hybrid fusion
-    * ([[HybridRetrieval.rrfFuse]]). Candidates without both vectors drop.
-    * `candidates` must carry `keyCols`, `entity`, `prior`, and `doc_id` (the
-    * context-vector key). `cosineFn` is [[GraftFunctions.cosineSim]] in main
-    * code. Output: keyCols ++ (entity, prior, score, rn). */
+  /** Scored candidate LISTS (no argmax): prior × cosine, keeping the top
+    * `topK` candidates per mention key — the vector-signal input to hybrid
+    * fusion ([[HybridRetrieval.rrfFuse]]). Candidates without both vectors
+    * drop. `docVecs`: (doc_id, ctx_emb); `entVecs`: (entity, ent_emb);
+    * `cosineFn` is [[GraftFunctions.cosineSim]] in main code.
+    * Output: keyCols ++ (entity, prior, score, rn). */
   def rankedCandidates(candidates: DataFrame, docVecs: DataFrame,
                        entVecs: DataFrame, keyCols: Seq[String], topK: Int,
                        cosineFn: (Column, Column) => Column): DataFrame =
-    candidates
-      .join(docVecs, Seq("doc_id"))
-      .join(entVecs, Seq("entity"))
+    rankLinks(candidates.join(docVecs, Seq("doc_id")).join(entVecs, Seq("entity")),
+      keyCols, topK, cosineFn)
+
+  /** [[rankedCandidates]]' body over candidate rows that already carry
+    * `ctx_emb` and `ent_emb`. */
+  def rankLinks(attached: DataFrame, keyCols: Seq[String], topK: Int,
+                cosineFn: (Column, Column) => Column): DataFrame =
+    attached
       .withColumn("score", col("prior") * cosineFn(col("ctx_emb"), col("ent_emb")))
       .withColumn("rn", row_number().over(
         Window.partitionBy(keyCols.map(col): _*)
@@ -244,44 +249,49 @@ object EntityLinking {
         col("score"), col("rn")): _*)
 
   /** V3/W3 — disambiguation: score = prior × cosine(context embedding,
-    * entity embedding), argmax per mention (ties → lower entity id).
-    * `docVecs`: (doc_id, ctx_emb); `entVecs`: (entity, ent_emb).
+    * entity embedding), argmax per mention (ties → lower entity id), as
+    * [[scoreLinks]] then [[bestLinks]] over the candidates left-joined to
+    * `docVecs` (doc_id, ctx_emb) and `entVecs` (entity, ent_emb). The
+    * queries attach the vectors by vector id instead and run the same body.
     *
-    * SINGLE PASS: each candidate row is left-joined to its context and
-    * entity vectors and scored where it stands by the native
-    * [[GraftFunctions.cosineSim]] (the shape of q230's stream linker). The
+    * SINGLE PASS: every candidate row is scored where it stands, so the
     * candidate plan is read once; a distinct-(doc_id, entity) cosine table
     * joined back to the candidates would read it twice, and the two copies
     * are pruned differently, so AQE cannot reuse the exchange between them.
     * A repeated (doc_id, entity) pair costs one extra cosine — codegen
     * arithmetic over two arrays, far cheaper than a second candidate pass.
     *
-    * TWO-TIER PRIOR BACKOFF: a candidate whose doc or entity has no vector keeps its
-    * prior as the score instead of being dropped — the standard graceful
-    * degradation when the embedding store lags the entity store — but it
-    * ranks STRICTLY BELOW every fully-scored candidate of the same
-    * mention (leading `has_cos DESC` sort key). The r16 form scored
-    * missing-vector candidates prior·1.0 — the MAXIMUM of the cosine
-    * range — so under partial vector coverage the argmax systematically
-    * preferred unembedded entities (r16 advice); under this rule the
-    * backoff decides only when NO candidate of the mention is scored
-    * (rank by prior — the correct vector-free fallback). On a corpus
-    * whose vector tables cover every doc/entity (the driver testdata —
-    * ids dense modulo nvec) neither tier fires differently and results
-    * equal the inner-join form; under an id-strided replica namespace
-    * (ScaleBench) the pre-backoff inner joins silently emptied the whole
-    * linking output (measured r16: q34 = 0 rows at ×10).
-    *
     * Output: (doc_id, pos, token, entity, prior, score). */
   def disambiguate(candidates: DataFrame, docVecs: DataFrame,
                    entVecs: DataFrame): DataFrame =
-    candidates
+    bestLinks(scoreLinks(candidates
       .join(docVecs, Seq("doc_id"), "left")
-      .join(entVecs, Seq("entity"), "left")
+      .join(entVecs, Seq("entity"), "left")))
+
+  /** Per-row scoring of candidates that carry `ctx_emb` and `ent_emb`
+    * (either may be null): adds `ctx_cos`, the native
+    * [[GraftFunctions.cosineSim]], and `score` = prior × cosine, or the
+    * prior alone when the cosine is null. Stateless, so a stream can score
+    * its arrivals with it. */
+  def scoreLinks(attached: DataFrame): DataFrame =
+    attached
       .withColumn("ctx_cos",
         GraftFunctions.cosineSim(col("ctx_emb"), col("ent_emb")))
       .withColumn("score",
         col("prior") * coalesce(col("ctx_cos"), lit(1.0)))
+
+  /** The argmax per (doc_id, pos) over [[scoreLinks]]' rows, with the
+    * TWO-TIER PRIOR BACKOFF: a candidate whose doc or entity has no vector
+    * keeps its prior as the score instead of being dropped (the embedding
+    * store may lag the entity store) but ranks STRICTLY BELOW every scored
+    * candidate of its mention (leading `ctx_cos IS NOT NULL DESC` key).
+    * Scoring it prior·1.0, the MAXIMUM of the cosine range, would make the
+    * argmax prefer unembedded entities under partial coverage; inner joins
+    * would empty the whole output under an id-strided replica namespace
+    * (ScaleBench). Under full vector coverage the backoff never fires.
+    * Output: (doc_id, pos, token, entity, prior, score). */
+  def bestLinks(scored: DataFrame): DataFrame =
+    scored
       .withColumn("rn", row_number().over(
         Window.partitionBy(col("doc_id"), col("pos"))
           .orderBy(col("ctx_cos").isNotNull.desc, col("score").desc,

@@ -4,6 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalacheck.{Gen, Prop, Test => SCTest}
 
+import graft.functions.GraftFunctions
+import graft.queries.NlpQueries
 import graft.text.{EntityLinking, TextRank}
 
 class NlpSpec extends SparkSuite {
@@ -255,5 +257,40 @@ class NlpSpec extends SparkSuite {
     val linked = EntityLinking.disambiguate(c, d, e).orderBy("doc_id", "pos").collect()
     assert(linked.map(r => (r.getLong(0), r.getLong(3))).toSeq == Seq((0L, 1L), (3L, 4L)))
     assert(math.abs(linked(0).getDouble(5) - 0.3) < 1e-6 && linked(1).getDouble(5) == 1.0)
+  }
+
+  test("withVectors law: attach by vector id == id-table joins, left and inner") {
+    // a sparse vector store (nvec = its row count, ids up to 9, so ids above
+    // nvec and gaps both occur), docs and entities drawn from their id sets
+    // (the precondition), repeated mentions, and a one-element vector that
+    // gives a null cosine; a candidate's prior depends on its token and
+    // entity only, as the gazetteer's does
+    val vecs = Seq(Seq(1.0f, 0.0f), Seq(0.6f, 0.8f), Seq(1.0f), Seq(0.8f, 0.6f))
+    val priors = Seq(0.25, 0.5, 1.0)
+    val gen = for {
+      vecIds <- Gen.atLeastOne(0L to 9L)
+      vecOf <- Gen.listOfN(10, Gen.choose(0, vecs.size - 1))
+      docIds <- Gen.nonEmptyContainerOf[Set, Long](Gen.choose(0L, 30L))
+      entIds <- Gen.nonEmptyContainerOf[Set, Long](Gen.choose(0L, 40L))
+      cands <- Gen.listOf(Gen.zip(Gen.oneOf(docIds.toSeq), Gen.choose(0, 2),
+        Gen.oneOf(entIds.toSeq))).map(_.take(24))
+    } yield (vecIds.toSeq, vecOf, docIds.toSeq, entIds.toSeq, cands)
+    val r = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(8).withWorkers(1),
+      Prop.forAllNoShrink(gen) { case (vecIds, vecOf, docIds, entIds, cands) =>
+        val s = spark
+        import s.implicits._
+        val c = cands.map { case (d, p, e) => (d, p, s"t$p", e, priors(((p + e) % 3).toInt)) }
+          .toDF("doc_id", "pos", "token", "entity", "prior")
+        val e = vecIds.map(id => (id, vecs(vecOf(id.toInt)))).toDF("vec_id", "embedding")
+        val (dv, ev) = Oracles.idTableVectors(docIds.toDF("doc_id"), entIds.toDF("entity"), e)
+        def rows(df: DataFrame) = df.collect().map(_.toSeq.mkString("|")).sorted.toSeq
+        val keys = Seq("doc_id", "pos")
+        rows(EntityLinking.disambiguate(c, dv, ev)) == rows(EntityLinking.bestLinks(
+            EntityLinking.scoreLinks(NlpQueries.withVectors(c, e, "left")))) &&
+          rows(EntityLinking.rankedCandidates(c, dv, ev, keys, 2, GraftFunctions.cosineSim)) ==
+          rows(EntityLinking.rankLinks(NlpQueries.withVectors(c, e, "inner"), keys, 2,
+            GraftFunctions.cosineSim))
+      })
+    assert(r.passed, r.status.toString)
   }
 }

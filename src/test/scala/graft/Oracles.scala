@@ -11,8 +11,8 @@ import graft.text.TextOps
 /** Reference twins of the similarity, graph and linking operators. Main
   * code keeps one implementation per operator — the native Catalyst
   * expressions in `graft.functions`, the DataFrame loops in
-  * `graft.graph.GraphOps` and the single-pass linker in
-  * `graft.text.EntityLinking`.
+  * `graft.graph.GraphOps`, the single-pass linker in
+  * `graft.text.EntityLinking` and its vector attach by vector id.
   * These are the slower relational, interpreted-HOF and GraphX forms they
   * replaced, kept only as oracles: each is law-equated with its main
   * counterpart in the specs.
@@ -247,5 +247,21 @@ object Oracles {
       .filter(col("rn") === 1)
       .select(col("doc_id"), col("pos"), col("token"), col("entity"),
         col("prior"), col("score"))
+  }
+
+  // ---- vector attach (main: graft.queries.NlpQueries.withVectors)
+
+  /** The id-keyed vector tables the linkers joined before the attach by
+    * vector id: (doc_id, ctx_emb) = docIds ⋈ embeddings[doc_id % nvec] and
+    * (entity, ent_emb) = entityIds ⋈ embeddings[entity % nvec], with nvec
+    * the embeddings count, cross-joined as a one-row broadcast. */
+  def idTableVectors(docIds: DataFrame, entityIds: DataFrame,
+                     e: DataFrame): (DataFrame, DataFrame) = {
+    val nv = broadcast(e.agg(count(lit(1)).as("nvec")))
+    def table(ids: DataFrame, key: String, emb: String): DataFrame =
+      ids.select(col(key)).crossJoin(nv).withColumn("vid", col(key) % col("nvec"))
+        .join(e.select(col("vec_id").as("vid"), col("embedding").as(emb)), "vid")
+        .select(col(key), col(emb))
+    (table(docIds, "doc_id", "ctx_emb"), table(entityIds, "entity", "ent_emb"))
   }
 }

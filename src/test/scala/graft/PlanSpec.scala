@@ -1,10 +1,19 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeLike}
+import org.apache.spark.sql.execution.joins.{BaseJoinExec, BroadcastHashJoinExec}
+import org.apache.spark.sql.types.{ArrayType, FloatType}
+import org.apache.spark.sql.util.QueryExecutionListener
+
 /** Physical-plan shape assertions: the scale properties the Scaladoc claims
   * (broadcasts, pushdown, pruning, codegen) are checked here so a regression
   * in plan shape fails CI, not a 100 TB run.
   */
-class PlanSpec extends SparkSuite {
+class PlanSpec extends SparkSuite with AdaptiveSparkPlanHelper {
 
   private val sf = SparkSpec.sf0001
 
@@ -333,6 +342,82 @@ class PlanSpec extends SparkSuite {
       val p = plan("q108_retention_cohorts")
       assert(!p.contains("BroadcastHashJoin"),
         s"cohort join still forces a broadcast:\n$p")
+    } finally spark.conf.set(key, prev)
+  }
+
+  /** Every physical plan `run` executes, AQE-final: a query that
+    * materializes its inputs (localCheckpoint) or runs a stream executes
+    * several, and the returned DataFrame shows only the last. A marker
+    * query closes the capture, since listener events arrive in order. */
+  private def plansOf(run: => Unit): Seq[SparkPlan] = {
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val marker = "plan_capture_end"
+    val done = new java.util.concurrent.CountDownLatch(1)
+    val listener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        if (qe.analyzed.output.exists(_.name == marker)) done.countDown()
+        else plans.add(qe.executedPlan)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      run
+      spark.range(1).select(org.apache.spark.sql.functions.lit(1).as(marker)).collect()
+      assert(done.await(60, java.util.concurrent.TimeUnit.SECONDS), "capture did not close")
+    } finally spark.listenerManager.unregister(listener)
+    plans.asScala.toSeq
+  }
+
+  private def carriesVector(p: SparkPlan): Boolean =
+    p.output.exists(_.dataType match {
+      case ArrayType(FloatType, _) => true
+      case _ => false
+    })
+
+  test("entity linkers attach vectors by id: no shuffle exchange carries a vector (q34, q36, q79, q230)") {
+    // the vectors ride the candidate rows from the embeddings scan; a
+    // doc- or entity-keyed vector table would reach its join through a
+    // hash exchange of array<float> rows before AQE demoted it
+    Seq("q34_entity_linking", "q36_el_report", "q79_hybrid_linking",
+        "q230_stream_entity_linking").foreach { q =>
+      val plans = plansOf(SparkEntry.queries(q)(spark, sf).collect())
+      val attached = plans.flatMap(collectWithSubqueries(_) {
+        case j: BaseJoinExec if j.output.exists(_.name == "ent_emb") => j
+      })
+      assert(attached.nonEmpty, s"$q: no vector attach seen in ${plans.size} plans")
+      val offenders = plans.flatMap(collectWithSubqueries(_) {
+        case x: ShuffleExchangeLike if carriesVector(x) => x
+      })
+      assert(offenders.isEmpty, s"$q shuffles vectors:\n${offenders.mkString("\n")}")
+    }
+  }
+
+  test("q34's second vector lookup reuses the first embeddings exchange") {
+    val df = SparkEntry.queries("q34_entity_linking")(spark, sf)
+    df.collect()
+    val reused = collectWithSubqueries(df.queryExecution.executedPlan) {
+      case r: ReusedExchangeExec if carriesVector(r) => r
+    }
+    assert(reused.size == 1, df.queryExecution.executedPlan.toString)
+  }
+
+  test("the embeddings lookup is not a mandatory broadcast (the vector store grows with data)") {
+    // with auto-broadcast off, a broadcast() hint would pin a BHJ whose
+    // build side carries the embedding column
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val prev = spark.conf.get(key)
+    try {
+      spark.conf.set(key, "-1")
+      Seq("q34_entity_linking", "q79_hybrid_linking").foreach { q =>
+        val phys = SparkEntry.queries(q)(spark, sf).queryExecution.sparkPlan
+        val offenders = phys.collect {
+          case j: BroadcastHashJoinExec if carriesVector(j.buildSide match {
+              case org.apache.spark.sql.catalyst.optimizer.BuildLeft => j.left
+              case org.apache.spark.sql.catalyst.optimizer.BuildRight => j.right
+            }) => j
+        }
+        assert(offenders.isEmpty, s"$q still forces a vector broadcast:\n$phys")
+      }
     } finally spark.conf.set(key, prev)
   }
 }
