@@ -23,19 +23,25 @@ import org.apache.spark.sql.functions._
   */
 object GraphOps {
 
-  /** Make an edge list undirected: both directions of every edge, distinct.
-    * Senzing's RELATED_ENTITIES adjacency is stored symmetrically; for
-    * derived edge sets we enforce symmetry once up front so every traversal
-    * is a plain src-equi-join. One pass over the input: each row explodes
-    * into its `(src, dst)` and `(dst, src)` structs, so the input's plan is
-    * read once, not once per direction as a self-union would.
+  /** Both directions of every edge, duplicates and self-loops kept: each
+    * row explodes into its `(src, dst)` and `(dst, src)` structs, so the
+    * input's plan is read once, not once per direction as a self-union
+    * would, and nothing is shuffled. Enough for a traversal whose result
+    * is a set ([[kHop]]); a consumer that counts edges needs
+    * [[symmetrize]].
     */
-  def symmetrize(edges: DataFrame): DataFrame =
+  def arcs(edges: DataFrame): DataFrame =
     edges.select(explode(array(
         struct(col("src"), col("dst")),
         struct(col("dst").as("src"), col("src").as("dst")))).as("e"))
       .select(col("e.src"), col("e.dst"))
-      .distinct()
+
+  /** Make an edge list undirected: [[arcs]], distinct.
+    * Senzing's RELATED_ENTITIES adjacency is stored symmetrically; for
+    * derived edge sets we enforce symmetry once up front so every traversal
+    * is a plain src-equi-join.
+    */
+  def symmetrize(edges: DataFrame): DataFrame = arcs(edges).distinct()
 
   /** G3-G6 — k-hop closure with the reference's frontier semantics: each hop
     * expands from the UNION of all previously reached ids, not just the last
@@ -51,14 +57,22 @@ object GraphOps {
     * linear in k — where a `reached ∪ N(reached)` step would copy the whole
     * previous plan into both sides of every hop and double it.
     *
+    * Duplicate edges and self-loops are allowed: the reached set is
+    * de-duplicated every hop, so `edges` need not be (GraphSpec pins
+    * `kHop` over raw arcs to `kHop` over distinct edges).
+    *
     * Scale shape: the reached set stays small (seed neighborhoods), so it is
-    * broadcast to the big edge table each round — k broadcast hash joins, no
-    * shuffle of `edges`. At 100 TB the edge scan is the only big input and it
-    * is touched k times; caching `edges` between rounds amortizes the IO.
+    * broadcast to the big edge table each round — k broadcast hash joins.
+    * The edge relation is never shuffled: pass it as stored, without a
+    * `distinct()` of its own, whose exchange would re-partition the whole
+    * edge table once per hop. At 100 TB the edge scan is the only big input
+    * and it is touched k times; caching `edges` between rounds amortizes
+    * the IO.
     *
     * @param seeds single-column DataFrame `id`; seeds are hop 0 whether or
     *              not they have edges
-    * @param edges two-column DataFrame `src, dst` (traversed src → dst)
+    * @param edges two-column DataFrame `src, dst` (traversed src → dst),
+    *              duplicates allowed
     */
   def kHop(edges: DataFrame, seeds: DataFrame, k: Int): DataFrame = {
     val seedIds = seeds.select(col("id"))

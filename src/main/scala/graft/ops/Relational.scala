@@ -3,6 +3,9 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.MapType
+
+import graft.functions.GraftFunctions
 
 /** Core relational operators re-expressed Spark-first.
   *
@@ -55,49 +58,64 @@ object Relational {
   def antiJoinFilter(df: DataFrame, ids: DataFrame, key: String): DataFrame =
     df.join(broadcast(ids), Seq(key), "left_anti")
 
-  /** A1 — alias → (entities, probabilities) aggregation, the reference's most
-    * interesting aggregate (/root/reference/src/senzing_pipeline.py:289-305):
-    * per alias, the distinct entities it maps to and
-    * P(entity | alias) = cnt(entity) / total, as parallel arrays.
-    *
-    * Two-level hash aggregation (both map-side combinable — no skew blowup on
-    * celebrity aliases), then pure array expressions. Arrays are sorted by
-    * entity for deterministic output (oracle hash parity; the reference's dict
-    * ordering is insertion order, an accident of scan order).
-    */
-  def aliasProbabilities(df: DataFrame, alias: String, entity: String): DataFrame = {
-    val pairs = df.groupBy(col(alias).as("alias"), col(entity).as("entity"))
-      .agg(count(lit(1)).as("cnt"))
-    pairs.groupBy(col("alias"))
-      .agg(sort_array(collect_list(struct(col("entity"), col("cnt")))).as("ec"))
-      .select(
-        col("alias"),
-        transform(col("ec"), e => e.getField("entity")).as("entities"),
-        transform(col("ec"), e =>
-          e.getField("cnt") / aggregate(col("ec"), lit(0L), (acc, x) => acc + x.getField("cnt")))
-          .as("probabilities"),
-        aggregate(col("ec"), lit(0L), (acc, x) => acc + x.getField("cnt")).as("n_obs"))
+  /** A1 core — the reference's per-alias `Counter` of entities
+    * (`senzing_pipeline.py:289-305`): one
+    * `groupBy(alias)` aggregate holding a [[GraftFunctions.counterMap]] of
+    * entities beside the alias's row count `n_obs`, so the observations
+    * cross the network once, keyed by alias alone (map-side combinable).
+    * The counter is an object aggregate, outside codegen: where nearly
+    * every alias has a single entity the shuffle saves little and the
+    * codegen two-level form is faster (CHANGES.md has the measurement).
+    * Null entities are counted
+    * beside the counter (a map key cannot be null) and come back as one
+    * null-entity entry, first, as a null sorts first.
+    * Output: (alias, n_obs, ec) with `ec` an array of struct(entity, cnt)
+    * sorted by entity, the entity in the counter's key type (an integral
+    * entity widened to bigint). */
+  def aliasCounts(df: DataFrame, alias: String, entity: String): DataFrame = {
+    val counted = df.groupBy(col(alias).as("alias"))
+      .agg(GraftFunctions.counterMap(col(entity)).as("cm"),
+        count(lit(1)).as("n_obs"), count(col(entity)).as("n_keyed"))
+    val entityType = counted.schema("cm").dataType.asInstanceOf[MapType].keyType
+    val nulls = col("n_obs") - col("n_keyed")
+    counted.select(col("alias"), col("n_obs"),
+      concat(
+        when(nulls > 0,
+          array(struct(lit(null).cast(entityType).as("entity"), nulls.as("cnt"))))
+          .otherwise(array()),
+        transform(map_entries(col("cm")),
+          e => struct(e("key").as("entity"), e("value").as("cnt")))).as("ec"))
   }
 
-  /** A1 in LONG form — one row per (alias, entity) with
-    * P(entity | alias) = cnt / total and the per-alias observation total.
-    * Same aggregation tree as [[aliasProbabilities]] (two-level map-side
-    * combinable hash agg; the window total is an integer sum, exact), but the
-    * output is all-scalar columns: this is the form the hash-compared
-    * correctness gate consumes — array-typed result columns are not sortable
-    * by the driver's pandas harness. The array form stays available for
-    * library users who want the reference's (entities[], probabilities[])
-    * shape. Output: (alias, entity, cnt, probability, n_obs).
+  /** A1 — alias → (entities, probabilities) aggregation: per alias, the
+    * distinct entities it maps to and P(entity | alias) = cnt(entity) / total,
+    * as parallel arrays, from [[aliasCounts]]. Arrays are sorted by entity
+    * for deterministic output (oracle hash parity; the reference's dict
+    * ordering is insertion order, an accident of scan order).
+    * Output: (alias, entities, probabilities, n_obs).
     */
-  def aliasProbabilitiesLong(df: DataFrame, alias: String, entity: String): DataFrame = {
-    val pairs = df.groupBy(col(alias).as("alias"), col(entity).as("entity"))
-      .agg(count(lit(1)).as("cnt"))
-    val w = Window.partitionBy(col("alias"))
-    pairs.select(
-      col("alias"), col("entity"), col("cnt"),
-      (col("cnt").cast("double") / sum(col("cnt")).over(w)).as("probability"),
-      sum(col("cnt")).over(w).as("n_obs"))
-  }
+  def aliasProbabilities(df: DataFrame, alias: String, entity: String): DataFrame =
+    aliasCounts(df, alias, entity).select(
+      col("alias"),
+      transform(col("ec"), e => e("entity")).as("entities"),
+      transform(col("ec"), e => e("cnt").cast("double") / col("n_obs")).as("probabilities"),
+      col("n_obs"))
+
+  /** A1 in LONG form — one row per (alias, entity) with
+    * P(entity | alias) = cnt / total and the per-alias observation total,
+    * from [[aliasCounts]]. All-scalar columns: this is the form the
+    * hash-compared correctness gate consumes — array-typed result columns
+    * are not sortable by the gate's pandas comparison. The array form stays
+    * available for library users who want the reference's
+    * (entities[], probabilities[]) shape.
+    * Output: (alias, entity, cnt, probability, n_obs).
+    */
+  def aliasProbabilitiesLong(df: DataFrame, alias: String, entity: String): DataFrame =
+    aliasCounts(df, alias, entity)
+      .select(col("alias"), col("n_obs"), inline(col("ec")))
+      .select(col("alias"), col("entity"), col("cnt"),
+        (col("cnt").cast("double") / col("n_obs")).as("probability"),
+        col("n_obs"))
 
   /** W1 — per-group top-k (reference: `doc._.phrases[:30]` per doc,
     * /root/reference/src/analysis.py:11). Rank-within-partition window; the

@@ -16,7 +16,7 @@ import graft.ops.Relational
   *
   * Everything below is one lazy Catalyst plan: seed match (J2, broadcast),
   * 2-hop closure (G3-G6, broadcast frontier joins), supplier projection,
-  * alias aggregation (A1, two-level hash agg). No collect() in the path.
+  * alias aggregation (A1, one per-alias counter). No collect() in the path.
   */
 object Erkg {
 
@@ -34,15 +34,22 @@ object Erkg {
     * relationship (keeps the graph sparse — avg degree ≈ 2.4). */
   val qtyThreshold = 48.0
 
-  /** G1 — build the undirected entity graph: customer ↔ supplier edges. */
-  def entityEdges(s: SparkSession, d: String): DataFrame = {
-    val e = Tables.orders(s, d)
+  /** G1 — the undirected entity graph as raw arcs: customer ↔ supplier,
+    * both directions, one arc pair per qualifying lineitem (duplicates
+    * kept, nothing shuffled). What [[GraphOps.kHop]] and
+    * [[GraphOps.connectedComponentsDF]] take: their results are sets. */
+  def entityArcs(s: SparkSession, d: String): DataFrame =
+    GraphOps.arcs(Tables.orders(s, d)
       .join(Tables.lineitem(s, d).filter(col("l_quantity") >= qtyThreshold),
         col("o_orderkey") === col("l_orderkey"))
       .select(col("o_custkey").as("src"),
-        (lit(supplierOffset) + col("l_suppkey")).as("dst"))
-    GraphOps.symmetrize(e)
-  }
+        (lit(supplierOffset) + col("l_suppkey")).as("dst")))
+
+  /** G1 — the undirected entity graph, one row per edge direction
+    * ([[entityArcs]], distinct): what degree, PageRank and assortativity
+    * need, since a duplicate edge would change their values. */
+  def entityEdges(s: SparkSession, d: String): DataFrame =
+    entityArcs(s, d).distinct()
 
   /** J2/G3 — seed match: exact-name broadcast join of the suspicion list
     * against customers (the reference's O(S×E) nested loop, replaced by a
@@ -54,9 +61,10 @@ object Erkg {
       .select(col("c_custkey").as("id"))
   }
 
-  /** G3-G6 — the 2-hop suspicious-network closure. */
+  /** G3-G6 — the 2-hop suspicious-network closure, over the raw arcs: the
+    * edge table is never shuffled. */
   def suspiciousNetwork(s: SparkSession, d: String): DataFrame =
-    GraphOps.kHop(entityEdges(s, d), seeds(s, d), 2)
+    GraphOps.kHop(entityArcs(s, d), seeds(s, d), 2)
 
   /** Alias observations over the network's suppliers: every lineitem shipped
     * by a 2-hop-network supplier, joined to its part (alias = p_name,

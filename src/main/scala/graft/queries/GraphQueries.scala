@@ -44,9 +44,10 @@ object GraphQueries {
     // G7 — connected components of the entity graph (DataFrame label
     // propagation with pointer jumping; label = min vertex id in component,
     // matching the oracle's MIN over reachability; GraphSpec pins it to the
-    // GraphX oracle).
+    // GraphX oracle). Fed the raw arcs: the operator symmetrizes and
+    // de-duplicates its input itself.
     "q14_connected_components" -> ((s, d) =>
-      GraphOps.connectedComponentsDF(Erkg.entityEdges(s, d))
+      GraphOps.connectedComponentsDF(Erkg.entityArcs(s, d))
         .orderBy(col("id"))),
 
     // W2/V4 — PageRank over the entity graph, 10 fixed iterations,
@@ -278,7 +279,7 @@ object GraphQueries {
     // (degree onto each endpoint — shuffle joins on id, AQE-planned; never
     // a broadcast of a vertex table) + one global aggregate with map-side
     // partials. At 100 TB the full formula stays a 4-scalar reduce.
-    // entityEdges is already symmetrized (union+distinct inside), so feed
+    // entityEdges is already symmetrized (arcs + distinct inside), so feed
     // it straight in — a second symmetrize would only repeat that shuffle.
     "q135_assortativity" -> ((s, d) =>
       GraphOps.assortativity(Erkg.entityEdges(s, d))),

@@ -5,7 +5,6 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
 import graft.Tables
-import graft.functions.GraftFunctions
 import graft.ops.Relational
 
 /** Relational-core queries (SURVEY.md §2: S, F, J, A, W, SET, STR rows) over
@@ -111,21 +110,11 @@ object RelationalQueries {
         .orderBy(col("alias"), col("entity"))
     }),
 
-    // A1 via the NATIVE counter_map TypedImperativeAggregate — same oracle
-    // string as q07, proving the custom aggregate under the hash gate (not
-    // just RelationalSpec's equality law): one counter buffer per alias
-    // (map-side combinable), exploded back to (entity, cnt) rows, with
-    // probability computed by the same IEEE double/long division as q07.
+    // A1 kept under its own name with the same oracle string as q07: both
+    // run the one per-alias counter_map aggregation
+    // (Relational.aliasCounts).
     "q68_counter_probabilities" -> ((s, d) => {
-      Tables.part(s, d)
-        .groupBy(col("p_name").as("alias"))
-        .agg(GraftFunctions.counterMap(col("p_brand")).as("cm"))
-        .select(col("alias"),
-          aggregate(map_values(col("cm")), lit(0L), (a, b) => a + b).as("n_obs"),
-          explode(col("cm")).as(Seq("entity", "cnt")))
-        .select(col("alias"), col("entity"), col("cnt"),
-          (col("cnt").cast("double") / col("n_obs")).as("probability"),
-          col("n_obs"))
+      Relational.aliasProbabilitiesLong(Tables.part(s, d), "p_name", "p_brand")
         .orderBy(col("alias"), col("entity"))
     }),
 

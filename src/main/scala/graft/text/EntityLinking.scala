@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.GraftFunctions
+import graft.ops.Relational
 
 /** Entity-linking operators (SURVEY.md §2 V2/V3/V5 + W3): the reference's
   * gazetteer NER (`EntityRuler`, dev.ipynb cells 112-116), alias-prior
@@ -13,10 +14,12 @@ import graft.functions.GraftFunctions
   * relational plans.
   *
   * Scale design:
-  *  - the gazetteer is produced by aggregation and capped to `maxCandidates`
-  *    per alias (candidate generation, not a full index scan) — it stays
-  *    small enough to BROADCAST, so mention matching is a broadcast hash join
-  *    against the token stream: no shuffle of the 100 TB document side.
+  *  - the gazetteer is one aggregation — a per-alias entity counter, so the
+  *    observations are shuffled once, keyed by alias — capped in each
+  *    alias's row to `maxCandidates` entities (candidate generation, not a
+  *    full index scan). It stays small enough to BROADCAST, so mention
+  *    matching is a broadcast hash join against the token stream: no
+  *    shuffle of the 100 TB document side.
   *  - disambiguation scores candidate rows that already carry their context
   *    and entity vectors (attached by vector id on the candidate side, so no
   *    doc- or entity-keyed vector table is built or shuffled) with the
@@ -26,21 +29,19 @@ object EntityLinking {
 
   /** Weighted alias gazetteer from (alias, entity) observations:
     * P(entity | alias) = cnt / total, capped to the top `maxCandidates`
-    * entities per alias (by count desc, entity asc — deterministic).
+    * entities per alias (by count desc, entity asc — deterministic). One
+    * per-alias counter ([[Relational.aliasCounts]]), then each alias's
+    * entries sorted and sliced in place: no second exchange, no window.
     * Output: (alias, entity, prior). */
   def gazetteer(obs: DataFrame, aliasCol: String, entityCol: String,
-                maxCandidates: Int): DataFrame = {
-    val counted = obs.groupBy(col(aliasCol).as("alias"), col(entityCol).as("entity"))
-      .agg(count(lit(1)).as("cnt"))
-    val w = Window.partitionBy(col("alias"))
-    counted
-      .withColumn("total", sum(col("cnt")).over(w))
-      .withColumn("rn", row_number().over(
-        w.orderBy(col("cnt").desc, col("entity").asc)))
-      .filter(col("rn") <= maxCandidates)
-      .select(col("alias"), col("entity"),
-        (col("cnt").cast("double") / col("total")).as("prior"))
-  }
+                maxCandidates: Int): DataFrame =
+    Relational.aliasCounts(obs, aliasCol, entityCol)
+      .select(col("alias"), col("n_obs"), explode(slice(
+        sort_array(transform(col("ec"), e =>
+          struct((-e("cnt")).as("neg_cnt"), e("entity").as("entity"), e("cnt").as("cnt")))),
+        1, maxCandidates)).as("e"))
+      .select(col("alias"), col("e.entity").as("entity"),
+        (col("e.cnt").cast("double") / col("n_obs")).as("prior"))
 
   /** Token stream with positions: (doc_id, pos, token). */
   def tokenStream(docs: DataFrame, idCol: String, textCol: String): DataFrame =

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, MapType, StringType}
 
 import graft.functions.GraftFunctions
 import graft.plans.RewriteApproxCosineJoin
@@ -83,6 +84,30 @@ class GraftFunctionsSpec extends SparkSuite {
     sqls.foreach { case (n, q) =>
       assert(spark.sql(q).collect().length == 1, n)
     }
+  }
+
+  test("counter_map keeps a bigint key's type and numeric order through SQL, widens other integral keys") {
+    def entries(values: String) = {
+      val df = spark.sql(s"SELECT counter_map(k) AS cm FROM VALUES $values AS t(k)")
+        .selectExpr("cm", "map_keys(cm)", "map_values(cm)")
+      val r = df.collect().head
+      (df.schema.head.dataType, r.getSeq[Any](1).zip(r.getSeq[Long](2)))
+    }
+    assert(entries("(10L), (9L), (10L), (NULL), (-3L)") ==
+      (MapType(LongType, LongType, valueContainsNull = false),
+        Seq(-3L -> 1L, 9L -> 1L, 10L -> 2L)))
+    // string keys stay strings
+    assert(entries("('b'), ('a'), ('b')") ==
+      (MapType(StringType, LongType, valueContainsNull = false), Seq("a" -> 1L, "b" -> 2L)))
+    // an int key is widened to bigint, not stringified or rejected
+    assert(entries("(10), (9), (10), (NULL), (-3)") ==
+      (MapType(LongType, LongType, valueContainsNull = false),
+        Seq(-3L -> 1L, 9L -> 1L, 10L -> 2L)))
+    assert(entries("(CAST(2 AS SMALLINT)), (CAST(1 AS SMALLINT))")._2 == Seq(1L -> 1L, 2L -> 1L))
+    // a fractional key is counted by its exact string form, never truncated
+    assert(entries("(1.5D), (1.25D), (1.5D)") ==
+      (MapType(StringType, LongType, valueContainsNull = false),
+        Seq("1.25" -> 1L, "1.5" -> 2L)))
   }
 
   test("typed builders analyze to the same expressions as the SQL names") {

@@ -89,6 +89,24 @@ class GraphSpec extends SparkSuite {
       Set((1L, 2L), (2L, 1L), (3L, 3L)))
   }
 
+  test("kHop law: over arcs with duplicate edges and self-loops == over distinct edges, directed and symmetric") {
+    val s = spark
+    import s.implicits._
+    val fixed = Seq((1L, 1L), (2L, 3L), (2L, 3L), (3L, 2L), (4L, 4L), (4L, 4L), (4L, 5L))
+    val edgeGen = Gen.listOf(Gen.zip(Gen.choose(0L, 6L), Gen.choose(0L, 6L))).map(_.take(12))
+    val seedGen = Gen.nonEmptyListOf(Gen.choose(0L, 7L)).map(_.take(3))
+    check(Prop.forAll(edgeGen, seedGen) { (es, ss) =>
+      val raw = (fixed ++ es ++ es.take(3)).toDF("src", "dst")
+      val seeds = ss.toDF("id")
+      def reached(edges: DataFrame, k: Int) =
+        GraphOps.kHop(edges, seeds, k).as[Long].collect().sorted.toSeq
+      (1 to 3).forall { k =>
+        reached(raw, k) == reached(raw.distinct(), k) &&
+          reached(GraphOps.arcs(raw), k) == reached(GraphOps.symmetrize(raw), k)
+      }
+    })
+  }
+
   test("kHop's optimized plan grows linearly in k: edges k times, seeds k + 1 times") {
     val edges = Erkg.entityEdges(spark, sf0001)
     val seeds = Erkg.seeds(spark, sf0001)

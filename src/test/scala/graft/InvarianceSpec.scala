@@ -29,7 +29,8 @@ class InvarianceSpec extends SparkSuite {
     finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
   }
 
-  Seq("q34_entity_linking", "q79_hybrid_linking").foreach { q =>
+  Seq("q34_entity_linking", "q79_hybrid_linking", "q13_two_hop_network",
+      "q17_suspicious_aliases", "q07_alias_probabilities").foreach { q =>
     test(s"$q returns the same rows under every join, partition and AQE setting") {
       val base = rows(q)
       assert(base.nonEmpty)

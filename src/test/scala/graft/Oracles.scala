@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.graphx.{Edge, Graph}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -12,7 +13,8 @@ import graft.text.TextOps
   * code keeps one implementation per operator — the native Catalyst
   * expressions in `graft.functions`, the DataFrame loops in
   * `graft.graph.GraphOps`, the single-pass linker in
-  * `graft.text.EntityLinking` and its vector attach by vector id.
+  * `graft.text.EntityLinking` and its vector attach by vector id, the
+  * per-alias counter behind the alias priors.
   * These are the slower relational, interpreted-HOF and GraphX forms they
   * replaced, kept only as oracles: each is law-equated with its main
   * counterpart in the specs.
@@ -224,6 +226,53 @@ object Oracles {
     val graph = Graph.fromEdges[Double, Double](edgeRdd, 1.0,
       StorageLevel.MEMORY_AND_DISK, StorageLevel.MEMORY_AND_DISK)
     graph.staticPageRank(numIter).vertices.toDF("id", "rank")
+  }
+
+  // ---- alias priors (main: graft.ops.Relational.aliasCounts, one
+  //      counter_map per alias, and the forms built on it)
+
+  /** (alias, entity) counts: the first level of the two-level A1 form. */
+  private def aliasEntityCounts(df: DataFrame, alias: String, entity: String): DataFrame =
+    df.groupBy(col(alias).as("alias"), col(entity).as("entity"))
+      .agg(count(lit(1)).as("cnt"))
+
+  /** A1 array form as a two-level hash aggregation: (alias, entity) counts,
+    * then per alias the entity-sorted (entity, cnt) list.
+    * Output: (alias, entities, probabilities, n_obs). */
+  def aliasProbabilitiesTwoLevel(df: DataFrame, alias: String, entity: String): DataFrame = {
+    val total = aggregate(col("ec"), lit(0L), (acc, x) => acc + x.getField("cnt"))
+    aliasEntityCounts(df, alias, entity).groupBy(col("alias"))
+      .agg(sort_array(collect_list(struct(col("entity"), col("cnt")))).as("ec"))
+      .select(
+        col("alias"),
+        transform(col("ec"), e => e.getField("entity")).as("entities"),
+        transform(col("ec"), e => e.getField("cnt") / total).as("probabilities"),
+        total.as("n_obs"))
+  }
+
+  /** A1 long form: (alias, entity) counts, then the per-alias total as a
+    * window. Output: (alias, entity, cnt, probability, n_obs). */
+  def aliasProbabilitiesLongTwoLevel(df: DataFrame, alias: String, entity: String): DataFrame = {
+    val w = Window.partitionBy(col("alias"))
+    aliasEntityCounts(df, alias, entity).select(
+      col("alias"), col("entity"), col("cnt"),
+      (col("cnt").cast("double") / sum(col("cnt")).over(w)).as("probability"),
+      sum(col("cnt")).over(w).as("n_obs"))
+  }
+
+  /** The gazetteer as (alias, entity) counts, then a window per alias for
+    * the total and the top `maxCandidates` by (cnt desc, entity asc).
+    * Output: (alias, entity, prior). */
+  def gazetteerTwoLevel(obs: DataFrame, aliasCol: String, entityCol: String,
+                        maxCandidates: Int): DataFrame = {
+    val w = Window.partitionBy(col("alias"))
+    aliasEntityCounts(obs, aliasCol, entityCol)
+      .withColumn("total", sum(col("cnt")).over(w))
+      .withColumn("rn", row_number().over(
+        w.orderBy(col("cnt").desc, col("entity").asc)))
+      .filter(col("rn") <= maxCandidates)
+      .select(col("alias"), col("entity"),
+        (col("cnt").cast("double") / col("total")).as("prior"))
   }
 
   // ---- entity linking (main: graft.text.EntityLinking.disambiguate)

@@ -2,10 +2,13 @@ package graft
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.sql.catalyst.expressions.{Attribute, Expression}
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
 import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeLike}
 import org.apache.spark.sql.execution.joins.{BaseJoinExec, BroadcastHashJoinExec}
+import org.apache.spark.sql.execution.window.{WindowExec, WindowGroupLimitExec}
 import org.apache.spark.sql.types.{ArrayType, FloatType}
 import org.apache.spark.sql.util.QueryExecutionListener
 
@@ -389,6 +392,51 @@ class PlanSpec extends SparkSuite with AdaptiveSparkPlanHelper {
         case x: ShuffleExchangeLike if carriesVector(x) => x
       })
       assert(offenders.isEmpty, s"$q shuffles vectors:\n${offenders.mkString("\n")}")
+    }
+  }
+
+  /** Every hash-partitioned shuffle exchange across `plans`, as its key
+    * column names. */
+  private def shuffleKeys(plans: Seq[SparkPlan]): Seq[Seq[String]] =
+    plans.flatMap(collectWithSubqueries(_) {
+      case x: ShuffleExchangeLike => x.outputPartitioning
+    }).collect { case h: HashPartitioning =>
+      h.expressions.map {
+        case a: Attribute => a.name
+        case e => e.sql
+      }
+    }
+
+  private def queryPlans(q: String): Seq[SparkPlan] =
+    plansOf(SparkEntry.queries(q)(spark, sf).collect())
+
+  test("q13/q17 k-hop never shuffles the edge table: no exchange keyed on (src, dst)") {
+    Seq("q13_two_hop_network", "q17_suspicious_aliases").foreach { q =>
+      val keys = shuffleKeys(queryPlans(q))
+      // the reached-set distinct of every hop is keyed on the vertex id
+      assert(keys.contains(Seq("id")), s"$q: no k-hop exchange in $keys")
+      assert(!keys.exists(_.toSet == Set("src", "dst")), s"$q shuffles the edges: $keys")
+    }
+  }
+
+  test("q17/q34 alias priors: one shuffle keyed on the alias alone, no window over alias") {
+    // the alias column by name: q17 groups its part name as `alias`, so
+    // a plan may key on either
+    val aliasCols = Seq(
+      "q17_suspicious_aliases" -> Set("p_name", "alias"),
+      "q34_entity_linking" -> Set("alias"))
+    aliasCols.foreach { case (q, alias) =>
+      val plans = queryPlans(q)
+      val aliasKeyed = shuffleKeys(plans).filter(_.exists(alias))
+      assert(aliasKeyed.size == 1 && aliasKeyed.head.size == 1,
+        s"$q exchanges keyed on the alias: $aliasKeyed")
+      def overAlias(spec: Seq[Expression]) =
+        spec.exists(_.references.exists(a => alias(a.name)))
+      val aliasWindows = plans.flatMap(collectWithSubqueries(_) {
+        case w: WindowExec if overAlias(w.partitionSpec) => w
+        case w: WindowGroupLimitExec if overAlias(w.partitionSpec) => w
+      })
+      assert(aliasWindows.isEmpty, s"$q windows over alias:\n${aliasWindows.mkString("\n")}")
     }
   }
 

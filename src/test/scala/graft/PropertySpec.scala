@@ -38,6 +38,23 @@ class PropertySpec extends SparkSuite {
     })
   }
 
+  test("alias priors == their two-level relational forms, any input with nulls") {
+    val s = spark
+    import s.implicits._
+    val gen = Gen.listOf(Gen.zip(Gen.option(Gen.oneOf("a", "b", "c")),
+      Gen.option(Gen.choose(1L, 5L)))).map(_.take(20))
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toString).sorted.toSeq
+    check(Prop.forAll(gen, Gen.choose(1, 3)) { (obs, cap) =>
+      val df = obs.toDF("alias", "entity")
+      rows(graft.text.EntityLinking.gazetteer(df, "alias", "entity", cap)) ==
+        rows(Oracles.gazetteerTwoLevel(df, "alias", "entity", cap)) &&
+      rows(Relational.aliasProbabilitiesLong(df, "alias", "entity")) ==
+        rows(Oracles.aliasProbabilitiesLongTwoLevel(df, "alias", "entity")) &&
+      rows(Relational.aliasProbabilities(df, "alias", "entity")) ==
+        rows(Oracles.aliasProbabilitiesTwoLevel(df, "alias", "entity"))
+    })
+  }
+
   test("k-hop reached sets grow monotonically with k") {
     val s = spark
     import s.implicits._

@@ -1,8 +1,10 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.ops.Relational
+import graft.text.EntityLinking
 
 /** Relational-core operator specs. Reference-behavior fixtures come from
   * FIXTURES.md A3/A6 (recorded accept/reject strings and the alias-probability
@@ -56,10 +58,71 @@ class RelationalSpec extends SparkSuite {
         tot.as("n_obs"))
       .orderBy("alias").collect()
       .map(r => (r.getString(0), r.getSeq[String](1), r.getSeq[Double](2), r.getLong(3)))
-    val viaTwoLevel = Relational.aliasProbabilities(raw, "alias", "entity")
+    val viaTwoLevel = Oracles.aliasProbabilitiesTwoLevel(raw, "alias", "entity")
       .orderBy("alias").collect()
       .map(r => (r.getString(0), r.getSeq[String](1), r.getSeq[Double](2), r.getLong(3)))
     assert(viaCounter.toSeq == viaTwoLevel.toSeq)
+  }
+
+  /** Edge inputs for the alias-prior laws, as (name, observations). */
+  private def aliasEdgeInputs: Seq[(String, DataFrame)] = {
+    val s = spark
+    import s.implicits._
+    Seq(
+      "empty" -> Seq.empty[(String, Long)].toDF("alias", "entity"),
+      "single row" -> Seq(("a", 7L)).toDF("alias", "entity"),
+      "all rows duplicate" -> Seq.fill(5)(("a", 7L)).toDF("alias", "entity"),
+      "null alias and null entity" -> Seq[(Option[String], Option[Long])](
+          (Some("a"), None), (Some("a"), Some(1L)), (Some("a"), None), (None, Some(2L)),
+          (None, None), (None, Some(2L)), (Some("b"), None))
+        .toDF("alias", "entity"),
+      // fullwidth A (U+FF21) sorts before the emoji U+1F600 in Spark's
+      // byte order, after it in UTF-16 order
+      "string entities" -> Seq(("a", "e2"), ("a", "e10"), ("a", "e2"), ("b", "\uD83D\uDE00"),
+          ("b", "\uFF21"), ("b", "z"), ("b", "\uFF21"))
+        .toDF("alias", "entity"),
+      "bigint entities" -> Seq(("a", 10L), ("a", 9L), ("a", 10L), ("a", -3L), ("b", 1L << 40))
+        .toDF("alias", "entity"),
+      // at a cap of 2 the tied entities 1, 2, 3 of "t" are cut after 2
+      "count ties at the cap" -> Seq(("t", 3L), ("t", 1L), ("t", 2L), ("t", 3L), ("t", 1L),
+          ("t", 2L), ("t", 4L), ("u", 9L), ("u", 8L))
+        .toDF("alias", "entity"))
+  }
+
+  /** Sorted row strings plus the column names and types (nullability aside). */
+  private def contents(df: DataFrame): (Seq[String], Seq[String]) =
+    (df.collect().map(_.toString).sorted.toSeq,
+      df.schema.map(f => s"${f.name}:${f.dataType.simpleString}"))
+
+  test("alias priors law: gazetteer, aliasProbabilitiesLong and aliasProbabilities == their two-level forms on edge inputs") {
+    aliasEdgeInputs.foreach { case (name, obs) =>
+      Seq(1, 2, 8).foreach { cap =>
+        assert(contents(EntityLinking.gazetteer(obs, "alias", "entity", cap)) ==
+          contents(Oracles.gazetteerTwoLevel(obs, "alias", "entity", cap)),
+          s"gazetteer, cap $cap, on $name")
+      }
+      assert(contents(Relational.aliasProbabilitiesLong(obs, "alias", "entity")) ==
+        contents(Oracles.aliasProbabilitiesLongTwoLevel(obs, "alias", "entity")),
+        s"aliasProbabilitiesLong on $name")
+      assert(contents(Relational.aliasProbabilities(obs, "alias", "entity")) ==
+        contents(Oracles.aliasProbabilitiesTwoLevel(obs, "alias", "entity")),
+        s"aliasProbabilities on $name")
+    }
+  }
+
+  test("alias priors law: an int entity column gives the two-level forms' rows with the entity as bigint") {
+    val s = spark
+    import s.implicits._
+    val obs = Seq[(String, Option[Int])](("a", Some(10)), ("a", Some(9)), ("a", Some(10)),
+        ("a", None), ("b", Some(-3)))
+      .toDF("alias", "entity")
+    val widened = obs.withColumn("entity", col("entity").cast("bigint"))
+    assert(contents(EntityLinking.gazetteer(obs, "alias", "entity", 2)) ==
+      contents(Oracles.gazetteerTwoLevel(widened, "alias", "entity", 2)))
+    assert(contents(Relational.aliasProbabilitiesLong(obs, "alias", "entity")) ==
+      contents(Oracles.aliasProbabilitiesLongTwoLevel(widened, "alias", "entity")))
+    assert(contents(Relational.aliasProbabilities(obs, "alias", "entity")) ==
+      contents(Oracles.aliasProbabilitiesTwoLevel(widened, "alias", "entity")))
   }
 
   test("A1 probabilities sum to 1 per alias on real data") {
