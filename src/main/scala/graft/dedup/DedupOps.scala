@@ -78,52 +78,70 @@ object DedupOps {
   }
 
   /** Prefix-filtered exact Jaccard over word n-gram sets (same result set
-    * as the all-pairs string-shingle join, law-pinned in DedupSpec against
-    * `Oracles.jaccardPairs`). Each doc's set is its hashed shingles
-    * ([[GraftFunctions.shingleHashes]]: sorted, distinct 60-bit
-    * [[TextOps.tokenHash60]] of each "|"-joined n-gram — exact up to the
-    * collision bound in [[graft.functions.ShingleHashes]]). The elements get
-    * a global rare-first total order (frequency, then hash); a doc's PREFIX
-    * is its first `n - ceil(t·n) + 1` elements in that order. Pigeonhole:
-    * any pair with J ≥ t shares a prefix element — for ANY fixed global
-    * order, so an order over hashes keeps the bound (the prefix-filter
-    * candidate bound of the worst-case-optimal similarity-join framing,
-    * PAPERS.md) — and the candidate join runs on prefixes only. Because
-    * prefixes are the RAREST elements, the quadratic bucket blowup
-    * concentrates exactly where buckets are smallest. Survivors are
-    * verified with an exact common count, `size(array_intersect)` over the
-    * two long arrays. Every exchange carries 8-byte hashes, never n-gram
-    * strings. The all-pairs shingle self-join this replaces is the
-    * textbook similarity-join bottleneck at corpus scale.
+    * as the all-pairs string-shingle join, law-pinned in DedupSpec and
+    * PropertySpec against `Oracles.jaccardPairs`). Each doc's set is its
+    * hashed shingles ([[GraftFunctions.shingleHashes]]: sorted, distinct
+    * 60-bit [[TextOps.tokenHash60]] of each "|"-joined n-gram — exact up to
+    * the collision bound in [[graft.functions.ShingleHashes]]). The
+    * elements get a global rare-first total order (frequency, then hash); a
+    * doc's PREFIX is its first `n - ceil(t·n) + 1` elements in that order.
+    * Pigeonhole: any pair with J ≥ t shares a prefix element — for ANY
+    * fixed global order, so an order over hashes keeps the bound (the
+    * prefix-filter candidate bound of the worst-case-optimal similarity-join
+    * framing, PAPERS.md) — and the candidate join runs on prefixes only.
+    *
+    * A shingle found in one document only (freq 1) can never produce a
+    * candidate, so it never leaves its document (PPJoin's first cut). Since
+    * every singleton sorts before every shared element, a shared element's
+    * rank in its doc is `n_sh − (shared elements of the doc) + (its rank
+    * among them)`: the rank needs only the doc's shared rows and its size.
+    *
+    * Scale shape: the exploded (doc_id, h) rows cross the wire ONCE, in
+    * the window exchange keyed on `h` that counts each hash's frequency;
+    * only the shared rows (freq ≥ 2) go on to the doc-keyed rank window,
+    * and only shared prefix rows reach the `a.h = b.h` self-join. The
+    * doc-keyed exchange has the session's shuffle partition count, exempt
+    * from AQE's coalescing: the stage after it also runs the candidate
+    * self-join and the verify, whose cost is the candidate fan-out, not the
+    * bytes it reads (coalesced by bytes, q221 ran that stage in one task at
+    * sf0.1). Survivors are verified with an exact common count,
+    * `size(array_intersect)` over the two long arrays. Every exchange
+    * carries 8-byte hashes, never n-gram strings. Skew: the frequency
+    * window holds every occurrence of one hash in one task, with no
+    * map-side combine, so a shingle found in a large share of the corpus
+    * (boilerplate) makes one long window partition (spilled, not failed)
+    * that sets the step's critical path. Such shingles sort last, so they
+    * rarely enter a prefix and the self-join stays small.
     * Output: (da, db, jaccard) with da < db and jaccard ≥ threshold. */
   def jaccardPairsPrefix(docs: DataFrame, idCol: String, textCol: String,
                          n: Int, threshold: Double): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    // per-doc hash SET as an array column (map-side, no shuffle): the
-    // prefix filter works on the exploded form, the exact verify intersects
-    // the arrays per candidate pair — two equi-joins + per-row expression
-    // work instead of re-exploding both sides and re-aggregating counts.
-    // r17: (a) the scan is FANNED OUT (guide §2.5 — the single-file scan
-    // serialized the shingle build onto one core); (b) eagerly materialized
-    // via localCheckpoint, NOT a lazy cache — docSets feeds THREE broadcast
-    // subtrees (freq under AQE, both verify sides), whose concurrent
-    // driver-pool build jobs each recomputed the full shingle pass when
-    // they lost the lazy-cache block race (measured: 6 × 3.7 s single-task
-    // rebuilds of this subtree inside one q22 run — the hybridLinking
-    // lesson applied here).
+    // per-doc hash SET, computed once over a fanned-out scan (the
+    // single-file scan serialized the shingle build onto one core) and
+    // materialized, not cached lazily: it feeds the exploded prefix path
+    // and both verify sides, and concurrent lazy-cache builds each
+    // recomputed the whole shingle pass
     val docSets = graft.sources.Layout.fanOutScan(docs, col(idCol))
       .select(col(idCol).as("doc_id"),
         GraftFunctions.shingleHashes(col(textCol), n).as("sh_arr"))
       .localCheckpoint()
-    val sh = docSets.select(col("doc_id"), size(col("sh_arr")).as("n_sh"),
-      explode(col("sh_arr")).as("h"))
-    val freq = sh.groupBy(col("h")).agg(count(lit(1)).as("freq"))
-    val ranked = sh.join(freq, "h")
-      .withColumn("rnk", row_number().over(Window.partitionBy(col("doc_id"))
-        .orderBy(col("freq").asc, col("h").asc)))
+    val shared = docSets
+      .select(col("doc_id"), size(col("sh_arr")).as("n_sh"),
+        explode(col("sh_arr")).as("h"))
+      .withColumn("freq", count(lit(1)).over(Window.partitionBy(col("h"))))
+      .filter(col("freq") >= 2)
+      // a fixed count: AQE would coalesce by bytes (see scale shape)
+      .repartition(docs.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt,
+        col("doc_id"))
+    val byRarity = Window.partitionBy(col("doc_id"))
+      .orderBy(col("freq").asc, col("h").asc)
+    val prefix = shared
+      .withColumn("n_shared", count(lit(1)).over(byRarity
+        .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)))
+      .withColumn("rnk", col("n_sh") - col("n_shared") + row_number().over(byRarity))
       .filter(col("rnk") <= col("n_sh") - ceil(col("n_sh") * threshold) + 1)
       .select(col("doc_id"), col("h"))
-    val cands = ranked.as("a").join(ranked.as("b"),
+    val cands = prefix.as("a").join(prefix.as("b"),
         col("a.h") === col("b.h") && col("a.doc_id") < col("b.doc_id"))
       .select(col("a.doc_id").as("da"), col("b.doc_id").as("db")).distinct()
     val pairs = cands

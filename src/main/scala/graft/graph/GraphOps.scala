@@ -1,6 +1,6 @@
 package graft.graph
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -95,7 +95,8 @@ object GraphOps {
     *
     * Scale shape per round: one edges-sized shuffle (neighbor-min
     * aggregation) + two label-table equi-joins (vertex-sized); the
-    * convergence probe is a single 1-row SUM action — labels decrease
+    * convergence probe is a SUM of the labels, observed by the round's
+    * materialization itself (no job of its own) — labels decrease
     * monotonically, so an unchanged sum IS a fixpoint proof, no except()
     * diff needed ([[superstep]]'s probe).
     *
@@ -172,9 +173,11 @@ object GraphOps {
     * `localCheckpoint` every `every` rounds and after the last, so each
     * round plans one layer over a materialized table instead of the whole
     * history. With a `probe`, every materialized state is reduced to one
-    * value and the loop ends early when that value repeats (the round
-    * changed nothing, so every later round is a no-op) or is null (an
-    * aggregate over zero rows: the state is empty). With `unconverged`,
+    * value by an aggregate that the materializing job computes on the side
+    * (`Dataset.observe`, so the probe runs no job of its own), and the loop
+    * ends early when that value repeats (the round changed nothing, so
+    * every later round is a no-op) or is null (an aggregate over zero rows:
+    * the state is empty). With `unconverged`,
     * a probe that still changed in the last round throws that message:
     * the caller's contract needs the fixpoint, not a bounded round count.
     *
@@ -201,13 +204,15 @@ object GraphOps {
       round += 1
       state = step(state, round)
       if (round % every == 0 || round == rounds) {
-        val ck = state.localCheckpoint()
+        val obs = Observation()
+        val ck = probe.fold(state)(p => state.observe(obs, p.as("probe")))
+          .localCheckpoint()
         materialized += 1
         state =
           if (materialized <= 8) ck
           else ck.sparkSession.createDataFrame(ck.rdd, ck.schema)
-        probe.foreach { p =>
-          val v = Option(state.agg(p).first().get(0))
+        if (probe.isDefined) {
+          val v = Option(obs.get("probe"))
           done = v.isEmpty || v == last
           last = v
         }

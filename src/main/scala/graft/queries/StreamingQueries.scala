@@ -538,11 +538,13 @@ object StreamingQueries {
 
     // Streaming near-dup dedup keyed on the per-row SimHash expression;
     // gated on the surviving signature set (= distinct batch SimHashes).
+    // Only the key is sunk, so the dedup state exchange carries the
+    // SimHash, not the document rows and their text.
     "q65_stream_neardup" -> ((s, d) =>
       runToTable(
-        StreamOps.nearDupDedup(docsStream(s, d), "text", "1 hour"),
+        StreamOps.nearDupDedup(docsStream(s, d), "text", "1 hour")
+          .select(col("simhash")),
         "q65_stream_neardup", "append")
-        .select(col("simhash"))
         .orderBy(col("simhash"))),
 
     // CUSTOM arbitrary state (flatMapGroupsWithState + event-time timeout):

@@ -6,25 +6,48 @@ import graft.dedup.DedupOps
 
 class DedupSpec extends SparkSuite {
 
+  private val docRows = Seq(
+    (0L, "a b c d e f"),
+    (1L, "a b c d e g"),   // jaccard 4/6? shingles overlap high with 0
+    (2L, "a b c d e f"),   // exact dup of 0
+    (3L, "x y z w v u"),
+    (4L, "x y z w v u t"),
+    (5L, "p q r"))
+
   private def docs = {
     val s = spark
     import s.implicits._
-    Seq(
-      (0L, "a b c d e f"),
-      (1L, "a b c d e g"),   // jaccard 4/6? shingles overlap high with 0
-      (2L, "a b c d e f"),   // exact dup of 0
-      (3L, "x y z w v u"),
-      (4L, "x y z w v u t"),
-      (5L, "p q r")).toDF("doc_id", "text")
+    docRows.toDF("doc_id", "text")
   }
 
   test("prefix-filtered Jaccard equals the all-pairs join at every threshold") {
-    for (t <- Seq(0.3, 0.5, 0.8)) {
-      val full = Oracles.jaccardPairs(docs, "doc_id", "text", 3, t)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-      val pref = DedupOps.jaccardPairsPrefix(docs, "doc_id", "text", 3, t)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-      assert(pref == full, s"threshold $t")
+    val s = spark
+    import s.implicits._
+    val unique = (0 until 20).map(i => s"u$i").mkString(" ")
+    val corpora: Seq[(String, Seq[(Long, String)])] = Seq(
+      "mixed" -> docRows,
+      // every shingle is found in one doc: no candidate, no pair
+      "all singletons" -> (0L until 5L).map(i => i -> s"s$i a$i b$i c$i d$i"),
+      // doc 0's 20 singletons fill its whole prefix at every threshold,
+      // so its shared shingles (those of doc 1) never reach the self-join
+      "singletons fill the prefix" -> Seq(0L -> s"$unique w x y z", 1L -> "w x y z",
+        2L -> "w x y z q"),
+      "all duplicates" -> (0L until 4L).map(_ -> "d e f g h"),
+      // no shingles at all: below n tokens, empty, null
+      "empty and null text" -> Seq(0L -> "", 1L -> null, 2L -> "a b", 3L -> "a b",
+        4L -> "a b c d", 5L -> "a b c d"),
+      // n_sh = 1: the prefix is the one shingle
+      "one shingle" -> Seq(0L -> "p q r", 1L -> "p q r", 2L -> "q r s",
+        3L -> "p q r s"))
+    def pairSet(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    for ((name, rows) <- corpora; t <- Seq(0.25, 0.3, 0.5, 0.8, 0.99)) {
+      val corpus = rows.toDF("doc_id", "text")
+      val full = pairSet(Oracles.jaccardPairs(corpus, "doc_id", "text", 3, t))
+      val pref = pairSet(DedupOps.jaccardPairsPrefix(corpus, "doc_id", "text", 3, t))
+      assert(pref == full, s"$name at threshold $t")
+      if (name == "all singletons") assert(full.isEmpty)
+      if (name == "all duplicates") assert(full.size == 6)
     }
   }
 

@@ -388,6 +388,25 @@ class GraphSpec extends SparkSuite {
     assert(out.count() == 0L)
   }
 
+  test("connectedComponentsDF's convergence probe runs no action of its own") {
+    val s = spark
+    import s.implicits._
+    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, GlobalLimit,
+      LocalLimit, LogicalPlan, Project}
+    // the probe rides each round's materializing job (observed metrics), so
+    // a call runs checkpoints only, never a one-row global aggregate
+    def globalAgg(p: LogicalPlan): Boolean = p match {
+      case a: Aggregate => a.groupingExpressions.isEmpty
+      case l @ (_: GlobalLimit | _: LocalLimit | _: Project) => l.children.exists(globalAgg)
+      case _ => false
+    }
+    val e = ((1L to 11L).map(i => (i, i + 1)) :+ (20L -> 21L)).toDF("src", "dst")
+    val actions = SparkSpec.actionsOf(GraphOps.connectedComponentsDF(e))
+    assert(actions.nonEmpty)
+    val probes = actions.filter { case (_, qe) => globalAgg(qe.analyzed) }
+    assert(probes.map(_._1).isEmpty, "standalone aggregate actions")
+  }
+
   test("connectedComponentsDF on a deep path == GraphX CC, through the stats reset") {
     val s = spark
     import s.implicits._

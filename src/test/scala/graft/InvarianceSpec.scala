@@ -30,7 +30,8 @@ class InvarianceSpec extends SparkSuite {
   }
 
   Seq("q34_entity_linking", "q79_hybrid_linking", "q13_two_hop_network",
-      "q17_suspicious_aliases", "q07_alias_probabilities").foreach { q =>
+      "q17_suspicious_aliases", "q07_alias_probabilities", "q22_jaccard_pairs",
+      "q65_stream_neardup").foreach { q =>
     test(s"$q returns the same rows under every join, partition and AQE setting") {
       val base = rows(q)
       assert(base.nonEmpty)

@@ -1,16 +1,14 @@
 package graft
 
-import scala.jdk.CollectionConverters._
-
 import org.apache.spark.sql.catalyst.expressions.{Attribute, Expression}
 import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
-import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
-import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeLike}
+import org.apache.spark.sql.execution.{GenerateExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanHelper, QueryStageExec}
+import org.apache.spark.sql.execution.exchange.{Exchange, ReusedExchangeExec,
+  ShuffleExchangeExec, ShuffleExchangeLike}
 import org.apache.spark.sql.execution.joins.{BaseJoinExec, BroadcastHashJoinExec}
 import org.apache.spark.sql.execution.window.{WindowExec, WindowGroupLimitExec}
 import org.apache.spark.sql.types.{ArrayType, FloatType}
-import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Physical-plan shape assertions: the scale properties the Scaladoc claims
   * (broadcasts, pushdown, pruning, codegen) are checked here so a regression
@@ -348,28 +346,9 @@ class PlanSpec extends SparkSuite with AdaptiveSparkPlanHelper {
     } finally spark.conf.set(key, prev)
   }
 
-  /** Every physical plan `run` executes, AQE-final: a query that
-    * materializes its inputs (localCheckpoint) or runs a stream executes
-    * several, and the returned DataFrame shows only the last. A marker
-    * query closes the capture, since listener events arrive in order. */
-  private def plansOf(run: => Unit): Seq[SparkPlan] = {
-    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
-    val marker = "plan_capture_end"
-    val done = new java.util.concurrent.CountDownLatch(1)
-    val listener = new QueryExecutionListener {
-      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
-        if (qe.analyzed.output.exists(_.name == marker)) done.countDown()
-        else plans.add(qe.executedPlan)
-      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
-    }
-    spark.listenerManager.register(listener)
-    try {
-      run
-      spark.range(1).select(org.apache.spark.sql.functions.lit(1).as(marker)).collect()
-      assert(done.await(60, java.util.concurrent.TimeUnit.SECONDS), "capture did not close")
-    } finally spark.listenerManager.unregister(listener)
-    plans.asScala.toSeq
-  }
+  /** Every physical plan `run` executes, AQE-final. */
+  private def plansOf(run: => Unit): Seq[SparkPlan] =
+    SparkSpec.actionsOf(run).map(_._2.executedPlan)
 
   private def carriesVector(p: SparkPlan): Boolean =
     p.output.exists(_.dataType match {
@@ -467,5 +446,92 @@ class PlanSpec extends SparkSuite with AdaptiveSparkPlanHelper {
         assert(offenders.isEmpty, s"$q still forces a vector broadcast:\n$phys")
       }
     } finally spark.conf.set(key, prev)
+  }
+
+  /** The rows the subtree `p` hands up, read from the first node below it
+    * that counts them: an operator's output rows, a shuffle's written
+    * records (stages and reused exchanges are looked through). */
+  private def rowsOut(p: SparkPlan): Option[Long] = p match {
+    case s: QueryStageExec => rowsOut(s.plan)
+    case r: ReusedExchangeExec => rowsOut(r.child)
+    case x: ShuffleExchangeExec => x.metrics.get("shuffleRecordsWritten").map(_.value)
+    case _ => p.metrics.get("numOutputRows").map(_.value)
+      .orElse(p.children.iterator.map(rowsOut).collectFirst { case Some(n) => n })
+  }
+
+  /** Whether `p`'s own stage (down to the next exchange or query stage)
+    * explodes an array: an exchange above it carries the exploded rows. */
+  private def explodesInStage(p: SparkPlan): Boolean = p match {
+    case _: GenerateExec => true
+    case _: QueryStageExec | _: Exchange | _: ReusedExchangeExec => false
+    case _ => p.children.exists(explodesInStage)
+  }
+
+  /** Every distinct exchange across `plans` that carries exploded
+    * (doc_id, h) shingle rows. */
+  private def explodedExchanges(plans: Seq[SparkPlan]): Seq[Exchange] =
+    plans.flatMap(collectWithSubqueries(_) {
+      case x: Exchange if Set("doc_id", "h").subsetOf(x.output.map(_.name).toSet) &&
+          explodesInStage(x.child) => x
+    }).groupBy(_.canonicalized).values.map(_.head).toSeq
+
+  test("q22 exact Jaccard: the exploded shingle rows cross one exchange, never a broadcast") {
+    val carriers = explodedExchanges(queryPlans("q22_jaccard_pairs"))
+    assert(carriers.size == 1, s"exchanges of exploded rows:\n${carriers.mkString("\n")}")
+    assert(carriers.forall(_.isInstanceOf[ShuffleExchangeLike]),
+      s"exploded rows broadcast:\n${carriers.mkString("\n")}")
+  }
+
+  test("q22 exact Jaccard: the candidate self-join sees only shared shingles") {
+    val s = spark
+    import s.implicits._
+    // every doc opens with a shingle no other doc has, and rarity order
+    // puts it first in its prefix; the rest is shared, so every doc also
+    // has shared prefix elements and pairs exist
+    val shared = Seq("a b c d e f", "a b c d e g", "b c d e f g", "x y z w v", "x y z w")
+    val texts = shared.zipWithIndex.map { case (t, i) => s"q$i r$i $t" }
+    val docs = texts.zipWithIndex.map { case (t, i) => i.toLong -> t }.toDF("doc_id", "text")
+    val t = 0.5
+    // the prefix rule, on the driver: (freq, hash) order, the first
+    // n - ceil(t·n) + 1 elements of each doc
+    val sets = docs.select(graft.functions.GraftFunctions.shingleHashes(
+        org.apache.spark.sql.functions.col("text"), 3))
+      .as[Seq[Long]].collect().toSeq
+    val freq = sets.flatten.groupBy(identity).map { case (h, hs) => h -> hs.size }
+    val prefixes = sets.map { hs =>
+      hs.sortBy(h => (freq(h), h)).take(hs.size - math.ceil(hs.size * t).toInt + 1)
+    }
+    val sharedPrefixRows = prefixes.map(_.count(freq(_) >= 2)).sum
+    assert(prefixes.forall(p => freq(p.head) == 1) && sharedPrefixRows > 0)
+    val plans = plansOf(graft.dedup.DedupOps
+      .jaccardPairsPrefix(docs, "doc_id", "text", 3, t).collect())
+    val selfJoins = plans.flatMap(collectWithSubqueries(_) {
+      case j: BaseJoinExec if Seq(j.left, j.right).forall(side =>
+          Set("doc_id", "h").subsetOf(side.output.map(_.name).toSet)) &&
+          (j.leftKeys ++ j.rightKeys).nonEmpty &&
+          (j.leftKeys ++ j.rightKeys).forall {
+            case a: Attribute => a.name == "h"
+            case _ => false
+          } => j
+    })
+    assert(selfJoins.size == 1, plans.mkString("\n"))
+    val j = selfJoins.head
+    Seq(j.left, j.right).foreach { side =>
+      assert(rowsOut(side).contains(sharedPrefixRows.toLong),
+        s"self-join input is not the $sharedPrefixRows shared prefix rows " +
+          s"(${prefixes.map(_.size).sum} with singletons):\n$j")
+    }
+  }
+
+  test("q65 stream dedup: no exchange carries the document text") {
+    val plans = queryPlans("q65_stream_neardup")
+    val dedupExchanges = plans.flatMap(collectWithSubqueries(_) {
+      case x: ShuffleExchangeLike if x.output.exists(_.name == "simhash") => x
+    })
+    assert(dedupExchanges.nonEmpty, s"no simhash exchange in ${plans.size} plans")
+    val offenders = plans.flatMap(collectWithSubqueries(_) {
+      case x: Exchange if x.output.exists(_.name == "text") => x
+    })
+    assert(offenders.isEmpty, s"q65 ships text:\n${offenders.mkString("\n")}")
   }
 }

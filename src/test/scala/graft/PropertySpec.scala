@@ -202,6 +202,30 @@ class PropertySpec extends SparkSuite {
     })
   }
 
+  test("prefix-filtered Jaccard == the all-pairs oracle, any corpus and threshold") {
+    val s = spark
+    import s.implicits._
+    // a tiny vocabulary shares shingles across docs; the doc-unique token
+    // u<i> makes singleton shingles that may fill part or all of a prefix
+    val word = Gen.oneOf("a", "b", "c", "d", "e")
+    val doc = for {
+      ws <- Gen.choose(0, 9).flatMap(Gen.listOfN(_, word))
+      uniq <- Gen.choose(0, 3)
+      at <- Gen.choose(0, ws.size)
+      isNull <- Gen.frequency(9 -> false, 1 -> true)
+    } yield (ws, uniq, at, isNull)
+    check(Prop.forAll(Gen.listOfN(10, doc), Gen.oneOf(0.25, 0.5, 0.8, 0.99)) { (ds, t) =>
+      val docs = ds.zipWithIndex.map { case ((ws, uniq, at, isNull), i) =>
+        val u = Seq.fill(uniq)(s"u$i")
+        i.toLong -> (if (isNull) null else (ws.take(at) ++ u ++ ws.drop(at)).mkString(" "))
+      }.toDF("doc_id", "text")
+      def pairs(df: org.apache.spark.sql.DataFrame) =
+        df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+      pairs(graft.dedup.DedupOps.jaccardPairsPrefix(docs, "doc_id", "text", 3, t)) ==
+        pairs(Oracles.jaccardPairs(docs, "doc_id", "text", 3, t))
+    })
+  }
+
   test("ivf2Assign: clusters are seed ids, and its distance is ≥ the flat argmin's") {
     val s = spark
     import s.implicits._
