@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.functions.GraftFunctions
+import graft.similarity.BlockedJoin
 import graft.text.TextOps
 
 /** Deduplication operators for the 100 TB training-data surface (north star):
@@ -169,8 +170,8 @@ object DedupOps {
   def minhashHash(i: Column, hs: Column): Column =
     ((i.cast("long") * 2L + 1L) * hs + i.cast("long") * 7919L) % minhashMod
 
-  /** Per-band bucket strings from an array signature — a pure expression
-    * (no shuffle): bucket b = md5 of the "|"-joined decimal slice
+  /** Per-band bucket strings from an array signature, one column per band
+    * — pure expressions (no shuffle): bucket b = md5 of the "|"-joined decimal slice
     * sig[b·r .. b·r+r-1]. Byte-identical to the historical collect_list
     * banding, so every DuckDB oracle twin is untouched.
     *
@@ -178,36 +179,24 @@ object DedupOps {
     * trailing signature positions (the historical long form made a partial
     * final band from them), so a non-divisible config is a construction
     * error, not a quiet behavior change. */
-  def bandBuckets(sig: Column, k: Int, rowsPerBand: Int): Column = {
+  def bandBuckets(sig: Column, k: Int, rowsPerBand: Int): Seq[Column] = {
     require(k % rowsPerBand == 0,
       s"bandBuckets: k=$k must be a multiple of rowsPerBand=$rowsPerBand " +
         "(a remainder would silently drop trailing signature positions)")
-    array((0 until k / rowsPerBand).map { b =>
+    (0 until k / rowsPerBand).map { b =>
       md5(array_join(transform(slice(sig, b * rowsPerBand + 1, rowsPerBand),
         x => x.cast("string")), "|"))
-    }: _*)
+    }
   }
 
-  /** Exploded (doc_id, band, bucket, prefix) banding table over array
-    * signatures — map-side only. `prefix` carries the doc's LOWER-band
-    * buckets for first-collision-band emission: a bucket join that also
-    * requires NO lower band to collide emits each candidate pair exactly
-    * once, with no pair-level distinct.
-    *
-    * The declared k must match the true signature length: a mismatch would
-    * slice short/overlong arrays into different md5 buckets instead of
-    * failing, so the plan carries a per-row assert_true (O(1) size check,
-    * kept alive as a filter condition so Catalyst cannot prune it). */
-  def bandedBuckets(sigA: DataFrame, k: Int, rowsPerBand: Int): DataFrame =
-    sigA
-      .filter(assert_true(size(col("sig")) === k,
-        lit(s"bandedBuckets: signature length does not match declared k=$k"))
-        .isNull)
-      .select(col("doc_id"), bandBuckets(col("sig"), k, rowsPerBand).as("bs"))
-      .select(col("doc_id"), col("bs"),
-        posexplode(col("bs")).as(Seq("pos", "bucket")))
-      .select(col("doc_id"), col("pos").as("band"), col("bucket"),
-        slice(col("bs"), lit(1), col("pos")).as("prefix"))
+  /** `sig (doc_id, sig)` with a per-row check that every signature has the
+    * declared length k: a mismatch would slice short/overlong arrays into
+    * different md5 buckets instead of failing. The assert_true is an O(1)
+    * size check kept alive as a filter condition, so Catalyst cannot prune
+    * it. */
+  private def checkedLength(sig: DataFrame, k: Int): DataFrame =
+    sig.filter(assert_true(size(col("sig")) === k,
+      lit(s"signature length does not match declared k=$k")).isNull)
 
   /** Per-position signature agreement estimate between two array
     * signatures: |{i : a[i] = b[i]}| / k (exact double — n/k with k a power
@@ -217,65 +206,32 @@ object DedupOps {
     size(filter(zip_with(a, b, (x, y) => x === y), (c: Column) => c))
       .cast("double") / k
 
-  /** Candidate generation + verification over PRE-COMPUTED array signatures
-    * (doc_id, sig): band buckets → first-collision-band candidates → exact
-    * per-position agreement estimate. LAZY — the caller owns caching and
-    * materialization of `sig` (it is referenced three times in the plan).
-    * Exists so incremental callers (q125) that already paid for the
-    * signatures never re-shingle the text.
-    *
-    * First-collision-band emission: each banded row carries its LOWER-band
-    * bucket array (`prefix` from [[bandedBuckets]] — a map-side slice, no
-    * groupBy), and the bucket join keeps a collision only when NO lower
-    * band also collides — exactly one emission per pair by construction,
-    * so there is no pair-level distinct. The candidate SET is unchanged
-    * (any colliding pair collides in a first band), so the q23/q52/q125
-    * family oracles are result-identical. The verify is two per-doc-grain
-    * equi-joins plus one [[sigAgreement]] expression — the historical long
-    * form joined k rows per side per candidate and re-aggregated. */
+  /** MinHash-LSH pairs over PRE-COMPUTED array signatures (doc_id, sig):
+    * the [[BlockedJoin]] self form over the [[bandBuckets]] keys, verified
+    * by [[sigAgreement]] (the signature is an array, so it joins back by
+    * id). LAZY — the caller owns materialization of `sig`, which the plan
+    * reads three times. Exists so incremental callers (q125) that already
+    * paid for the signatures never re-shingle the text.
+    * Output: (da, db, est_jaccard) with est >= threshold. */
   def minhashPairsFromSignatures(sig: DataFrame, k: Int, rowsPerBand: Int,
-                                 threshold: Double): DataFrame = {
-    val banded = bandedBuckets(sig, k, rowsPerBand)
-    val cands = banded.as("a").join(banded.as("b"),
-        col("a.band") === col("b.band") && col("a.bucket") === col("b.bucket") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .filter(!exists(zip_with(col("a.prefix"), col("b.prefix"),
-        (x, y) => x === y), identity[Column]))
-      .select(col("a.doc_id").as("da"), col("b.doc_id").as("db"))
-    cands
-      .join(sig.select(col("doc_id").as("da"), col("sig").as("sa")), Seq("da"))
-      .join(sig.select(col("doc_id").as("db"), col("sig").as("sb")), Seq("db"))
-      .select(col("da"), col("db"),
-        sigAgreement(col("sa"), col("sb"), k).as("est_jaccard"))
+                                 threshold: Double): DataFrame =
+    BlockedJoin.self(checkedLength(sig, k), col("doc_id"),
+        bandBuckets(col("sig"), k, rowsPerBand), col("sig"), sigAgreement(_, _, k))
+      .select(col("a").as("da"), col("b").as("db"), col("score").as("est_jaccard"))
       .filter(col("est_jaccard") >= threshold)
-  }
 
-  /** CROSS-corpus candidate generation + verification over two
-    * pre-computed array-signature tables (doc_id, sig) — the batch×corpus
-    * probe shape (q125 incremental dedup, q129 fuzzy decontamination):
-    * side A's bands probe side B's bucket table, side B is NEVER
-    * self-joined, so per-increment cost scales with A, not B. Same
-    * first-collision-band emission as the self-join form (each (a, b)
-    * candidate is emitted only in its FIRST colliding band via the prefix
-    * check — no pair-level distinct), same one-expression [[sigAgreement]]
-    * verify over the two per-doc arrays. LAZY — callers own caching of the
-    * signature inputs (each is referenced twice in the plan).
+  /** CROSS-corpus MinHash-LSH pairs over two pre-computed array-signature
+    * tables (doc_id, sig) — the batch×corpus probe shape (q125 incremental
+    * dedup, q129 fuzzy decontamination): the [[BlockedJoin]] cross form,
+    * so side B is never self-joined and per-increment cost scales with A.
+    * LAZY — callers own materialization of the signature inputs.
     * Output: (ida, idb, est_jaccard) with est >= threshold. */
   def crossPairsFromSignatures(sigA: DataFrame, sigB: DataFrame, k: Int,
-                               rowsPerBand: Int, threshold: Double): DataFrame = {
-    val cands = bandedBuckets(sigA, k, rowsPerBand).as("a")
-      .join(bandedBuckets(sigB, k, rowsPerBand).as("b"),
-        col("a.band") === col("b.band") && col("a.bucket") === col("b.bucket"))
-      .filter(!exists(zip_with(col("a.prefix"), col("b.prefix"),
-        (x, y) => x === y), identity[Column]))
-      .select(col("a.doc_id").as("ida"), col("b.doc_id").as("idb"))
-    cands
-      .join(sigA.select(col("doc_id").as("ida"), col("sig").as("sa")), Seq("ida"))
-      .join(sigB.select(col("doc_id").as("idb"), col("sig").as("sb")), Seq("idb"))
-      .select(col("ida"), col("idb"),
-        sigAgreement(col("sa"), col("sb"), k).as("est_jaccard"))
+                               rowsPerBand: Int, threshold: Double): DataFrame =
+    BlockedJoin.cross(checkedLength(sigA, k), checkedLength(sigB, k), col("doc_id"),
+        bandBuckets(col("sig"), k, rowsPerBand), col("sig"), sigAgreement(_, _, k))
+      .select(col("a").as("ida"), col("b").as("idb"), col("score").as("est_jaccard"))
       .filter(col("est_jaccard") >= threshold)
-  }
 
   /** Per-doc array signatures straight off the text column via the NATIVE
     * fused expression ([[graft.functions.MinhashSignature]]) — value- and
@@ -325,14 +281,13 @@ object DedupOps {
     * with the exact per-position signature agreement estimate.
     * Output: (da, db, est_jaccard) with est >= the rule's threshold.
     *
-    * r17: signatures come from [[minhashSignatureRows]] (fused native
-    * expression over the fanned-out scan — one corpus exchange REMOVED vs
-    * the explode+groupBy form; values identical, oracles untouched), and
-    * the signature table is eagerly materialized (localCheckpoint, not a
-    * lazy cache) because it feeds both banded self-join sides plus two
-    * verify joins — under AQE those sides broadcast, and concurrent
+    * Signatures come from [[minhashSignatureRows]] (the fused native
+    * expression over the fanned-out scan, no corpus exchange), and the
+    * signature table is eagerly materialized (localCheckpoint, not a lazy
+    * cache) because it feeds both banded self-join sides plus two verify
+    * joins — under AQE those sides broadcast, and concurrent
     * broadcast-build jobs racing a lazy cache each recompute the signature
-    * pass (the q22/hybridLinking lesson). */
+    * pass. */
   def minhashPairs(docs: DataFrame): DataFrame = {
     val sig = nearDupSignatures(docs).localCheckpoint()
     minhashPairsFromSignatures(sig, NearDup.Hashes, NearDup.RowsPerBand,

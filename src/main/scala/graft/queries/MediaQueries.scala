@@ -1,10 +1,11 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.multimodal.MultimodalOps
+import graft.similarity.BlockedJoin
 
 /** Multimodal plumbing query (north-star surface): synthetic media table
   * over `documents` — binary payload construction, typed metadata, and the
@@ -13,6 +14,24 @@ import graft.multimodal.MultimodalOps
   * SQL-expressible).
   */
 object MediaQueries {
+
+  /** Near-dup pairs at Hamming ≤ 3 over decoded 64-bit media fingerprints
+    * held as four 16-bit words (b0..b3), for q154/q155: the
+    * [[BlockedJoin]] self form with one band per word — exact by
+    * pigeonhole, since 3 differing bits touch at most 3 of the 4 words.
+    * The four words ride the candidate exchange as the payload, so the
+    * verify needs no join-back. Output: (da, db, hamming), ordered. */
+  private def wordPairs(decoded: DataFrame): DataFrame = {
+    val words = Seq("b0", "b1", "b2", "b3")
+    val fps = decoded.filter(col("decoded"))
+      .localCheckpoint() // feeds both band sides
+    def hamming(x: Column, y: Column) =
+      words.map(w => BlockedJoin.hamming(x.getField(w), y.getField(w))).reduce(_ + _)
+    BlockedJoin.self(fps, col("doc_id"), words.map(col), struct(words.map(col): _*), hamming)
+      .select(col("a").as("da"), col("b").as("db"), col("score").as("hamming"))
+      .filter(col("hamming") <= 3)
+      .orderBy(col("da"), col("db"))
+  }
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q37_media_meta" -> ((s, d) =>
@@ -200,27 +219,7 @@ object MediaQueries {
           MultimodalOps.MediaRow(id, "image",
             MultimodalOps.encodePngGray(9, 8, lumas), "png", 9, 8, 0L)
         }
-      val hashes = MultimodalOps.decodeDHashes(media).toDF()
-        .filter(col("decoded"))
-        .localCheckpoint() // feeds the band explode AND both verify sides
-      val bandRows = hashes.select(col("doc_id"),
-        posexplode(array(col("b0"), col("b1"), col("b2"), col("b3"))))
-        .select(col("doc_id"), col("pos").as("band"), col("col").as("key"))
-      val cand = bandRows.as("a").join(bandRows.as("b"),
-          col("a.band") === col("b.band") && col("a.key") === col("b.key") &&
-            col("a.doc_id") < col("b.doc_id"))
-        .select(col("a.doc_id").as("da"), col("b.doc_id").as("db")).distinct()
-      cand
-        .join(hashes.select(col("doc_id").as("da"), col("b0").as("a0"),
-          col("b1").as("a1"), col("b2").as("a2"), col("b3").as("a3")), Seq("da"))
-        .join(hashes.select(col("doc_id").as("db"), col("b0").as("c0"),
-          col("b1").as("c1"), col("b2").as("c2"), col("b3").as("c3")), Seq("db"))
-        .withColumn("hamming",
-          expr("bit_count(a0 ^ c0) + bit_count(a1 ^ c1) + " +
-            "bit_count(a2 ^ c2) + bit_count(a3 ^ c3)"))
-        .filter(col("hamming") <= 3)
-        .select(col("da"), col("db"), col("hamming"))
-        .orderBy(col("da"), col("db"))
+      wordPairs(MultimodalOps.decodeDHashes(media).toDF())
     }),
 
     // AUDIO NEAR-DUP DETECTION via REAL fingerprinting — q154's triangle
@@ -256,27 +255,7 @@ object MediaQueries {
           MultimodalOps.MediaRow(id, "audio",
             MultimodalOps.encodeWav(8000, samples), "wav", 0, 0, 0L)
         }
-      val fps = MultimodalOps.decodeAudioFingerprints(media).toDF()
-        .filter(col("decoded"))
-        .localCheckpoint() // feeds the band explode AND both verify sides
-      val bandRows = fps.select(col("doc_id"),
-        posexplode(array(col("b0"), col("b1"), col("b2"), col("b3"))))
-        .select(col("doc_id"), col("pos").as("band"), col("col").as("key"))
-      val cand = bandRows.as("a").join(bandRows.as("b"),
-          col("a.band") === col("b.band") && col("a.key") === col("b.key") &&
-            col("a.doc_id") < col("b.doc_id"))
-        .select(col("a.doc_id").as("da"), col("b.doc_id").as("db")).distinct()
-      cand
-        .join(fps.select(col("doc_id").as("da"), col("b0").as("a0"),
-          col("b1").as("a1"), col("b2").as("a2"), col("b3").as("a3")), Seq("da"))
-        .join(fps.select(col("doc_id").as("db"), col("b0").as("c0"),
-          col("b1").as("c1"), col("b2").as("c2"), col("b3").as("c3")), Seq("db"))
-        .withColumn("hamming",
-          expr("bit_count(a0 ^ c0) + bit_count(a1 ^ c1) + " +
-            "bit_count(a2 ^ c2) + bit_count(a3 ^ c3)"))
-        .filter(col("hamming") <= 3)
-        .select(col("da"), col("db"), col("hamming"))
-        .orderBy(col("da"), col("db"))
+      wordPairs(MultimodalOps.decodeAudioFingerprints(media).toDF())
     }))
 
   def oracles: Map[String, String] = Map(

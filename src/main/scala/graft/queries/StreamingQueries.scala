@@ -8,6 +8,7 @@ import org.apache.spark.sql.streaming.Trigger
 
 import graft.Tables
 import graft.functions.GraftFunctions
+import graft.similarity.BlockedJoin
 import graft.streaming.StreamOps
 import graft.text.EntityLinking
 
@@ -316,7 +317,10 @@ object StreamingQueries {
     // join on (band, bucket) + the house first-collision-band prefix
     // filter emits each (arrival, corpus) candidate EXACTLY ONCE with no
     // pair-level distinct and no state store; the per-pair verify is one
-    // zip_with over the two signature arrays. Per-arrival cost is its
+    // zip_with over the two signature arrays. Both sides are
+    // BlockedJoin.blocks tables meeting in BlockedJoin.candidates, and each
+    // carries its signature on its exploded rows: a streaming side cannot
+    // be joined back to itself by id. Per-arrival cost is its
     // band fan-out (8 bucket lookups) — flat in corpus size. The gated
     // output is the per-arrival verdict (min-id corpus canonical + match
     // count, aggregated post-sink); oracle = q125's dupc rule verbatim.
@@ -332,34 +336,24 @@ object StreamingQueries {
       import graft.dedup.DedupOps
       import graft.dedup.DedupOps.NearDup
       val corpus = Tables.documents(s, d).filter(col("source") === "src0")
-      val sigC = DedupOps.nearDupSignatures(corpus).localCheckpoint()
-      val staticSide = DedupOps.bandedBuckets(sigC, NearDup.Hashes, NearDup.RowsPerBand)
-        .join(sigC, Seq("doc_id"))
-        .select(col("doc_id").as("cid"), col("band"), col("bucket"),
-          col("prefix").as("cprefix"), col("sig").as("csig"))
-        .localCheckpoint()
-      val streamBands = docsStream(s, d)
-        .filter(col("source") =!= "src0")
-        .withColumn("sig",
-          GraftFunctions.minhashSignature(col("text"), NearDup.Shingle,
-            NearDup.Hashes))
-        // no-shingle docs have all-NULL signatures (the batch form has no
-        // signature row at all) — the sig[0] null test replaces the old
-        // interpreted size(shingles) > 0 HOF pass, same row set
-        .filter(col("sig").getItem(0).isNotNull)
-        .withColumn("bs",
-          DedupOps.bandBuckets(col("sig"), NearDup.Hashes, NearDup.RowsPerBand))
-        .select(col("doc_id").as("bid"), col("sig").as("bsig"), col("bs"),
-          posexplode(col("bs")).as(Seq("pos", "bucket")))
-        .select(col("bid"), col("bsig"), col("pos").as("band"),
-          col("bucket"), slice(col("bs"), lit(1), col("pos")).as("bprefix"))
-      val matched = streamBands.join(staticSide, Seq("band", "bucket"))
-        .filter(!exists(zip_with(col("bprefix"), col("cprefix"),
-          (x, y) => x === y), identity[org.apache.spark.sql.Column]))
+      val keys = DedupOps.bandBuckets(col("sig"), NearDup.Hashes, NearDup.RowsPerBand)
+      val staticSide = BlockedJoin.blocks(DedupOps.nearDupSignatures(corpus),
+          col("doc_id"), keys, col("sig").as("csig"))
+        .localCheckpoint() // probed by every micro-batch
+      val streamSide = BlockedJoin.blocks(docsStream(s, d)
+          .filter(col("source") =!= "src0")
+          .withColumn("sig",
+            GraftFunctions.minhashSignature(col("text"), NearDup.Shingle,
+              NearDup.Hashes))
+          // no-shingle docs have all-NULL signatures and the batch form has
+          // no signature row for them: the sig[0] null test keeps its row set
+          .filter(col("sig").getItem(0).isNotNull),
+        col("doc_id"), keys, col("sig").as("bsig"))
+      val matched = BlockedJoin.candidates(streamSide, staticSide)
         .withColumn("est",
           DedupOps.sigAgreement(col("bsig"), col("csig"), NearDup.Hashes))
         .filter(col("est") >= NearDup.Threshold)
-        .select(col("bid"), col("cid"), col("est"))
+        .select(col("a").as("bid"), col("b").as("cid"), col("est"))
       runToTable(matched, "q201_stream_dedup_probe", "append")
         .groupBy(col("bid"))
         .agg(min(col("cid")).as("canonical"),

@@ -8,6 +8,7 @@ import graft.dedup.DedupOps
 import graft.dedup.DedupOps.NearDup
 import graft.functions.GraftFunctions
 import graft.graph.GraphOps
+import graft.similarity.BlockedJoin
 import graft.sources.DedupClosure
 import graft.text.TextOps
 
@@ -31,32 +32,17 @@ object TextQueries {
       .orderBy(col("doc_id"))
 
   /** SimHash pairs at Hamming ≤ 3 by pigeonhole band blocking (q202/q222):
-    * the (doc_id, simhash) signature is cut into 4 bands of `bandBits`
-    * bits; pairs meet on a shared band and are emitted once, at their
-    * first colliding band (prefix filter), then verified exactly. Output:
-    * (da, db, hamming), da < db, ordered. */
+    * the [[BlockedJoin]] self form over the signature's 4 bands of
+    * `bandBits` bits; the 8-byte signature rides the candidate exchange and
+    * is verified exactly. Output: (da, db, hamming), da < db, ordered. */
   private def simhashBandPairs(signatures: DataFrame, bandBits: Int): DataFrame = {
     val sig = signatures.localCheckpoint() // feeds both join sides
-    val banded = sig.select(col("doc_id"), col("simhash"),
-        array((0 until 4).map(b =>
-          expr(s"shiftright(simhash, ${b * bandBits})")
-            .bitwiseAND(lit((1L << bandBits) - 1))): _*).as("bands"))
-      .select(col("doc_id"), col("simhash"), col("bands"),
-        posexplode(col("bands")).as(Seq("band", "bval")))
-      .select(col("doc_id"), col("simhash"), col("band"), col("bval"),
-        slice(col("bands"), lit(1), col("band")).as("prefix"))
-    banded.select(col("doc_id").as("da"), col("simhash").as("sa"),
-        col("band"), col("bval"), col("prefix").as("pa"))
-      .join(banded.select(col("doc_id").as("db"),
-        col("simhash").as("sb"), col("band"), col("bval"),
-        col("prefix").as("pb")), Seq("band", "bval"))
-      .filter(col("da") < col("db"))
-      .filter(!exists(zip_with(col("pa"), col("pb"), (x, y) => x === y),
-        identity[org.apache.spark.sql.Column]))
-      .withColumn("hamming",
-        bit_count(col("sa").bitwiseXOR(col("sb"))).cast("int"))
+    val bands = (0 until 4).map { b =>
+      shiftright(col("simhash"), b * bandBits).bitwiseAND(lit((1L << bandBits) - 1))
+    }
+    BlockedJoin.self(sig, col("doc_id"), bands, col("simhash"), BlockedJoin.hamming)
+      .select(col("a").as("da"), col("b").as("db"), col("score").as("hamming"))
       .filter(col("hamming") <= 3)
-      .select(col("da"), col("db"), col("hamming"))
       .orderBy(col("da"), col("db"))
   }
 
@@ -480,8 +466,8 @@ object TextQueries {
       val exact = DedupOps.jaccardPairsPrefix(dd2, "doc_id", "text", 3, 0.25)
       val bands = DedupOps.nearDupSignatures(dd2)
         .select(col("doc_id"),
-          DedupOps.bandBuckets(col("sig"), NearDup.Hashes, NearDup.RowsPerBand)
-            .as("bs"))
+          array(DedupOps.bandBuckets(col("sig"), NearDup.Hashes,
+            NearDup.RowsPerBand): _*).as("bs"))
         .localCheckpoint() // joined twice (da and db sides)
       // 1 − (1 − j^r)^b with the rule's r = 4 rows and b = 8 bands, written
       // out as the oracle's square chain
@@ -496,8 +482,7 @@ object TextQueries {
           Seq("db"))
         .select(
           least(floor(j * 10.0), lit(9.0)).cast("long").as("j_bucket"),
-          exists(zip_with(col("bsa"), col("bsb"), (x, y) => x === y),
-            identity[org.apache.spark.sql.Column]).as("caught"),
+          BlockedJoin.collides(col("bsa"), col("bsb")).as("caught"),
           floor((lit(1.0) - q8) * lit(1e9)).cast("long").as("pred_fp"))
         .groupBy(col("j_bucket"))
         .agg(count(lit(1)).as("n_pairs"),

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.functions.GraftFunctions
+import graft.similarity.BlockedJoin
 
 /** Vector / similarity-search operators for the embedding surface
   * (SURVEY.md §2 V1-V3; north-star ANN requirement). The reference consumes
@@ -176,9 +177,8 @@ object VectorOps {
     val q = broadcast(coded(queries, "query_id", "q"))
     coded(corpus, "neighbor_id", "c")
       .join(q, col("query_id") =!= col("neighbor_id"))
-      .withColumn("hamming",
-        bit_count(col("q_lo").bitwiseXOR(col("c_lo"))).cast("long") +
-          bit_count(col("q_hi").bitwiseXOR(col("c_hi"))).cast("long"))
+      .withColumn("hamming", (BlockedJoin.hamming(col("q_lo"), col("c_lo")) +
+        BlockedJoin.hamming(col("q_hi"), col("c_hi"))).cast("long"))
       .withColumn("rn", row_number().over(
         Window.partitionBy(col("query_id"))
           .orderBy(col("hamming").asc, col("neighbor_id").asc)))
@@ -204,19 +204,10 @@ object VectorOps {
 
   /** LSH-bucketed ANN pairs: per-row signatures → equi-join on the bucket →
     * exact cosine on candidates only → threshold. The scale path: candidate
-    * count ≈ N²/2^nPlanes instead of N². */
-  def lshNeighborPairs(vecs: DataFrame, nPlanes: Int, threshold: Double): DataFrame = {
-    val sig = vecs.select(col("vec_id"), col("embedding"),
-      GraftFunctions.lshSignature(col("embedding"), nPlanes).as("bucket"))
-    val a = sig.select(col("vec_id").as("ia"), col("embedding").as("ea"),
-      col("bucket"))
-    val b = sig.select(col("vec_id").as("ib"), col("embedding").as("eb"),
-      col("bucket"))
-    a.join(b, Seq("bucket")).filter(col("ia") < col("ib"))
-      .withColumn("cosine", GraftFunctions.cosineSim(col("ea"), col("eb")))
-      .filter(col("cosine") >= threshold)
-      .select(col("ia"), col("ib"), col("cosine"))
-  }
+    * count ≈ N²/2^nPlanes instead of N². The one-band case of
+    * [[lshNeighborPairsBanded]]: the whole signature is the only key. */
+  def lshNeighborPairs(vecs: DataFrame, nPlanes: Int, threshold: Double): DataFrame =
+    lshNeighborPairsBanded(vecs, nPlanes, 1, threshold, GraftFunctions.lshSignature)
 
   /** BANDED sign-LSH pairs — the recall/candidate dial [[lshNeighborPairs]]
     * lacks. One `bucket` of all nPlanes bits demands agreement on EVERY
@@ -234,11 +225,13 @@ object VectorOps {
     * brute-force scan — the first cut of q100 did exactly that and cost
     * 48 s at sf0.1 vs ~2 s now.
     *
-    * Plan shape: the bucket self-join moves ONLY (band, key, vec_id) rows;
-    * candidate pairs are dedup'd on the two ids FIRST and the embeddings
-    * attach afterwards via two hash joins for the exact-cosine verify — at
-    * no point does a candidate row carry a vector through a shuffle.
-    * Recall of both variants is hash-gated by q99.
+    * Plan shape: the [[BlockedJoin]] self form over the band substrings of
+    * the signature. Over several bands the embedding is an array payload,
+    * so the bucket self-join moves only (band, key, vec_id, prefix) rows
+    * and the embeddings attach to the surviving pairs by id for the
+    * exact-cosine verify; over one band ([[lshNeighborPairs]]) the
+    * embedding rides the bucket join. Recall of both variants is
+    * hash-gated by q99.
     *
     * `sigFn` picks the plane family: [[GraftFunctions.lshSignature]]
     * (congruential, ≤ 32 planes) or [[GraftFunctions.lshSignatureSalted]]
@@ -248,35 +241,15 @@ object VectorOps {
                              sigFn: (Column, Int) => Column): DataFrame = {
     require(nPlanes % bands == 0, "lshNeighborPairsBanded: bands must divide nPlanes")
     val rowsPerBand = nPlanes / bands
-    val sig = vecs.select(col("vec_id"),
+    val sig = vecs.select(col("vec_id"), col("embedding"),
       sigFn(col("embedding"), nPlanes).as("sig"))
-    // Each banded row also carries the bit-string PREFIX of all lower
-    // bands, so the bucket join can emit a pair only in its FIRST
-    // colliding band (no lower-band chunk agrees) — one emission per pair
-    // by construction, which replaces the old pair-level `.distinct()`
-    // shuffle (input duplication ≤ bands×) with a map-side string check.
-    val banded = sig.select(col("vec_id"),
-      explode(expr(s"transform(sequence(0, ${bands - 1}), " +
-        s"b -> struct(b AS band, substring(sig, b * $rowsPerBand + 1, $rowsPerBand) AS key, " +
-        s"substring(sig, 1, b * $rowsPerBand) AS prefix))"))
-        .as("bk"))
-      .select(col("vec_id"), col("bk.band").as("band"), col("bk.key").as("key"),
-        col("bk.prefix").as("prefix"))
-    val a = banded.select(col("vec_id").as("ia"), col("band"), col("key"),
-      col("prefix").as("pa"))
-    val b = banded.select(col("vec_id").as("ib"), col("band"), col("key"),
-      col("prefix").as("pb"))
-    val cand = a.join(b, Seq("band", "key")).filter(col("ia") < col("ib"))
-      .filter(expr(s"band = 0 OR NOT exists(sequence(0, band - 1), " +
-        s"bb -> substring(pa, bb * $rowsPerBand + 1, $rowsPerBand) = " +
-        s"substring(pb, bb * $rowsPerBand + 1, $rowsPerBand))"))
-      .select(col("ia"), col("ib"))
-    cand
-      .join(vecs.select(col("vec_id").as("ia"), col("embedding").as("ea")), Seq("ia"))
-      .join(vecs.select(col("vec_id").as("ib"), col("embedding").as("eb")), Seq("ib"))
-      .withColumn("cosine", GraftFunctions.cosineSim(col("ea"), col("eb")))
+    val keys = (0 until bands).map { b =>
+      substring(col("sig"), b * rowsPerBand + 1, rowsPerBand)
+    }
+    BlockedJoin.self(sig, col("vec_id"), keys, col("embedding"),
+        GraftFunctions.cosineSim)
+      .select(col("a").as("ia"), col("b").as("ib"), col("score").as("cosine"))
       .filter(col("cosine") >= threshold)
-      .select(col("ia"), col("ib"), col("cosine"))
   }
 
   /** IVF coarse centroids: per-cell, per-dimension mean. The double sums go

@@ -523,6 +523,55 @@ class PlanSpec extends SparkSuite with AdaptiveSparkPlanHelper {
     }
   }
 
+  /** Names of a join's key columns. */
+  private def keyNames(j: BaseJoinExec): Set[String] =
+    (j.leftKeys ++ j.rightKeys).collect { case a: Attribute => a.name }.toSet
+
+  /** Every candidate join across `plans`: the band join keyed on (band, key). */
+  private def candidateJoins(plans: Seq[SparkPlan]): Seq[BaseJoinExec] =
+    plans.flatMap(collectWithSubqueries(_) {
+      case j: BaseJoinExec if keyNames(j) == Set("band", "key") => j
+    })
+
+  /** The exchanges nearest below `p`: the ones its rows arrive through. */
+  private def feedingExchanges(p: SparkPlan): Seq[SparkPlan] = p match {
+    case s: QueryStageExec => feedingExchanges(s.plan)
+    case r: ReusedExchangeExec => Seq(r.child)
+    case x: Exchange => Seq(x)
+    case _ => p.children.flatMap(feedingExchanges)
+  }
+
+  test("blocked joins over array payloads and several bands (q23, q100): the candidate exchanges carry no payload") {
+    Seq("q23_minhash_pairs", "q100_lsh_banded_pairs").foreach { q =>
+      val joins = candidateJoins(queryPlans(q))
+      assert(joins.nonEmpty, s"$q: no (band, key) candidate join")
+      val feeding = joins.flatMap(_.children.flatMap(feedingExchanges))
+      assert(feeding.nonEmpty, s"$q: no exchange feeds the candidate join")
+      // the key prefixes (pa, pb) are arrays of band keys, not payload
+      val offenders = feeding.filter(_.output.exists(a =>
+        a.dataType.isInstanceOf[ArrayType] && !Set("pa", "pb")(a.name)))
+      assert(offenders.isEmpty, s"$q carries an array payload:\n${offenders.mkString("\n")}")
+    }
+  }
+
+  test("blocked joins whose payload rides (q27, q154, q155, q202): no pair distinct, no join-back") {
+    Seq("q27_lsh_pairs", "q154_image_phash_pairs", "q155_audio_fp_pairs",
+        "q202_simhash_pairs").foreach { q =>
+      val plans = queryPlans(q)
+      assert(candidateJoins(plans).nonEmpty, s"$q: no (band, key) candidate join")
+      val pairAggs = plans.flatMap(collectWithSubqueries(_) {
+        case g: org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+            if Set(Set("da", "db"), Set("a", "b"))(
+              g.groupingExpressions.map(_.name).toSet) => g
+      })
+      assert(pairAggs.isEmpty, s"$q aggregates pairs:\n${pairAggs.mkString("\n")}")
+      val joinBacks = plans.flatMap(collectWithSubqueries(_) {
+        case j: BaseJoinExec if keyNames(j) != Set("band", "key") => j
+      })
+      assert(joinBacks.isEmpty, s"$q joins back:\n${joinBacks.mkString("\n")}")
+    }
+  }
+
   test("q65 stream dedup: no exchange carries the document text") {
     val plans = queryPlans("q65_stream_neardup")
     val dedupExchanges = plans.flatMap(collectWithSubqueries(_) {

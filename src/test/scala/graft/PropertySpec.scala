@@ -226,6 +226,61 @@ class PropertySpec extends SparkSuite {
     })
   }
 
+  test("BlockedJoin self and cross == the all-pairs oracle: same-position key pairs, each once") {
+    val s = spark
+    import s.implicits._
+    import org.apache.spark.sql.Column
+    import graft.similarity.BlockedJoin
+    type Rows = Seq[(Long, Seq[Option[Int]], Long)]
+    // a 3-value key domain over 3 bands: equal keys at the same position
+    // (collisions, ties, several colliding bands) and at different positions
+    // (no collision) are both common; a null key collides with nothing
+    val keys = Gen.choose(0, 8).flatMap(Gen.listOfN(_,
+      Gen.listOfN(3, Gen.option(Gen.choose(0, 2)))))
+    def table(ks: Seq[Seq[Option[Int]]]): Rows =
+      ks.zipWithIndex.map { case (k, i) => (i.toLong, k, i * 7L + 3) }
+    // one payload per placement: an array joins back by id, a long and a
+    // struct of atomics ride the candidate exchange
+    val payloads: Seq[(Column, (Column, Column) => Column)] = Seq(
+      array(col("w")) -> ((x, y) => x.getItem(0) * 1000 + y.getItem(0)),
+      col("w") -> ((x, y) => x * 1000 + y),
+      struct(col("w")) -> ((x, y) => x.getField("w") * 1000 + y.getField("w")))
+    def oracle(l: Rows, r: Rows, self: Boolean) = (for {
+      (a, ka, wa) <- l
+      (b, kb, wb) <- r
+      if (!self || a < b) && ka.zip(kb).exists { case (x, y) => x.nonEmpty && x == y }
+    } yield (a, b, wa * 1000 + wb)).sorted
+    def got(df: org.apache.spark.sql.DataFrame) =
+      df.select(col("a"), col("b"), col("score").cast("long"))
+        .as[(Long, Long, Long)].collect().toSeq.sorted
+    def lawHolds(l: Rows, r: Rows): Boolean = payloads.forall { case (p, score) =>
+      val (dl, dr) = (l.toDF("id", "keys", "w"), r.toDF("id", "keys", "w"))
+      val bands = (0 until 3).map(col("keys").getItem(_))
+      got(BlockedJoin.self(dl, col("id"), bands, p, score)) == oracle(l, l, self = true) &&
+        got(BlockedJoin.cross(dl, dr, col("id"), bands, p, score)) ==
+          oracle(l, r, self = false)
+    }
+    // empty input, one row, all-identical rows, equal keys only at
+    // different positions, rows without keys, a null below a collision
+    val edges = Seq(Seq(Seq(1, 2, 0)), Seq.fill(4)(Seq(1, 1, 1)),
+      Seq(Seq(0, 1, 2), Seq(2, 0, 1), Seq(1, 2, 0))).map(_.map(_.map(Option(_)))) ++
+      Seq(Nil, Seq(Seq(None, None, None), Seq(None, None, None), Seq(Some(1), Some(1), Some(1))),
+        Seq(Seq(None, Some(1), None), Seq(None, Some(1), Some(2))))
+    val confs = Seq("spark.sql.shuffle.partitions", "spark.sql.autoBroadcastJoinThreshold")
+    val prev = confs.map(spark.conf.get)
+    try {
+      // shuffle joins, so the partition count shapes the candidate join
+      spark.conf.set(confs(1), "-1")
+      Seq(1, 3, 7).foreach { parts =>
+        spark.conf.set(confs(0), parts.toString)
+        edges.foreach { ks =>
+          assert(lawHolds(table(ks), table(ks.reverse)), s"$ks at $parts partitions")
+        }
+        check(Prop.forAll(keys, keys)((l, r) => lawHolds(table(l), table(r))))
+      }
+    } finally confs.zip(prev).foreach { case (k, v) => spark.conf.set(k, v) }
+  }
+
   test("ivf2Assign: clusters are seed ids, and its distance is ≥ the flat argmin's") {
     val s = spark
     import s.implicits._

@@ -19,8 +19,9 @@ import graft.functions.GraftFunctions
   * similarity and graph operator in main: the reference twins live in
   * [[Oracles]], main imports neither GraphX nor MLlib, the "pairs →
   * components → min id" step is written once ([[graft.graph.GraphOps.withCanonical]]),
-  * every MinHash pair call uses the one shared rule, and the graph loops
-  * run in the caller's session.
+  * every MinHash pair call uses the one shared rule, every banded
+  * similarity join runs through [[graft.similarity.BlockedJoin]], and the
+  * graph loops run in the caller's session.
   */
 class SourceGateSpec extends AnyFunSuite {
 
@@ -177,6 +178,16 @@ class SourceGateSpec extends AnyFunSuite {
     assert(wraps.size == 1 && start >= 0, wraps.mkString("\n"))
     assert(wraps.head._2 > start && wraps.head._2 <= start + 20,
       s"the createDataFrame at GraphOps.scala:${wraps.head._2 + 1} is not superstep's stats reset")
+  }
+
+  test("the band join and the first-collision filter are written only in graft.similarity") {
+    val similarity = root.resolve("graft/similarity")
+    Seq("""Seq\("band"|\.band"\)\s*===""", """exists\(zip_with\(""").foreach { pattern =>
+      val found = codeHits(pattern)
+      assert(found.nonEmpty, s"no $pattern in main")
+      val outside = found.filterNot(_._1.startsWith(similarity))
+      assert(outside.isEmpty, outside.mkString("\n"))
+    }
   }
 
   test("every main minhashPairs call takes the docs alone") {
