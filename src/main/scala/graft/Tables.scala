@@ -2,7 +2,9 @@ package graft
 
 import scala.collection.concurrent.TrieMap
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.StructType
 
@@ -17,17 +19,32 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  /** What a schema inference depends on: the files under the path (name,
-    * length, modification time) and the session's explicitly set parquet
-    * confs (`spark.sql.parquet.*`, `spark.sql.legacy.parquet.*` — e.g. the
-    * `nanosAsLong` switch [[events]] sets — and case sensitivity). */
-  private final case class SchemaKey(path: String, files: Seq[(String, Long, Long)],
+  /** A table's data files as a memo key: (path, length, modification
+    * time), by path. A table is one parquet file or a flat directory of
+    * them; `.` or `_` prefixed names (checksums, `_SUCCESS`) are skipped, as
+    * Spark's file index skips them. */
+  private def files(fs: FileSystem, path: Path): Seq[(Path, Long, Long)] =
+    fs.listStatus(path).toSeq
+      .map(f => (f.getPath, f.getLen, f.getModificationTime))
+      .filterNot { case (p, _, _) => p.getName.startsWith(".") || p.getName.startsWith("_") }
+      .sortBy(_._1.toString)
+
+  /** What a schema inference depends on: the table's [[files]] and the
+    * session's explicitly set parquet confs (`spark.sql.parquet.*`,
+    * `spark.sql.legacy.parquet.*` — e.g. the `nanosAsLong` switch [[events]]
+    * sets — and case sensitivity). */
+  private final case class SchemaKey(path: String, files: Seq[(Path, Long, Long)],
                                      confs: Map[String, String])
 
   /** Inferred schemas per session. Weak keys: an entry never keeps a
     * stopped or dropped session alive, and the values hold no session. */
   private val schemas =
     new java.util.WeakHashMap[SparkSession, TrieMap[SchemaKey, StructType]]()
+
+  /** Row counts by [[files]]: a count depends on the files alone. */
+  private val rowCounts = TrieMap.empty[Seq[(Path, Long, Long)], Long]
+
+  private def tablePath(dir: String, name: String) = s"$dir/$name.parquet"
 
   /** The table `name` under `dir`. The parquet footers are read once per
     * session, file set and parquet conf: the first load infers the schema
@@ -36,13 +53,11 @@ object Tables {
     * place (new length or modification time) or a changed parquet conf
     * infers again. A missing path fails as `spark.read.parquet` does. */
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
-    val path = s"$dir/$name.parquet"
+    val path = tablePath(dir, name)
     val hPath = new Path(path)
     val fs = hPath.getFileSystem(spark.sessionState.newHadoopConf())
     if (!fs.exists(hPath)) spark.read.parquet(path)
     else {
-      val files = fs.listStatus(hPath).toSeq
-        .map(f => (f.getPath.getName, f.getLen, f.getModificationTime)).sortBy(_._1)
       val confs = spark.conf.getAll.filter { case (k, _) =>
         k.startsWith("spark.sql.parquet.") || k.startsWith("spark.sql.legacy.parquet.") ||
           k == "spark.sql.caseSensitive"
@@ -54,10 +69,27 @@ object Tables {
           m
         }
       }
-      val schema = perSession.getOrElseUpdate(SchemaKey(path, files, confs),
+      val schema = perSession.getOrElseUpdate(SchemaKey(path, files(fs, hPath), confs),
         spark.read.parquet(path).schema)
       spark.read.schema(schema).parquet(path)
     }
+  }
+
+  /** The row count of table `name` under `dir`, for a plan literal: the sum
+    * of its parquet footers' row counts, read on the driver with no Spark
+    * job, and memoized on the same file key as [[load]]'s schema (a file
+    * rewritten in place is read again). Equals `load(...).count()`. A
+    * missing path fails with `FileNotFoundException`. */
+  def rowCount(spark: SparkSession, dir: String, name: String): Long = {
+    val path = tablePath(dir, name)
+    val hPath = new Path(path)
+    val conf = spark.sessionState.newHadoopConf()
+    val fs = hPath.getFileSystem(conf)
+    val fileKey = files(fs, hPath)
+    rowCounts.getOrElseUpdate(fileKey, fileKey.map { case (f, _, _) =>
+      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(f, conf))
+      try reader.getRecordCount finally reader.close()
+    }.sum)
   }
 
   def region(s: SparkSession, d: String): DataFrame    = load(s, d, "region")

@@ -50,38 +50,39 @@ object GraphOps {
     * for directed edges, the ids reachable from a seed along ≤ k out-edges.
     *
     * Each hop is one join over the previous state, never a re-derivation of
-    * it: `reached_k = distinct(seeds ∪ dst(edges ⋈ reached_{k-1}))`. This
-    * equals `reached_{k-1} ∪ N(reached_{k-1})` because, by induction,
+    * it: `reached_k = seeds ∪ dst(edges ⋉ broadcast(reached_{k-1}))`. As a
+    * set this equals `reached_{k-1} ∪ N(reached_{k-1})` because, by induction,
     * `reached_{k-1} ⊆ seeds ∪ N(reached_{k-2}) ⊆ seeds ∪ N(reached_{k-1})`.
-    * The plan therefore holds `edges` k times and `seeds` k + 1 times —
-    * linear in k — where a `reached ∪ N(reached)` step would copy the whole
-    * previous plan into both sides of every hop and double it.
+    * The plan holds `edges` k times and `seeds` k + 1 times — linear in k,
+    * where a `reached ∪ N(reached)` step would double it every hop.
     *
-    * Duplicate edges and self-loops are allowed: the reached set is
-    * de-duplicated every hop, so `edges` need not be (GraphSpec pins
-    * `kHop` over raw arcs to `kHop` over distinct edges).
+    * The hops carry a bag, de-duplicated once by the final `distinct()` (one
+    * exchange keyed on `id`, not one per hop). The bag is bounded: the
+    * left-semi join emits each arc at most once, so `reached_k` holds at most
+    * one row per seed plus one per arc leaving `reached_{k-1}` (duplicate arcs
+    * and self-loops count); it is hop k + 1's broadcast side, whose hash
+    * relation keeps every row, repeats included.
     *
-    * Scale shape: the reached set stays small (seed neighborhoods), so it is
-    * broadcast to the big edge table each round — k broadcast hash joins.
-    * The edge relation is never shuffled: pass it as stored, without a
-    * `distinct()` of its own, whose exchange would re-partition the whole
-    * edge table once per hop. At 100 TB the edge scan is the only big input
-    * and it is touched k times; caching `edges` between rounds amortizes
-    * the IO.
+    * Scale shape: the reached set stays small (seed neighborhoods) and is
+    * broadcast each round. Pass `edges` as stored: it is never shuffled, and
+    * at 100 TB its scan, touched k times, is the only big input.
     *
     * @param seeds single-column DataFrame `id`; seeds are hop 0 whether or
-    *              not they have edges
+    *              not they have edges, duplicates allowed
     * @param edges two-column DataFrame `src, dst` (traversed src → dst),
-    *              duplicates allowed
+    *              duplicates and self-loops allowed
     */
-  def kHop(edges: DataFrame, seeds: DataFrame, k: Int): DataFrame = {
+  def kHop(edges: DataFrame, seeds: DataFrame, k: Int): DataFrame =
+    kHopBag(edges, seeds, k).distinct()
+
+  /** [[kHop]] before its final `distinct()`, for a consumer that only
+    * semi-joins the reached set: the same ids as a bag, bounded as stated. */
+  def kHopBag(edges: DataFrame, seeds: DataFrame, k: Int): DataFrame = {
     val seedIds = seeds.select(col("id"))
-    (1 to k).foldLeft(seedIds.distinct()) { (reached, _) =>
-      // broadcast: the investigation contract is tens of seeds and a
-      // ~tens-of-ids closure
-      val neighbors = edges.join(broadcast(reached), col("src") === col("id"))
-        .select(col("dst").as("id"))
-      seedIds.union(neighbors).distinct()
+    (1 to k).foldLeft(seedIds) { (reached, _) =>
+      // broadcast: tens of seeds and a ~tens-of-ids closure
+      seedIds.union(edges.join(broadcast(reached), col("src") === col("id"), "left_semi")
+        .select(col("dst").as("id")))
     }
   }
 

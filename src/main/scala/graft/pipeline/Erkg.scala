@@ -14,9 +14,10 @@ import graft.ops.Relational
   * seeds = customer names, edges = customer↔supplier relationships implied by
   * high-quantity lineitems, aliases = part names supplied by the network.
   *
-  * Everything below is one lazy Catalyst plan: seed match (J2, broadcast),
-  * 2-hop closure (G3-G6, broadcast frontier joins), supplier projection,
-  * alias aggregation (A1, one per-alias counter). No collect() in the path.
+  * Everything below is one lazy Catalyst plan: seed match (J2, an `IN`
+  * filter), 2-hop closure (G3-G6, broadcast frontier semi-joins), supplier
+  * projection, alias aggregation (A1, one per-alias counter). No collect()
+  * in the path.
   */
 object Erkg {
 
@@ -51,15 +52,13 @@ object Erkg {
   def entityEdges(s: SparkSession, d: String): DataFrame =
     entityArcs(s, d).distinct()
 
-  /** J2/G3 — seed match: exact-name broadcast join of the suspicion list
-    * against customers (the reference's O(S×E) nested loop, replaced by a
-    * broadcast hash join). */
-  def seeds(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
+  /** J2/G3 — seed match: the suspicion list as an `IN` filter on customer
+    * names (the reference's O(S×E) nested loop), which the parquet scan
+    * takes as a pushed filter; no join, no broadcast job. */
+  def seeds(s: SparkSession, d: String): DataFrame =
     Tables.customer(s, d)
-      .join(broadcast(suspiciousNames.toDF("c_name")), Seq("c_name"))
+      .filter(col("c_name").isin(suspiciousNames: _*))
       .select(col("c_custkey").as("id"))
-  }
 
   /** G3-G6 — the 2-hop suspicious-network closure, over the raw arcs: the
     * edge table is never shuffled. */
@@ -68,13 +67,15 @@ object Erkg {
 
   /** Alias observations over the network's suppliers: every lineitem shipped
     * by a 2-hop-network supplier, joined to its part (alias = p_name,
-    * entity = p_brand). The network id set is tiny → broadcast semi-side. */
+    * entity = p_brand). The lineitems only semi-join the network, so it is
+    * taken before its final `distinct()` ([[GraphOps.kHopBag]]): the id bag
+    * is tiny → broadcast semi-side, and the flow shuffles no id. */
   def suspiciousAliasObs(s: SparkSession, d: String): DataFrame = {
-    val supp = suspiciousNetwork(s, d)
+    val supp = GraphOps.kHopBag(entityArcs(s, d), seeds(s, d), 2)
       .filter(col("id") >= supplierOffset)
       .select((col("id") - supplierOffset).as("l_suppkey"))
     Tables.lineitem(s, d)
-      .join(broadcast(supp), Seq("l_suppkey"))
+      .join(broadcast(supp), Seq("l_suppkey"), "left_semi")
       .join(Tables.part(s, d), col("l_partkey") === col("p_partkey"))
   }
 

@@ -40,9 +40,11 @@ object NlpQueries {
     EntityLinking.mentionCandidates(Tables.documents(s, d), gaz(s, d))
 
   /** Attaches each candidate's vectors by vector id: `ctx_emb` =
-    * embeddings[doc_id % nvec], `ent_emb` = embeddings[entity % nvec] (nvec
-    * counted, not assumed). `joinType` "left" keeps a candidate missing a
-    * vector for [[EntityLinking.bestLinks]]' prior backoff; "inner" drops it.
+    * embeddings[doc_id % nvec], `ent_emb` = embeddings[entity % nvec], where
+    * `nvec` is the row count of `e` (counted, not assumed: the queries pass
+    * [[Tables.rowCount]], so building the plan runs no job). `joinType`
+    * "left" keeps a candidate missing a vector for
+    * [[EntityLinking.bestLinks]]' prior backoff; "inner" drops it.
     * The embeddings scan is joined twice without a broadcast hint: while it
     * is small the planner broadcasts it and the second lookup reuses the
     * first exchange; at scale it may shuffle-join. No doc- or entity-keyed
@@ -50,9 +52,8 @@ object NlpQueries {
     * and every `entity` a `part` key (true of each caller: the documents
     * token stream, the lineitem ⋈ part gazetteer); under it the rows equal
     * the id-table joins (law-tested in NlpSpec). */
-  private[graft] def withVectors(cand: DataFrame, e: DataFrame,
+  private[graft] def withVectors(cand: DataFrame, e: DataFrame, nvec: Long,
                                  joinType: String): DataFrame = {
-    val nvec = e.count() // plan literal
     def lookup(key: String, emb: String)(df: DataFrame): DataFrame =
       df.withColumn("vid", col(key) % nvec)
         .join(e.select(col("vec_id").as("vid"), col("embedding").as(emb)),
@@ -63,7 +64,8 @@ object NlpQueries {
 
   private def linkedFrom(s: SparkSession, d: String, cand: DataFrame): DataFrame =
     EntityLinking.bestLinks(EntityLinking.scoreLinks(
-      withVectors(cand, Tables.embeddings(s, d), "left")))
+      withVectors(cand, Tables.embeddings(s, d),
+        Tables.rowCount(s, d, "embeddings"), "left")))
 
   private def linked(s: SparkSession, d: String): DataFrame =
     linkedFrom(s, d, candidates(s, d))
@@ -114,7 +116,8 @@ object NlpQueries {
     val candA = toks.join(broadcast(gaz(s, d)), col("token") === col("alias"))
       .select(col("doc_id"), col("token"), col("entity"), col("prior"))
     val sigA = EntityLinking.rankLinks(
-        withVectors(candA, Tables.embeddings(s, d), "inner"),
+        withVectors(candA, Tables.embeddings(s, d),
+          Tables.rowCount(s, d, "embeddings"), "inner"),
         Seq("doc_id", "token"), topK = 5, GraftFunctions.cosineSim)
       .select(col("doc_id"), col("token"), col("entity"), col("rn"))
     // signal B: fuzzy candidates (alias-level top-5 per q46), alias →

@@ -60,11 +60,10 @@ object SenzingQueries {
   // ---- q98 staged prefixes (Bench stage-level timing) ----------------------
 
   private def erkgClosure(s: SparkSession): DataFrame = {
-    import s.implicits._
     val raw = Senzing.readExport(s, SenzingFixture.ensureWritten())
     val edges = Senzing.graphEdges(raw).select(col("src"), col("dst"))
     val seedIds = Senzing.graphVertices(raw)
-      .join(broadcast(SenzingFixture.seedNames.toDF("name")), Seq("name"))
+      .filter(col("name").isin(SenzingFixture.seedNames: _*))
       .select(col("id"))
     graft.graph.GraphOps.kHop(edges, seedIds, 2)
   }

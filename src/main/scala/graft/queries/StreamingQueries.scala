@@ -272,7 +272,7 @@ object StreamingQueries {
     "q223_stream_ann_ivf2" -> ((s, d) => {
       import graft.vector.VectorOps
       val e = graft.Tables.embeddings(s, d)
-      val n = e.count()
+      val n = graft.Tables.rowCount(s, d, "embeddings")
       val k = math.min(n, math.max(8L, math.ceil(n / 64.0).toLong)).toInt
       val c = math.max(2L, math.ceil(math.sqrt(k.toDouble)).toLong).toInt
       val (gbook, ebookRow) = VectorOps.ivf2Books(e, k, c)
@@ -637,7 +637,7 @@ object StreamingQueries {
       // mention); ctx_cos rides through the sink for the argmax
       val scored = EntityLinking.scoreLinks(NlpQueries.withVectors(
           toks.join(broadcast(gazT), col("token") === col("alias")),
-          Tables.embeddings(s, d), "left"))
+          Tables.embeddings(s, d), Tables.rowCount(s, d, "embeddings"), "left"))
         .select(col("doc_id"), col("pos"), col("token"), col("entity"),
           col("prior"), col("score"), col("ctx_cos"))
       EntityLinking.bestLinks(

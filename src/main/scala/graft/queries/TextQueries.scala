@@ -306,7 +306,7 @@ object TextQueries {
     // hash and the ×1 curve point are unchanged by the dial.
     "q214_lsh_recall_sampled" -> ((s, d) => {
       val dd = docs(s, d)
-      val mod = math.max(2L, dd.count() / 2500L)
+      val mod = math.max(2L, Tables.rowCount(s, d, "documents") / 2500L)
       val sampled = dd.filter(
         pmod(TextOps.tokenHash60(col("doc_id").cast("string")), lit(mod))
           === 0L)

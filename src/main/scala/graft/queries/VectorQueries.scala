@@ -215,8 +215,9 @@ object VectorQueries {
     // expected cell population near 64, so the within-cell pair scan is
     // O(N · cellSize) ≈ O(64·N) — linear in the corpus — instead of the
     // (N/k)² blowup a fixed k gives at 100× (same dial discipline as
-    // Packing.bucketSize). The count() is one column-pruned metadata-cheap
-    // scan; the oracle derives k identically from COUNT(*) OVER ().
+    // Packing.bucketSize). N is the parquet footers' row count
+    // (Tables.rowCount, no job); the oracle derives k identically from
+    // COUNT(*) OVER ().
     // NOTE the remaining term: with k ∝ N, the FLAT centroid assign is
     // O(N·k) = O(N²/64) — ScaleBench measured it as the suite's one
     // superlinear growth (×10 → 3.2×, ×30 → 15.7×). q138 is the scale
@@ -224,7 +225,7 @@ object VectorQueries {
     // 3.8×). This flat form stays as the exact-rule member of the pair.
     "q112_semdedup" -> ((s, d) => {
       val e = emb(s, d)
-      val k = math.max(8L, math.ceil(e.count() / 64.0).toLong).toInt
+      val k = math.max(8L, math.ceil(Tables.rowCount(s, d, "embeddings") / 64.0).toLong).toInt
       semDedupWithinCells(e, VectorOps.kmeansAssign(e, k, 2).localCheckpoint())
     }),
 
@@ -242,7 +243,7 @@ object VectorQueries {
       // REALIZED fine-seed count (= min(n, k)) exactly as the oracle's
       // `coarse` CTE does — otherwise a corpus with n < 8 vectors would
       // pick a different coarse-cell count than the SQL twin.
-      val n = e.count()
+      val n = Tables.rowCount(s, d, "embeddings")
       val k = math.min(n, math.max(8L, math.ceil(n / 64.0).toLong)).toInt
       val c = math.max(2L, math.ceil(math.sqrt(k.toDouble)).toLong).toInt
       semDedupWithinCells(e, VectorOps.ivf2Assign(e, k, c).localCheckpoint())
@@ -892,7 +893,7 @@ object VectorQueries {
     // corpus-sized ever reaches the driver.
     "q188_ivf_balance" -> ((s, d) => {
       val e = emb(s, d)
-      val n = e.count()
+      val n = Tables.rowCount(s, d, "embeddings")
       val k = math.min(n, math.max(8L, math.ceil(n / 64.0).toLong)).toInt
       val c = math.max(2L, math.ceil(math.sqrt(k.toDouble)).toLong).toInt
       VectorOps.ivf2Assign(e, k, c)
@@ -937,7 +938,7 @@ object VectorQueries {
     "q195_prototype_prune_hist" -> ((s, d) => {
       import org.apache.spark.sql.expressions.Window
       val e = emb(s, d)
-      val n = e.count()
+      val n = Tables.rowCount(s, d, "embeddings")
       val k = math.min(n, math.max(8L, math.ceil(n / 64.0).toLong)).toInt
       val cc = math.max(2L, math.ceil(math.sqrt(k.toDouble)).toLong).toInt
       val member = e.select(col("vec_id"), col("embedding"))
@@ -981,7 +982,7 @@ object VectorQueries {
     "q200_label_noise_knn" -> ((s, d) => {
       import org.apache.spark.sql.expressions.Window
       val e = emb(s, d)
-      val n = e.count()
+      val n = Tables.rowCount(s, d, "embeddings")
       val k = math.min(n, math.max(8L, math.ceil(n / 64.0).toLong)).toInt
       val cc = math.max(2L, math.ceil(math.sqrt(k.toDouble)).toLong).toInt
       val mem = e.join(VectorOps.ivf2Assign(e, k, cc), Seq("vec_id"))

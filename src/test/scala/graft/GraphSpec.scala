@@ -56,17 +56,55 @@ class GraphSpec extends SparkSuite {
   test("kHop law: == Oracles.kHopGraphX on random directed edges, k in 0..3") {
     val s = spark
     import s.implicits._
-    // ids 0..7 carry edges; 8..9 may be seeds with no edge at all, and 99
-    // is always one; seeds repeat
-    val edgeGen = Gen.listOf(Gen.zip(Gen.choose(0L, 7L), Gen.choose(0L, 7L))).map(_.take(14))
-    val seedGen = Gen.nonEmptyListOf(Gen.choose(0L, 9L)).map(ss => (99L +: (ss ++ ss.take(2))).take(6))
-    check(Prop.forAll(edgeGen, seedGen) { (es, ss) =>
-      val edges = es.toDF("src", "dst")
+    // ids 0..9 carry edges: hub 0 has arcs to and from 1..6, arcs repeat
+    // and self-loops occur; 98 and 99 are seeds with no edge at all (99
+    // always), and seeds repeat. Every k runs at shuffle partitions 1, 3, 7.
+    val hub = (1L to 6L).flatMap(v => Seq((0L, v), (v, 0L)))
+    val edgeGen = Gen.listOf(Gen.zip(Gen.choose(0L, 9L), Gen.choose(0L, 9L))).map(_.take(12))
+    val seedGen = Gen.nonEmptyListOf(Gen.oneOf(Gen.choose(0L, 9L), Gen.const(98L)))
+      .map(ss => 99L +: (ss.take(3) ++ ss.take(2)))
+    val key = "spark.sql.shuffle.partitions"
+    val prior = s.conf.get(key)
+    try check(Prop.forAll(edgeGen, seedGen) { (es, ss) =>
+      val loops = es.take(2).map { case (v, _) => (v, v) }
+      val edges = (hub ++ es ++ es.take(3) ++ loops ++ hub.take(2)).toDF("src", "dst")
       val seeds = ss.toDF("id")
       (0 to 3).forall { k =>
-        val got = GraphOps.kHop(edges, seeds, k).as[Long].collect()
         val want = Oracles.kHopGraphX(spark, edges, seeds, k).as[Long].collect().toSet
-        got.length == got.toSet.size && got.toSet == want && ss.toSet.subsetOf(want)
+        ss.toSet.subsetOf(want) && Seq(1, 3, 7).forall { parts =>
+          s.conf.set(key, parts.toString)
+          val got = GraphOps.kHop(edges, seeds, k).as[Long].collect()
+          got.length == got.toSet.size && got.toSet == want
+        }
+      }
+    }) finally s.conf.set(key, prior)
+  }
+
+  test("kHopBag: semi-joining the bag before its distinct == semi-joining kHop, and the bag keeps its bound") {
+    val s = spark
+    import s.implicits._
+    val edgeGen = Gen.listOf(Gen.zip(Gen.choose(0L, 7L), Gen.choose(0L, 7L))).map(_.take(14))
+    val seedGen = Gen.nonEmptyListOf(Gen.choose(0L, 9L)).map(ss => ss ++ ss.take(2))
+    check(Prop.forAll(edgeGen, seedGen) { (es, ss) =>
+      val arcs = es ++ es.take(3)
+      val edges = arcs.toDF("src", "dst")
+      val seeds = ss.toDF("id")
+      // probe rows repeat, and some name no vertex
+      val probe = (0L to 11L).flatMap(v => Seq.fill((v % 3 + 1).toInt)(v -> s"r$v"))
+        .toDF("id", "payload")
+      (0 to 3).forall { k =>
+        def semi(reached: DataFrame) =
+          probe.join(reached, Seq("id"), "left_semi").as[(Long, String)].collect().sorted.toSeq
+        val set = GraphOps.kHop(edges, seeds, k)
+        val bag = GraphOps.kHopBag(edges, seeds, k).as[Long].collect()
+        // one row per seed plus one per arc leaving the previous hop's set:
+        // the bound kHop's scaladoc states, met exactly
+        val bound = ss.size + (if (k == 0) 0 else {
+          val prev = GraphOps.kHop(edges, seeds, k - 1).as[Long].collect().toSet
+          arcs.count { case (src, _) => prev(src) }
+        })
+        semi(GraphOps.kHopBag(edges, seeds, k)) == semi(set) &&
+          bag.toSet == set.as[Long].collect().toSet && bag.length == bound
       }
     })
   }
@@ -401,7 +439,7 @@ class GraphSpec extends SparkSuite {
       case _ => false
     }
     val e = ((1L to 11L).map(i => (i, i + 1)) :+ (20L -> 21L)).toDF("src", "dst")
-    val actions = SparkSpec.actionsOf(GraphOps.connectedComponentsDF(e))
+    val actions = PlanDump.actionsOf(spark)(GraphOps.connectedComponentsDF(e))
     assert(actions.nonEmpty)
     val probes = actions.filter { case (_, qe) => globalAgg(qe.analyzed) }
     assert(probes.map(_._1).isEmpty, "standalone aggregate actions")

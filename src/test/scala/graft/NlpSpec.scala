@@ -286,9 +286,9 @@ class NlpSpec extends SparkSuite {
         def rows(df: DataFrame) = df.collect().map(_.toSeq.mkString("|")).sorted.toSeq
         val keys = Seq("doc_id", "pos")
         rows(EntityLinking.disambiguate(c, dv, ev)) == rows(EntityLinking.bestLinks(
-            EntityLinking.scoreLinks(NlpQueries.withVectors(c, e, "left")))) &&
+            EntityLinking.scoreLinks(NlpQueries.withVectors(c, e, e.count(), "left")))) &&
           rows(EntityLinking.rankedCandidates(c, dv, ev, keys, 2, GraftFunctions.cosineSim)) ==
-          rows(EntityLinking.rankLinks(NlpQueries.withVectors(c, e, "inner"), keys, 2,
+          rows(EntityLinking.rankLinks(NlpQueries.withVectors(c, e, e.count(), "inner"), keys, 2,
             GraftFunctions.cosineSim))
       })
     assert(r.passed, r.status.toString)

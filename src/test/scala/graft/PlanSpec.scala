@@ -2,13 +2,15 @@ package graft
 
 import org.apache.spark.sql.catalyst.expressions.{Attribute, Expression}
 import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
-import org.apache.spark.sql.execution.{GenerateExec, SparkPlan}
+import org.apache.spark.sql.execution.{GenerateExec, LocalTableScanExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanHelper, QueryStageExec}
-import org.apache.spark.sql.execution.exchange.{Exchange, ReusedExchangeExec,
-  ShuffleExchangeExec, ShuffleExchangeLike}
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike, Exchange,
+  ReusedExchangeExec, ShuffleExchangeExec, ShuffleExchangeLike}
 import org.apache.spark.sql.execution.joins.{BaseJoinExec, BroadcastHashJoinExec}
 import org.apache.spark.sql.execution.window.{WindowExec, WindowGroupLimitExec}
 import org.apache.spark.sql.types.{ArrayType, FloatType}
+
+import graft.queries.SenzingQueries
 
 /** Physical-plan shape assertions: the scale properties the Scaladoc claims
   * (broadcasts, pushdown, pruning, codegen) are checked here so a regression
@@ -348,7 +350,7 @@ class PlanSpec extends SparkSuite with AdaptiveSparkPlanHelper {
 
   /** Every physical plan `run` executes, AQE-final. */
   private def plansOf(run: => Unit): Seq[SparkPlan] =
-    SparkSpec.actionsOf(run).map(_._2.executedPlan)
+    PlanDump.actionsOf(spark)(run).map(_._2.executedPlan)
 
   private def carriesVector(p: SparkPlan): Boolean =
     p.output.exists(_.dataType match {
@@ -390,11 +392,26 @@ class PlanSpec extends SparkSuite with AdaptiveSparkPlanHelper {
     plansOf(SparkEntry.queries(q)(spark, sf).collect())
 
   test("q13/q17 k-hop never shuffles the edge table: no exchange keyed on (src, dst)") {
-    Seq("q13_two_hop_network", "q17_suspicious_aliases").foreach { q =>
+    // kHop de-duplicates once, after the last hop (q13's one id-keyed
+    // exchange); q17 semi-joins the bag before it and shuffles no id
+    Seq("q13_two_hop_network" -> 1, "q17_suspicious_aliases" -> 0).foreach { case (q, idKeyed) =>
       val keys = shuffleKeys(queryPlans(q))
-      // the reached-set distinct of every hop is keyed on the vertex id
-      assert(keys.contains(Seq("id")), s"$q: no k-hop exchange in $keys")
+      assert(keys.count(_ == Seq("id")) == idKeyed, s"$q: id-keyed exchanges in $keys")
       assert(!keys.exists(_.toSet == Set("src", "dst")), s"$q shuffles the edges: $keys")
+    }
+  }
+
+  test("seed lists are IN filters: no broadcast of a local table in q13, q17 or q98's closure") {
+    val closure = SenzingQueries.flagshipStages.toMap.apply("s2_closure")
+    Seq("q13_two_hop_network" -> SparkEntry.queries("q13_two_hop_network"),
+        "q17_suspicious_aliases" -> SparkEntry.queries("q17_suspicious_aliases"),
+        "q98 s2_closure" -> closure).foreach { case (q, build) =>
+      val plans = plansOf(build(spark, sf).collect())
+      val local = plans.flatMap(collectWithSubqueries(_) {
+        case b: BroadcastExchangeLike
+            if b.child.collectLeaves().forall(_.isInstanceOf[LocalTableScanExec]) => b
+      })
+      assert(local.isEmpty, s"$q broadcasts a local table:\n${local.mkString("\n")}")
     }
   }
 

@@ -17,7 +17,8 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types.{LongType, TimestampType}
 
 /** `Tables.load`'s schema memo: a repeated load reads no footer, a rewritten
-  * file or a changed parquet conf infers again. Each test runs in its own
+  * file or a changed parquet conf infers again. `Tables.rowCount` reads the
+  * footers' row counts with no Spark job. Each test runs in its own
   * child session (shared SparkContext, private conf and memo entry). */
 class TablesSpec extends SparkSuite {
   import SparkSpec.sf0001
@@ -95,6 +96,40 @@ class TablesSpec extends SparkSuite {
       Seq(("b", 7)).toDF("w", "n").write.mode("overwrite").parquet(s"$dir/u.parquet")
       assert(Tables.load(s, dir, "u").collect().toSeq == Seq(Row("b", 7)))
     }
+  }
+
+  test("Tables.rowCount == count() for every test table, a part-file directory and a table rewritten in place, with no job") {
+    val s = spark.newSession()
+    import s.implicits._
+    Tables.names.foreach { n =>
+      val counted = Tables.load(s, sf0001, n).count()
+      assert(jobsDuring(s)(assert(Tables.rowCount(s, sf0001, n) == counted, n)) == 0, n)
+    }
+    withTempDir { dir =>
+      // four part files beside Spark's _SUCCESS and .crc files
+      s.range(0, 1000, 1, 4).toDF("k").write.parquet(s"$dir/m.parquet")
+      assert(new File(s"$dir/m.parquet").listFiles.count(_.getName.endsWith(".parquet")) == 4)
+      assert(Tables.rowCount(s, dir, "m") == 1000L)
+      s.range(0, 7, 1, 2).toDF("k").write.mode("overwrite").parquet(s"$dir/m.parquet")
+      assert(Tables.rowCount(s, dir, "m") == 7L)
+      // one file, rewritten at the same path: the memo reads the new footer
+      writeFile(Seq(1L, 2L, 3L).toDF("k"), s"$dir/t.parquet")
+      assert(Tables.rowCount(s, dir, "t") == 3L)
+      writeFile((1L to 5L).toDF("k"), s"$dir/t.parquet")
+      assert(Tables.rowCount(s, dir, "t") == 5L)
+      assert(Tables.rowCount(s, dir, "t") == Tables.load(s, dir, "t").count())
+    }
+  }
+
+  test("building q34 runs no Spark job, and building q79 runs no count, once the schemas are known") {
+    val s = spark.newSession()
+    def build(q: String) = SparkEntry.queries(q)(s, sf0001)
+    build("q34_entity_linking") // infers the table schemas
+    assert(jobsDuring(s)(build("q34_entity_linking")) == 0)
+    // q79 materializes its mention set and result while it is built; the
+    // embedding count is not among its actions
+    val actions = PlanDump.actionsOf(s)(build("q79_hybrid_linking")).map(_._1)
+    assert(actions.nonEmpty && !actions.contains("count"), actions.mkString(", "))
   }
 
   test("Tables.events loads both ts layouts, also after a plain load of the file") {
