@@ -5,7 +5,9 @@ import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.execution.{ExplainMode, QueryExecution}
+import org.apache.spark.sql.execution.{ExplainMode, FileSourceScanExec, QueryExecution,
+  SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.util.QueryExecutionListener
 
@@ -16,12 +18,32 @@ import org.apache.spark.sql.util.QueryExecutionListener
   * itself, executed into the `noop` sink. Broadcast-side jobs show inside
   * the plan of the action that ran them.
   *
+  * Each action's plan is followed by its duplicated scans
+  * ([[duplicatedScans]]): a table read twice in one action is a subtree
+  * that runs twice, the first thing to look at when a query does more work
+  * than its result needs.
+  *
   * Usage: runMain graft.PlanDump <sfDir> <outDir> <q1,q2,...>
   *
   * STREAMING-executed queries (runToTable) and artifact-maintenance queries
   * execute side effects when built — dump those knowingly.
   */
-object PlanDump {
+object PlanDump extends AdaptiveSparkPlanHelper {
+
+  /** The file relations `plan` scans, one entry per scan, as each
+    * relation's root paths; AQE stages and subqueries included. A scan
+    * under a `ReusedExchange` ran once for both consumers and is not
+    * listed (the reusing side is a leaf). */
+  def scans(plan: SparkPlan): Seq[String] =
+    collectWithSubqueries(plan) {
+      case f: FileSourceScanExec => f.relation.location.rootPaths.mkString(",")
+    }
+
+  /** Every relation `plan` scans more than once, with its scan count. */
+  def duplicatedScans(plan: SparkPlan): Seq[(String, Int)] =
+    scans(plan).groupBy(identity).collect {
+      case (rel, xs) if xs.size > 1 => rel -> xs.size
+    }.toSeq.sorted
 
   /** Every action `run` executes in `spark`, as (action name, query
     * execution), in order: a query that materializes its inputs
@@ -58,13 +80,17 @@ object PlanDump {
         val actions = actionsOf(spark) {
           SparkEntry.queries(name)(spark, sfDir).write.format("noop").mode("overwrite").save()
         }
-        val txt = actions.zipWithIndex.map { case ((action, qe), i) =>
+        val dups = actions.map { case (_, qe) => duplicatedScans(qe.executedPlan) }
+        val txt = actions.zip(dups).zipWithIndex.map { case (((action, qe), dup), i) =>
           s"== action ${i + 1} of ${actions.size}: $action ==\n" +
-            qe.explainString(ExplainMode.fromString("formatted"))
+            qe.explainString(ExplainMode.fromString("formatted")) +
+            "== duplicated scans: " + (if (dup.isEmpty) "none\n"
+              else dup.map { case (rel, n) => s"\n  $rel x$n" }.mkString + "\n")
         }.mkString("\n")
         Files.write(Paths.get(s"$outDir/$name.txt"),
           txt.getBytes(StandardCharsets.UTF_8))
-        println(s"[plandump] wrote $outDir/$name.txt (${actions.size} actions)")
+        println(s"[plandump] wrote $outDir/$name.txt (${actions.size} actions, " +
+          s"${dups.count(_.nonEmpty)} with duplicated scans)")
       } catch { case e: Throwable =>
         System.err.println(s"[plandump] $name failed: ${e.getMessage}")
       }

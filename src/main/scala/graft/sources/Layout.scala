@@ -1,6 +1,9 @@
 package graft.sources
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.{FileSourceScanExec, LocalTableScanExec,
+  RDDScanExec, SparkPlan, UnionExec}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.functions.col
 
 /** Partitioned + sorted parquet layout writer (the sibling of
@@ -40,10 +43,34 @@ object Layout {
     * of splits, `getNumPartitions ≥ cores`, and no exchange is added.
     * Deterministic (hash partitioning on the key column, not round-robin),
     * so task retries cannot reshuffle rows (guide §2.5 SPARK-38388 note)
-    * and downstream per-row/fixed-point results are unchanged. */
+    * and downstream per-row/fixed-point results are unchanged. The width
+    * comes from [[scanPartitions]]: deciding runs nothing. */
   def fanOutScan(df: DataFrame, key: org.apache.spark.sql.Column): DataFrame = {
     val cores = df.sparkSession.sparkContext.defaultParallelism
-    if (df.rdd.getNumPartitions < cores) df.repartition(cores, key) else df
+    if (scanPartitions(df) < cores) df.repartition(cores, key) else df
+  }
+
+  /** The partitions `df` runs at, read from its physical leaves' split
+    * metadata: the file splits of a file scan, the partitions of a
+    * checkpoint's RDD, and for local data one slice per row up to
+    * defaultParallelism (Spark's own rule for parallelizing it). Narrow
+    * operators keep their child's width and a union adds its children's.
+    * Unlike `df.rdd.getNumPartitions` it registers no SQL execution and
+    * compiles no row-deserializing plan. Every caller passes a narrow plan
+    * over a scan, a checkpoint or local data, where the count is exact;
+    * any other operator over several inputs (a join) counts its widest. */
+  private[graft] def scanPartitions(df: DataFrame): Int = {
+    val slices = df.sparkSession.sparkContext.defaultParallelism
+    def width(p: SparkPlan): Int = p match {
+      case a: AdaptiveSparkPlanExec => width(a.executedPlan)
+      case f: FileSourceScanExec => f.inputRDD.getNumPartitions
+      case r: RDDScanExec => r.rdd.getNumPartitions
+      case l: LocalTableScanExec => math.min(l.rows.size, slices)
+      case u: UnionExec => u.children.map(width).sum
+      case one if one.children.size == 1 => width(one.children.head)
+      case many => many.children.map(width).maxOption.getOrElse(0)
+    }
+    width(df.queryExecution.executedPlan)
   }
 
   def writePartitionedSorted(df: DataFrame, dir: String,

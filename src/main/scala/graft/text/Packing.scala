@@ -25,6 +25,15 @@ import org.apache.spark.sql.functions._
   * Values are identical to the naive global window (the DuckDB oracle runs
   * exactly that), but no stage ever sorts more than one bucket per task.
   *
+  * One read of the input: both phases derive from the narrow
+  * `(doc_id, n_tok, bucket)` table, and that table is materialized
+  * (`localCheckpoint`) — three longs, 24 B per non-empty document, against
+  * the document text a second read would rescan. Left lazy, each phase
+  * re-ran the whole upstream chain (q116's slice, closure and
+  * decontamination): Catalyst infers a different `isnotnull` filter into
+  * each copy (`isnotnull(doc_id div b)` in one, `isnotnull(doc_id)` in the
+  * other), so their exchanges differ and exchange reuse cannot merge them.
+  *
   * Determinism: integer arithmetic only (token counts, prefix sums, integer
   * div) — hash-gate-exact.
   */
@@ -44,6 +53,7 @@ object Packing {
         size(TextOps.tokens(col(textCol))).cast("long").as("n_tok"))
       .filter(col("n_tok") > 0)
       .withColumn("bucket", expr("doc_id div " + bucketSize))
+      .localCheckpoint() // the one read of `docs`: feeds both phases
     val bucketTotals = counted.groupBy(col("bucket"))
       .agg(sum(col("n_tok")).as("btot"))
     // cumulative offsets over the tiny bucket table: the one intentionally

@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.functions._
 
 import graft.sources.Layout
@@ -10,6 +12,62 @@ import graft.sources.Layout
   * pruning, per-file sorted runs for scan-time row-group skipping.
   */
 class LayoutSpec extends SparkSuite {
+
+  /** SQL executions this thread registers while `body` runs, told apart by
+    * a job description (an execution takes its description from it); a
+    * marker execution afterwards proves every earlier event has reached
+    * the listener. */
+  private def sqlExecutionsDuring(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val tag = java.util.UUID.randomUUID.toString
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    val markerSeen = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case x: SparkListenerSQLExecutionStart if x.description == tag => n.incrementAndGet()
+        case x: SparkListenerSQLExecutionStart if x.description == s"$tag-end" => markerSeen.countDown()
+        case _ =>
+      }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobDescription(tag)
+      body
+      sc.setJobDescription(s"$tag-end")
+      spark.range(1).collect()
+      assert(markerSeen.await(60, java.util.concurrent.TimeUnit.SECONDS))
+    } finally {
+      sc.setJobDescription(null)
+      sc.removeSparkListener(listener)
+    }
+    n.get
+  }
+
+  test("fanOutScan decides from split metadata: no SQL execution, df.rdd's partition count") {
+    val s = spark
+    import s.implicits._
+    val dir = Files.createTempDirectory("fanout").toFile.getAbsolutePath
+    s.range(0, 6000, 1, 6).write.parquet(s"$dir/multi")
+    val docs = Tables.documents(s, SparkSpec.sf0001)
+    val checkpoint = s.range(0, 100, 1, 3).toDF().localCheckpoint()
+    val cases = Seq(
+      "single-file table" -> docs.filter(col("doc_id") > 3),
+      "multi-file directory" -> s.read.parquet(s"$dir/multi"),
+      "checkpoint" -> checkpoint.select((col("id") * 2).as("id")),
+      "local data, fewer rows than cores" -> Seq(1L, 2L).toDF("id"),
+      "local data, more rows than cores" -> (1L to 50L).toDF("id"),
+      "empty local data" -> Seq.empty[Long].toDF("id"),
+      "union" -> s.read.parquet(s"$dir/multi").union(checkpoint))
+    cases.foreach { case (name, df) =>
+      var width = -1
+      val executions = sqlExecutionsDuring {
+        width = Layout.scanPartitions(df)
+        Layout.fanOutScan(df, col(df.columns.head))
+      }
+      assert(executions == 0, s"$name: deciding registered $executions SQL executions")
+      assert(width == df.rdd.getNumPartitions, name)
+    }
+  }
 
   test("writePartitionedSorted: hive dirs per day, every file internally sorted") {
     val s = spark

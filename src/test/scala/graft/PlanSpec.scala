@@ -180,6 +180,34 @@ class PlanSpec extends SparkSuite with AdaptiveSparkPlanHelper {
       s"per-doc cumsum not bucket-partitioned:\n$docWindow")
   }
 
+  test("PlanDump.duplicatedScans lists a table read twice, not one read through a ReusedExchange") {
+    import org.apache.spark.sql.functions.col
+    val docs = Tables.documents(spark, sf)
+    def executed(df: org.apache.spark.sql.DataFrame): SparkPlan = {
+      df.collect(); df.queryExecution.executedPlan
+    }
+    val twice = executed(docs.filter(col("source") === "src0").union(docs.filter(col("lang") === "en")))
+    assert(PlanDump.duplicatedScans(twice).map(_._2) == Seq(2), twice.toString)
+    val perSource = docs.groupBy(col("source")).count()
+    val reused = executed(perSource.join(perSource.withColumnRenamed("count", "c2"), "source"))
+    assert(collectWithSubqueries(reused) { case r: ReusedExchangeExec => r }.nonEmpty, reused.toString)
+    assert(PlanDump.scans(reused).size == 1 && PlanDump.duplicatedScans(reused).isEmpty,
+      reused.toString)
+  }
+
+  test("packSequences reads its input once: q101 scans documents once, q116's final action never") {
+    // each packing phase used to re-run the input chain: the two copies
+    // carry different inferred isnotnull filters, so no exchange reuse
+    // merged them (q101: 2 scans in its one action; q116: 4 in its last)
+    def documentScans(q: String): Seq[Int] =
+      PlanDump.actionsOf(spark)(SparkEntry.queries(q)(spark, sf).collect())
+        .map { case (_, qe) => PlanDump.scans(qe.executedPlan).count(_.endsWith("documents.parquet")) }
+    val q101 = documentScans("q101_pack_sequences")
+    assert(q101.sum == 1, s"q101 documents scans per action: $q101")
+    val q116 = documentScans("q116_corpus_flagship")
+    assert(q116.last == 0, s"q116 documents scans per action: $q116")
+  }
+
   test("q117 bigram-table joins are not mandatory broadcasts (Heaps-law growth)") {
     // the c2/c1 count tables grow with the corpus; only the 1-row vocab
     // aggregate may stay a pinned broadcast under threshold -1

@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.text.TextOps
@@ -97,6 +99,60 @@ class TextOpsSpec extends SparkSuite {
     packed.filter(_._5 == 0L).foreach { case (id, bin, off, _, _) =>
       assert(naiveStarts(id) == bin * 16L + off)
     }
+  }
+
+  /** The span manifest by its definition: each doc's start is the NAIVE
+    * global `sum over (order by doc_id)` window (one task, the plan
+    * packSequences exists to avoid), then chopped into `capacity` bins. */
+  private def naivePack(docs: DataFrame, capacity: Long): Set[(Long, Long, Long, Long, Long)] = {
+    val before = Window.orderBy(col("doc_id")).rowsBetween(Window.unboundedPreceding, -1)
+    docs.select(col("doc_id"), size(TextOps.tokens(col("text"))).cast("long").as("n"))
+      .filter(col("n") > 0)
+      .withColumn("st", coalesce(sum(col("n")).over(before), lit(0L)))
+      .collect()
+      .flatMap { r =>
+        val (id, n, st) = (r.getLong(0), r.getLong(1), r.getLong(2))
+        (st / capacity to (st + n - 1) / capacity).map { bin =>
+          val from = math.max(st, bin * capacity)
+          val to = math.min(st + n, (bin + 1) * capacity)
+          (id, bin, from - bin * capacity, to - from, from - st)
+        }
+      }.toSet
+  }
+
+  test("packSequences law: == the naive global window, any bucket size and partition count") {
+    val s = spark
+    import s.implicits._
+    def docsOf(lens: Seq[(Long, Int)]): DataFrame =
+      lens.map { case (id, n) => (id, (1 to n).map(k => s"t$k").mkString(" ")) }
+        .toDF("doc_id", "text").repartition(3)
+    val rnd = new scala.util.Random(101)
+    val random = Seq.fill(3) {
+      // distinct ids with gaps, ~1 in 5 docs empty, 0..40 tokens each
+      rnd.shuffle((0L until 400L).toList).take(60)
+        .map(id => id -> (if (rnd.nextInt(5) == 0) 0 else rnd.nextInt(41)))
+    }
+    val inputs = random.zipWithIndex.map { case (r, i) => s"random $i" -> r } ++ Seq(
+      "empty input" -> Seq.empty[(Long, Int)],
+      "all docs empty" -> (0L until 12L).map(_ -> 0),
+      "one doc spans many bins" -> Seq(3L -> 2, 4L -> 100, 5L -> 1),
+      "id gaps" -> Seq(-7L -> 3, 0L -> 5, 1L -> 0, 255L -> 9, 256L -> 4, 9000L -> 11, (1L << 40) -> 6))
+    val key = "spark.sql.shuffle.partitions"
+    val prior = s.conf.get(key)
+    try inputs.foreach { case (name, lens) =>
+      val docs = docsOf(lens)
+      val want = naivePack(docs, 16L)
+      for (parts <- Seq(1, 3, 7); bucketSize <- Seq(1L, 3L, 8L, 256L)) {
+        s.conf.set(key, parts.toString)
+        val got = graft.text.Packing
+          .packSequences(docs, "doc_id", "text", capacity = 16L, bucketSize = bucketSize)
+          .collect()
+          .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)))
+        val at = s"$name, parts $parts, bucket $bucketSize"
+        assert(got.length == got.toSet.size, s"$at: repeated span")
+        assert(got.toSet == want, at)
+      }
+    } finally s.conf.set(key, prior)
   }
 
   test("CMS laws: est >= exact for every token; sketch merge is counter-wise sum") {
